@@ -72,48 +72,13 @@ final case class DedupConfig(
     // natural bound is avg-shingles-per-doc / frac — corpus-size-independent
     // — so 1M is generous headroom, and the broadcast stays a few MB.
     boilerplateMaxHotSet: Int = 1 << 20,
-    // ---- suffix-array shared-span pass (north-rule addition) ----
+    // ---- shared-span pass, suffix automaton (north-rule addition) ----
     spanPassEnabled: Boolean = true,
     spanMinChars: Int = 200,         // span length reported as "long"
-    spanCandidateMinJaccard: Double = 0.2, // only near-miss pairs get the SA pass
-    spanMaxPairsPerDoc: Int = 20,    // SA budget per doc (deterministic cap)
-    spanMaxTextChars: Int = 8000,    // per-doc char cap for the SA build
+    spanCandidateMinJaccard: Double = 0.2, // only near-miss pairs get the span pass
+    spanMaxPairsPerDoc: Int = 20,    // span budget per doc (deterministic cap)
+    spanMaxTextChars: Int = 8000,    // per-doc char cap for the span pass
     spanAsDuplicate: Boolean = false, // OFF = label parity with the reference
-    // Linear-time span algorithm: suffix automaton of the shorter text
-    // (exact same LCS, property-tested vs the suffix array). The SA pass
-    // measured ~85% of verify CPU at the 150k-page bench scale; false
-    // selects the generalized-suffix-array reference implementation.
-    spanViaAutomaton: Boolean = true,
-    // ---- verify-stage MinHash-estimate prefilter (scale knob) ----
-    // When enabled, pairs whose signature-equality estimate falls outside
-    // (low, high) skip the exact-Jaccard shingle join: at 64 perms the
-    // estimate is >= ~4 sigma from the 0.75 vote threshold at both
-    // cutoffs, so the vote_min decision is unchanged w.h.p. while the
-    // full shingle arrays ride only for the uncertainty band. Measured
-    // (tools/PrefilterBench + the N-vs-4N scaling runs): labels/clusters
-    // identical, but on the sandbox corpora the skip fraction is low and
-    // the extra join pass costs ~15% of the 4-executor wall — so the
-    // default is OFF (single-join dataflow); enable for boilerplate-heavy
-    // web corpora whose candidate sets are dominated by low-J skew pairs
-    // at beyond-broadcast pair volumes. Skip-band pairs carry the estimate
-    // in `jaccard` with `jaccard_est = true` (Verdict schema), so
-    // score-derived metrics can exclude or flag estimated rows.
-    estPrefilter: Boolean = false,
-    estSkipLow: Double = 0.40,
-    estSkipHigh: Double = 0.97,
-    // b-bit variant of the estimate prefilter (Li & Koenig 2010,
-    // sig/BBitMinHash): the pair join ships 4-bit packed signatures
-    // (40 B/side) instead of the full 64-long arrays (512 B/side) — a
-    // 12.8x cut of the dominant prefilter exchange term — and the skip
-    // band widens by bbitBandMargin on both ends to absorb the coarser
-    // estimator's noise (sd <= ~0.067 at 64 slots vs ~0.054 full-width;
-    // the widened high bound exceeds 1.0, so ONLY the low side skips:
-    // the junk-pair bulk of a boilerplate-heavy candidate set, which is
-    // exactly the population the prefilter exists for). Pairs inside the
-    // widened band fall through to the exact shingle join, so labels
-    // stay identical w.h.p. (asserted on/off in EntryQueriesSpec).
-    bbitPrefilter: Boolean = false,
-    bbitBandMargin: Double = 0.18,
     // One-permutation-hashing signer (sig/Oph): replaces the k=64
     // permutation evaluations per shingle with ONE binned-min pass —
     // O(|shingles|) signing CPU instead of O(k·|shingles|), the dominant
@@ -126,24 +91,12 @@ final case class DedupConfig(
     // A/B"): the graft's correctness anchor is golden parity with the
     // reference's k-permutation signatures, and at the 450k bench corpus
     // the signature stage is 3-5% of wall so the measured 2.10x stage win
-    // (SignBench) moves total wall ~1.5%. Measured at 450k pages: OPH
+    // (BENCH/BASELINE.md) moves total wall ~1.5%. Measured at 450k pages: OPH
     // yields the IDENTICAL 6,149 clusters (439,874 docs vs classic's
     // 439,872) from 0.9% fewer candidate pairs, and has its own
     // end-to-end driver oracle row (q_dedup_clusters_oph). Flip to true
     // when signing dominates (short docs / high numPerm / cheap verify).
     signerOph: Boolean = false,
-    // ---- verify-stage pair-scoring dataflow (scale knob) ----
-    // The join dataflow's second pair join re-shuffles the stream side WITH
-    // the first side's shingle array attached — one array copy PER PAIR
-    // crosses the wire (the dominant verify exchange term once pairs/doc is
-    // high: measured ~27 GB at the 450k-page bench, vs ~2 per DOC for the
-    // signature relations themselves). verifyCoGroup replaces the two pair
-    // joins with a partition-aware cogroup: pairs hash-route by `a`, each
-    // needed doc payload ships ONCE per (doc, distinct target partition),
-    // and pairs are scored in-partition against a local doc map — array
-    // bytes scale with docs x partitions-touched, never with pairs.
-    // Verdict-identical to the join dataflow (VerifyCoGroupSpec).
-    verifyCoGroup: Boolean = false,
     // ---- checkpoint durability (cluster-deployment knob) ----
     // localCheckpoint blocks live only on executors: on a real multi-
     // executor cluster an executor loss AFTER the checkpoint makes the

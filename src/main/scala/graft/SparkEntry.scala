@@ -1181,8 +1181,7 @@ object SparkEntry {
     "q_minhash_est_pairs" -> ((s, dir) => {
       // G6 MinHash estimate as a driver-green row: fraction of agreeing
       // signature positions per candidate pair, recomputed by DuckDB from
-      // the persisted minhash arrays (same codegen'd zip_with/filter
-      // expression the estPrefilter dataflow uses).
+      // the persisted minhash arrays (codegen'd zip_with/filter, no UDF).
       val rd = pipelineRunDir(s, dir)
       val cands = s.read.parquet(s"$rd/05_cand")
       val sig = s.read.parquet(s"$rd/03_sig")
@@ -2632,8 +2631,6 @@ object SparkEntry {
   private val oraConf = DedupConfig.balanced
   require(!oraConf.spanAsDuplicate,
     "pipeline oracles omit the span-rescue disjunct: extend q_dedup_verdicts/q_ingest_near_dup before enabling spanAsDuplicate")
-  require(!oraConf.estPrefilter,
-    "pipeline oracles recompute EXACT jaccard for every pair: the estPrefilter skip band would diverge")
   private val oBucket = oraConf.maxBucketSize
   private val oCap = oraConf.maxCandidatesPerDoc
   private val oVotes = oraConf.requiredVotes

@@ -38,13 +38,8 @@ object Schemas {
   /** Verify/decision-stage output — the engine's DecisionTrace
     * (arbiter.py:62-140 shape, flattened to columns).
     */
-  /** `jaccard_est` marks rows whose `jaccard` is the MinHash signature
-    * estimate rather than the exact shingle-set value (estPrefilter
-    * skip-band pairs only; always false in the default dataflow) — score
-    * consumers (AUC, sweeps, histograms) can exclude or flag them.
-    */
   final case class Verdict(a: String, b: String, pair_key: String,
-                           exact: Boolean, jaccard: Double, jaccard_est: Boolean,
+                           exact: Boolean, jaccard: Double,
                            hamming: Int,
                            sim_sim: Double, emb_cos: Option[Double],
                            vote_sim: Boolean, vote_min: Boolean, vote_emb: Boolean,

@@ -11,9 +11,9 @@ package graft.sa
   * (metrics.json `span_wall_ms` — ~85% of verify CPU, the pipeline's
   * single dominant cost). The automaton computes the same longest shared
   * span ~50x cheaper per pair: one O(n) build over the shorter text plus
-  * one O(m) stream of the longer, no sorting anywhere. The suffix-array
-  * implementation remains the specification/reference path
-  * (`DedupConfig.spanViaAutomaton = false`).
+  * one O(m) stream of the longer, no sorting anywhere. It is the only span
+  * algorithm on the pipeline path; the suffix-array implementation remains
+  * the specification/reference that tests compare against.
   *
   * Storage is flat primitive arrays with per-state adjacency lists (a
   * suffix automaton has < 2n states and < 3n transitions), reused across

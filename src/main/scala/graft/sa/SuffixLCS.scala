@@ -9,7 +9,8 @@ package graft.sa
   * O(n)), and return the max LCP between lexicographically adjacent
   * suffixes that come from different sides. New work specified by
   * BASELINE.json — the reference has no substring pass (SURVEY.md scope
-  * notes).
+  * notes). The pipeline's span pass runs the linear-time SuffixAutomaton;
+  * this implementation is the reference the tests compare it against.
   */
 object SuffixLCS extends Serializable {
 

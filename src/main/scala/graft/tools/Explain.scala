@@ -51,16 +51,7 @@ object Explain {
     section("verdicts", verdicts,
       "Candidates joined to signatures (shuffle on url); decision columns " +
         "are plain expressions; the embedding/span subset is the " +
-        "left-joined mapPartitions branch. (With estPrefilter=true the " +
-        "shingle arrays instead join in only for the estimate-uncertainty " +
-        "band — opt-in, see DedupConfig.)")
-    section("verdicts (estPrefilter=true)",
-      DedupPipeline.verifyStage(spark, persistedCands, sigs, norm,
-        conf.copy(estPrefilter = true)),
-      "Opt-in banded variant: the pair join ships fixed-width signature " +
-        "columns only; size-unbounded shingle arrays join in solely for " +
-        "the estimate-uncertainty band; skip/exact branches are unioned " +
-        "(no join-back shuffle).")
+        "left-joined mapPartitions branch.")
     section("oracle query q_exact_dup_groups",
       SparkEntry.queries("q_exact_dup_groups")(spark, sfDir),
       "Exact-dup grouping: sha256 over the normalized text, hash aggregate.")

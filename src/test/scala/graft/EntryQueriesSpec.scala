@@ -30,28 +30,6 @@ class EntryQueriesSpec extends AnyFunSuite {
     assert(lsh == quad, s"lsh=${lsh.size} pairs, quadratic=${quad.size} pairs")
   }
 
-  test("verify prefilter on/off produce identical labels and clusters") {
-    import spark.implicits._
-    val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 40, membersPerFamily = 6)
-    def runWith(conf: DedupConfig, tag: String) = {
-      val dir = s"/tmp/graft_test_prefilter_$tag"
-      TestUtil.deleteRecursively(new java.io.File(dir))
-      graft.plans.DedupPipeline.run(spark, pages, dir, conf, resume = false)
-      spark.read.parquet(s"$dir/06_verdicts").select($"pair_key", $"final_label")
-        .as[(String, String)].collect().toMap
-    }
-    val off = runWith(DedupConfig.balanced, "off")
-    val on = runWith(DedupConfig.balanced.copy(estPrefilter = true), "on")
-    assert(on.keySet == off.keySet)
-    val diffs = on.count { case (k, v) => off(k) != v }
-    assert(diffs == 0, s"$diffs label differences between prefilter on/off")
-    // b-bit variant: 40 B packed signatures + widened band, same labels
-    val bbit = runWith(DedupConfig.balanced.copy(bbitPrefilter = true), "bbit")
-    assert(bbit.keySet == off.keySet)
-    val bdiffs = bbit.count { case (k, v) => off(k) != v }
-    assert(bdiffs == 0, s"$bdiffs label differences between bbit prefilter on/off")
-  }
-
   test("upsertByKey: updates win per key, everything else survives") {
     import spark.implicits._
     val existing = Seq((1L, "a", 0), (2L, "b", 0), (3L, "c", 0)).toDF("k", "v", "ver")

@@ -97,6 +97,30 @@ class PlanSpec extends AnyFunSuite {
       s"verify stage planned a cross product:\n$p")
   }
 
+  test("verify stage: verdicts are invariant to the shuffle-partition count") {
+    import spark.implicits._
+    val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 7)
+    val conf = DedupConfig.balanced
+    def verdicts(): Set[String] = {
+      val norm = graft.plans.DedupPipeline.normalizeStage(spark, pages)
+      val reps = graft.plans.DedupPipeline.repMap(spark, norm)
+      val repNorm = norm.join(reps.filter($"url" === $"rep").select($"rep"),
+        norm("url") === $"rep").drop("rep").as[graft.model.Schemas.DocNorm]
+      val sigs = graft.plans.DedupPipeline.signatureStage(spark, repNorm, conf)
+      val bands = graft.plans.DedupPipeline.bandingStage(spark, sigs, conf)
+      val (cands, _) = graft.plans.DedupPipeline.candidateStage(spark, bands, conf)
+      graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, repNorm, conf)
+        .collect().map(_.toString).toSet
+    }
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val atDefault = verdicts()
+    assert(atDefault.nonEmpty)
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "3")
+      assert(verdicts() == atDefault)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("winnow: derivation is shuffle-free; matching is an equi-join, no cartesian") {
     // fingerprint derivation is a per-partition map + explode — it must
     // plan WITHOUT any exchange (per-doc work, no repartition, no agg);
