@@ -3,7 +3,7 @@ package graft
 import graft.ann.Ann
 import graft.model.Schemas._
 import graft.pages.PagesSource
-import graft.plans.DedupPipeline
+import graft.plans.{DedupPipeline, StageStore}
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -180,14 +180,19 @@ object SparkEntry {
       DedupConfig.balanced, resume = false)
   }
 
+  /** Path-safe key of an sf dir, the suffix of every per-sf-dir artifact
+    * path that the Spark queries and the DuckDB oracle SQL share.
+    */
+  private def sfKey(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
+
   /** Deterministic per-sf-dir run dir — shared between the Spark queries and
     * the DuckDB oracle SQL (which reads the same stage parquet).
     */
   def runDirFor(dir: String): String =
-    s"/tmp/graft_pipe_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    s"/tmp/graft_pipe_${sfKey(dir)}"
 
   def annDirFor(dir: String): String =
-    s"/tmp/graft_ann_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    s"/tmp/graft_ann_${sfKey(dir)}"
 
   /** Persisted IVF index per sf dir: centroids + corpus assignment from
     * Ann.ivfFit (the KMeans FIT — iterative, golden/recall-verified, not
@@ -202,14 +207,11 @@ object SparkEntry {
     val centDir = s"$base/10_ivf_centroids"
     val asgDir = s"$base/10_ivf_assign"
     val tag = "nlist16seed42"
-    def done(p: String) = new java.io.File(s"$p/_SUCCESS").exists() &&
-      new java.io.File(s"$p/_graft_conf_$tag").exists()
-    if (!done(centDir) || !done(asgDir)) {
+    if (!StageStore.done(s, centDir, tag) || !StageStore.done(s, asgDir, tag)) {
       val (cent, asg) = Ann.ivfFit(s, embeddings(s, dir), nlist = 16, seed = 42L)
       cent.coalesce(1).write.mode("overwrite").parquet(centDir)
       asg.coalesce(1).write.mode("overwrite").parquet(asgDir)
-      Seq(centDir, asgDir).foreach(p => java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$p/_graft_conf_$tag"), tag))
+      Seq(centDir, asgDir).foreach(StageStore.mark(s, _, tag))
     }
     (centDir, asgDir)
   }
@@ -222,12 +224,10 @@ object SparkEntry {
   def km8CentroidsDir(s: SparkSession, dir: String): String = {
     val p = s"${annDirFor(dir)}/10_km8_centroids"
     val tag = "k8seed42"
-    val done = new java.io.File(s"$p/_SUCCESS").exists() &&
-      new java.io.File(s"$p/_graft_conf_$tag").exists()
-    if (!done) {
+    if (!StageStore.done(s, p, tag)) {
       val (cent, _) = Ann.ivfFit(s, embeddings(s, dir), nlist = 8, seed = 42L)
       cent.coalesce(1).write.mode("overwrite").parquet(p)
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$p/_graft_conf_$tag"), tag)
+      StageStore.mark(s, p, tag)
     }
     p
   }
@@ -251,7 +251,7 @@ object SparkEntry {
     * therefore every banding/candidate row downstream.
     */
   def ophRunDirFor(dir: String): String =
-    s"/tmp/graft_pipeoph_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    s"/tmp/graft_pipeoph_${sfKey(dir)}"
 
   def ophPipelineRunDir(s: SparkSession, dir: String): String = {
     val rd = ophRunDirFor(dir)
@@ -280,7 +280,7 @@ object SparkEntry {
     * q_html_meta); written once per sf dir, read by Spark AND DuckDB.
     */
   def pagesDumpDir(s: SparkSession, dir: String): String = {
-    val p = s"/tmp/graft_pages_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val p = s"/tmp/graft_pages_${sfKey(dir)}"
     if (!new java.io.File(s"$p/_SUCCESS").exists())
       PagesSource.fromDocuments(s, dir, variants = 0).write.mode("overwrite").parquet(p)
     p
@@ -291,7 +291,7 @@ object SparkEntry {
     * both Spark and DuckDB.
     */
   def csvDumpPath(s: SparkSession, dir: String): String = {
-    val p = s"/tmp/graft_csvsrc_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val p = s"/tmp/graft_csvsrc_${sfKey(dir)}"
     if (!new java.io.File(s"$p/_SUCCESS").exists())
       docs(s, dir).select(col("doc_id").cast("string").as("doc_id"), col("text"))
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(p)
@@ -305,7 +305,7 @@ object SparkEntry {
     */
   def jsonDumpPath(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val p = s"/tmp/graft_jsonsrc_${dir.replaceAll("[^A-Za-z0-9]", "_")}.json"
+    val p = s"/tmp/graft_jsonsrc_${sfKey(dir)}.json"
     if (!new java.io.File(p).exists()) {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val arr = mapper.createArrayNode()
@@ -332,7 +332,7 @@ object SparkEntry {
     * Written once, read by Spark AND DuckDB (hive_partitioning).
     */
   def partitionedDumpDir(s: SparkSession, dir: String): String = {
-    val p = s"/tmp/graft_part_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val p = s"/tmp/graft_part_${sfKey(dir)}"
     if (!new java.io.File(s"$p/_SUCCESS").exists())
       docs(s, dir).write.mode("overwrite").partitionBy("lang").parquet(p)
     p
@@ -346,16 +346,15 @@ object SparkEntry {
     */
   def lrModelDir(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val p = s"/tmp/graft_lr_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val p = s"/tmp/graft_lr_${sfKey(dir)}"
     val tag = "v2_thr0.8_it300_lr2.0"
-    val marker = new java.io.File(s"$p/_graft_lr_$tag")
-    if (!new java.io.File(s"$p/_SUCCESS").exists() || !marker.exists()) {
+    if (!StageStore.done(s, p, tag)) {
       val ex = graft.ml.LogReg.examples(s, docs(s, dir), "doc_id", "text", labelThreshold = 0.8)
       val w = graft.ml.LogReg.fit(ex, iters = 300, lr = 2.0)
       graft.ml.LogReg.FeatureNames.zipWithIndex
         .map { case (n, i) => graft.ml.LogReg.Weight(i, n, w(i)) }
         .toDF().coalesce(1).write.mode("overwrite").parquet(p)
-      java.nio.file.Files.writeString(marker.toPath, tag)
+      StageStore.mark(s, p, tag)
     }
     p
   }
@@ -372,9 +371,7 @@ object SparkEntry {
     // same resume discipline as the pipeline stages: a config/code change
     // (new configHash) invalidates persisted snapshots, not just absence
     val ch = DedupConfig.balanced.configHash
-    def done(p: String) = new java.io.File(s"$p/_SUCCESS").exists() &&
-      new java.io.File(s"$p/_graft_conf_$ch").exists()
-    if (!done(prev) || !done(curr)) {
+    if (!StageStore.done(s, prev, ch) || !StageStore.done(s, curr, ch)) {
       val norm = s.read.parquet(s"$rd/01_norm").as[DocNorm]
       val sigs = s.read.parquet(s"$rd/03_sig").as[DocSig]
       val a = graft.plans.Bootstrap.calibrate(s, norm, sigs, DedupConfig.balanced,
@@ -383,8 +380,7 @@ object SparkEntry {
         maxPos = 5000, maxNeg = 5000)
       s.createDataFrame(a).coalesce(1).write.mode("overwrite").parquet(prev)
       s.createDataFrame(b).coalesce(1).write.mode("overwrite").parquet(curr)
-      Seq(prev, curr).foreach(p => java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$p/_graft_conf_$ch"), ch))
+      Seq(prev, curr).foreach(StageStore.mark(s, _, ch))
     }
     (prev, curr)
   }
@@ -405,9 +401,7 @@ object SparkEntry {
     val paramsDir = s"$rd/09_calib_params"
     val cvDir = s"$rd/09_calverdicts"
     val ch = DedupConfig.balanced.configHash
-    def done(p: String) = new java.io.File(s"$p/_SUCCESS").exists() &&
-      new java.io.File(s"$p/_graft_conf_$ch").exists()
-    if (!done(paramsDir) || !done(cvDir)) {
+    if (!StageStore.done(s, paramsDir, ch) || !StageStore.done(s, cvDir, ch)) {
       val norm = s.read.parquet(s"$rd/01_norm").as[DocNorm]
       val sigs = s.read.parquet(s"$rd/03_sig").as[DocSig]
       val cands = s.read.parquet(s"$rd/05_cand").as[CandPair]
@@ -422,8 +416,7 @@ object SparkEntry {
         .coalesce(1).write.mode("overwrite").parquet(paramsDir)
       graft.plans.CalibratedDedup.verify(s, cands, sigs, norm, DedupConfig.balanced, params)
         .toDF().coalesce(1).write.mode("overwrite").parquet(cvDir)
-      Seq(paramsDir, cvDir).foreach(p => java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$p/_graft_conf_$ch"), ch))
+      Seq(paramsDir, cvDir).foreach(StageStore.mark(s, _, ch))
     }
     (paramsDir, cvDir)
   }
@@ -443,9 +436,7 @@ object SparkEntry {
     val (paramsDir, _) = calibVerdictDirs(s, dir)
     val wvDir = s"$rd/09_wcalverdicts"
     val ch = DedupConfig.balanced.configHash
-    def done(p: String) = new java.io.File(s"$p/_SUCCESS").exists() &&
-      new java.io.File(s"$p/_graft_conf_$ch").exists()
-    if (!done(wvDir)) {
+    if (!StageStore.done(s, wvDir, ch)) {
       val norm = s.read.parquet(s"$rd/01_norm").as[DocNorm]
       val sigs = s.read.parquet(s"$rd/03_sig").as[DocSig]
       val cands = s.read.parquet(s"$rd/05_cand").as[CandPair]
@@ -459,8 +450,7 @@ object SparkEntry {
         byName("simhash"), byName("minhash"), byName("embedding"), Some(wp))
       graft.plans.CalibratedDedup.verify(s, cands, sigs, norm, DedupConfig.balanced, params)
         .toDF().coalesce(1).write.mode("overwrite").parquet(wvDir)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$wvDir/_graft_conf_$ch"), ch)
+      StageStore.mark(s, wvDir, ch)
     }
     wvDir
   }
@@ -1158,7 +1148,7 @@ object SparkEntry {
       // DuckDB recomputes both chained upserts (window winner, anti-join,
       // union) from the documents table.
       import s.implicits._
-      val table = s"/tmp/graft_mergetbl_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val table = s"/tmp/graft_mergetbl_${sfKey(dir)}"
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm)
         f.delete(); ()
@@ -1435,7 +1425,7 @@ object SparkEntry {
       // hash-mismatches.
       val db = "graft_bt"
       graft.sources.Bucketed.ensureDb(s, db, "/tmp/graft_bt_wh")
-      val sfx = dir.replaceAll("[^A-Za-z0-9]", "_")
+      val sfx = sfKey(dir)
       val d = docs(s, dir)
       graft.sources.Bucketed.writeTable(d, s"$db.docs_$sfx", "doc_id", 8)
       val stats = d.select(col("doc_id"),
@@ -1977,7 +1967,7 @@ object SparkEntry {
   private def repsPq(dir: String) =
     s"read_parquet('${runDirFor(dir)}/02_reps/*.parquet')"
   private def pagesPq(dir: String) =
-    s"read_parquet('/tmp/graft_pages_${dir.replaceAll("[^A-Za-z0-9]", "_")}/*.parquet')"
+    s"read_parquet('/tmp/graft_pages_${sfKey(dir)}/*.parquet')"
 
   private def incPq(dir: String, name: String) =
     s"read_parquet('${runDirFor(dir)}/$name/*.parquet')"
@@ -2737,10 +2727,10 @@ object SparkEntry {
         "seen AS (SELECT DISTINCT sha256(lower(trim(text))) AS h FROM documents WHERE doc_id % 5 = 0) " +
         "SELECT doc_id FROM firstper WHERE content_hash NOT IN (SELECT h FROM seen) ORDER BY doc_id"),
     "q_csv_import" ->
-      (s"SELECT doc_id, text FROM read_csv('/tmp/graft_csvsrc_${dir.replaceAll("[^A-Za-z0-9]", "_")}/*.csv', " +
+      (s"SELECT doc_id, text FROM read_csv('/tmp/graft_csvsrc_${sfKey(dir)}/*.csv', " +
         "header = true, all_varchar = true) ORDER BY doc_id"),
     "q_json_import" ->
-      (s"SELECT doc_id, text FROM read_json_auto('/tmp/graft_jsonsrc_${dir.replaceAll("[^A-Za-z0-9]", "_")}.json') " +
+      (s"SELECT doc_id, text FROM read_json_auto('/tmp/graft_jsonsrc_${sfKey(dir)}.json') " +
         "ORDER BY doc_id"),
     "q_file_mapping" ->
       ("WITH existing AS (SELECT doc_id, '/data/' || source || '/' || CAST(doc_id AS VARCHAR) || '.txt' AS path, 0 AS ver FROM documents), " +
@@ -3060,7 +3050,7 @@ object SparkEntry {
     // byte-verified quality CTEs) — bit-identical, no exp anywhere.
     "q_lr_quality_score" ->
       ("WITH " + qualityCtes("documents") + ", " +
-        s"wp AS (SELECT name, w FROM read_parquet('/tmp/graft_lr_${dir.replaceAll("[^A-Za-z0-9]", "_")}/*.parquet')), " +
+        s"wp AS (SELECT name, w FROM read_parquet('/tmp/graft_lr_${sfKey(dir)}/*.parquet')), " +
         "wt AS (SELECT " +
         "max(CASE WHEN name = 'bias' THEN w END) AS w0, " +
         "max(CASE WHEN name = 'alpha_ratio' THEN w END) AS w1, " +
@@ -3104,7 +3094,7 @@ object SparkEntry {
     "q_partitioned_sink" ->
       (s"SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars, " +
         "min(doc_id) AS first_doc, max(doc_id) AS last_doc " +
-        s"FROM read_parquet('/tmp/graft_part_${dir.replaceAll("[^A-Za-z0-9]", "_")}/*/*.parquet', hive_partitioning = true) " +
+        s"FROM read_parquet('/tmp/graft_part_${sfKey(dir)}/*/*.parquet', hive_partitioning = true) " +
         "WHERE lang IN ('en', 'de') GROUP BY lang ORDER BY lang"),
     // ---------- pipeline/metrics recomputed over stage parquet ----------
     // Candidate generation recomputed INDEPENDENTLY from the banding-stage

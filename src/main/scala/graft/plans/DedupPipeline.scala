@@ -134,22 +134,33 @@ object DedupPipeline {
     val joined = left.join(right,
         $"band" === $"band2" && $"bucket" === $"bucket2" && $"a" < $"b")
       .select($"a", $"b")
-    // Dedup + per-doc candidate cap (near_duplicate.py:408) fused into ONE
-    // exchange: hash-route the raw bucket pairs by doc `a`, sort each
-    // partition by (a, b), then stream: duplicates (the same pair emitted
-    // by several bands) are adjacent and skipped, and each doc keeps its
-    // first `cap` partners by partner url. Replaces the previous
-    // distinct (pair exchange) + row_number window (second pair exchange +
-    // per-doc sort): identical output set — the partition sort uses the
-    // same binary UTF8String ordering as the window's ORDER BY b — for
-    // one exchange instead of two and no window operator. The streaming
-    // pass holds O(1) state per row (previous partner + kept counter) and
-    // the sort spills gracefully; a collect_set fusion was tried first
-    // and rejected — its per-group array state trips ObjectHashAggregate's
-    // sort-based fallback at real pair volumes (measured +21% on 05_cand
-    // at the 450k scaling corpus).
-    val cap = conf.maxCandidatesPerDoc
-    val capped = joined
+    val capped = capPerDoc(spark, joined, conf.maxCandidatesPerDoc)
+    (domainCap(spark, capped, conf).as[CandPair], dropped)
+  }
+
+  /** Pair dedup + per-doc candidate cap (near_duplicate.py:408) in ONE
+    * exchange, shared by candidateStage and incremental ingest: hash-route
+    * the raw (a, b) bucket pairs by doc `a`, sort each partition by
+    * (a, b), then stream: duplicates (the same pair emitted by several
+    * bands) are adjacent and skipped, and each doc keeps its first `cap`
+    * distinct partners by binary url order.
+    *
+    * distinct + a row_number window ordered by b gives the same set (the
+    * partition sort uses the same binary UTF8String ordering) but costs a
+    * second pair exchange and a per-doc sort. The streaming pass holds
+    * O(1) state per row and the sort spills gracefully; a collect_set
+    * fusion was rejected — its per-group array state trips
+    * ObjectHashAggregate's sort-based fallback at real pair volumes
+    * (measured +21% on 05_cand at the 450k scaling corpus).
+    *
+    * `cappedDocs` counts the docs that lost at least one distinct partner
+    * to the cap; the count is exact unless a task was retried or the
+    * result is computed more than once.
+    */
+  private[plans] def capPerDoc(spark: SparkSession, pairs: DataFrame, cap: Int,
+                               cappedDocs: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+    import spark.implicits._
+    pairs
       .repartition($"a")
       .sortWithinPartitions($"a", $"b")
       .as[(String, String)]
@@ -164,9 +175,12 @@ object DedupPipeline {
             while (nextPair == null && it.hasNext) {
               val p = it.next()
               if (p._1 != curA) { curA = p._1; prevB = null; kept = 0 }
-              if (p._2 != prevB && kept < cap) {
-                prevB = p._2; kept += 1; nextPair = p
-              } else prevB = p._2
+              if (p._2 != prevB) {
+                if (kept < cap) nextPair = p
+                else if (kept == cap) cappedDocs.foreach(_.add(1L))
+                kept += 1
+              }
+              prevB = p._2
             }
           }
           advance()
@@ -174,7 +188,6 @@ object DedupPipeline {
           def next(): (String, String) = { val r = nextPair; advance(); r }
         }
       }.toDF("a", "b")
-    (domainCap(spark, capped, conf).as[CandPair], dropped)
   }
 
   /** Optional per-DOMAIN candidate cap (DedupConfig.maxCandidatesPerDomain)
@@ -501,19 +514,14 @@ object DedupPipeline {
 
   final case class StageResult(name: String, rows: Long, wallMs: Long, skipped: Boolean)
 
+  // run counters persisted with their stage's marker, under their
+  // metrics.json names
+  private final val DroppedMegaBuckets = "dropped_mega_buckets"
+  private final val EmbWallMs = "emb_wall_ms"
+  private final val SpanWallMs = "span_wall_ms"
+
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def stageDone(spark: SparkSession, dir: String, confHash: String): Boolean = {
-    val f = fs(spark, dir)
-    f.exists(new Path(dir, "_SUCCESS")) && f.exists(new Path(dir, s"_graft_conf_$confHash"))
-  }
-
-  private def markStage(spark: SparkSession, dir: String, confHash: String): Unit = {
-    val f = fs(spark, dir)
-    val out = f.create(new Path(dir, s"_graft_conf_$confHash"), true)
-    out.write(confHash.getBytes("UTF-8")); out.close()
-  }
 
   private def writeLineage(spark: SparkSession, runDir: String, runId: String, stage: String,
                            confHash: String, df: DataFrame, wallMs: Long): Unit = {
@@ -527,8 +535,12 @@ object DedupPipeline {
   }
 
   /** Run (or resume) the full pipeline. Every stage persists to
-    * `$runDir/<stage>` and is skipped on re-run when its output and config
-    * marker are present — the north rule's checkpoint-based resume.
+    * `$runDir/<stage>` and is skipped on re-run when [[StageStore]] finds
+    * its output and config marker — the north rule's checkpoint-based
+    * resume. Run counters live in the marker of the stage that measured
+    * them (`dropped_mega_buckets` with 05_cand, `emb_wall_ms` and
+    * `span_wall_ms` with 06_verdicts), so the metrics snapshot reports the
+    * same values on a resumed run as on the cold run that computed them.
     *
     * Lineage snapshots are written CONCURRENTLY with the next stage's
     * compute (guide §2.6 "overlap independent jobs"): the lineage job for
@@ -547,9 +559,10 @@ object DedupPipeline {
     val runId = s"run_$ch"
     val pendingLineage = scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
 
-    def stage[T](name: String)(compute: => DataFrame): DataFrame = {
+    // `counters` is evaluated after the stage output is written
+    def stage(name: String, counters: => Map[String, Long] = Map.empty)(compute: => DataFrame): DataFrame = {
       val dir = s"$runDir/$name"
-      if (resume && stageDone(spark, dir, ch)) {
+      if (resume && StageStore.done(spark, dir, ch)) {
         spark.read.parquet(dir)
       } else {
         // label every job this stage triggers (incl. eager checkpoints
@@ -567,7 +580,7 @@ object DedupPipeline {
             writeLineage(spark, runDir, runId, name, ch, written, ms)
           }
         })
-        markStage(spark, dir, ch)
+        StageStore.mark(spark, dir, ch, counters)
         written
       }
     }
@@ -599,16 +612,20 @@ object DedupPipeline {
     val bandDf = stage("04_bands") { bandingStage(spark, sigs, conf).toDF() }
     val bands = bandDf.as[BandRow]
 
-    val candDf = stage("05_cand") {
-      val (pairs, droppedBuckets) = candidateStage(spark, bands, conf)
-      spark.sparkContext.setLocalProperty("graft.droppedBuckets", droppedBuckets.toString)
+    var droppedBuckets = 0L
+    val candDf = stage("05_cand", Map(DroppedMegaBuckets -> droppedBuckets)) {
+      val (pairs, dropped) = candidateStage(spark, bands, conf)
+      droppedBuckets = dropped
       pairs.toDF()
     }
     val cands = candDf.as[CandPair]
 
     val embAcc = spark.sparkContext.longAccumulator("graft.verify.embNanos")
     val spanAcc = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
-    val verdictDf = stage("06_verdicts") {
+    // summed task time of the per-text learners — the evidence behind the
+    // span/embedding budgets
+    val verdictDf = stage("06_verdicts", Map(
+        EmbWallMs -> embAcc.value / 1000000L, SpanWallMs -> spanAcc.value / 1000000L)) {
       // repNorm, not the full norm: the span-text relations ship whole
       // through their SHUFFLE_HASH exchanges, so restricting them to
       // exact-group reps (187k of 450k rows at the scaling corpus) cuts
@@ -617,15 +634,6 @@ object DedupPipeline {
       // either way (pair urls are always reps).
       verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc)).toDF()
     }
-    // summed task time of the per-text learners — the evidence behind the
-    // span/embedding budgets. Only set when the stage actually ran: a
-    // resumed 06_verdicts leaves the accumulators at 0 and must not clobber
-    // the measurement a cold run recorded earlier in this session (metrics
-    // snapshots are rewritten on every run() call).
-    if (embAcc.value > 0)
-      spark.sparkContext.setLocalProperty("graft.embWallMs", (embAcc.value / 1000000L).toString)
-    if (spanAcc.value > 0)
-      spark.sparkContext.setLocalProperty("graft.spanWallMs", (spanAcc.value / 1000000L).toString)
 
     val clusters = stage("07_clusters") {
       clusterStage(spark, verdictDf.as[Verdict], repsDf, conf)
@@ -713,12 +721,14 @@ object DedupPipeline {
         .orderBy($"stage").collect()
         .map(r => s"""{"stage":"${r.getString(0)}","wall_ms":${r.getLong(1)},"rows":${r.getLong(2)}}""")
         .mkString("[", ",", "]")
-    val dropped = Option(spark.sparkContext.getLocalProperty("graft.droppedBuckets")).getOrElse("0")
+    val candCounters = StageStore.counters(spark, s"$runDir/05_cand", confHash)
+    val verdictCounters = StageStore.counters(spark, s"$runDir/06_verdicts", confHash)
+    val dropped = candCounters.getOrElse(DroppedMegaBuckets, 0L)
+    val embMs = verdictCounters.getOrElse(EmbWallMs, 0L)
+    val spanMs = verdictCounters.getOrElse(SpanWallMs, 0L)
     val summary = summaryF.get()
     val embPairs = summary.getLong(7)
     val spanPairs = summary.getLong(8)
-    val embMs = Option(spark.sparkContext.getLocalProperty("graft.embWallMs")).getOrElse("0")
-    val spanMs = Option(spark.sparkContext.getLocalProperty("graft.spanWallMs")).getOrElse("0")
     val json =
       s"""{"run_id":"$runId","config_hash":"$confHash",
          |"total_pairs":${summary.getLong(0)},"duplicates":${summary.getLong(1)},
@@ -726,9 +736,9 @@ object DedupPipeline {
          |"exact_dups":${summary.getLong(4)},"near_dups":${summary.getLong(5)},
          |"consensus_rate":${summary.getDouble(6)},
          |"clusters":$nClusters,"clustered_docs":$clustered,
-         |"dropped_mega_buckets":$dropped,
+         |"$DroppedMegaBuckets":$dropped,
          |"emb_pairs":$embPairs,"span_pairs":$spanPairs,
-         |"emb_wall_ms":$embMs,"span_wall_ms":$spanMs,
+         |"$EmbWallMs":$embMs,"$SpanWallMs":$spanMs,
          |"stages":$lineage}""".stripMargin.replace("\n", "")
     val f = fs(spark, runDir)
     val out = f.create(new Path(runDir, "metrics.json"), true)

@@ -36,8 +36,9 @@ import org.apache.spark.sql.functions._
   * under the exact shingle/signature config that produced the old run, so
   * ingest refuses an old run dir whose config marker differs.
   *
-  * Outputs persist under `incDir` with the same marker/resume protocol as
-  * DedupPipeline.run — except that the incremental markers also carry a
+  * Outputs persist under `incDir` with the same [[StageStore]] markers as
+  * DedupPipeline.run (which keeps its run counters in those markers;
+  * ingest records none) — except that the incremental markers also carry a
   * BATCH token (row count + order-independent xxh64 content hash of the
   * new batch), so re-running against the same incDir with a DIFFERENT
   * batch recomputes instead of silently returning the previous batch's
@@ -68,24 +69,13 @@ object IncrementalDedup {
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def stageDone(spark: SparkSession, dir: String, ch: String): Boolean = {
-    val f = fs(spark, dir)
-    f.exists(new Path(dir, "_SUCCESS")) && f.exists(new Path(dir, s"_graft_conf_$ch"))
-  }
-
-  private def markStage(spark: SparkSession, dir: String, ch: String): Unit = {
-    val f = fs(spark, dir)
-    val out = f.create(new Path(dir, s"_graft_conf_$ch"), true)
-    out.write(ch.getBytes("UTF-8")); out.close()
-  }
-
   /** The old run must have been produced by the same signature config —
     * cross-config signatures are not comparable. Checked via the stage
     * marker DedupPipeline.run wrote next to 03_sig.
     */
   private def requireCompatible(spark: SparkSession, oldRunDir: String, ch: String): Unit = {
-    val ok = fs(spark, oldRunDir).exists(new Path(s"$oldRunDir/03_sig", s"_graft_conf_$ch"))
-    require(ok, s"old run at $oldRunDir was not produced by config $ch — " +
+    require(StageStore.done(spark, s"$oldRunDir/03_sig", ch),
+      s"old run at $oldRunDir was not produced by config $ch — " +
       "incremental signatures would be incomparable (re-run the base pipeline or pass its config)")
   }
 
@@ -117,13 +107,13 @@ object IncrementalDedup {
 
     def stage(name: String)(compute: => DataFrame): DataFrame = {
       val dir = s"$incDir/$name"
-      if (resume && stageDone(spark, dir, marker)) spark.read.parquet(dir)
+      if (resume && StageStore.done(spark, dir, marker)) spark.read.parquet(dir)
       else {
         // job labels as in DedupPipeline.run (guide §1.5)
         spark.sparkContext.setJobDescription(s"incremental: $name")
         try compute.write.mode(SaveMode.Overwrite).parquet(dir)
         finally spark.sparkContext.setJobDescription(null)
-        markStage(spark, dir, marker)
+        StageStore.mark(spark, dir, marker)
         spark.read.parquet(dir)
       }
     }
@@ -170,6 +160,7 @@ object IncrementalDedup {
     val newBandDf = stage("inc_04_bands") { DedupPipeline.bandingStage(spark, newSigDf.as[DocSig], conf).toDF() }
 
     // ---- candidates: probe only buckets containing a new row ----
+    val cappedDocs = spark.sparkContext.longAccumulator("graft.ingest.cappedDocs")
     val candDf = stage("inc_05_cand") {
       val nbAll = newBandDf.select($"band", $"bucket", $"url")
       val newKeys = nbAll.select($"band", $"bucket").distinct()
@@ -190,22 +181,14 @@ object IncrementalDedup {
         .join(ob.select($"band".as("b2"), $"bucket".as("k2"), $"url".as("ou")),
           $"band" === $"b2" && $"bucket" === $"k2")
         .select(least($"nu", $"ou").as("a"), greatest($"nu", $"ou").as("b"))
-      val pairs = intra.union(cross).distinct()
-      val w = org.apache.spark.sql.expressions.Window.partitionBy($"a").orderBy($"b")
-      val withRn = DedupPipeline.ckpt(spark, pairs.withColumn("rn", row_number().over(w)), conf)
-      // cap-boundary divergence from full recompute (object Scaladoc) —
-      // mirror the mega-bucket logged-drop convention when it fires
-      val cappedDocs = withRn.filter($"rn" > conf.maxCandidatesPerDoc)
-        .select($"a").distinct().count()
-      if (cappedDocs > 0) {
-        System.err.println(s"[graft.IncrementalDedup] $cappedDocs docs hit " +
-          s"maxCandidatesPerDoc=${conf.maxCandidatesPerDoc} during ingest — " +
-          "candidate sets for those docs may differ from a full recompute")
-        spark.sparkContext.setLocalProperty("graft.inc.cappedDocs", cappedDocs.toString)
-      }
-      withRn.filter($"rn" <= conf.maxCandidatesPerDoc)
-        .select($"a", $"b")
+      DedupPipeline.capPerDoc(spark, intra.union(cross), conf.maxCandidatesPerDoc, Some(cappedDocs))
     }
+    // cap-boundary divergence from full recompute (object Scaladoc) —
+    // mirror the mega-bucket logged-drop convention when it fires
+    if (cappedDocs.value > 0)
+      System.err.println(s"[graft.IncrementalDedup] ${cappedDocs.value} docs hit " +
+        s"maxCandidatesPerDoc=${conf.maxCandidatesPerDoc} during ingest (exact unless a task " +
+        "was retried) — candidate sets for those docs may differ from a full recompute")
 
     // ---- verify: sigs/norm restricted to pair members (semi-joins) ----
     val verdictDf = stage("inc_06_verdicts") {
@@ -286,7 +269,7 @@ object IncrementalDedup {
       val merged = spark.read.parquet(s"$oldRunDir/$stage")
         .unionByName(spark.read.parquet(s"$incDir/$incName"))
       merged.write.mode(SaveMode.Overwrite).parquet(s"$outRunDir/$stage")
-      markStage(spark, s"$outRunDir/$stage", ch)
+      StageStore.mark(spark, s"$outRunDir/$stage", ch)
     }
     fold("01_norm", "inc_01_norm")
     fold("03_sig", "inc_03_sig")
@@ -299,6 +282,6 @@ object IncrementalDedup {
       .select($"cluster_id").distinct()
     val kept = oldC.join(touched, Seq("cluster_id"), "left_anti")
     kept.unionByName(incA).write.mode(SaveMode.Overwrite).parquet(s"$outRunDir/07_clusters")
-    markStage(spark, s"$outRunDir/07_clusters", ch)
+    StageStore.mark(spark, s"$outRunDir/07_clusters", ch)
   }
 }

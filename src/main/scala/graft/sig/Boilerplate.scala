@@ -97,7 +97,6 @@ object Boilerplate {
         java.util.Arrays.sort(hot)
         System.err.println(s"[graft.boilerplate] ${hot.length} hot shingles " +
           s"(df > $thr over $n sampled docs, frac $frac)")
-        spark.sparkContext.setLocalProperty("graft.boilerplate.hotShingles", hot.length.toString)
         hot
     }
   }

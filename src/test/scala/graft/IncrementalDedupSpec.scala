@@ -130,6 +130,47 @@ class IncrementalDedupSpec extends AnyFunSuite {
       "stale previous-batch stages were returned instead of recomputing")
   }
 
+  test("ingest keeps each doc's first maxCandidatesPerDoc distinct partners by url") {
+    import spark.implicits._
+    // one text and many one-word edits of it: every page collides with
+    // most others in some band, so a cap of 3 binds for most docs
+    val words = (0 until 240).map(i => s"w${(i * 7919) % 613}")
+    val pages = (0 until 24).map { i =>
+      val t = words.updated(i * 9, s"edit$i").mkString(" ")
+      graft.model.Schemas.Page(f"https://cap.example/p$i%02d", new java.sql.Timestamp(1704067200000L),
+        Array.emptyByteArray, t, "en")
+    }
+    val conf = DedupConfig.balanced.copy(maxCandidatesPerDoc = 3)
+    val oldDir = freshDir("cap_old")
+    graft.plans.DedupPipeline.run(spark, pages.filter(_.url.last % 2 == 0).toDS(), oldDir, conf,
+      resume = false)
+    val incDir = freshDir("cap_inc")
+    graft.plans.IncrementalDedup.ingest(spark, oldDir, pages.filter(_.url.last % 2 == 1).toDS(),
+      incDir, conf)
+
+    // driver-side reference from the persisted bands: buckets holding a new
+    // row (none overflows maxBucketSize here), new-new and new-old pairs
+    // ordered (a < b), then each doc's first `cap` distinct partners
+    def bands(dir: String) = spark.read.parquet(dir).as[graft.model.Schemas.BandRow].collect()
+      .groupBy(r => (r.band, r.bucket)).map { case (k, rs) => k -> rs.map(_.url).toSeq }
+    val newBands = bands(s"$incDir/inc_04_bands")
+    val oldBands = bands(s"$oldDir/04_bands")
+    val raw = newBands.toSeq.flatMap { case (k, nu) =>
+      val members = nu ++ oldBands.getOrElse(k, Nil)
+      assert(members.size <= conf.maxBucketSize)
+      for (x <- nu; y <- members if x != y) yield if (x < y) (x, y) else (y, x)
+    }.distinct
+    val partners = raw.groupBy(_._1).map { case (a, ps) => a -> ps.map(_._2).sorted }
+    assert(partners.values.exists(_.size > conf.maxCandidatesPerDoc), "the cap never binds")
+    val expected = partners.toSeq.flatMap { case (a, bs) =>
+      bs.take(conf.maxCandidatesPerDoc).map(a -> _) }.toSet
+
+    val got = spark.read.parquet(s"$incDir/inc_05_cand").as[(String, String)].collect()
+    assert(got.length == got.toSet.size, "duplicate candidate pairs")
+    assert(got.toSet == expected,
+      s"only-ingest=${(got.toSet -- expected).take(5)}, only-reference=${(expected -- got.toSet).take(5)}")
+  }
+
   test("config-mismatched old run is refused") {
     import spark.implicits._
     val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 4, membersPerFamily = 2)

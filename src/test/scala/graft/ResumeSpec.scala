@@ -81,6 +81,65 @@ class ResumeSpec extends AnyFunSuite {
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
   }
 
+  /** A crowd of one-word edits of one text (its LSH buckets overflow a
+    * small maxBucketSize) plus 3-member families whose members replace a
+    * quarter of the base text (gray-zone pairs that need the embedding
+    * tiebreak).
+    */
+  private def counterPagesDs = {
+    val rng = new graft.pages.PagesSource.DetRng(11L)
+    def text(n: Int) = Vector.fill(n)(s"v${rng.nextInt(20000)}")
+    val crowdBase = text(300)
+    val crowd = (0 until 8).map(i => s"crowd/$i" -> crowdBase.updated(i * 30, s"edit$i"))
+    // long texts keep the embedding pass well above the 1 ms resolution
+    // of emb_wall_ms
+    val families = (0 until 30).flatMap { f =>
+      val base = text(3000)
+      (0 until 3).map { m =>
+        val from = m * 750
+        s"fam$f/$m" -> (if (m == 0) base else base.patch(from, text(750), 750))
+      }
+    }
+    val pages = (crowd ++ families).map { case (path, words) =>
+      Page(s"https://counters.example/$path", new Timestamp(1704067200000L),
+        Array.emptyByteArray, words.mkString(" "), "en")
+    }
+    spark.createDataset(pages)(org.apache.spark.sql.Encoders.product[Page])
+  }
+
+  private def metric(dir: String, key: String): Long = {
+    val json = java.nio.file.Files.readString(new File(s"$dir/metrics.json").toPath)
+    ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(json).map(_.group(1).toLong)
+      .getOrElse(fail(s"$key missing from $dir/metrics.json: $json"))
+  }
+
+  test("metrics.json counters survive resume and do not leak across runs") {
+    val counters = Seq("dropped_mega_buckets", "emb_wall_ms", "span_wall_ms")
+    def countersOf(dir: String) = counters.map(k => k -> metric(dir, k)).toMap
+    val dirA = "/tmp/graft_test_resume_counters_a"
+    val dirB = "/tmp/graft_test_resume_counters_b"
+    TestUtil.deleteRecursively(new File(dirA))
+    TestUtil.deleteRecursively(new File(dirB))
+
+    // A: a bucket cap the crowd overflows but the families do not
+    val confA = DedupConfig.balanced.copy(maxBucketSize = 5)
+    DedupPipeline.run(spark, counterPagesDs, dirA, confA, resume = true).count()
+    val coldA = countersOf(dirA)
+    assert(coldA("dropped_mega_buckets") > 0, s"run A dropped no bucket: $coldA")
+    assert(coldA("emb_wall_ms") > 0, s"run A timed no embedding work: $coldA")
+
+    // B: a cold run that embeds nothing must report 0, not A's time
+    DedupPipeline.run(spark, counterPagesDs, dirB, DedupConfig.balanced.copy(embedEnabled = false),
+      resume = true).count()
+    assert(metric(dirB, "emb_wall_ms") == 0)
+    assert(metric(dirB, "emb_pairs") == 0)
+
+    val verdictTimes = partMtimes(s"$dirA/06_verdicts")
+    DedupPipeline.run(spark, counterPagesDs, dirA, confA, resume = true).count()
+    assert(partMtimes(s"$dirA/06_verdicts") == verdictTimes, "run A was recomputed, not resumed")
+    assert(countersOf(dirA) == coldA)
+  }
+
   test("config change invalidates stage outputs") {
     val dir = "/tmp/graft_test_resume_conf"
     TestUtil.deleteRecursively(new File(dir))
