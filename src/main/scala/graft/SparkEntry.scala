@@ -566,7 +566,7 @@ object SparkEntry {
       import s.implicits._
       val t = docs(s, dir).select(col("doc_id"),
         array_distinct(split(trim(lower(col("text"))), "\\s+")).as("toks"))
-      graft.text.TokenLsh.jaccardPairs(s, t.as[(Long, Seq[String])], threshold = 0.8)
+      graft.text.TokenLsh.jaccardPairs(s, t.as[(Long, Seq[String])], threshold = 0.8)._1
         .orderBy("a", "b")
     }),
     "q_ngram_jaccard_lsh" -> ((s, dir) => {
@@ -582,7 +582,7 @@ object SparkEntry {
         "CASE WHEN size(toks) >= 3 THEN transform(sequence(0, size(toks) - 3), " +
           "i -> concat_ws(' ', slice(toks, i + 1, 3))) " +
           "ELSE CAST(array() AS ARRAY<STRING>) END").as("sh"))
-      graft.text.TokenLsh.jaccardPairs(s, sh.as[(Long, Seq[String])], threshold = 0.8)
+      graft.text.TokenLsh.jaccardPairs(s, sh.as[(Long, Seq[String])], threshold = 0.8)._1
         .orderBy("a", "b")
     }),
     "q_ann_topk" -> ((s, dir) => {
@@ -925,7 +925,7 @@ object SparkEntry {
     "q_embed_near_dup" -> ((s, dir) => {
       // the sandbox embeddings top out at cosine ~0.51; 0.45 exercises the
       // operator with a non-empty result
-      Ann.lshCandidates(s, embeddings(s, dir), dim = 64, bands = 16, bitsPerBand = 6)
+      Ann.lshCandidates(s, embeddings(s, dir), dim = 64, bands = 16, bitsPerBand = 6)._1
         .filter(col("cosine") >= 0.45)
         .orderBy("a", "b")
     }),
@@ -1061,7 +1061,7 @@ object SparkEntry {
     "q_domain_capped_candidates" -> ((s, dir) => {
       val pairs = s.read.parquet(s"${pipelineRunDir(s, dir)}/05_cand").select("a", "b")
       graft.plans.DedupPipeline.domainCap(s, pairs,
-        DedupConfig.balanced.copy(maxCandidatesPerDomain = Some(domainCapQueryCap)))
+        DedupConfig.balanced.copy(maxCandidatesPerDomain = Some(domainCapQueryCap)))._1
         .orderBy("a", "b")
     }),
     "q_simhash_near_dup" -> ((s, dir) => {
@@ -1072,7 +1072,7 @@ object SparkEntry {
       val sigs = s.read.parquet(s"${pipelineRunDir(s, dir)}/03_sig")
       graft.sig.SimHashLsh.nearDupPairs(s, sigs,
         maxHamming = simhashNearDupMaxHamming,
-        maxBucketSize = DedupConfig.balanced.maxBucketSize)
+        maxBucketSize = DedupConfig.balanced.maxBucketSize)._1
         .orderBy("a", "b")
     }),
     "q_containment_pairs" -> ((s, dir) => {
@@ -1699,7 +1699,7 @@ object SparkEntry {
       // same scheme as q_token_jaccard_lsh).
       val fps = graft.sig.Winnow.fingerprintRows(
         docsWithVariants(s, dir), "doc_id", "text", k = 4, w = 4)
-      graft.sig.Winnow.matches(s, fps, "doc_id", minShared = 2L)
+      graft.sig.Winnow.matches(s, fps, "doc_id", minShared = 2L)._1
         .orderBy("a", "b")
     }),
     "q_cluster_summary" -> ((s, dir) => {
@@ -1926,7 +1926,7 @@ object SparkEntry {
       // keep rule) from embeddings + centroids. At sf0.01: 27 semantic
       // groups (3 triples, 24 pairs) over 500 vectors.
       val cd = km8CentroidsDir(s, dir)
-      graft.ann.SemDedup.semDedup(s, embeddings(s, dir), s.read.parquet(cd), tau = 0.4)
+      graft.ann.SemDedup.semDedup(s, embeddings(s, dir), s.read.parquet(cd), tau = 0.4)._1
         .orderBy("vec_id")
     }),
     "q_simhash_modes" -> ((s, dir) => {

@@ -14,6 +14,9 @@ import org.apache.spark.sql.functions._
   *   the bucket key, and probes = multi-band OR amplification.
   * - `cosineNearDup`: near-duplicate pairs by embedding cosine >= threshold,
   *   LSH-bucketed.
+  *
+  * The LSH paths return the mega-bucket guard's drop count next to their
+  * pairs (graft.lsh.BucketGuard).
   */
 object Ann {
 
@@ -62,16 +65,16 @@ object Ann {
     * with exact cosine — the scalable near-dup / ANN candidate source.
     *
     * Mega-bucket guard: buckets with more than `maxBucketSize` members are
-    * dropped with a logged count (local property
-    * `graft.ann.droppedBuckets`) — a degenerate bucket (all-zero or
-    * boilerplate-identical vectors land in the same bucket in EVERY band)
-    * would otherwise turn the self-join quadratic at corpus scale. Same
-    * policy as the dedup pipeline's candidateStage.
+    * dropped with a logged count, returned next to the pairs — a
+    * degenerate bucket (all-zero or boilerplate-identical vectors land in
+    * the same bucket in EVERY band) would otherwise turn the self-join
+    * quadratic at corpus scale. Same policy as the dedup pipeline's
+    * candidateStage.
     */
   def lshCandidates(spark: SparkSession, vectors: DataFrame, dim: Int,
                     bands: Int = 4, bitsPerBand: Int = 12,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    maxBucketSize: Long = 4096L): DataFrame = {
+                    maxBucketSize: Long = 4096L): (DataFrame, Long) = {
     import spark.implicits._
     val base = vectors.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val banded = (0 until bands).map { b =>
@@ -82,10 +85,11 @@ object Ann {
       .select($"band", $"bucket", $"id", $"vec")
     val l = bx.select($"band", $"bucket", $"id".as("a"), $"vec".as("va"))
     val r = bx.select($"band".as("band2"), $"bucket".as("bucket2"), $"id".as("b"), $"vec".as("vb"))
-    l.join(r, $"band" === $"band2" && $"bucket" === $"bucket2" && $"a" < $"b")
+    val pairs = l.join(r, $"band" === $"band2" && $"bucket" === $"bucket2" && $"a" < $"b")
       .select($"a", $"b", $"va", $"vb").distinct()
       .withColumn("cosine", cosineExpr("va", "vb"))
       .select($"a", $"b", $"cosine")
+    (pairs, g.dropped)
   }
 
   /** IVF top-k — the coarse-quantizer scale path: KMeans learns `nlist`
@@ -195,10 +199,12 @@ object Ann {
       }.toDF(idCol, "list_id")
   }
 
-  /** Embedding-cosine near-duplicate pairs at `threshold`, LSH-bucketed. */
+  /** Embedding-cosine near-duplicate pairs at `threshold`, LSH-bucketed,
+    * and the dropped bucket count.
+    */
   def cosineNearDup(spark: SparkSession, vectors: DataFrame, dim: Int, threshold: Double,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    lshCandidates(spark, vectors, dim, idCol = idCol, vecCol = vecCol)
-      .filter(col("cosine") >= threshold)
+                    idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, Long) = {
+    val (pairs, dropped) = lshCandidates(spark, vectors, dim, idCol = idCol, vecCol = vecCol)
+    (pairs.filter(col("cosine") >= threshold), dropped)
   }
 }

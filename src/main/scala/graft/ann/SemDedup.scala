@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
   * shuffle; pair generation is a per-cluster self-join — the LSH-bucket
   * shape, under the shared BucketGuard (an all-boilerplate mega-cluster
   * would turn the join quadratic; dropped clusters degrade to keep-all,
-  * logged, never partially sampled); grouping is the iterative DataFrame
-  * CC; the keep rule is a partial aggregation (min of a (−d2, id)
-  * struct, map-side combinable), not a global window.
+  * logged and returned as a drop count, never partially sampled);
+  * grouping is the iterative DataFrame CC; the keep rule is a partial
+  * aggregation (min of a (−d2, id) struct, map-side combinable), not a
+  * global window.
   *
   * Reference scope note: the reference has no embedding-cluster dedup
   * (its embed path is pairwise cosine only, embed_model.py) — this is a
@@ -64,11 +65,12 @@ object SemDedup {
   /** Within-cluster cosine >= tau pairs: the guarded per-cluster
     * self-join (equi-join on list_id — the LSH-bucket shape; PlanSpec
     * asserts it never degrades to a cross product). `asg` is
-    * assignWithDist's output.
+    * assignWithDist's output. Returns the edges and the number of
+    * clusters the guard dropped.
     */
   def clusterEdges(spark: SparkSession, vectors: DataFrame, asg: DataFrame,
                    tau: Double, maxClusterSize: Long,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                   idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, Long) = {
     import spark.implicits._
     val guarded = graft.lsh.BucketGuard.okBuckets(
       spark, asg.select(lit(0).as("band"), $"list_id".as("bucket")),
@@ -76,25 +78,28 @@ object SemDedup {
     val withVec = asg.join(guarded.ok.select($"bucket".as("list_id")), Seq("list_id"))
       .join(vectors.select(col(idCol), col(vecCol)), Seq(idCol))
       .select(col(idCol), $"list_id", col(vecCol))
-    withVec.select($"list_id", col(idCol).as("a"), col(vecCol).as("va"))
+    val edges = withVec.select($"list_id", col(idCol).as("a"), col(vecCol).as("va"))
       .join(withVec.select($"list_id", col(idCol).as("b"), col(vecCol).as("vb")), Seq("list_id"))
       .filter($"a" < $"b")
       .filter(Ann.cosineExpr("va", "vb") >= tau)
       .select($"a", $"b")
+    (edges, guarded.dropped)
   }
 
   /** @return one row per input vector: (idCol, list_id, rep, keep) —
     *         rep = min id of the semantic-dup group (own id if
-    *         unclustered), keep = this member survives dedup.
+    *         unclustered), keep = this member survives dedup — and the
+    *         number of mega-clusters the guard dropped (their members
+    *         are kept as singletons).
     */
   def semDedup(spark: SparkSession, vectors: DataFrame, centroids: DataFrame,
                tau: Double, maxClusterSize: Long = 100000L,
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+               idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, Long) = {
     import spark.implicits._
     // materialized once for its three consumers (edges, labels, keep);
     // localCheckpoint over persist per the BucketGuard convention
     val asg = assignWithDist(spark, vectors, centroids, idCol, vecCol).localCheckpoint()
-    val edges = clusterEdges(spark, vectors, asg, tau, maxClusterSize, idCol, vecCol)
+    val (edges, dropped) = clusterEdges(spark, vectors, asg, tau, maxClusterSize, idCol, vecCol)
     val comps = graft.cc.ConnectedComponents.run(spark, edges)
       .select(col("url").as(idCol), col("comp").as("rep"))
 
@@ -103,7 +108,8 @@ object SemDedup {
     val keepers = labeled.groupBy($"rep")
       .agg(min(struct(negate($"d2").as("nd2"), col(idCol).as("kid"))).as("k"))
       .select($"rep", $"k.kid".as("keep_id"))
-    labeled.join(keepers, Seq("rep"))
+    val kept = labeled.join(keepers, Seq("rep"))
       .select(col(idCol), $"list_id", $"rep", (col(idCol) === $"keep_id").as("keep"))
+    (kept, dropped)
   }
 }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * single worst skew source at web scale. Buckets above `maxBucketSize`
   * are DROPPED (never partially sampled: partial buckets would make the
   * candidate set partitioning-dependent), the drop count is logged to
-  * stderr and published under the local property
-  * `graft.<tag>.droppedBuckets`, and singleton buckets are pruned in the
-  * same pass (no pair can come out of them).
+  * stderr and returned in [[Guarded]] — every caller returns it next to
+  * its pairs — and singleton buckets are pruned in the same pass (no pair
+  * can come out of them).
   *
   * Mirrors the reference's per-doc candidate caps
   * (near_duplicate.py:36-37,408-417) at the bucket level.
@@ -23,15 +23,17 @@ object BucketGuard {
 
   /** @param ok      surviving (band, bucket) keys — join back onto the
     *                caller's row relation(s)
-    * @param dropped number of buckets dropped for exceeding the cap
+    * @param dropped number of buckets dropped for exceeding the cap; exact
+    *                unless a guard task was retried (a retry can only
+    *                over-count it)
     */
   final case class Guarded(ok: DataFrame, dropped: Long)
 
   /** @param rows DataFrame with at least (band, bucket) columns — one row
     *             per bucket MEMBER (union multiple relations first for a
     *             combined-size guard).
-    * @param tag  short path id for the log line / local property
-    *             (`pipeline`, `inc`, `tokenLsh`, `ann`).
+    * @param tag  short path id for the log line and accumulator name
+    *             (`pipeline`, `inc`, `tokenLsh`, `ann`, ...).
     */
   def okBuckets(spark: SparkSession, rows: DataFrame, maxBucketSize: Long,
                 tag: String): Guarded = {
@@ -42,11 +44,10 @@ object BucketGuard {
     // one cached relation per guarded LSH pass for the session lifetime.
     // The dropped-bucket count is accumulated by the SAME tasks that
     // materialize the checkpoint (was a separate filter+count job over the
-    // checkpointed sizes — one job per guarded LSH pass saved). The rows
-    // are deterministic aggregation output, so a rare task retry
-    // re-observes identical rows; the count feeds a log line and the
-    // drop-metric property, and the planted-bucket specs see the exact
-    // value on the happy path.
+    // checkpointed sizes — one job per guarded LSH pass saved). A retried
+    // task re-observes identical rows and adds them again, so a retry can
+    // only over-count; the planted-bucket specs see the exact value on the
+    // happy path.
     val acc = spark.sparkContext.longAccumulator(s"graft.$tag.droppedBucketsAcc")
     val sized = rows.groupBy($"band", $"bucket").count()
     // Row-encoded pass-through (callers use int, long AND string bucket
@@ -60,7 +61,6 @@ object BucketGuard {
     if (dropped > 0)
       System.err.println(
         s"[graft.$tag] dropped $dropped mega-buckets (> $maxBucketSize members)")
-    spark.sparkContext.setLocalProperty(s"graft.$tag.droppedBuckets", dropped.toString)
     Guarded(sizes.filter($"count" >= 2 && $"count" <= maxBucketSize)
       .select($"band", $"bucket"), dropped)
   }

@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
 object Metrics {
 
   /** M1 — run summary: counts by final label and dup kind, consensus rate
-    * (metrics.py:13-68).
+    * (metrics.py:13-68). `extra` aggregates are appended to the same pass.
+    * Over an empty relation every `sum` (and so `consensus_rate`) is null.
     */
-  def runSummary(verdicts: DataFrame): DataFrame = {
-    verdicts.agg(
+  def runSummary(verdicts: DataFrame, extra: Column*): DataFrame = {
+    val cols = Seq(
       count(lit(1)).as("total_pairs"),
       sum(when(col("final_label") === "DUPLICATE", 1).otherwise(0)).as("duplicates"),
       sum(when(col("final_label") === "NON_DUPLICATE", 1).otherwise(0)).as("non_duplicates"),
@@ -21,7 +22,8 @@ object Metrics {
       sum(when(col("dup_kind") === "EXACT", 1).otherwise(0)).as("exact_dups"),
       sum(when(col("dup_kind") === "NEAR", 1).otherwise(0)).as("near_dups"),
       (sum(when(col("final_label") =!= "UNCERTAIN", 1).otherwise(0)) / count(lit(1)))
-        .as("consensus_rate"))
+        .as("consensus_rate")) ++ extra
+    verdicts.agg(cols.head, cols.tail: _*)
   }
 
   /** Exact per-distinct-score cumulative counts WITHOUT a global

@@ -120,22 +120,25 @@ object DedupPipeline {
     }
   }
 
-  /** Stage 4: candidate pairs — bucket self-join with mega-bucket guard and
-    * per-doc caps. Returns (pairs, droppedBucketCount).
+  /** Stage 4: candidate pairs — bucket self-join with mega-bucket guard,
+    * per-doc and per-domain caps. Returns the pairs and the stage's run
+    * counters under their metrics.json names (`dropped_mega_buckets`,
+    * `dropped_domain_pairs`).
     */
-  def candidateStage(spark: SparkSession, bands: Dataset[BandRow], conf: DedupConfig): (Dataset[CandPair], Long) = {
+  def candidateStage(spark: SparkSession, bands: Dataset[BandRow],
+                     conf: DedupConfig): (Dataset[CandPair], Map[String, Long]) = {
     import spark.implicits._
     val g = graft.lsh.BucketGuard.okBuckets(spark, bands.toDF(), conf.maxBucketSize, "pipeline")
     val bx = bands.toDF().join(g.ok, Seq("band", "bucket"))
       .select($"band", $"bucket", $"url")
-    val dropped = g.dropped
     val left = bx.select($"band", $"bucket", $"url".as("a"))
     val right = bx.select($"band".as("band2"), $"bucket".as("bucket2"), $"url".as("b"))
     val joined = left.join(right,
         $"band" === $"band2" && $"bucket" === $"bucket2" && $"a" < $"b")
       .select($"a", $"b")
-    val capped = capPerDoc(spark, joined, conf.maxCandidatesPerDoc)
-    (domainCap(spark, capped, conf).as[CandPair], dropped)
+    val (pairs, droppedPairs) = domainCap(spark, capPerDoc(spark, joined, conf.maxCandidatesPerDoc), conf)
+    (pairs.as[CandPair], Map(
+      RunMetrics.DroppedMegaBuckets -> g.dropped, RunMetrics.DroppedDomainPairs -> droppedPairs))
   }
 
   /** Pair dedup + per-doc candidate cap (near_duplicate.py:408) in ONE
@@ -196,12 +199,15 @@ object DedupPipeline {
     * skew-safe: flooded domains are capped with a salted two-phase top-k,
     * so no task ever sorts more than ~64 x cap rows even when one domain
     * holds billions of pairs; unflooded domains bypass the windows
-    * entirely via an anti-join on the (tiny) flooded-domain set.
+    * entirely via an anti-join on the (tiny) flooded-domain set. Returns
+    * the capped pairs and the number of pairs dropped (0 when no cap is
+    * set).
     */
-  private[graft] def domainCap(spark: SparkSession, pairs: DataFrame, conf: DedupConfig): DataFrame = {
+  private[graft] def domainCap(spark: SparkSession, pairs: DataFrame,
+                               conf: DedupConfig): (DataFrame, Long) = {
     import spark.implicits._
     conf.maxCandidatesPerDomain match {
-      case None => pairs
+      case None => (pairs, 0L)
       case Some(cap) =>
         val withDom = pairs.withColumn("dom", graft.text.UrlOps.hostOf($"a"))
         // localCheckpoint, not persist: blocks are reclaimed by the
@@ -214,8 +220,6 @@ object DedupPipeline {
         if (droppedPairs > 0)
           System.err.println(s"[graft.pipeline] per-domain cap $cap dropped " +
             s"$droppedPairs candidate pairs (flooded domains)")
-        spark.sparkContext.setLocalProperty("graft.pipeline.droppedDomainPairs",
-          droppedPairs.toString)
         val flooded = domCounts.filter($"count" > cap).select($"dom")
         val okPairs = withDom.join(broadcast(flooded), Seq("dom"), "left_anti")
         val floodPairs = withDom.join(broadcast(flooded), Seq("dom"), "left_semi")
@@ -232,7 +236,7 @@ object DedupPipeline {
           .withColumn("salt", pmod(xxhash64($"a", $"b"), lit(salts)))
           .withColumn("r1", row_number().over(w1)).filter($"r1" <= cap)
           .withColumn("r2", row_number().over(w2)).filter($"r2" <= cap)
-        okPairs.select($"a", $"b").unionByName(kept.select($"a", $"b"))
+        (okPairs.select($"a", $"b").unionByName(kept.select($"a", $"b")), droppedPairs)
     }
   }
 
@@ -268,6 +272,11 @@ object DedupPipeline {
     * learners; embedding + shared-span (suffix automaton) pass computed
     * only for the pair subset whose outcome depends on them.
     *
+    * Run counters go into the optional accumulators: the summed task time
+    * of the embedding and span passes (`embNanos`, `spanNanos`, filled as
+    * the result is computed) and the gray-zone pairs the embedding budget
+    * denied (`embBudgetDropped`, added on the calling thread).
+    *
     * Dataflow: one SHUFFLE_HASH pair join per side attaches each doc's
     * hashed-shingle array, simhash words and exact hash; every pair gets
     * the exact merge-count Jaccard and the SimHash Hamming distance, and
@@ -281,7 +290,8 @@ object DedupPipeline {
   def verifyStage(spark: SparkSession, cands: Dataset[CandPair], sigs: Dataset[DocSig],
                   norm: Dataset[DocNorm], conf: DedupConfig,
                   embNanos: Option[org.apache.spark.util.LongAccumulator] = None,
-                  spanNanos: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Verdict] = {
+                  spanNanos: Option[org.apache.spark.util.LongAccumulator] = None,
+                  embBudgetDropped: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Verdict] = {
     import spark.implicits._
 
     // native Catalyst expression (codegen'd merge over ArrayData, no UDF
@@ -350,7 +360,7 @@ object DedupPipeline {
     // each anchor doc's `cap` highest-jaccard gray-zone pairs for the
     // embedding pass; the rest resolve with vote_emb = false (emb_cos stays
     // null). Same anchor/window convention as the span budget. Drops are
-    // counted (one extra job, opted-in runs only) and logged.
+    // counted (one extra job, opted-in runs only), logged and reported.
     val subBudget = conf.embMaxPairsPerDoc match {
       case None => subPre
       case Some(cap) =>
@@ -360,7 +370,7 @@ object DedupPipeline {
         val d = d0.withColumn("do_emb", $"do_emb" && $"emb_rn" <= cap)
         if (dropped > 0)
           System.err.println(s"[graft.pipeline] emb budget dropped $dropped gray-zone pairs (> $cap per doc)")
-        spark.sparkContext.setLocalProperty("graft.pipeline.embBudgetDropped", dropped.toString)
+        embBudgetDropped.foreach(_.add(dropped))
         d
     }
     val subset = subBudget
@@ -403,7 +413,7 @@ object DedupPipeline {
     // every later exchange: by the span joins each emb pair carried
     // va+vb (2 x embedDim floats = 3 kB) plus a span-capped text — at the
     // 450k-page cluster bench those were the two dominant stages (16 + 19 GB
-    // of shuffle, 58.8 GB total, PipeProbe 2026-08-17). Splitting the paths
+    // of shuffle, 58.8 GB total, measured 2026-08-17). Splitting the paths
     // means each pair ships only the payload its own learner reads, and
     // each pass ends in a fixed-width (a, b, score) relation, so the fat
     // bytes cross exactly ONE exchange (the second side join feeds the
@@ -512,14 +522,6 @@ object DedupPipeline {
 
   // ---------- orchestration with persist / resume / lineage ----------
 
-  final case class StageResult(name: String, rows: Long, wallMs: Long, skipped: Boolean)
-
-  // run counters persisted with their stage's marker, under their
-  // metrics.json names
-  private final val DroppedMegaBuckets = "dropped_mega_buckets"
-  private final val EmbWallMs = "emb_wall_ms"
-  private final val SpanWallMs = "span_wall_ms"
-
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -538,15 +540,18 @@ object DedupPipeline {
     * `$runDir/<stage>` and is skipped on re-run when [[StageStore]] finds
     * its output and config marker — the north rule's checkpoint-based
     * resume. Run counters live in the marker of the stage that measured
-    * them (`dropped_mega_buckets` with 05_cand, `emb_wall_ms` and
-    * `span_wall_ms` with 06_verdicts), so the metrics snapshot reports the
-    * same values on a resumed run as on the cold run that computed them.
+    * them (`dropped_mega_buckets` and `dropped_domain_pairs` with 05_cand;
+    * `emb_budget_dropped`, `emb_wall_ms` and `span_wall_ms` with
+    * 06_verdicts), so the [[RunMetrics]] snapshot reports the same values
+    * on a resumed run as on the cold run that computed them.
     *
     * Lineage snapshots are written CONCURRENTLY with the next stage's
     * compute (guide §2.6 "overlap independent jobs"): the lineage job for
     * stage N depends only on N's persisted parquet, so it back-fills
     * executor slots freed by N+1's stragglers instead of serializing ~7
-    * extra jobs onto the critical path. All lineage futures are awaited
+    * extra jobs onto the critical path. A stage is marked done only after
+    * its lineage is written, so a failed lineage write leaves the stage
+    * unmarked and a rerun recomputes it. All lineage futures are awaited
     * (and their failures rethrown) before the metrics snapshot reads the
     * lineage dirs, so the post-run state is identical to the sequential
     * orchestration.
@@ -574,13 +579,16 @@ object DedupPipeline {
           spark.read.parquet(dir)
         } finally spark.sparkContext.setJobDescription(null)
         val ms = (System.nanoTime() - t0) / 1000000
+        // evaluated here, on the driver thread, as the stage finishes; the
+        // marker that records them is written once the lineage is
+        val stageCounters = counters
         pendingLineage += lineagePool.submit(new Runnable {
           def run(): Unit = {
             spark.sparkContext.setJobDescription(s"pipeline: lineage $name")
             writeLineage(spark, runDir, runId, name, ch, written, ms)
+            StageStore.mark(spark, dir, ch, stageCounters)
           }
         })
-        StageStore.mark(spark, dir, ch, counters)
         written
       }
     }
@@ -612,35 +620,37 @@ object DedupPipeline {
     val bandDf = stage("04_bands") { bandingStage(spark, sigs, conf).toDF() }
     val bands = bandDf.as[BandRow]
 
-    var droppedBuckets = 0L
-    val candDf = stage("05_cand", Map(DroppedMegaBuckets -> droppedBuckets)) {
-      val (pairs, dropped) = candidateStage(spark, bands, conf)
-      droppedBuckets = dropped
+    var candCounters = Map.empty[String, Long]
+    val candDf = stage("05_cand", candCounters) {
+      val (pairs, counters) = candidateStage(spark, bands, conf)
+      candCounters = counters
       pairs.toDF()
     }
     val cands = candDf.as[CandPair]
 
     val embAcc = spark.sparkContext.longAccumulator("graft.verify.embNanos")
     val spanAcc = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
+    val budgetAcc = spark.sparkContext.longAccumulator("graft.verify.embBudgetDropped")
     // summed task time of the per-text learners — the evidence behind the
     // span/embedding budgets
-    val verdictDf = stage("06_verdicts", Map(
-        EmbWallMs -> embAcc.value / 1000000L, SpanWallMs -> spanAcc.value / 1000000L)) {
+    val verdictDf = stage("06_verdicts", Map(RunMetrics.EmbBudgetDropped -> budgetAcc.value,
+        RunMetrics.EmbWallMs -> embAcc.value / 1000000L, RunMetrics.SpanWallMs -> spanAcc.value / 1000000L)) {
       // repNorm, not the full norm: the span-text relations ship whole
       // through their SHUFFLE_HASH exchanges, so restricting them to
       // exact-group reps (187k of 450k rows at the scaling corpus) cuts
       // those exchanges ~2.4x — measured +10% on 06_verdicts when this
       // was briefly swapped to the full norm in r06. Results identical
       // either way (pair urls are always reps).
-      verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc)).toDF()
+      verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc)).toDF()
     }
 
     val clusters = stage("07_clusters") {
       clusterStage(spark, verdictDf.as[Verdict], repsDf, conf)
     }
 
-    // lineage must be fully on disk (and any write failure surfaced, as the
-    // sequential orchestration would have) before the snapshot reads it
+    // lineage (and with it every stage marker) must be fully on disk — and
+    // any write failure surfaced, as the sequential orchestration would
+    // have — before the snapshot reads it
     pendingLineage.foreach(_.get())
     writeMetricsSnapshot(spark, runDir, runId, ch, verdictDf, clusters)
     clusters
@@ -659,15 +669,15 @@ object DedupPipeline {
       }
     })
 
-  /** M11 — run-level metrics snapshot (metrics.py:212-281 shape) assembled
-    * from the persisted stage outputs and written alongside them.
+  /** M11 — writes the run's [[RunMetrics]] record as `metrics.json`,
+    * assembled from the persisted stage outputs and markers.
     *
     * Observability only: never allowed to fail the run — every read is
     * existence-checked and the whole write is exception-fenced (a missing
     * lineage dir on a fully-resumed run must not take down the pipeline).
     */
-  def writeMetricsSnapshot(spark: SparkSession, runDir: String, runId: String,
-                           confHash: String, verdicts: DataFrame, clusters: DataFrame): Unit =
+  private def writeMetricsSnapshot(spark: SparkSession, runDir: String, runId: String,
+                                   confHash: String, verdicts: DataFrame, clusters: DataFrame): Unit =
     try writeMetricsSnapshotUnsafe(spark, runDir, runId, confHash, verdicts, clusters)
     catch {
       case scala.util.control.NonFatal(e) =>
@@ -678,71 +688,58 @@ object DedupPipeline {
                                          confHash: String, verdicts: DataFrame, clusters: DataFrame): Unit = {
     import spark.implicits._
     // ONE aggregation job over the verdicts for both the run summary and
-    // the per-text learner pair counts (was two sequential jobs: a
-    // Metrics.runSummary pass plus a second emb/span pass over the same
-    // relation — guide §1.2 "don't compute things you throw away" applied
-    // to whole passes). Expressions are copied verbatim from
-    // Metrics.runSummary so the reported values are bit-identical.
+    // the per-text learner pair counts
     val summaryF = lineagePool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.Row] {
       def call(): org.apache.spark.sql.Row = {
         spark.sparkContext.setJobDescription("pipeline: metrics summary")
-        verdicts.agg(
-        count(lit(1)).as("total_pairs"),
-        sum(when($"final_label" === "DUPLICATE", 1).otherwise(0)).as("duplicates"),
-        sum(when($"final_label" === "NON_DUPLICATE", 1).otherwise(0)).as("non_duplicates"),
-        sum(when($"final_label" === "UNCERTAIN", 1).otherwise(0)).as("uncertain"),
-        sum(when($"dup_kind" === "EXACT", 1).otherwise(0)).as("exact_dups"),
-        sum(when($"dup_kind" === "NEAR", 1).otherwise(0)).as("near_dups"),
-        (sum(when($"final_label" =!= "UNCERTAIN", 1).otherwise(0)) / count(lit(1)))
-          .as("consensus_rate"),
-        sum(when($"emb_cos".isNotNull, 1).otherwise(0)).as("e"),
-        sum(when($"shared_span_len" > 0, 1).otherwise(0)).as("s")).first()
+        graft.metrics.Metrics.runSummary(verdicts,
+          sum(when($"emb_cos".isNotNull, 1).otherwise(0)).as("emb_pairs"),
+          sum(when($"shared_span_len" > 0, 1).otherwise(0)).as("span_pairs")).first()
       }
     })
     // cluster counts run concurrently with the verdict aggregation (two
     // independent tiny jobs — guide §2.6)
     val cRow = clusters.agg(
       countDistinct($"cluster_id").as("n"), count(lit(1)).as("docs")).first()
-    val nClusters = cRow.getLong(0)
-    val clustered = cRow.getLong(1)
     val lineageDir = new Path(s"$runDir/lineage")
-    val f0 = fs(spark, runDir)
+    val f = fs(spark, runDir)
     // explicit per-stage paths, not a "lineage/*" glob: Spark's source
     // resolution stats the literal glob string first and logs a spurious
     // WARN + FileNotFoundException stack (harmless but it pollutes the
     // bench log the driver parses)
     val stageDirs =
-      if (!f0.exists(lineageDir)) Array.empty[String]
-      else f0.listStatus(lineageDir).filter(_.isDirectory).map(_.getPath.toString)
-    val lineage =
-      if (stageDirs.isEmpty) "[]"
+      if (!f.exists(lineageDir)) Array.empty[String]
+      else f.listStatus(lineageDir).filter(_.isDirectory).map(_.getPath.toString)
+    val stages =
+      if (stageDirs.isEmpty) Seq.empty
       else spark.read.parquet(stageDirs.toIndexedSeq: _*)
-        .groupBy($"stage").agg(max($"wall_ms").as("ms"), sum($"rows").as("rows"))
-        .orderBy($"stage").collect()
-        .map(r => s"""{"stage":"${r.getString(0)}","wall_ms":${r.getLong(1)},"rows":${r.getLong(2)}}""")
-        .mkString("[", ",", "]")
-    val candCounters = StageStore.counters(spark, s"$runDir/05_cand", confHash)
-    val verdictCounters = StageStore.counters(spark, s"$runDir/06_verdicts", confHash)
-    val dropped = candCounters.getOrElse(DroppedMegaBuckets, 0L)
-    val embMs = verdictCounters.getOrElse(EmbWallMs, 0L)
-    val spanMs = verdictCounters.getOrElse(SpanWallMs, 0L)
+        .groupBy($"stage").agg(max($"wall_ms").as("wall_ms"), sum($"rows").as("rows"))
+        .orderBy($"stage").as[RunMetrics.StageLine].collect().toSeq
+    val counters = StageStore.counters(spark, s"$runDir/05_cand", confHash) ++
+      StageStore.counters(spark, s"$runDir/06_verdicts", confHash)
+    def counter(name: String) = counters.getOrElse(name, 0L)
     val summary = summaryF.get()
-    val embPairs = summary.getLong(7)
-    val spanPairs = summary.getLong(8)
-    val json =
-      s"""{"run_id":"$runId","config_hash":"$confHash",
-         |"total_pairs":${summary.getLong(0)},"duplicates":${summary.getLong(1)},
-         |"non_duplicates":${summary.getLong(2)},"uncertain":${summary.getLong(3)},
-         |"exact_dups":${summary.getLong(4)},"near_dups":${summary.getLong(5)},
-         |"consensus_rate":${summary.getDouble(6)},
-         |"clusters":$nClusters,"clustered_docs":$clustered,
-         |"$DroppedMegaBuckets":$dropped,
-         |"emb_pairs":$embPairs,"span_pairs":$spanPairs,
-         |"$EmbWallMs":$embMs,"$SpanWallMs":$spanMs,
-         |"stages":$lineage}""".stripMargin.replace("\n", "")
-    val f = fs(spark, runDir)
+    // sums over a run with no candidate pairs are null: report 0
+    def long(field: String) = {
+      val i = summary.fieldIndex(field)
+      if (summary.isNullAt(i)) 0L else summary.getLong(i)
+    }
+    val rate = summary.fieldIndex("consensus_rate")
+    val record = RunMetrics(
+      run_id = runId, config_hash = confHash,
+      total_pairs = long("total_pairs"), duplicates = long("duplicates"),
+      non_duplicates = long("non_duplicates"), uncertain = long("uncertain"),
+      exact_dups = long("exact_dups"), near_dups = long("near_dups"),
+      consensus_rate = if (summary.isNullAt(rate)) 0.0 else summary.getDouble(rate),
+      clusters = cRow.getLong(0), clustered_docs = cRow.getLong(1),
+      dropped_mega_buckets = counter(RunMetrics.DroppedMegaBuckets),
+      dropped_domain_pairs = counter(RunMetrics.DroppedDomainPairs),
+      emb_pairs = long("emb_pairs"), span_pairs = long("span_pairs"),
+      emb_budget_dropped = counter(RunMetrics.EmbBudgetDropped),
+      emb_wall_ms = counter(RunMetrics.EmbWallMs), span_wall_ms = counter(RunMetrics.SpanWallMs),
+      stages = stages)
     val out = f.create(new Path(runDir, "metrics.json"), true)
-    out.write(json.getBytes("UTF-8"))
-    out.close()
+    try out.write(RunMetrics.toJson(record).getBytes("UTF-8"))
+    finally out.close()
   }
 }

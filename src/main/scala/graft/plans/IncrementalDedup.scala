@@ -37,12 +37,14 @@ import org.apache.spark.sql.functions._
   * ingest refuses an old run dir whose config marker differs.
   *
   * Outputs persist under `incDir` with the same [[StageStore]] markers as
-  * DedupPipeline.run (which keeps its run counters in those markers;
-  * ingest records none) — except that the incremental markers also carry a
+  * DedupPipeline.run — except that the incremental markers also carry a
   * BATCH token (row count + order-independent xxh64 content hash of the
   * new batch), so re-running against the same incDir with a DIFFERENT
   * batch recomputes instead of silently returning the previous batch's
-  * persisted stages. The returned assignment covers every AFFECTED
+  * persisted stages. As in the pipeline, run counters live in the
+  * markers: `inc_05_cand` records `dropped_mega_buckets` and
+  * `capped_docs` (docs that lost a partner to the per-doc cap; both exact
+  * unless a task was retried). The returned assignment covers every AFFECTED
   * component (one containing at least one new page), with old members
   * included so sinks can upsert merged clusters atomically.
   *
@@ -65,6 +67,9 @@ import org.apache.spark.sql.functions._
   * IncrementalDedupSpec).
   */
 object IncrementalDedup {
+
+  // run counter of inc_05_cand: docs that hit maxCandidatesPerDoc
+  private final val CappedDocs = "capped_docs"
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -105,7 +110,8 @@ object IncrementalDedup {
     requireCompatible(spark, oldRunDir, ch)
     val marker = s"${ch}_b${batchToken(spark, newPages)}"
 
-    def stage(name: String)(compute: => DataFrame): DataFrame = {
+    // `counters` is evaluated after the stage output is written
+    def stage(name: String, counters: => Map[String, Long] = Map.empty)(compute: => DataFrame): DataFrame = {
       val dir = s"$incDir/$name"
       if (resume && StageStore.done(spark, dir, marker)) spark.read.parquet(dir)
       else {
@@ -113,7 +119,7 @@ object IncrementalDedup {
         spark.sparkContext.setJobDescription(s"incremental: $name")
         try compute.write.mode(SaveMode.Overwrite).parquet(dir)
         finally spark.sparkContext.setJobDescription(null)
-        StageStore.mark(spark, dir, marker)
+        StageStore.mark(spark, dir, marker, counters)
         spark.read.parquet(dir)
       }
     }
@@ -161,7 +167,9 @@ object IncrementalDedup {
 
     // ---- candidates: probe only buckets containing a new row ----
     val cappedDocs = spark.sparkContext.longAccumulator("graft.ingest.cappedDocs")
-    val candDf = stage("inc_05_cand") {
+    var droppedBuckets = 0L
+    val candDf = stage("inc_05_cand",
+        Map(RunMetrics.DroppedMegaBuckets -> droppedBuckets, CappedDocs -> cappedDocs.value)) {
       val nbAll = newBandDf.select($"band", $"bucket", $"url")
       val newKeys = nbAll.select($"band", $"bucket").distinct()
       val oldBands = spark.read.parquet(s"$oldRunDir/04_bands")
@@ -169,10 +177,11 @@ object IncrementalDedup {
         .select($"band", $"bucket", $"url")
       // mega-bucket guard on the COMBINED size (shared impl): a degenerate
       // bucket is degenerate regardless of which side its members came from
-      val ok = graft.lsh.BucketGuard
-        .okBuckets(spark, nbAll.unionByName(oldInNew), conf.maxBucketSize, "inc").ok
-      val nb = nbAll.join(ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
-      val ob = oldInNew.join(ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
+      val g = graft.lsh.BucketGuard
+        .okBuckets(spark, nbAll.unionByName(oldInNew), conf.maxBucketSize, "inc")
+      droppedBuckets = g.dropped
+      val nb = nbAll.join(g.ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
+      val ob = oldInNew.join(g.ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
       val intra = nb.select($"band", $"bucket", $"url".as("a"))
         .join(nb.select($"band".as("b2"), $"bucket".as("k2"), $"url".as("b")),
           $"band" === $"b2" && $"bucket" === $"k2" && $"a" < $"b")

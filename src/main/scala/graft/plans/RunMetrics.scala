@@ -1,0 +1,68 @@
+package graft.plans
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** The run record — `metrics.json`, written by [[DedupPipeline.run]] next
+  * to the stage outputs (metrics.py:212-281 shape). The JSON is this case
+  * class serialized compact, fields in declaration order; field names are
+  * the JSON names.
+  *
+  * The run summary counts are recomputed from the persisted verdicts and
+  * clusters on every run. The run counters (`dropped_*`,
+  * `emb_budget_dropped`, `*_wall_ms`) are read back from the markers of
+  * the stage that measured them (05_cand and 06_verdicts, see
+  * [[StageStore]]), so a resumed run reports exactly what its cold run
+  * recorded. A run with no candidate pairs reports 0 counts and a
+  * `consensus_rate` of 0.0.
+  *
+  * @param dropped_mega_buckets LSH buckets dropped by the mega-bucket guard;
+  *                             exact unless a guard task was retried
+  *                             (retries can only over-count it)
+  * @param dropped_domain_pairs candidate pairs dropped by
+  *                             `maxCandidatesPerDomain` (0 when unset)
+  * @param emb_budget_dropped   gray-zone pairs denied the embedding
+  *                             tiebreak by `embMaxPairsPerDoc` (0 when unset)
+  * @param emb_wall_ms          summed task time of the embedding tiebreak
+  * @param span_wall_ms         summed task time of the span pass
+  * @param stages               per-stage wall time and rows, from lineage
+  */
+final case class RunMetrics(
+    run_id: String,
+    config_hash: String,
+    total_pairs: Long,
+    duplicates: Long,
+    non_duplicates: Long,
+    uncertain: Long,
+    exact_dups: Long,
+    near_dups: Long,
+    consensus_rate: Double,
+    clusters: Long,
+    clustered_docs: Long,
+    dropped_mega_buckets: Long,
+    dropped_domain_pairs: Long,
+    emb_pairs: Long,
+    span_pairs: Long,
+    emb_budget_dropped: Long,
+    emb_wall_ms: Long,
+    span_wall_ms: Long,
+    stages: Seq[RunMetrics.StageLine])
+
+object RunMetrics {
+
+  final case class StageLine(stage: String, wall_ms: Long, rows: Long)
+
+  // run counters persisted with their stage's marker, under their
+  // metrics.json names
+  private[plans] final val DroppedMegaBuckets = "dropped_mega_buckets"
+  private[plans] final val DroppedDomainPairs = "dropped_domain_pairs"
+  private[plans] final val EmbBudgetDropped = "emb_budget_dropped"
+  private[plans] final val EmbWallMs = "emb_wall_ms"
+  private[plans] final val SpanWallMs = "span_wall_ms"
+
+  private lazy val mapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  def toJson(m: RunMetrics): String = mapper.writeValueAsString(m)
+
+  def fromJson(json: String): RunMetrics = mapper.readValue(json, classOf[RunMetrics])
+}

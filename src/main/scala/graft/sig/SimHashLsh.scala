@@ -46,10 +46,11 @@ object SimHashLsh {
 
   /** Candidate pairs (a < b) within exact hamming distance `maxHamming`,
     * blocked by banding + guarded buckets. Output: (a, b, hamming),
-    * hamming exact over the full 128 bits (not an estimate).
+    * hamming exact over the full 128 bits (not an estimate), and the
+    * number of dropped buckets.
     */
   def nearDupPairs(spark: SparkSession, sigs: DataFrame, maxHamming: Int,
-                   maxBucketSize: Long): DataFrame = {
+                   maxBucketSize: Long): (DataFrame, Long) = {
     import spark.implicits._
     require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
     val s = sigs.select($"url", $"simhash_hi", $"simhash_lo")
@@ -60,7 +61,7 @@ object SimHashLsh {
       .join(bx.select($"band", $"bucket", $"url".as("b")), Seq("band", "bucket"))
       .filter($"a" < $"b")
       .select($"a", $"b").distinct()
-    pairs
+    val near = pairs
       .join(s.select($"url".as("xa"), $"simhash_hi".as("a_hi"), $"simhash_lo".as("a_lo")),
         $"a" === $"xa")
       .join(s.select($"url".as("xb"), $"simhash_hi".as("b_hi"), $"simhash_lo".as("b_lo")),
@@ -70,5 +71,6 @@ object SimHashLsh {
           bit_count($"a_lo".bitwiseXOR($"b_lo"))).cast("int"))
       .filter($"hamming" <= maxHamming)
       .select($"a", $"b", $"hamming")
+    (near, guarded.dropped)
   }
 }

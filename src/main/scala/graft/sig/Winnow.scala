@@ -44,11 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object Winnow {
 
-  /** Local property carrying the guard's dropped-bucket count (set by
-    * `matches`; BucketGuard tag "winnow").
-    */
-  final val DroppedBucketsProp = "graft.winnow.droppedBuckets"
-
   /** Distinct winnowed fingerprints per row: (idCol, fps array<string>),
     * fps sorted (hex16 lexicographic = unsigned numeric, so determinism is
     * partitioning-independent).
@@ -123,16 +118,18 @@ object Winnow {
     * shared BucketGuard (`maxFpDocs` members per fingerprint; hotter
     * fingerprints are corpus boilerplate and are dropped with the standard
     * logged-drop protocol), then a count per pair — never a cross join.
+    * Returns the pairs and the number of dropped fingerprints.
     */
   def matches(spark: SparkSession, fpRows: DataFrame, idCol: String,
-              minShared: Long, maxFpDocs: Long = 4096L): DataFrame = {
+              minShared: Long, maxFpDocs: Long = 4096L): (DataFrame, Long) = {
     val rows = fpRows.select(lit(0).as("band"), col("fp").as("bucket"), col(idCol))
-    val ok = BucketGuard.okBuckets(spark, rows, maxFpDocs, "winnow").ok
-    val r = rows.join(ok, Seq("band", "bucket"))
+    val g = BucketGuard.okBuckets(spark, rows, maxFpDocs, "winnow")
+    val r = rows.join(g.ok, Seq("band", "bucket"))
     val a = r.select(col("bucket"), col(idCol).as("a"))
     val b = r.select(col("bucket").as("bucket2"), col(idCol).as("b"))
-    a.join(b, col("bucket") === col("bucket2") && col("a") < col("b"))
+    val pairs = a.join(b, col("bucket") === col("bucket2") && col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
+    (pairs, g.dropped)
   }
 }

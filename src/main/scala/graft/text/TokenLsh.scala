@@ -19,21 +19,18 @@ import org.apache.spark.sql.functions._
   * candidateStage, DedupPipeline.scala) — a degenerate bucket (corpus-wide
   * boilerplate token sets, all-equal signatures) would otherwise turn the
   * self-join quadratic, the single worst skew source at web scale. The
-  * dropped count is exposed via the local property
-  * `graft.tokenLsh.droppedBuckets`.
+  * dropped count is returned next to the pairs.
   */
 object TokenLsh {
 
-  final val DroppedBucketsProp = "graft.tokenLsh.droppedBuckets"
-
   /** @param items   (id, tokens) — tokens need not be distinct
     * @param threshold emit pairs with exact Jaccard >= threshold
-    * @return DataFrame(a, b, jaccard) with a < b
+    * @return (DataFrame(a, b, jaccard) with a < b, dropped bucket count)
     */
   def jaccardPairs(spark: SparkSession, items: Dataset[(Long, Seq[String])],
                    threshold: Double, numPerm: Int = 128, bands: Int = 32, r: Int = 4,
                    hashSeed: Long = 0x70C5L, permSeed: Long = 913L,
-                   maxBucketSize: Long = 4096L): DataFrame = {
+                   maxBucketSize: Long = 4096L): (DataFrame, Long) = {
     import spark.implicits._
     val np = numPerm; val ps = permSeed; val hs0 = hashSeed
     // The distinct'd token sets feed THREE consumers (the signature pass
@@ -74,11 +71,12 @@ object TokenLsh {
     // of the doc slice instead (same rationale as the dedup verify joins)
     val ta = t.select($"tid".as("pa"), $"toks".as("ta")).hint("SHUFFLE_HASH")
     val tb = t.select($"tid".as("pb"), $"toks".as("tb")).hint("SHUFFLE_HASH")
-    pairs.join(ta, $"a" === $"pa").join(tb, $"b" === $"pb")
+    val scored = pairs.join(ta, $"a" === $"pa").join(tb, $"b" === $"pb")
       .withColumn("inter", size(array_intersect($"ta", $"tb")).cast("double"))
       .withColumn("uni", (size($"ta") + size($"tb")).cast("double") - $"inter")
       .withColumn("jaccard", $"inter" / $"uni")
       .filter($"jaccard" >= threshold)
       .select($"a", $"b", $"jaccard")
+    (scored, g.dropped)
   }
 }

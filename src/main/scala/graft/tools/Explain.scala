@@ -72,7 +72,7 @@ object Explain {
     section("oracle query q_simhash_near_dup",
       graft.sig.SimHashLsh.nearDupPairs(spark, spark.read.parquet(s"$rd/03_sig"),
         maxHamming = SparkEntry.simhashNearDupMaxHamming,
-        maxBucketSize = conf.maxBucketSize),
+        maxBucketSize = conf.maxBucketSize)._1,
       "SimHash banding blocking: 8x16-bit band extraction as codegen'd " +
         "shift/mask projections (no UDF), shared BucketGuard, bucket " +
         "equi-self-join, bit_count hamming filter. Only the two " +
@@ -95,7 +95,7 @@ object Explain {
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
         val asg = graft.ann.SemDedup.assignWithDist(spark, e, spark.read.parquet(cd))
         graft.ann.SemDedup.clusterEdges(spark, e, asg, tau = 0.4,
-          maxClusterSize = 100000L)
+          maxClusterSize = 100000L)._1
       },
       "SemDeDup pair generation: broadcast-map centroid assignment (no " +
         "shuffle — a typed map over the vectors), shared BucketGuard on " +

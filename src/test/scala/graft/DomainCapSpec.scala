@@ -8,7 +8,7 @@ import java.sql.Timestamp
 /** Per-domain candidate cap (DedupConfig.maxCandidatesPerDomain): a planted
   * single-domain flood must be bounded to exactly the first `cap` pairs by
   * (a, b), unflooded domains must pass through untouched, and the drop
-  * count must be published.
+  * count must be returned with the pairs.
   */
 class DomainCapSpec extends AnyFunSuite {
 
@@ -30,7 +30,7 @@ class DomainCapSpec extends AnyFunSuite {
     val bands = DedupPipeline.bandingStage(spark,
       DedupPipeline.signatureStage(spark, norm, DedupConfig.balanced), DedupConfig.balanced)
 
-    val (uncapped, _) = DedupPipeline.candidateStage(spark, bands, DedupConfig.balanced)
+    val (uncapped, uncappedCounters) = DedupPipeline.candidateStage(spark, bands, DedupConfig.balanced)
     val uRows = uncapped.collect()
     val uFlood = uRows.filter(_.a.contains("flood")).sortBy(r => (r.a, r.b))
     val uOk = uRows.filter(_.a.contains("ok.example")).toSet
@@ -39,7 +39,7 @@ class DomainCapSpec extends AnyFunSuite {
 
     val cap = 10
     val conf = DedupConfig.balanced.copy(maxCandidatesPerDomain = Some(cap))
-    val (capped, _) = DedupPipeline.candidateStage(spark, bands, conf)
+    val (capped, counters) = DedupPipeline.candidateStage(spark, bands, conf)
     val cRows = capped.collect()
     val cFlood = cRows.filter(_.a.contains("flood")).sortBy(r => (r.a, r.b))
     val cOk = cRows.filter(_.a.contains("ok.example")).toSet
@@ -48,8 +48,7 @@ class DomainCapSpec extends AnyFunSuite {
     assert(cFlood.toSeq == uFlood.take(cap).toSeq,
       "capped set must be the first `cap` pairs by (a, b) of the uncapped set")
     assert(cOk == uOk, "unflooded domain must be untouched")
-    val droppedProp = spark.sparkContext
-      .getLocalProperty("graft.pipeline.droppedDomainPairs").toLong
-    assert(droppedProp == (uFlood.length - cap).toLong)
+    assert(counters("dropped_domain_pairs") == (uFlood.length - cap).toLong)
+    assert(uncappedCounters("dropped_domain_pairs") == 0L)
   }
 }

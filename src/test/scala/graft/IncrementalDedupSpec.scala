@@ -169,6 +169,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(got.length == got.toSet.size, "duplicate candidate pairs")
     assert(got.toSet == expected,
       s"only-ingest=${(got.toSet -- expected).take(5)}, only-reference=${(expected -- got.toSet).take(5)}")
+
+    // the stage's run counters are persisted in its marker
+    val markers = new java.io.File(s"$incDir/inc_05_cand").list().filter(_.startsWith("_graft_conf_"))
+    assert(markers.length == 1, markers.toSeq)
+    val counters = graft.plans.StageStore.counters(spark, s"$incDir/inc_05_cand",
+      markers.head.stripPrefix("_graft_conf_"))
+    assert(counters == Map("dropped_mega_buckets" -> 0L,
+      "capped_docs" -> partners.count(_._2.size > conf.maxCandidatesPerDoc).toLong))
   }
 
   test("config-mismatched old run is refused") {

@@ -83,12 +83,26 @@ class PipelineGoldenSpec extends AnyFunSuite {
   }
 
   test("metrics snapshot is written alongside outputs") {
+    import spark.implicits._
     clustersByUrl // force the pipeline run
     val f = new java.io.File("/tmp/graft_test_pipeline/metrics.json")
     assert(f.exists())
     val json = java.nio.file.Files.readString(f.toPath)
     assert(json.contains("\"duplicates\":") && json.contains("\"stages\":["))
     assert(json.contains("\"clusters\":"))
+    // schema: the file reads back into the record type and re-serializes
+    // to the same bytes; its counts match the persisted outputs
+    val m = graft.plans.RunMetrics.fromJson(json)
+    assert(graft.plans.RunMetrics.toJson(m) == json)
+    assert(m.run_id == s"run_${DedupConfig.balanced.configHash}")
+    val verdicts = spark.read.parquet("/tmp/graft_test_pipeline/06_verdicts")
+    assert(m.total_pairs == verdicts.count())
+    assert(m.duplicates == verdicts.filter($"final_label" === "DUPLICATE").count())
+    assert(m.clustered_docs == clustersByUrl.size.toLong)
+    assert(m.clusters == clustersByUrl.values.toSet.size.toLong)
+    assert(m.dropped_domain_pairs == 0 && m.emb_budget_dropped == 0)
+    assert(m.stages.map(_.stage) ==
+      Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters"))
   }
 
   test("lineage rows exist for every stage partition") {

@@ -43,7 +43,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val rd = SparkEntry.pipelineRunDir(spark, sf)
     val sigs = spark.read.parquet(s"$rd/03_sig")
-    val pairs = graft.sig.SimHashLsh.nearDupPairs(spark, sigs, maxHamming = 7, maxBucketSize = 2000)
+    val pairs = graft.sig.SimHashLsh.nearDupPairs(spark, sigs, maxHamming = 7, maxBucketSize = 2000)._1
     val p = planOf(pairs)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"SimHash banding degraded to a cross product:\n$p")
@@ -167,7 +167,7 @@ class PlanSpec extends AnyFunSuite {
       .toDF("list_id", "centroid")
     val asg = graft.ann.SemDedup.assignWithDist(spark, vecs, cents)
     val edges = graft.ann.SemDedup.clusterEdges(spark, vecs, asg, tau = 0.9,
-      maxClusterSize = 100000L)
+      maxClusterSize = 100000L)._1
     val p = planOf(edges)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"semdedup within-cluster join degraded to a cross product:\n$p")

@@ -1,13 +1,15 @@
 package graft
 
 import graft.model.Schemas.Page
-import graft.plans.DedupPipeline
+import graft.plans.{DedupPipeline, RunMetrics, StageStore}
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.File
 import java.sql.Timestamp
 
 /** Checkpoint-based resume (north rule): stage outputs persist; a re-run
-  * with the same config skips completed stages; a config change recomputes.
+  * with the same config skips completed stages; a config change recomputes;
+  * a stage counts as done only once its lineage is written; the run record
+  * (metrics.json) is the same on resume and exists for every run.
   */
 class ResumeSpec extends AnyFunSuite {
 
@@ -107,37 +109,76 @@ class ResumeSpec extends AnyFunSuite {
     spark.createDataset(pages)(org.apache.spark.sql.Encoders.product[Page])
   }
 
-  private def metric(dir: String, key: String): Long = {
-    val json = java.nio.file.Files.readString(new File(s"$dir/metrics.json").toPath)
-    ("\"" + key + "\":(-?[0-9]+)").r.findFirstMatchIn(json).map(_.group(1).toLong)
-      .getOrElse(fail(s"$key missing from $dir/metrics.json: $json"))
+  private def metricsOf(dir: String): RunMetrics = {
+    val f = new File(s"$dir/metrics.json")
+    assert(f.exists(), s"$dir/metrics.json was not written")
+    RunMetrics.fromJson(java.nio.file.Files.readString(f.toPath))
   }
 
   test("metrics.json counters survive resume and do not leak across runs") {
-    val counters = Seq("dropped_mega_buckets", "emb_wall_ms", "span_wall_ms")
-    def countersOf(dir: String) = counters.map(k => k -> metric(dir, k)).toMap
     val dirA = "/tmp/graft_test_resume_counters_a"
     val dirB = "/tmp/graft_test_resume_counters_b"
     TestUtil.deleteRecursively(new File(dirA))
     TestUtil.deleteRecursively(new File(dirB))
 
-    // A: a bucket cap the crowd overflows but the families do not
-    val confA = DedupConfig.balanced.copy(maxBucketSize = 5)
+    // A: a bucket cap the crowd overflows but the families do not, a
+    // domain cap below the run's candidate pairs (every page shares one
+    // host), and an embedding budget below the families' gray-zone pairs
+    val confA = DedupConfig.balanced.copy(maxBucketSize = 5,
+      maxCandidatesPerDomain = Some(60), embMaxPairsPerDoc = Some(1))
     DedupPipeline.run(spark, counterPagesDs, dirA, confA, resume = true).count()
-    val coldA = countersOf(dirA)
-    assert(coldA("dropped_mega_buckets") > 0, s"run A dropped no bucket: $coldA")
-    assert(coldA("emb_wall_ms") > 0, s"run A timed no embedding work: $coldA")
+    val coldA = metricsOf(dirA)
+    assert(coldA.dropped_mega_buckets > 0, s"run A dropped no bucket: $coldA")
+    assert(coldA.dropped_domain_pairs > 0, s"run A dropped no domain pair: $coldA")
+    assert(coldA.emb_budget_dropped > 0, s"run A's embedding budget dropped nothing: $coldA")
+    assert(coldA.emb_wall_ms > 0, s"run A timed no embedding work: $coldA")
 
-    // B: a cold run that embeds nothing must report 0, not A's time
+    // B: a cold run without caps that embeds nothing must report 0, not
+    // A's counters
     DedupPipeline.run(spark, counterPagesDs, dirB, DedupConfig.balanced.copy(embedEnabled = false),
       resume = true).count()
-    assert(metric(dirB, "emb_wall_ms") == 0)
-    assert(metric(dirB, "emb_pairs") == 0)
+    val b = metricsOf(dirB)
+    assert(b.emb_wall_ms == 0)
+    assert(b.emb_pairs == 0)
+    assert(b.dropped_domain_pairs == 0)
+    assert(b.emb_budget_dropped == 0)
 
     val verdictTimes = partMtimes(s"$dirA/06_verdicts")
     DedupPipeline.run(spark, counterPagesDs, dirA, confA, resume = true).count()
     assert(partMtimes(s"$dirA/06_verdicts") == verdictTimes, "run A was recomputed, not resumed")
-    assert(countersOf(dirA) == coldA)
+    assert(metricsOf(dirA) == coldA)
+  }
+
+  test("a run with no candidate pairs still writes metrics.json, with zero counts") {
+    import spark.implicits._
+    val dir = "/tmp/graft_test_resume_empty"
+    TestUtil.deleteRecursively(new File(dir))
+    // three pages without a shared word
+    val pages = spark.createDataset((0 until 3).map { i =>
+      Page(s"https://empty.example/p$i", new Timestamp(1704067200000L), Array.emptyByteArray,
+        (0 until 80).map(j => s"page${i}word$j").mkString(" "), "en")
+    })
+    DedupPipeline.run(spark, pages, dir, DedupConfig.balanced, resume = false).count()
+    assert(spark.read.parquet(s"$dir/05_cand").count() == 0, "the pages must yield no candidate pair")
+    val m = metricsOf(dir)
+    assert(m.total_pairs == 0 && m.duplicates == 0 && m.non_duplicates == 0)
+    assert(m.consensus_rate == 0.0)
+    assert(m.clusters == 0 && m.clustered_docs == 0)
+    assert(m.stages.find(_.stage == "01_norm").map(_.rows).contains(3L), m.stages)
+  }
+
+  test("a stage whose lineage write fails is not marked done") {
+    val dir = "/tmp/graft_test_resume_lineage"
+    TestUtil.deleteRecursively(new File(dir))
+    new File(dir).mkdirs()
+    // a regular file where the lineage directory goes: every lineage write fails
+    java.nio.file.Files.writeString(new File(s"$dir/lineage").toPath, "not a directory")
+    intercept[java.util.concurrent.ExecutionException] {
+      DedupPipeline.run(spark, pagesDs, dir, DedupConfig.balanced, resume = true)
+    }
+    assert(new File(s"$dir/01_norm/_SUCCESS").exists(), "01_norm output was not written")
+    assert(!StageStore.done(spark, s"$dir/01_norm", DedupConfig.balanced.configHash),
+      "01_norm was marked done although its lineage was never written")
   }
 
   test("config change invalidates stage outputs") {

@@ -37,7 +37,7 @@ class SemDedupSpec extends AnyFunSuite {
       10L -> Array(1f, 0f, 0.9f, 0f),
       20L -> Array(0f, 9f, 0f, 0f),
       21L -> Array(0f, 9f, 0f, 0.1f))
-    val got = SemDedup.semDedup(spark, v, centroids, tau = 0.9)
+    val got = SemDedup.semDedup(spark, v, centroids, tau = 0.9)._1
       .orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
 
@@ -62,7 +62,7 @@ class SemDedupSpec extends AnyFunSuite {
     val v = vecs(
       1L -> Array(7f, 7.1f, 0f, 0f),
       2L -> Array(7.1f, 7f, 0f, 0f))
-    val got = SemDedup.semDedup(spark, v, centroids, tau = 0.5)
+    val got = SemDedup.semDedup(spark, v, centroids, tau = 0.5)._1
       .orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getBoolean(3)))
     assert(got.toSeq == Seq((1L, 1, 1L, true), (2L, 0, 2L, true)))
@@ -72,11 +72,11 @@ class SemDedupSpec extends AnyFunSuite {
     // 5 near-identical members in cluster 0, cap 4 -> cluster dropped,
     // every member survives as its own singleton.
     val v = vecs((1L to 5L).map(i => i -> Array(9f, i * 0.01f, 0f, 0f)): _*)
-    val got = SemDedup.semDedup(spark, v, centroids, tau = 0.5, maxClusterSize = 4L)
-      .orderBy("vec_id")
+    val (kept, dropped) = SemDedup.semDedup(spark, v, centroids, tau = 0.5, maxClusterSize = 4L)
+    val got = kept.orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3)))
     assert(got.toSeq == (1L to 5L).map(i => (i, i, true)))
-    assert(spark.sparkContext.getLocalProperty("graft.semdedup.droppedBuckets") == "1")
+    assert(dropped == 1L)
   }
 
   test("partition-invariant and agrees with a plain-Scala recompute") {
@@ -88,9 +88,9 @@ class SemDedupSpec extends AnyFunSuite {
     }
     val v1 = vecs(rows: _*)
     val v2 = vecs(rows: _*).repartition(13)
-    val a = SemDedup.semDedup(spark, v1, centroids, tau = 0.8)
+    val a = SemDedup.semDedup(spark, v1, centroids, tau = 0.8)._1
       .orderBy("vec_id").collect().map(_.toSeq).toSeq
-    val b = SemDedup.semDedup(spark, v2, centroids, tau = 0.8)
+    val b = SemDedup.semDedup(spark, v2, centroids, tau = 0.8)._1
       .orderBy("vec_id").collect().map(_.toSeq).toSeq
     assert(a == b)
 

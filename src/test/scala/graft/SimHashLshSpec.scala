@@ -35,7 +35,7 @@ class SimHashLshSpec extends AnyFunSuite {
   test("pigeonhole: every pair within hamming <= 7 is found (== quadratic)") {
     import spark.implicits._
     val sigs = corpus(n = 300, nNear = 60, radius = 7, seed = 42)
-    val got = SimHashLsh.nearDupPairs(spark, sigs, maxHamming = 7, maxBucketSize = 2000)
+    val got = SimHashLsh.nearDupPairs(spark, sigs, maxHamming = 7, maxBucketSize = 2000)._1
       .as[(String, String, Int)].collect().toSet
     val s2 = sigs.select($"url".as("u2"), $"simhash_hi".as("h2"), $"simhash_lo".as("l2"))
     val quad = sigs.join(s2, $"url" < $"u2")
@@ -62,10 +62,9 @@ class SimHashLshSpec extends AnyFunSuite {
     }
     val twin = Seq(("t-a", flood.head._2, flood.head._3), ("t-b", flood.head._2, flood.head._3))
     val sigs = spark.createDataFrame(flood ++ twin).toDF("url", "simhash_hi", "simhash_lo")
-    val got = SimHashLsh.nearDupPairs(spark, sigs, maxHamming = 7, maxBucketSize = 2000)
-      .as[(String, String, Int)].collect().toSet
-    val dropped = spark.sparkContext.getLocalProperty("graft.simhashLsh.droppedBuckets")
-    assert(dropped != null && dropped.toLong >= 1, s"expected dropped buckets, got $dropped")
+    val (pairs, dropped) = SimHashLsh.nearDupPairs(spark, sigs, maxHamming = 7, maxBucketSize = 2000)
+    val got = pairs.as[(String, String, Int)].collect().toSet
+    assert(dropped >= 1, s"expected dropped buckets, got $dropped")
     assert(got.exists(p => p._1 == "f00000" && p._2 == "t-a" || p._1 == "t-a" && p._2 == "t-b"),
       s"twin pair must survive via non-flooded bands: $got")
     assert(got.size < 100, s"guard failed: ${got.size} pairs emitted")

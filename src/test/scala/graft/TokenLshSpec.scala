@@ -26,9 +26,8 @@ class TokenLshSpec extends AnyFunSuite {
       (1001L, (0 until 40).map(i => if (i == 39) "edited" else s"z$i").toList))
     val items = spark.createDataset(clones ++ fam)
 
-    val got = TokenLsh.jaccardPairs(spark, items, threshold = 0.8, maxBucketSize = 16L)
-      .as[(Long, Long, Double)].collect()
-    val dropped = spark.sparkContext.getLocalProperty(TokenLsh.DroppedBucketsProp).toLong
+    val (pairs, dropped) = TokenLsh.jaccardPairs(spark, items, threshold = 0.8, maxBucketSize = 16L)
+    val got = pairs.as[(Long, Long, Double)].collect()
 
     assert(dropped > 0, "planted degenerate bucket was not dropped")
     assert(!got.exists(p => p._1 < 300 && p._2 < 300),
@@ -48,7 +47,7 @@ class TokenLshSpec extends AnyFunSuite {
       (id, mut.toList)
     }
     val ds = spark.createDataset(items)
-    val lsh = TokenLsh.jaccardPairs(spark, ds, threshold = 0.8)
+    val lsh = TokenLsh.jaccardPairs(spark, ds, threshold = 0.8)._1
       .as[(Long, Long, Double)].collect().toSet
     val t = ds.toDF("id", "toks").select($"id", array_distinct($"toks").as("toks"))
     val a = t.select($"id".as("a"), $"toks".as("ta"))
@@ -74,10 +73,9 @@ class TokenLshSpec extends AnyFunSuite {
     val vecs = (0L until 200L).map(id => (id, clone)) ++
       Seq((1000L, near1), (1001L, near2))
     val df = vecs.toDF("vec_id", "embedding")
-    val got = graft.ann.Ann.lshCandidates(spark, df, dim, bands = 8, bitsPerBand = 4,
-        maxBucketSize = 32L)
-      .as[(Long, Long, Double)].collect()
-    val dropped = spark.sparkContext.getLocalProperty("graft.ann.droppedBuckets").toLong
+    val (pairs, dropped) = graft.ann.Ann.lshCandidates(spark, df, dim, bands = 8, bitsPerBand = 4,
+      maxBucketSize = 32L)
+    val got = pairs.as[(Long, Long, Double)].collect()
     assert(dropped > 0, "degenerate vector bucket was not dropped")
     assert(!got.exists(p => p._1 < 200 && p._2 < 200),
       s"clone-clique vector pairs leaked: ${got.length}")

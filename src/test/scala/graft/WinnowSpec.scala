@@ -43,7 +43,7 @@ class WinnowSpec extends AnyFunSuite {
     val df = Seq((0L, a), (1L, b), (2L, c)).toDF("doc_id", "text")
 
     val fps = Winnow.fingerprintRows(df, "doc_id", "text", K, W)
-    val got = Winnow.matches(spark, fps, "doc_id", minShared = 1L)
+    val got = Winnow.matches(spark, fps, "doc_id", minShared = 1L)._1
       .as[(Long, Long, Long)].collect().map(p => (p._1, p._2)).toSet
     assert(got.contains((0L, 1L)), s"planted shared run not detected: $got")
     assert(!got.exists(p => p._1 == 2L || p._2 == 2L),
@@ -89,9 +89,8 @@ class WinnowSpec extends AnyFunSuite {
     val df = (clones ++ pair).toDF("doc_id", "text")
 
     val fps = Winnow.fingerprintRows(df, "doc_id", "text", K, W)
-    val got = Winnow.matches(spark, fps, "doc_id", minShared = 1L, maxFpDocs = 50L)
-      .as[(Long, Long, Long)].collect().map(p => (p._1, p._2)).toSet
-    val dropped = spark.sparkContext.getLocalProperty(Winnow.DroppedBucketsProp).toLong
+    val (pairs, dropped) = Winnow.matches(spark, fps, "doc_id", minShared = 1L, maxFpDocs = 50L)
+    val got = pairs.as[(Long, Long, Long)].collect().map(p => (p._1, p._2)).toSet
 
     assert(dropped > 0, "template fingerprints were not dropped")
     assert(got.contains((1000L, 1001L)), s"real partial-copy pair lost: $got")
