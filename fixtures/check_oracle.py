@@ -8,7 +8,10 @@ import duckdb, json, sys, glob, math
 outdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/verify_sf001"
 sfdir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
 
-con = duckdb.connect()
+# Fixed limits: on a shared host an unbounded DuckDB grew past 12 GiB on
+# one oracle (q_ingest_near_dup) before failing; capped, it fails that row
+# with "Out of Memory" and leaves the machine's memory to everyone else.
+con = duckdb.connect(config={"memory_limit": "4GB", "threads": 4})
 for t in ["documents", "embeddings", "lineitem", "orders", "customer", "part",
           "supplier", "nation", "region", "events"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
@@ -23,7 +26,7 @@ for name, sql in sorted(oracles.items()):
         fails += 1
         continue
     try:
-        spark = duckdb.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
+        spark = con.sql(f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
     except Exception as e:
         print(f"{name}: SPARK DUMP MISSING/UNREADABLE {str(e)[:120]}")
         fails += 1

@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
   *   projections) restrict the join to same-bucket pairs — the scale path:
   *   the full cross product never materializes, the bucket join shuffles on
   *   the bucket key, and probes = multi-band OR amplification.
-  * - `cosineNearDup`: near-duplicate pairs by embedding cosine >= threshold,
-  *   LSH-bucketed.
   *
   * The LSH paths return the mega-bucket guard's drop count next to their
   * pairs (graft.lsh.BucketGuard).
@@ -197,14 +195,5 @@ object Ann {
         }
         (id, best)
       }.toDF(idCol, "list_id")
-  }
-
-  /** Embedding-cosine near-duplicate pairs at `threshold`, LSH-bucketed,
-    * and the dropped bucket count.
-    */
-  def cosineNearDup(spark: SparkSession, vectors: DataFrame, dim: Int, threshold: Double,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, Long) = {
-    val (pairs, dropped) = lshCandidates(spark, vectors, dim, idCol = idCol, vecCol = vecCol)
-    (pairs.filter(col("cosine") >= threshold), dropped)
   }
 }

@@ -53,8 +53,7 @@ object DedupPipeline {
 
   def normalizeDoc(url: String, text: String, lang: String): DocNorm = {
     val norm = TextNorm.normalize(text)
-    val toks = TextNorm.tokenize(norm)
-    DocNorm(url, norm, TextNorm.exactHash(norm), TextNorm.contentHash(norm), toks.length, lang)
+    DocNorm(url, norm, TextNorm.exactHash(norm), TextNorm.contentHash(norm), TextNorm.tokenCount(norm), lang)
   }
 
   def signDoc(d: DocNorm, conf: DedupConfig, as: Array[Long], bs: Array[Long],
@@ -79,12 +78,16 @@ object DedupPipeline {
 
   // ---------- stages ----------
 
-  /** Stage 1: normalize. */
+  /** Stage 1: normalize. Projects the three columns it reads before the
+    * typed filter, so the scan never decodes `html` or `warc_ts`.
+    */
   def normalizeStage(spark: SparkSession, pages: Dataset[Page]): Dataset[DocNorm] = {
     import spark.implicits._
-    // F1: drop empty-text docs up front (near_duplicate.py:103)
-    pages.filter(p => p.text != null && p.text.trim.nonEmpty)
-      .mapPartitions(_.map(p => normalizeDoc(p.url, p.text, p.lang)))
+    // F1: drop empty-text docs up front (near_duplicate.py:103); a text is
+    // empty after `trim` iff it has no char above ' '
+    pages.select($"url", $"text", $"lang").as[(String, String, String)]
+      .filter(p => p._2 != null && p._2.exists(_ > ' '))
+      .mapPartitions(_.map { case (url, text, lang) => normalizeDoc(url, text, lang) })
   }
 
   /** Stage 2: signatures (MinHash + SimHash + hashed shingle set), with
@@ -282,7 +285,10 @@ object DedupPipeline {
     * the exact merge-count Jaccard and the SimHash Hamming distance, and
     * the scored relation is checkpointed narrow (`base`). The embedding
     * and span subsets are scored from `base` in two independent passes and
-    * left-joined back. Alternative scorers (a partition-aware cogroup, a
+    * left-joined back. The span pass sorts its pairs by anchor doc `b`
+    * within the partitions its last join left hash-partitioned by `b` (no
+    * exchange) and builds each anchor's suffix automaton once for all its
+    * pairs, streaming every partner text through it. Alternative scorers (a partition-aware cogroup, a
     * MinHash-estimate and a b-bit prefilter band) and the suffix-array span
     * pass were measured against this dataflow and removed; the numbers are
     * in BENCH/BASELINE.md.
@@ -436,24 +442,44 @@ object DedupPipeline {
           (a, b, cos)
         }
       }.toDF("ea_", "eb_", "emb_cos")
-    // Texts are capped to spanMaxTextChars IN the projection, so the pair
-    // shuffle never carries bytes the suffix automaton won't read. No
-    // explicit repartition: the automaton pass is byte-normal (~0.2ms/pair)
-    // and AQE's size-based partitioning spreads it fine.
+    // Texts are capped to spanMaxTextChars code points IN the projection,
+    // so the pair shuffle never carries bytes the suffix automaton won't
+    // read (a capped text can hold up to 2 x spanCap UTF-16 units; the
+    // automaton workspace grows to fit). No explicit repartition: the
+    // automaton pass is byte-normal (~0.2ms/pair) and AQE's size-based
+    // partitioning spreads it fine.
     val na = norm.select($"url".as("na_url"),
       substring($"norm_text", 1, spanCap).as("a_text"))
     val nb = norm.select($"url".as("nb_url"),
       substring($"norm_text", 1, spanCap).as("b_text"))
+    // One automaton per anchor doc `b`: the second side join leaves the
+    // pairs hash-partitioned by b, so sorting within partitions (no
+    // exchange) makes each b's pairs one run; the pass builds b's
+    // automaton once per run and streams every a_text through it (LCS is
+    // symmetric, so shared_span_len is unchanged). A run of one pair builds
+    // over the shorter text instead. spanNanos sums build and stream time.
     val spanScored: DataFrame = subset.filter($"do_span").select($"a", $"b")
       .join(na.hint("SHUFFLE_HASH"), $"a" === $"na_url")
       .join(nb.hint("SHUFFLE_HASH"), $"b" === $"nb_url")
       .select($"a", $"b", $"a_text", $"b_text")
+      .sortWithinPartitions($"b")
       .as[(String, String, String, String)]
       .mapPartitions { it =>
         val ws = new graft.sa.SuffixAutomaton.Workspace(spanCap)
-        it.map { case (a, b, at, bt) =>
+        val rows = it.buffered
+        var built: String = null // the b whose automaton ws holds
+        rows.map { case (a, b, at, bt) =>
           val t0 = System.nanoTime()
-          val span = graft.sa.SuffixAutomaton.lcs(at, bt, ws)
+          val span =
+            if (b == built) graft.sa.SuffixAutomaton.stream(at, ws)
+            else if (rows.hasNext && rows.head._2 == b) {
+              graft.sa.SuffixAutomaton.build(bt, ws)
+              built = b
+              graft.sa.SuffixAutomaton.stream(at, ws)
+            } else {
+              built = null
+              graft.sa.SuffixAutomaton.lcs(at, bt, ws)
+            }
           spanNanos.foreach(_.add(System.nanoTime() - t0))
           (a, b, span)
         }
@@ -525,15 +551,25 @@ object DedupPipeline {
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** One lineage row per non-empty partition of the stage output; a stage
+    * with no rows gets one 0-row line (partition 0), so every stage shows
+    * up in metrics.json. Lines are counted as they are written, so only an
+    * empty stage pays a second (tiny) job.
+    */
   private def writeLineage(spark: SparkSession, runDir: String, runId: String, stage: String,
                            confHash: String, df: DataFrame, wallMs: Long): Unit = {
     import spark.implicits._
-    df.groupBy(spark_partition_id().as("partition_id")).agg(count(lit(1)).as("rows"))
+    val lines = spark.sparkContext.longAccumulator
+    val countLine = udf { (rows: Long) => lines.add(1L); rows }.asNondeterministic()
+    def write(perPartition: DataFrame): Unit = perPartition
       .withColumn("run_id", lit(runId))
       .withColumn("stage", lit(stage))
       .withColumn("wall_ms", lit(wallMs))
       .withColumn("config_hash", lit(confHash))
       .write.mode(SaveMode.Overwrite).parquet(s"$runDir/lineage/$stage")
+    write(df.groupBy(spark_partition_id().as("partition_id")).agg(count(lit(1)).as("rows"))
+      .select($"partition_id", countLine($"rows").as("rows")))
+    if (lines.value == 0L) write(Seq((0, 0L)).toDF("partition_id", "rows"))
   }
 
   /** Run (or resume) the full pipeline. Every stage persists to

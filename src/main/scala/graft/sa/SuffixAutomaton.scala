@@ -1,19 +1,27 @@
 package graft.sa
 
 /** Longest common substring in O(|a| + |b|) via the suffix automaton of
-  * `a` — the linear-time twin of the generalized-suffix-array pass
-  * (SuffixLCS), with identical exact semantics: SuffixAutomatonSpec
-  * asserts equality against the SA+LCP implementation on randomized,
-  * planted-span and unicode inputs.
+  * one text — the linear-time twin of the generalized-suffix-array pass
+  * (SuffixLCS), with identical exact semantics: PropertySpec asserts
+  * equality against the SA+LCP implementation on randomized, planted-span
+  * and unicode inputs, for single pairs and for one build streamed against
+  * many texts.
   *
   * Why it exists: at the 150k-page bench scale the prefix-doubling SA pass
   * measured 2,317s of the verify stage's ~2,730 core-seconds
   * (metrics.json `span_wall_ms` — ~85% of verify CPU, the pipeline's
   * single dominant cost). The automaton computes the same longest shared
-  * span ~50x cheaper per pair: one O(n) build over the shorter text plus
-  * one O(m) stream of the longer, no sorting anywhere. It is the only span
-  * algorithm on the pipeline path; the suffix-array implementation remains
-  * the specification/reference that tests compare against.
+  * span ~50x cheaper per pair: one O(n) build plus one O(m) stream, no
+  * sorting anywhere. It is the only span algorithm on the pipeline path;
+  * the suffix-array implementation remains the specification/reference
+  * that tests compare against.
+  *
+  * Build and stream are separate calls: `build` leaves the automaton of a
+  * text in a Workspace, and any number of `stream` calls measure other
+  * texts against it. The build is ~2/3 of one pair's cost, so the span
+  * pass builds each anchor doc once for all its pairs (verifyStage).
+  * `lcs` is the one-pair form: it builds over the shorter text (build
+  * costs ~3x per char vs streaming) and streams the longer.
   *
   * Storage is flat primitive arrays with per-state adjacency lists (a
   * suffix automaton has < 2n states and < 3n transitions), reused across
@@ -21,19 +29,29 @@ package graft.sa
   */
 object SuffixAutomaton extends Serializable {
 
-  /** Reusable per-partition scratch, sized for build strings up to
-    * `maxLen` chars. No clearing needed between calls: every used slot is
-    * (re)initialized on allocation.
+  /** Reusable per-partition scratch holding one built automaton. Sized
+    * for build texts of `maxLen` UTF-16 units up front and grown on demand
+    * for longer ones. No clearing needed between builds: every used slot
+    * is (re)initialized on allocation.
     */
   final class Workspace(maxLen: Int) {
-    val maxStates: Int = 2 * maxLen + 4
-    val maxEntries: Int = 4 * maxLen + 8
-    val len = new Array[Int](maxStates)
-    val link = new Array[Int](maxStates)
-    val head = new Array[Int](maxStates)
-    val entChar = new Array[Char](maxEntries)
-    val entNext = new Array[Int](maxEntries)
-    val entTo = new Array[Int](maxEntries)
+    private[sa] var len: Array[Int] = Array.emptyIntArray
+    private[sa] var link: Array[Int] = Array.emptyIntArray
+    private[sa] var head: Array[Int] = Array.emptyIntArray
+    private[sa] var entChar: Array[Char] = Array.emptyCharArray
+    private[sa] var entNext: Array[Int] = Array.emptyIntArray
+    private[sa] var entTo: Array[Int] = Array.emptyIntArray
+    ensure(maxLen)
+
+    /** Make room for the automaton of a text of `n` UTF-16 units. */
+    private[sa] def ensure(n: Int): Unit = {
+      val states = 2 * n + 4
+      if (len.length < states) {
+        len = new Array[Int](states); link = new Array[Int](states); head = new Array[Int](states)
+        val entries = 4 * n + 8
+        entChar = new Array[Char](entries); entNext = new Array[Int](entries); entTo = new Array[Int](entries)
+      }
+    }
   }
 
   /** Length (in chars) of the longest common substring of a and b. */
@@ -42,13 +60,19 @@ object SuffixAutomaton extends Serializable {
     lcs(a, b, new Workspace(math.min(a.length, b.length)))
   }
 
+  /** `lcs(a, b)` reusing `ws`; overwrites the automaton held there. */
   def lcs(a: String, b: String, ws: Workspace): Int = {
     if (a == null || b == null || a.isEmpty || b.isEmpty) return 0
-    // build over the shorter side (build costs ~3x per char vs streaming)
-    val (s, t) = if (a.length <= b.length) (a, b) else (b, a)
-    require(2 * s.length + 4 <= ws.maxStates,
-      s"SuffixAutomaton workspace too small: ${s.length} chars")
+    if (a.length <= b.length) { build(a, ws); stream(b, ws) }
+    else { build(b, ws); stream(a, ws) }
+  }
 
+  /** Builds the suffix automaton of `s` (null reads as empty) into `ws`,
+    * replacing the one held there.
+    */
+  def build(s: String, ws: Workspace): Unit = {
+    val n = if (s == null) 0 else s.length
+    ws.ensure(n)
     val len = ws.len; val link = ws.link; val head = ws.head
     val entChar = ws.entChar; val entNext = ws.entNext; val entTo = ws.entTo
     var nStates = 1
@@ -57,17 +81,10 @@ object SuffixAutomaton extends Serializable {
     var last = 0
 
     // adjacency helpers (avg out-degree < 1.5; the root holds the alphabet)
-    def findEntry(v: Int, c: Char): Int = {
+    def trans(v: Int, c: Char): Int = transition(head, entChar, entNext, entTo, v, c)
+    def setTrans(v: Int, c: Char, to: Int): Unit = {
       var e = head(v)
       while (e != -1 && entChar(e) != c) e = entNext(e)
-      e
-    }
-    def trans(v: Int, c: Char): Int = {
-      val e = findEntry(v, c)
-      if (e == -1) -1 else entTo(e)
-    }
-    def setTrans(v: Int, c: Char, to: Int): Unit = {
-      val e = findEntry(v, c)
       if (e != -1) entTo(e) = to
       else {
         entChar(nEntries) = c; entTo(nEntries) = to
@@ -83,7 +100,7 @@ object SuffixAutomaton extends Serializable {
 
     // standard online SAM construction over s
     var i = 0
-    while (i < s.length) {
+    while (i < n) {
       val c = s.charAt(i)
       val cur = newState(len(last) + 1, -1)
       var p = last
@@ -104,13 +121,21 @@ object SuffixAutomaton extends Serializable {
       last = cur
       i += 1
     }
+  }
 
-    // stream t through the automaton tracking the current match length
+  /** Length (in chars) of the longest common substring of `t` (null reads
+    * as empty) and the text last built into `ws`.
+    */
+  def stream(t: String, ws: Workspace): Int = {
+    val len = ws.len; val link = ws.link; val head = ws.head
+    val entChar = ws.entChar; val entNext = ws.entNext; val entTo = ws.entTo
+    def trans(v: Int, c: Char): Int = transition(head, entChar, entNext, entTo, v, c)
     var v = 0
     var l = 0
     var best = 0
-    i = 0
-    while (i < t.length) {
+    var i = 0
+    val n = if (t == null) 0 else t.length
+    while (i < n) {
       val c = t.charAt(i)
       val direct = trans(v, c)
       if (direct != -1) { v = direct; l += 1 }
@@ -124,5 +149,13 @@ object SuffixAutomaton extends Serializable {
       i += 1
     }
     best
+  }
+
+  /** Target of state `v`'s transition on `c`, or -1. */
+  @inline private def transition(head: Array[Int], entChar: Array[Char], entNext: Array[Int],
+                                 entTo: Array[Int], v: Int, c: Char): Int = {
+    var e = head(v)
+    while (e != -1 && entChar(e) != c) e = entNext(e)
+    if (e == -1) -1 else entTo(e)
   }
 }

@@ -39,31 +39,15 @@ object MinHashSig extends Serializable {
     (as, bs)
   }
 
-  /** Multiply a*b mod p for p = 2^61-1 without overflow, using 128-bit
-    * decomposition (a, b < 2^61).
+  /** Multiply a*b mod p for p = 2^61-1 without overflow (a, b < 2^61):
+    * the 122-bit product is hi * 2^64 + lo, and with 2^61 ≡ 1 it folds to
+    * (hi << 3 | lo >>> 61) + (lo & p), a sum below 2^62 that one `modp`
+    * reduces to the exact residue.
     */
   @inline private def mulmod61(a: Long, b: Long): Long = {
-    val aHi = a >>> 32
-    val aLo = a & 0xFFFFFFFFL
-    val bHi = b >>> 32
-    val bLo = b & 0xFFFFFFFFL
-    // a*b = aHi*bHi*2^64 + (aHi*bLo + aLo*bHi)*2^32 + aLo*bLo
-    // Reduce mod 2^61-1 using 2^61 ≡ 1.
-    var res = modp(aLo * bLo)
-    val mid = modp(aHi * bLo) + modp(aLo * bHi) // each < p, sum < 2^62
-    // mid * 2^32 mod p
-    res = modp(res + mulPow2(modp(mid), 32))
-    res = modp(res + mulPow2(modp(aHi * bHi), 64))
-    res
-  }
-
-  /** (x * 2^k) mod p for p = 2^61-1, 0 <= x < p, 0 <= k <= 64. */
-  @inline private def mulPow2(x: Long, k: Int): Long = {
-    // rotate within 61 bits: x * 2^k mod (2^61-1) = 61-bit rotation
-    val kk = k % 61
-    val hi = x >>> (61 - kk)
-    val lo = (x << kk) & MersennePrime
-    modp(lo + hi)
+    val lo = a * b
+    val hi = Math.multiplyHigh(a, b)
+    modp(((hi << 3) | (lo >>> 61)) + (lo & MersennePrime))
   }
 
   @inline private def modp(x: Long): Long = {

@@ -33,7 +33,15 @@ object Shingles {
       hashes(i) = if (k <= 1) tokHashes(i) else XXH64.hashLongs(tokHashes, i, i + k, k.toLong)
       i += 1
     }
-    hashes.distinct.sorted
+    // primitive sort, then drop adjacent repeats in place
+    java.util.Arrays.sort(hashes)
+    var n = 0
+    i = 0
+    while (i < nSh) {
+      if (n == 0 || hashes(i) != hashes(n - 1)) { hashes(n) = hashes(i); n += 1 }
+      i += 1
+    }
+    if (n == nSh) hashes else java.util.Arrays.copyOf(hashes, n)
   }
 
   /** The signature stage's exact token chain (text_preproc.py:126-151 via

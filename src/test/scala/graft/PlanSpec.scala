@@ -231,6 +231,28 @@ class PlanSpec extends AnyFunSuite {
     assert(exchangeAttrLists.exists(hasText), s"no text-carrying exchange found — parse broke?\n$p")
   }
 
+  test("verify stage: the span pass sorts by anchor doc with no exchange of its own") {
+    // The per-anchor automaton build reads each b's pairs as one run: the
+    // sort rides on the b-partitioning the second span-text join already
+    // has, so the span texts still cross exactly three exchanges (the a
+    // texts, the pairs re-keyed by b with their a texts, the b texts).
+    import spark.implicits._
+    val rd = SparkEntry.pipelineRunDir(spark, sf)
+    val norm = spark.read.parquet(s"$rd/01_norm").as[graft.model.Schemas.DocNorm]
+    val sigs = spark.read.parquet(s"$rd/03_sig").as[graft.model.Schemas.DocSig]
+    val cands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
+    val p = planOf(graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, norm, DedupConfig.balanced).toDF())
+    val sections = p.split("\\(\\d+\\) ").toSeq
+    def io(s: String) = s.linesIterator
+      .filter(l => l.trim.startsWith("Input") || l.trim.startsWith("Output")).mkString(" ")
+    def hasText(s: String) = io(s).contains("a_text#") || io(s).contains("b_text#")
+    val textExchanges = sections.filter(s => s.startsWith("Exchange") && hasText(s))
+    assert(textExchanges.size == 3, s"span texts cross ${textExchanges.size} exchanges:\n$p")
+    assert(sections.exists(s => s.startsWith("Sort") && io(s).contains("a_text#") &&
+      s.linesIterator.exists(l => l.trim.startsWith("Arguments") && l.contains("b#"))),
+      s"no anchor sort in the span pass:\n$p")
+  }
+
   test("sketch and chunking plans: CMS is one partial-agg shuffle; chunking is map-only") {
     val cms = SparkEntry.queries("q_cms_sketch")(spark, sf)
     val pc = planOf(cms)

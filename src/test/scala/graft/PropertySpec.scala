@@ -104,26 +104,50 @@ class PropertySpec extends AnyFunSuite {
     assert(SuffixAutomaton.lcs(null, "abc") == 0)
   }
 
-  test("pipeline span pass: shared_span_len == SuffixLCS of the capped rep texts") {
+  test("suffix automaton: one build streamed against many texts == SuffixLCS per pair") {
+    import graft.sa.SuffixAutomaton
+    val rng = new DetRng(29)
+    val ws = new SuffixAutomaton.Workspace(16)
+    (0 until 30).foreach { i =>
+      val anchor = randString(rng, rng.nextInt(300), "abcd ")
+      SuffixAutomaton.build(anchor, ws)
+      val others = (0 until 12).map(_ => randString(rng, rng.nextInt(400), "abcd ")) ++
+        Seq("", anchor, anchor.drop(7) + "zz" + anchor.take(9))
+      others.foreach { t =>
+        assert(SuffixAutomaton.stream(t, ws) == SuffixLCS.longestCommonSubstring(anchor, t),
+          s"case $i: anchor=$anchor t=$t")
+      }
+    }
+    // mixed with one-pair calls on the same workspace: a later build replaces it
+    val sup = "\uD840\uDC00\uD840\uDC01\uD840\uDC02"
+    SuffixAutomaton.build("xx" + sup + "yy", ws)
+    assert(SuffixAutomaton.stream(sup + "q", ws) == sup.length)
+    assert(SuffixAutomaton.lcs("abc", "zabcz", ws) == 3)
+    SuffixAutomaton.build(null, ws)
+    assert(SuffixAutomaton.stream("abc", ws) == 0)
+  }
+
+  test("suffix automaton: texts capped in code points may exceed the workspace in UTF-16 units") {
+    import graft.sa.SuffixAutomaton
+    // 20 code points, 30 UTF-16 units: 10 CJK Ext-B letters (surrogate pairs)
+    val a = (0 until 10).map(i => new String(Character.toChars(0x20000 + i)) + "a").mkString
+    val b = (0 until 10).map(i => new String(Character.toChars(0x20000 + i)) + "b").mkString
+    assert(a.codePointCount(0, a.length) == 20 && a.length == 30)
+    val ws = new SuffixAutomaton.Workspace(20)
+    assert(SuffixAutomaton.lcs(a, b, ws) == SuffixLCS.longestCommonSubstring(a, b))
+    assert(SuffixAutomaton.lcs(a, a, ws) == 30)
+    assert(SuffixAutomaton.lcs(a, "x", ws) == 0) // the grown workspace still serves short texts
+  }
+
+  /** Runs the pipeline and checks every verdict's shared_span_len against
+    * SuffixLCS over the reps' norm_text cut to spanMaxTextChars code
+    * points. Returns the number of span pairs with a nonzero span and the
+    * number whose capped texts both hold more UTF-16 units than the cap.
+    */
+  private def checkSpanPass(pages: org.apache.spark.sql.Dataset[Schemas.Page], dir: String,
+                            conf: DedupConfig): (Int, Int) = {
     val spark = TestSpark.spark
     import spark.implicits._
-    val (fam, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 25, membersPerFamily = 5)
-    // planted mid-jaccard pairs (~0.67: below the 0.75 vote threshold,
-    // above the 0.2 span floor) sharing a long contiguous span — these land
-    // in the verify stage's span subset, which pure near-dup families miss
-    val rng2 = new DetRng(77)
-    val planted = (0 until 6).flatMap { i =>
-      val span = (0 until 160).map(_ => s"s${i}x${rng2.nextInt(500)}").mkString(" ")
-      val ua = (0 until 40).map(_ => s"ua${i}x${rng2.nextInt(500)}").mkString(" ")
-      val ub = (0 until 40).map(_ => s"ub${i}x${rng2.nextInt(500)}").mkString(" ")
-      Seq(graft.model.Schemas.Page(s"http://span/$i/a",
-          new java.sql.Timestamp(1704067200000L), Array.emptyByteArray, span + " " + ua, "en"),
-        graft.model.Schemas.Page(s"http://span/$i/b",
-          new java.sql.Timestamp(1704067200000L), Array.emptyByteArray, ub + " " + span, "en"))
-    }
-    val pages = fam.union(spark.createDataset(planted))
-    val conf = DedupConfig.balanced
-    val dir = "/tmp/graft_test_spanalg"
     TestUtil.deleteRecursively(new java.io.File(dir))
     graft.plans.DedupPipeline.run(spark, pages, dir, conf, resume = false)
     val verdicts = spark.read.parquet(s"$dir/06_verdicts")
@@ -153,7 +177,52 @@ class PropertySpec extends AnyFunSuite {
       span != want
     }
     assert(diffs.isEmpty, s"${diffs.size} shared_span_len differences vs SuffixLCS: ${diffs.take(3)}")
-    assert(verdicts.exists(_._7 > 0), "no span pair exercised the pass")
+    (verdicts.count(_._7 > 0),
+      scored.count { case (a, b) => texts(a).length > cap && texts(b).length > cap })
+  }
+
+  test("pipeline span pass: shared_span_len == SuffixLCS of the capped rep texts") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val (fam, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 25, membersPerFamily = 5)
+    // planted mid-jaccard pairs (~0.67: below the 0.75 vote threshold,
+    // above the 0.2 span floor) sharing a long contiguous span — these land
+    // in the verify stage's span subset, which pure near-dup families miss
+    val rng2 = new DetRng(77)
+    val planted = (0 until 6).flatMap { i =>
+      val span = (0 until 160).map(_ => s"s${i}x${rng2.nextInt(500)}").mkString(" ")
+      val ua = (0 until 40).map(_ => s"ua${i}x${rng2.nextInt(500)}").mkString(" ")
+      val ub = (0 until 40).map(_ => s"ub${i}x${rng2.nextInt(500)}").mkString(" ")
+      Seq(graft.model.Schemas.Page(s"http://span/$i/a",
+          new java.sql.Timestamp(1704067200000L), Array.emptyByteArray, span + " " + ua, "en"),
+        graft.model.Schemas.Page(s"http://span/$i/b",
+          new java.sql.Timestamp(1704067200000L), Array.emptyByteArray, ub + " " + span, "en"))
+    }
+    val pages = fam.union(spark.createDataset(planted))
+    val (spans, _) = checkSpanPass(pages, "/tmp/graft_test_spanalg", DedupConfig.balanced)
+    assert(spans > 0, "no span pair exercised the pass")
+  }
+
+  test("pipeline span pass: texts capped in code points run through the automaton") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // planted mid-jaccard pairs (as above) whose every token starts with a
+    // CJK Ext-B letter: both sides' texts cut to 24 code points hold more
+    // than 24 UTF-16 units
+    val letter = (i: Int) => new String(Character.toChars(0x20000 + i))
+    val rng = new DetRng(78)
+    val ts = new java.sql.Timestamp(1704067200000L)
+    val planted = (0 until 6).flatMap { i =>
+      def words(tag: String, n: Int) =
+        (0 until n).map(_ => s"${letter(rng.nextInt(40))}$tag${i}x${rng.nextInt(500)}").mkString(" ")
+      val span = words("s", 160)
+      Seq(Schemas.Page(s"http://supp/$i/a", ts, Array.emptyByteArray, span + " " + words("ua", 40), "en"),
+        Schemas.Page(s"http://supp/$i/b", ts, Array.emptyByteArray, words("ub", 40) + " " + span, "en"))
+    }
+    val (spans, overCap) = checkSpanPass(spark.createDataset(planted), "/tmp/graft_test_spansupp",
+      DedupConfig.balanced.copy(spanMaxTextChars = 24))
+    assert(overCap > 0, "no span pair had both capped texts longer than the cap in UTF-16 units")
+    assert(spans > 0, "no span pair exercised the pass")
   }
 
   test("MinHash signature is independent of shingle order") {

@@ -165,6 +165,10 @@ class ResumeSpec extends AnyFunSuite {
     assert(m.consensus_rate == 0.0)
     assert(m.clusters == 0 && m.clustered_docs == 0)
     assert(m.stages.find(_.stage == "01_norm").map(_.rows).contains(3L), m.stages)
+    // every stage has a lineage line, the empty ones with 0 rows
+    assert(m.stages.map(_.stage) ==
+      Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters"), m.stages)
+    assert(m.stages.filter(_.stage >= "05").forall(_.rows == 0L), m.stages)
   }
 
   test("a stage whose lineage write fails is not marked done") {
