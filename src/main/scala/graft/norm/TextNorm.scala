@@ -292,7 +292,7 @@ object TextNorm extends Serializable {
       else if (stripDatesIds && isDigit(cp) && !wordBefore(s, i)) {
         val run = digitRun(s, i)
         val end =
-          if (!strict && runLen(digitRun(s, i, 5)) == 4) dateEnd(s, i)
+          if (!strict && runLen(run) == 4) dateEnd(s, runEnd(run))
           else if (runLen(run) >= 6 && !wordAt(s, runEnd(run))) runEnd(run)
           else -1
         if (end >= 0) { space = true; i = end }
@@ -308,14 +308,14 @@ object TextNorm extends Serializable {
     sb.substring(lo, hi)
   }
 
-  /** End of `\d{4}-\d{2}-\d{2}\b` at `i` (4 digits there), else -1. */
+  /** End of `-\d{2}-\d{2}\b` at `i`, just after a date's 4 digits, else -1. */
   private def dateEnd(s: String, i: Int): Int = {
     def twoDigitsAfterDash(j: Int): Int =
       if (j < s.length && s.charAt(j) == '-') {
         val r = digitRun(s, j + 1, 2)
         if (runLen(r) == 2) runEnd(r) else -1
       } else -1
-    val m = twoDigitsAfterDash(runEnd(digitRun(s, i, 4)))
+    val m = twoDigitsAfterDash(i)
     val d = if (m < 0) -1 else twoDigitsAfterDash(m)
     if (d >= 0 && !wordAt(s, d)) d else -1
   }
