@@ -285,13 +285,12 @@ object DedupPipeline {
     * the exact merge-count Jaccard and the SimHash Hamming distance, and
     * the scored relation is checkpointed narrow (`base`). The embedding
     * and span subsets are scored from `base` in two independent passes and
-    * left-joined back. The span pass sorts its pairs by anchor doc `b`
-    * within the partitions its last join left hash-partitioned by `b` (no
-    * exchange) and builds each anchor's suffix automaton once for all its
-    * pairs, streaming every partner text through it. Alternative scorers (a partition-aware cogroup, a
-    * MinHash-estimate and a b-bit prefilter band) and the suffix-array span
-    * pass were measured against this dataflow and removed; the numbers are
-    * in BENCH/BASELINE.md.
+    * left-joined back; the span pass builds each anchor doc's suffix
+    * automaton once and streams all its partners' texts through it.
+    * Alternative scorers (a partition-aware cogroup, a MinHash-estimate and
+    * a b-bit prefilter band) and the suffix-array span pass were measured
+    * against this dataflow and removed; the numbers are in
+    * BENCH/BASELINE.md.
     */
   def verifyStage(spark: SparkSession, cands: Dataset[CandPair], sigs: Dataset[DocSig],
                   norm: Dataset[DocNorm], conf: DedupConfig,
