@@ -49,7 +49,6 @@ object TextNorm extends Serializable {
     "the", "a", "an", "and", "or", "for", "of", "to", "in", "on", "at", "by",
     "with", "from", "as", "is", "are", "was", "were", "be", "been", "it",
     "this", "that", "these", "those", "you", "your")
-  private val MaxStopwordLen = DefaultStopwords.iterator.map(_.length).max
 
   // text_preproc.py:20-40 (sentence split only; the normalize chain is the
   // scanners below)
@@ -371,18 +370,6 @@ object TextNorm extends Serializable {
   def tokenize(normText: String, minLen: Int = 2, removeStopwords: Boolean = true,
                stopwords: Set[String] = DefaultStopwords): Array[String] =
     words(normText)(t => t.length >= minLen && !(removeStopwords && stopwords(t)))
-
-  /** `tokenize(normText).length` without building the tokens: only a
-    * token short enough to be a default stopword is materialized.
-    */
-  def tokenCount(normText: String): Int = {
-    var n = 0
-    foreachWord(normText) { (from, to) =>
-      val len = to - from
-      if (len >= 2 && (len > MaxStopwordLen || !DefaultStopwords(normText.substring(from, to)))) n += 1
-    }
-    n
-  }
 
   /** `[^\w\s]` → space, per code point. */
   private def nonWordToSpace(s: String): String = {

@@ -53,7 +53,7 @@ object DedupPipeline {
 
   def normalizeDoc(url: String, text: String, lang: String): DocNorm = {
     val norm = TextNorm.normalize(text)
-    DocNorm(url, norm, TextNorm.exactHash(norm), TextNorm.contentHash(norm), TextNorm.tokenCount(norm), lang)
+    DocNorm(url, norm, TextNorm.exactHash(norm), TextNorm.contentHash(norm), TextNorm.tokenize(norm).length, lang)
   }
 
   def signDoc(d: DocNorm, conf: DedupConfig, as: Array[Long], bs: Array[Long],
@@ -455,8 +455,8 @@ object DedupPipeline {
     // pairs hash-partitioned by b, so sorting within partitions (no
     // exchange) makes each b's pairs one run; the pass builds b's
     // automaton once per run and streams every a_text through it (LCS is
-    // symmetric, so shared_span_len is unchanged). A run of one pair builds
-    // over the shorter text instead. spanNanos sums build and stream time.
+    // symmetric, so shared_span_len is unchanged). spanNanos sums build and
+    // stream time.
     val spanScored: DataFrame = subset.filter($"do_span").select($"a", $"b")
       .join(na.hint("SHUFFLE_HASH"), $"a" === $"na_url")
       .join(nb.hint("SHUFFLE_HASH"), $"b" === $"nb_url")
@@ -465,20 +465,11 @@ object DedupPipeline {
       .as[(String, String, String, String)]
       .mapPartitions { it =>
         val ws = new graft.sa.SuffixAutomaton.Workspace(spanCap)
-        val rows = it.buffered
         var built: String = null // the b whose automaton ws holds
-        rows.map { case (a, b, at, bt) =>
+        it.map { case (a, b, at, bt) =>
           val t0 = System.nanoTime()
-          val span =
-            if (b == built) graft.sa.SuffixAutomaton.stream(at, ws)
-            else if (rows.hasNext && rows.head._2 == b) {
-              graft.sa.SuffixAutomaton.build(bt, ws)
-              built = b
-              graft.sa.SuffixAutomaton.stream(at, ws)
-            } else {
-              built = null
-              graft.sa.SuffixAutomaton.lcs(at, bt, ws)
-            }
+          if (b != built) { graft.sa.SuffixAutomaton.build(bt, ws); built = b }
+          val span = graft.sa.SuffixAutomaton.stream(at, ws)
           spanNanos.foreach(_.add(System.nanoTime() - t0))
           (a, b, span)
         }
