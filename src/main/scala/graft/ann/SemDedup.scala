@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * shape, under the shared BucketGuard (an all-boilerplate mega-cluster
   * would turn the join quadratic; dropped clusters degrade to keep-all,
   * logged and returned as a drop count, never partially sampled);
-  * grouping is the iterative DataFrame CC; the keep rule is a partial
+  * grouping is ConnectedComponents (driver union-find for a small edge
+  * set, else the iterative DataFrame loop); the keep rule is a partial
   * aggregation (min of a (−d2, id) struct, map-side combinable), not a
   * global window.
   *
@@ -100,7 +101,7 @@ object SemDedup {
     // localCheckpoint over persist per the BucketGuard convention
     val asg = assignWithDist(spark, vectors, centroids, idCol, vecCol).localCheckpoint()
     val (edges, dropped) = clusterEdges(spark, vectors, asg, tau, maxClusterSize, idCol, vecCol)
-    val comps = graft.cc.ConnectedComponents.run(spark, edges)
+    val comps = graft.cc.ConnectedComponents.run(spark, edges)._1
       .select(col("url").as(idCol), col("comp").as("rep"))
 
     val labeled = asg.join(comps, Seq(idCol), "left")

@@ -1,76 +1,142 @@
 package graft.cc
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Iterative connected components over DataFrames (no GraphFrames jar in the
-  * sandbox; the north rule asks for "union-find over DataFrames").
+import scala.jdk.CollectionConverters._
+
+/** Connected components over a DataFrame edge list: every vertex is
+  * labelled with the minimum member of its component, as the reference's
+  * driver-side DSU does (`near_duplicate.py:335-371`).
   *
-  * Algorithm: min-label propagation with pointer jumping. Each vertex keeps
-  * a `comp` label (initially itself); every round it takes the min of its
-  * own label, its neighbors' labels, and its label's label (path halving).
-  * Converges in O(log n) rounds; duplicate clusters are near-cliques, so in
-  * practice 2-3 rounds. Each round ends in `localCheckpoint` to truncate
-  * lineage (SURVEY.md §4 "must add explicitly").
+  * Two paths, chosen by an exact edge count the code observes: `run`
+  * first collects at most `driverMaxEdges + 1` edges.
   *
-  * Large inputs are dictionary-encoded first (r06): vertex keys are mapped
-  * to ORDER-PRESERVING dense longs (sort + zipWithIndex), the iteration
-  * runs entirely on 16-byte long pairs instead of ~100+-byte url strings,
-  * and labels are decoded back through the dictionary at the end. Because
-  * the mapping is an order isomorphism and every operation in the loop is
-  * min() or an equality join, the decoded result is bit-identical to the
-  * direct computation — min-of-ids maps to min-of-urls. The encode costs
-  * two edge-scale joins once; each round then shuffles ~7x fewer bytes and
-  * compares longs instead of UTF8Strings. Gated on estimated edge count so
-  * small graphs (every correctness-tier input) keep the join-free direct
-  * path; `forceIdEncoding` pins either path for tests.
+  *  - **At most [[DriverMaxEdges]] edges** (every dup-edge set of the
+  *    benchmark corpora and of an ingest batch): union-find on the driver
+  *    over the collected edges, as the reference does. One bounded
+  *    collect replaces the ~30 jobs of a distributed fixed point, and the
+  *    labels come back as a local relation the caller's joins can
+  *    broadcast.
+  *  - **More edges:** min-label propagation with pointer jumping over
+  *    dictionary-encoded vertices. Vertex keys are mapped to
+  *    ORDER-PRESERVING dense longs (sort + zipWithIndex), the iteration
+  *    runs on 16-byte long pairs instead of ~100+-byte url strings, and
+  *    labels are decoded through the dictionary at the end. Because the
+  *    mapping is an order isomorphism and every operation in the loop is
+  *    min() or an equality join, min-of-ids maps to min-of-keys. Each
+  *    round takes the min of a vertex's own label, its neighbours' labels
+  *    and its label's label, so it converges in O(log n) rounds (2-3 for
+  *    near-clique duplicate clusters), and ends in a checkpoint that
+  *    truncates lineage (SURVEY.md §4 "must add explicitly").
   *
-  * Replaces the reference's driver-side DSU
-  * (/root/reference/src/pipelines/near_duplicate.py:335-371) — a Python
-  * dict union-find cannot hold 10^12 vertices; this shuffles on the edge
-  * key instead.
+  * Both paths order keys as Spark's `min` and `<` do for the column type
+  * (binary UTF-8 order for strings, which is NOT `String.compareTo`'s
+  * UTF-16 order), so they return identical labels (CCSpec runs every
+  * graph through both).
   */
 object ConnectedComponents {
 
-  /** Edge-count gate for the dictionary-encoded loop: below this the two
-    * encode joins + decode joins cost more than the per-round byte savings
-    * (the sandbox bench tiers sit far below; the 450k scaling corpus at
-    * ~3M dup edges sits far above).
+  /** Largest edge count solved on the driver. For ~100-byte url keys the
+    * collected `Row`s take ~350 bytes of driver heap per edge, and each of
+    * up to two new vertices per edge adds ~300 more (a Catalyst copy of
+    * the key, its index entry, the union-find arrays, its output row): at
+    * most ~1 KB per edge, so a list of this size needs up to ~100 MB.
     */
-  final val IdEncodingMinEdges = 500000L
+  final val DriverMaxEdges = 100000
 
   /** @param edges DataFrame with two same-typed orderable columns (a, b),
-    *        undirected; callers pass unique pair relations (duplicate
-    *        edges are correctness-neutral but ride every round's join).
+    *        undirected, without nulls; callers pass unique pair relations
+    *        (duplicate edges are correctness-neutral but ride every
+    *        round's join on the loop path).
     * @param reliable use durable checkpoint() (requires a configured
-    *        checkpoint dir) instead of localCheckpoint for the per-round
-    *        lineage truncation — executor-loss-safe on real clusters.
-    * @param forceIdEncoding Some(true/false) pins the dictionary-encoded
-    *        vs direct loop (tests); None = size-gated.
-    * @return DataFrame (url, comp) where comp = min key of the component
-    *         (lexicographic for strings). Covers only vertices incident
-    *         to an edge.
+    *        checkpoint dir) instead of localCheckpoint for the loop's
+    *        per-round lineage truncation — executor-loss-safe on real
+    *        clusters.
+    * @param driverMaxEdges edge lists up to this size are solved on the
+    *        driver; tests pass 0 to reach the distributed loop.
+    * @return (url, comp) where comp = min key of the component, covering
+    *         only vertices incident to an edge, in the edge key type; and
+    *         the number of loop rounds run, 0 when the driver solved it.
     */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
           reliable: Boolean = false,
-          forceIdEncoding: Option[Boolean] = None): DataFrame = {
+          driverMaxEdges: Int = DriverMaxEdges): (DataFrame, Int) = {
     import spark.implicits._
     if (reliable) require(spark.sparkContext.getCheckpointDir.isDefined,
       "reliable=true requires spark.sparkContext.setCheckpointDir(<durable dir>)")
-    def ck(df: DataFrame): DataFrame = if (reliable) df.checkpoint() else df.localCheckpoint()
+    val ab = edges.select($"a", $"b")
+    val head = ab.limit(driverMaxEdges + 1).collect()
+    if (head.length <= driverMaxEdges) (solveOnDriver(spark, head, ab.schema.fields(0)), 0)
+    else encodedLoop(spark, ab, maxIter, if (reliable) _.checkpoint() else _.localCheckpoint())
+  }
 
+  /** Union-find (union by size, path halving) over collected edges; each
+    * vertex is labelled with the least member of its set under Spark's
+    * ordering of `keyField`'s type.
+    */
+  private def solveOnDriver(spark: SparkSession, edges: Array[Row], keyField: StructField): DataFrame = {
+    val ids = new java.util.HashMap[Any, Integer]()
+    val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+    def id(v: Any): Int = {
+      require(v != null, "connected components edges must not have null endpoints")
+      val i = ids.get(v)
+      if (i != null) i.intValue
+      else { ids.put(v, keys.length); keys += v; keys.length - 1 }
+    }
+    val ea = edges.map(r => id(r.get(0)))
+    val eb = edges.map(r => id(r.get(1)))
+    val n = keys.length
+    // compare in Catalyst's representation, with Catalyst's ordering
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(keyField.dataType)
+    val order = TypeUtils.getInterpretedOrdering(keyField.dataType)
+    val sortKey = keys.map(toCatalyst).toArray
+    val parent = Array.range(0, n)
+    val size = Array.fill(n)(1)
+    val least = Array.range(0, n) // least member of the set rooted here
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    var e = 0
+    while (e < ea.length) {
+      var ra = find(ea(e))
+      var rb = find(eb(e))
+      if (ra != rb) {
+        if (size(ra) < size(rb)) { val t = ra; ra = rb; rb = t }
+        parent(rb) = ra
+        size(ra) += size(rb)
+        if (order.lt(sortKey(least(rb)), sortKey(least(ra)))) least(ra) = least(rb)
+      }
+      e += 1
+    }
+    val rows = (0 until n).map(v => Row(keys(v), keys(least(find(v)))))
+    spark.createDataFrame(rows.asJava,
+      StructType(Seq(keyField.copy(name = "url"), keyField.copy(name = "comp"))))
+  }
+
+  /** The distributed path: dictionary-encode the vertices, run the
+    * min-label fixed point on the ids, decode. Returns the labels and the
+    * number of rounds.
+    */
+  private def encodedLoop(spark: SparkSession, edges: DataFrame, maxIter: Int,
+                          ck: DataFrame => DataFrame): (DataFrame, Int) = {
+    import spark.implicits._
     // Partition count scales with the edge relation (~64k edges per task)
     // but never drops below ~parallelism/4: a small dup-edge set on a big
     // cluster must still spread its join rounds (collapsing to 2 tasks at
     // 32 cores serialized CC and cost ~0.1 scaling efficiency — round-2
     // measurement), while a billion-edge corpus fans out to 4x the cluster
     // parallelism. Sized from Catalyst's sizeInBytes estimate instead of a
-    // count() job (r06): only the PARTITION COUNT and the id-encoding gate
-    // depend on it, results are partitioning-invariant (CCSpec asserts
-    // this), and the /64 divisor deliberately over-estimates edge count so
-    // error lands on the more-partitions side; both the floor and the
-    // 4x-parallelism cap still bound it.
+    // count() job (r06): only the PARTITION COUNT depends on it, results
+    // are partitioning-invariant (CCSpec asserts this), and the /64
+    // divisor deliberately over-estimates edge count so error lands on the
+    // more-partitions side; both the floor and the 4x-parallelism cap
+    // still bound it.
     val estEdges = (edges.queryExecution.optimizedPlan.stats.sizeInBytes / 64)
       .min(BigInt(Long.MaxValue)).toLong
     val par = spark.sparkContext.defaultParallelism
@@ -81,40 +147,35 @@ object ConnectedComponents {
     val sym0 = edges.select($"a".as("u"), $"b".as("v"))
       .union(edges.select($"b".as("u"), $"a".as("v")))
 
-    val useIds = forceIdEncoding.getOrElse(estEdges >= IdEncodingMinEdges)
-    if (!useIds) {
-      minLabelLoop(spark, sym0, ccParts, ck, maxIter)
-    } else {
-      // Order-preserving dense ids: sort the distinct vertex keys once and
-      // number them. zipWithIndex numbers rows in partition order, and the
-      // preceding global sort makes that order the key order, so
-      // vid_x < vid_y  <=>  key_x < key_y (a strict order isomorphism).
-      val verts = sym0.select($"u").distinct().orderBy($"u")
-      val keyField = verts.schema.fields(0).copy(name = "vurl")
-      val ids = ck(spark.createDataFrame(
-        verts.rdd.zipWithIndex().map { case (r, i) => Row(r.get(0), i) },
-        StructType(Seq(keyField, StructField("vid", LongType, nullable = false)))))
-      val symIds = sym0
-        .join(ids.withColumnRenamed("vurl", "u2").withColumnRenamed("vid", "uid"), $"u" === $"u2")
-        .join(ids.withColumnRenamed("vurl", "v2").withColumnRenamed("vid", "vid2"), $"v" === $"v2")
-        .select($"uid".as("u"), $"vid2".as("v"))
-      val labelIds = minLabelLoop(spark, symIds, ccParts, ck, maxIter)
-      // decode: vertex id -> key, component id -> key (min id = min key)
-      labelIds
-        .join(ids.withColumnRenamed("vid", "uid"), $"url" === $"uid")
-        .select($"vurl".as("out_url"), $"comp")
-        .join(ids.withColumnRenamed("vurl", "curl").withColumnRenamed("vid", "cid"),
-          $"comp" === $"cid")
-        .select($"out_url".as("url"), $"curl".as("comp"))
-    }
+    // Order-preserving dense ids: sort the distinct vertex keys once and
+    // number them. zipWithIndex numbers rows in partition order, and the
+    // preceding global sort makes that order the key order, so
+    // vid_x < vid_y  <=>  key_x < key_y (a strict order isomorphism).
+    val verts = sym0.select($"u").distinct().orderBy($"u")
+    val keyField = verts.schema.fields(0).copy(name = "vurl")
+    val ids = ck(spark.createDataFrame(
+      verts.rdd.zipWithIndex().map { case (r, i) => Row(r.get(0), i) },
+      StructType(Seq(keyField, StructField("vid", LongType, nullable = false)))))
+    val symIds = sym0
+      .join(ids.withColumnRenamed("vurl", "u2").withColumnRenamed("vid", "uid"), $"u" === $"u2")
+      .join(ids.withColumnRenamed("vurl", "v2").withColumnRenamed("vid", "vid2"), $"v" === $"v2")
+      .select($"uid".as("u"), $"vid2".as("v"))
+    val (labelIds, rounds) = minLabelLoop(spark, symIds, ccParts, ck, maxIter)
+    // decode: vertex id -> key, component id -> key (min id = min key)
+    val labels = labelIds
+      .join(ids.withColumnRenamed("vid", "uid"), $"url" === $"uid")
+      .select($"vurl".as("out_url"), $"comp")
+      .join(ids.withColumnRenamed("vurl", "curl").withColumnRenamed("vid", "cid"),
+        $"comp" === $"cid")
+      .select($"out_url".as("url"), $"curl".as("comp"))
+    (labels, rounds)
   }
 
   /** The min-label + pointer-jumping fixed point over a symmetric edge
-    * relation (u, v) of any orderable key type. Returns (url, comp) in the
-    * edge key type.
+    * relation (u, v) of long ids. Returns (url, comp) and the rounds run.
     */
   private def minLabelLoop(spark: SparkSession, sym0: DataFrame, ccParts: Int,
-                           ck: DataFrame => DataFrame, maxIter: Int): DataFrame = {
+                           ck: DataFrame => DataFrame, maxIter: Int): (DataFrame, Int) = {
     import spark.implicits._
     // Partitioned on v — the key every iteration's message join probes —
     // so the static edge relation is exchanged ONCE here instead of once
@@ -130,9 +191,13 @@ object ConnectedComponents {
     val sym = sym0.repartition(ccParts, $"v").transform(ck)
 
     // Not checkpointed: iteration 1 references the initial labels twice
-    // (message join + self-message union), but both subtrees canonicalize
-    // identically so the distinct's exchange is planned once and reused;
-    // eager materialization here would only add a job.
+    // (message join + self-message union). A per-Spark-stage listing of
+    // a 9,425-edge graph (3,451 vertices) on this loop shows one job for
+    // this distinct, read by both references; but each round's aggregate
+    // runs twice (two jobs with the same shuffle counts every round),
+    // apparently because `compOf` reads it with `prev` pruned and so
+    // plans its own exchange. Left as is until a workload whose graph
+    // reaches this path can measure a rework.
     var labels = sym.select($"u".as("url")).distinct()
       .withColumn("comp", $"url")
 
@@ -162,10 +227,6 @@ object ConnectedComponents {
       // task retry inflating the count cannot change the decision: a
       // retried task re-observes the same deterministic rows.
       val changedAcc = spark.sparkContext.longAccumulator(s"graft.cc.changed.$iter")
-      // Row-encoded pass-through: vertex ids may be strings (pipeline
-      // urls), numerics (SemDedup vec ids) or the dictionary longs —
-      // schema and values are preserved exactly, only the side-effect
-      // count is added.
       val counted = step2.mapPartitions { it =>
           it.map { r => if (r.get(1) != r.get(2)) changedAcc.add(1L); r }
         }(org.apache.spark.sql.Encoders.row(step2.schema))
@@ -175,6 +236,6 @@ object ConnectedComponents {
       iter += 1
     }
     require(converged, s"connected components did not converge in $maxIter iterations")
-    labels
+    (labels, iter)
   }
 }

@@ -38,6 +38,9 @@ object DedupPipeline {
     */
   final val ShingleHashSeed = graft.sig.Shingles.HashSeed
 
+  /** The schema lineage files are written with (see writeLineage). */
+  private[graft] lazy val LineageSchema = org.apache.spark.sql.Encoders.product[LineageRow].schema
+
   /** Materialize a reused relation: localCheckpoint by default (blocks on
     * executors, reclaimed by the ContextCleaner), reliable checkpoint()
     * when conf.reliableCheckpoints — see the DedupConfig field Scaladoc.
@@ -520,20 +523,25 @@ object DedupPipeline {
     * their rep's component with one join — equivalent to CC over
     * near-edges ∪ star-edges because a rep is the min url of its group.
     * Cluster id = min member url; singletons excluded
-    * (near_duplicate.py:364-371).
+    * (near_duplicate.py:364-371). A dup-edge set of at most
+    * [[ConnectedComponents.DriverMaxEdges]] edges is labelled on the
+    * driver by union-find, a larger one by the distributed loop. Returns
+    * the clusters and the stage's run counter `cc_rounds` (the loop's
+    * round count, 0 when the driver labelled the edges).
     */
   def clusterStage(spark: SparkSession, verdicts: Dataset[Verdict], reps: DataFrame,
-                   conf: DedupConfig = DedupConfig.balanced): DataFrame = {
+                   conf: DedupConfig = DedupConfig.balanced): (DataFrame, Map[String, Long]) = {
     import spark.implicits._
     val nearEdges = verdicts.filter($"final_label" === "DUPLICATE").select($"a", $"b")
-    val repComp = ConnectedComponents.run(spark, nearEdges, reliable = conf.reliableCheckpoints)
-      .select($"url".as("rep2"), $"comp")
+    val (labels, rounds) = ConnectedComponents.run(spark, nearEdges, reliable = conf.reliableCheckpoints)
+    val repComp = labels.select($"url".as("rep2"), $"comp")
     val assigned = reps.join(repComp, $"rep" === $"rep2", "left")
       .select($"url", coalesce($"comp", $"rep").as("cluster_id"))
     val sizes = assigned.groupBy($"cluster_id").agg(count(lit(1)).as("cluster_size"))
-    assigned.join(sizes, "cluster_id")
+    (assigned.join(sizes, "cluster_id")
       .filter($"cluster_size" >= 2)
-      .select($"url", $"cluster_id", $"cluster_size")
+      .select($"url", $"cluster_id", $"cluster_size"),
+      Map(RunMetrics.CcRounds -> rounds.toLong))
   }
 
   // ---------- orchestration with persist / resume / lineage ----------
@@ -551,11 +559,11 @@ object DedupPipeline {
     import spark.implicits._
     val lines = spark.sparkContext.longAccumulator
     val countLine = udf { (rows: Long) => lines.add(1L); rows }.asNondeterministic()
+    // columns in LineageRow order, so the snapshot reads them back with
+    // LineageSchema
     def write(perPartition: DataFrame): Unit = perPartition
-      .withColumn("run_id", lit(runId))
-      .withColumn("stage", lit(stage))
-      .withColumn("wall_ms", lit(wallMs))
-      .withColumn("config_hash", lit(confHash))
+      .select(lit(runId).as("run_id"), lit(stage).as("stage"), $"partition_id", $"rows",
+        lit(wallMs).as("wall_ms"), lit(confHash).as("config_hash"))
       .write.mode(SaveMode.Overwrite).parquet(s"$runDir/lineage/$stage")
     write(df.groupBy(spark_partition_id().as("partition_id")).agg(count(lit(1)).as("rows"))
       .select($"partition_id", countLine($"rows").as("rows")))
@@ -568,8 +576,11 @@ object DedupPipeline {
     * resume. Run counters live in the marker of the stage that measured
     * them (`dropped_mega_buckets` and `dropped_domain_pairs` with 05_cand;
     * `emb_budget_dropped`, `emb_wall_ms` and `span_wall_ms` with
-    * 06_verdicts), so the [[RunMetrics]] snapshot reports the same values
-    * on a resumed run as on the cold run that computed them.
+    * 06_verdicts; `cc_rounds` with 07_clusters), so the [[RunMetrics]]
+    * snapshot reports the same values on a resumed run as on the cold run
+    * that computed them. A freshly written stage is read back with the
+    * schema it was written with, which skips Spark's one-task
+    * schema-inference job; a resumed stage is read back inferring it.
     *
     * Lineage snapshots are written CONCURRENTLY with the next stage's
     * compute (guide §2.6 "overlap independent jobs"): the lineage job for
@@ -601,8 +612,10 @@ object DedupPipeline {
         spark.sparkContext.setJobDescription(s"pipeline: $name")
         val t0 = System.nanoTime()
         val written = try {
-          compute.write.mode(SaveMode.Overwrite).parquet(dir)
-          spark.read.parquet(dir)
+          val out = compute
+          out.write.mode(SaveMode.Overwrite).parquet(dir)
+          // with the schema just written: no schema-inference job
+          spark.read.schema(out.schema).parquet(dir)
         } finally spark.sparkContext.setJobDescription(null)
         val ms = (System.nanoTime() - t0) / 1000000
         // evaluated here, on the driver thread, as the stage finishes; the
@@ -670,8 +683,11 @@ object DedupPipeline {
       verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc)).toDF()
     }
 
-    val clusters = stage("07_clusters") {
-      clusterStage(spark, verdictDf.as[Verdict], repsDf, conf)
+    var clusterCounters = Map.empty[String, Long]
+    val clusters = stage("07_clusters", clusterCounters) {
+      val (df, counters) = clusterStage(spark, verdictDf.as[Verdict], repsDf, conf)
+      clusterCounters = counters
+      df
     }
 
     // lineage (and with it every stage marker) must be fully on disk — and
@@ -738,11 +754,11 @@ object DedupPipeline {
       else f.listStatus(lineageDir).filter(_.isDirectory).map(_.getPath.toString)
     val stages =
       if (stageDirs.isEmpty) Seq.empty
-      else spark.read.parquet(stageDirs.toIndexedSeq: _*)
+      else spark.read.schema(LineageSchema).parquet(stageDirs.toIndexedSeq: _*)
         .groupBy($"stage").agg(max($"wall_ms").as("wall_ms"), sum($"rows").as("rows"))
         .orderBy($"stage").as[RunMetrics.StageLine].collect().toSeq
-    val counters = StageStore.counters(spark, s"$runDir/05_cand", confHash) ++
-      StageStore.counters(spark, s"$runDir/06_verdicts", confHash)
+    val counters = Seq("05_cand", "06_verdicts", "07_clusters")
+      .map(stage => StageStore.counters(spark, s"$runDir/$stage", confHash)).reduce(_ ++ _)
     def counter(name: String) = counters.getOrElse(name, 0L)
     val summary = summaryF.get()
     // sums over a run with no candidate pairs are null: report 0
@@ -763,7 +779,7 @@ object DedupPipeline {
       emb_pairs = long("emb_pairs"), span_pairs = long("span_pairs"),
       emb_budget_dropped = counter(RunMetrics.EmbBudgetDropped),
       emb_wall_ms = counter(RunMetrics.EmbWallMs), span_wall_ms = counter(RunMetrics.SpanWallMs),
-      stages = stages)
+      cc_rounds = counter(RunMetrics.CcRounds), stages = stages)
     val out = f.create(new Path(runDir, "metrics.json"), true)
     try out.write(RunMetrics.toJson(record).getBytes("UTF-8"))
     finally out.close()

@@ -3,8 +3,10 @@ package graft.plans
 import graft.DedupConfig
 import graft.model.Schemas._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Incremental near-dup ingest — the production flow for a continuously
   * crawled corpus: dedup a NEW batch of pages against an EXISTING signed
@@ -24,9 +26,11 @@ import org.apache.spark.sql.functions._
   *   - Cluster maintenance is TOUCHED-COMPONENT-ONLY: existing cluster
   *     memberships are pulled (as rep->member star edges) only for
   *     clusters adjacent to a new duplicate edge; connected components
-  *     runs over new edges + those stars. Untouched clusters are never
-  *     read past the membership semi-join, and two old clusters bridged by
-  *     a new page merge correctly.
+  *     runs over new edges + those stars — on the driver by union-find
+  *     while they number at most ConnectedComponents.DriverMaxEdges, as
+  *     for a typical batch, else by the distributed loop. Untouched
+  *     clusters are never read past the membership semi-join, and two old
+  *     clusters bridged by a new page merge correctly.
   *   - Exact short-circuit first: a new page whose exact_hash matches the
   *     old corpus (or another new page) attaches by a hash equi-join and
   *     is never signed or banded — refetches cost one join, not a
@@ -44,9 +48,13 @@ import org.apache.spark.sql.functions._
   * persisted stages. As in the pipeline, run counters live in the
   * markers: `inc_05_cand` records `dropped_mega_buckets` and
   * `capped_docs` (docs that lost a partner to the per-doc cap; both exact
-  * unless a task was retried). The returned assignment covers every AFFECTED
-  * component (one containing at least one new page), with old members
-  * included so sinks can upsert merged clusters atomically.
+  * unless a task was retried), and `inc_07_assign` records `cc_rounds`
+  * (0 when the driver labelled the components). A freshly written stage
+  * and every old-run stage are read with their known schemas, so no read
+  * runs Spark's schema-inference job; a resumed stage infers its schema.
+  * The returned assignment covers every AFFECTED component (one
+  * containing at least one new page), with old members included so sinks
+  * can upsert merged clusters atomically.
   *
   * Known divergences from a full recompute, both logged when they fire:
   *
@@ -117,12 +125,19 @@ object IncrementalDedup {
       else {
         // job labels as in DedupPipeline.run (guide §1.5)
         spark.sparkContext.setJobDescription(s"incremental: $name")
-        try compute.write.mode(SaveMode.Overwrite).parquet(dir)
-        finally spark.sparkContext.setJobDescription(null)
+        val schema = try {
+          val out = compute
+          out.write.mode(SaveMode.Overwrite).parquet(dir)
+          out.schema
+        } finally spark.sparkContext.setJobDescription(null)
         StageStore.mark(spark, dir, marker, counters)
-        spark.read.parquet(dir)
+        // with the schema just written: no schema-inference job
+        spark.read.schema(schema).parquet(dir)
       }
     }
+    // an old-run stage, read with the schema DedupPipeline.run wrote it with
+    def oldStage[T <: Product : TypeTag](name: String): DataFrame =
+      spark.read.schema(Encoders.product[T].schema).parquet(s"$oldRunDir/$name")
 
     // ---- new-batch normalize + exact short-circuit ----
     val newNormDf = stage("inc_01_norm") { DedupPipeline.normalizeStage(spark, newPages).toDF() }
@@ -130,7 +145,7 @@ object IncrementalDedup {
     val newRepsDf = stage("inc_02_reps") { DedupPipeline.repMap(spark, newNorm) }
 
     // old norm: column-pruned (url, exact_hash) — never the text
-    val oldHashes = spark.read.parquet(s"$oldRunDir/01_norm").select($"url", $"exact_hash")
+    val oldHashes = oldStage[DocNorm]("01_norm").select($"url", $"exact_hash")
 
     // new rep -> lexicographically-min old url with the same exact hash
     val exactAttachDf = stage("inc_exact_attach") {
@@ -172,7 +187,7 @@ object IncrementalDedup {
         Map(RunMetrics.DroppedMegaBuckets -> droppedBuckets, CappedDocs -> cappedDocs.value)) {
       val nbAll = newBandDf.select($"band", $"bucket", $"url")
       val newKeys = nbAll.select($"band", $"bucket").distinct()
-      val oldBands = spark.read.parquet(s"$oldRunDir/04_bands")
+      val oldBands = oldStage[BandRow]("04_bands")
       val oldInNew = oldBands.join(newKeys, Seq("band", "bucket"), "left_semi")
         .select($"band", $"bucket", $"url")
       // mega-bucket guard on the COMBINED size (shared impl): a degenerate
@@ -202,23 +217,24 @@ object IncrementalDedup {
     // ---- verify: sigs/norm restricted to pair members (semi-joins) ----
     val verdictDf = stage("inc_06_verdicts") {
       val members = candDf.select($"a".as("url")).union(candDf.select($"b".as("url"))).distinct()
-      val oldSigs = spark.read.parquet(s"$oldRunDir/03_sig")
+      val oldSigs = oldStage[DocSig]("03_sig")
         .join(members, Seq("url"), "left_semi")
       val sigsU = newSigDf.unionByName(oldSigs).as[DocSig]
-      val oldNorm = spark.read.parquet(s"$oldRunDir/01_norm")
+      val oldNorm = oldStage[DocNorm]("01_norm")
         .join(members, Seq("url"), "left_semi")
       val normU = newNormDf.unionByName(oldNorm).as[DocNorm]
       DedupPipeline.verifyStage(spark, candDf.as[CandPair], sigsU, normU, conf).toDF()
     }
 
     // ---- touched-component clustering ----
-    stage("inc_07_assign") {
+    var ccRounds = 0L
+    stage("inc_07_assign", Map(RunMetrics.CcRounds -> ccRounds)) {
       val dupEdges = verdictDf.filter($"final_label" === "DUPLICATE").select($"a", $"b")
       val exactEdges = exactAttachDf.select($"old_url".as("a"), $"new_url".as("b"))
       val newStars = DedupPipeline.exactEdges(spark, newRepsDf)
       val edges = dupEdges.union(exactEdges).union(newStars)
 
-      val oldClusters = spark.read.parquet(s"$oldRunDir/07_clusters")
+      val oldClusters = oldStage[ClusterRow]("07_clusters")
       val endpoints = edges.select($"a".as("url")).union(edges.select($"b".as("url"))).distinct()
       // clusters adjacent to any new edge, then ALL their members as
       // rep->member stars (cluster_id is the component's min url)
@@ -228,9 +244,10 @@ object IncrementalDedup {
         .filter($"url" =!= $"cluster_id")
         .select($"cluster_id".as("a"), $"url".as("b"))
 
-      val comp = graft.cc.ConnectedComponents
+      val (labels, rounds) = graft.cc.ConnectedComponents
         .run(spark, edges.union(oldStars), reliable = conf.reliableCheckpoints)
-        .select($"url".as("m"), $"comp")
+      ccRounds = rounds
+      val comp = labels.select($"url".as("m"), $"comp")
       // attach new exact-group members through the new rep map; old urls
       // and new reps are already vertices
       val newMembers = newRepsDf.join(comp, $"rep" === $"m")

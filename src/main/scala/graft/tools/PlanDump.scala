@@ -57,7 +57,7 @@ object PlanDump {
     catch { case e: Throwable => System.err.println(s"[plandump] pipe_candidates failed: $e") }
     try dump("pipe_verify", DedupPipeline.verifyStage(spark, cands, sigs, norm, conf))
     catch { case e: Throwable => System.err.println(s"[plandump] pipe_verify failed: $e") }
-    try dump("pipe_cluster", DedupPipeline.clusterStage(spark, verdicts, reps, conf))
+    try dump("pipe_cluster", DedupPipeline.clusterStage(spark, verdicts, reps, conf)._1)
     catch { case e: Throwable => System.err.println(s"[plandump] pipe_cluster failed: $e") }
 
     spark.stop()

@@ -28,8 +28,15 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val conf = DedupConfig.balanced
     val oldDir = freshDir("full_old")
     graft.plans.DedupPipeline.run(spark, oldPages, oldDir, conf, resume = false)
-    val inc = graft.plans.IncrementalDedup.ingest(spark, oldDir, newPages, oldDir, conf)
-      .select($"url", $"cluster_id", $"cluster_size")
+    val incDf = graft.plans.IncrementalDedup.ingest(spark, oldDir, newPages, oldDir, conf)
+    // read back with the schema it was written with, which is the inferred one
+    assert(incDf.schema == spark.read.parquet(s"$oldDir/inc_07_assign").schema)
+    // the marker records that the driver labelled the components
+    val markers = new java.io.File(s"$oldDir/inc_07_assign").listFiles()
+      .filter(_.getName.startsWith("_graft_conf_"))
+    assert(markers.length == 1)
+    assert(java.nio.file.Files.readString(markers.head.toPath).linesIterator.contains("cc_rounds=0"))
+    val inc = incDf.select($"url", $"cluster_id", $"cluster_size")
       .as[(String, String, Long)].collect().toSet
 
     val fullDir = freshDir("full_all")

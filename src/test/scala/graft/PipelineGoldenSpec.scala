@@ -101,6 +101,9 @@ class PipelineGoldenSpec extends AnyFunSuite {
     assert(m.clustered_docs == clustersByUrl.size.toLong)
     assert(m.clusters == clustersByUrl.values.toSet.size.toLong)
     assert(m.dropped_domain_pairs == 0 && m.emb_budget_dropped == 0)
+    // the golden corpus's duplicate graph is labelled on the driver
+    assert(json.contains("\"cc_rounds\":0"))
+    assert(m.cc_rounds == 0)
     assert(m.stages.map(_.stage) ==
       Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters"))
   }
@@ -110,5 +113,34 @@ class PipelineGoldenSpec extends AnyFunSuite {
     val stages = lineage.select("stage").distinct().collect().map(_.getString(0)).sorted
     assert(stages.toSeq == Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters"))
     assert(lineage.filter(col("rows") < 0).count() == 0)
+  }
+
+  test("stage read-backs pin the schemas Spark infers") {
+    import graft.model.Schemas._
+    import org.apache.spark.sql.Encoders
+    import spark.implicits._
+    clustersByUrl // force the pipeline run
+    val dir = "/tmp/graft_test_pipeline"
+    val conf = DedupConfig.balanced
+    // a fresh stage is read back with the schema of the DataFrame it
+    // computed; schemas do not depend on the data, so empty inputs build them
+    val norm = DedupPipeline.normalizeStage(spark, spark.emptyDataset[Page])
+    val reps = DedupPipeline.repMap(spark, norm)
+    val sigs = DedupPipeline.signatureStage(spark, norm, conf)
+    val bands = DedupPipeline.bandingStage(spark, sigs, conf)
+    val cands = DedupPipeline.candidateStage(spark, bands, conf)._1
+    val verdicts = DedupPipeline.verifyStage(spark, cands, sigs, norm, conf)
+    val clusters = DedupPipeline.clusterStage(spark, verdicts, reps, conf)._1
+    val stages = Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters")
+    val fresh = stages.zip(Seq(norm.schema, reps.schema, sigs.schema, bands.schema, cands.schema,
+      verdicts.schema, clusters.schema))
+    // incremental ingest reads old-run stages with the case-class schemas
+    val oldRun = Seq("01_norm" -> Encoders.product[DocNorm].schema, "03_sig" -> Encoders.product[DocSig].schema,
+      "04_bands" -> Encoders.product[BandRow].schema, "07_clusters" -> Encoders.product[ClusterRow].schema)
+    val lineage = stages.map(s => s"lineage/$s" -> DedupPipeline.LineageSchema)
+    (fresh ++ oldRun ++ lineage).foreach { case (stage, schema) =>
+      val path = s"$dir/$stage"
+      assert(spark.read.schema(schema).parquet(path).schema == spark.read.parquet(path).schema, stage)
+    }
   }
 }
