@@ -4,7 +4,10 @@ package graft
   * (BASELINE.md §b; /root/reference/src/pipelines/near_duplicate.py:27-37,
   * /root/reference/src/cli_nd.py:575-621, src/ensemble/arbiter.py:45-46).
   * Defaults are the "balanced, calibration OFF" CLI configuration that the
-  * recall target is defined against.
+  * recall target is defined against. Labels follow the reference's arbiter
+  * (exact match, or `requiredVotes` learner votes); the `span*` fields
+  * only bound the shared-span pass, which reports `shared_span_len` and
+  * never changes a label.
   */
 final case class DedupConfig(
     // ---- shingling / signatures (parity surface) ----
@@ -68,17 +71,11 @@ final case class DedupConfig(
     // a sample estimates df/n with error ~1/sqrt(sample-df) — the 100 TB
     // path runs the df pass on a 1-in-100 sample.
     boilerplateSampleOneIn: Int = 1,
-    // Hot-set size cap (highest-df entries kept, truncation logged). The
-    // natural bound is avg-shingles-per-doc / frac — corpus-size-independent
-    // — so 1M is generous headroom, and the broadcast stays a few MB.
-    boilerplateMaxHotSet: Int = 1 << 20,
     // ---- shared-span pass, suffix automaton (north-rule addition) ----
-    spanPassEnabled: Boolean = true,
-    spanMinChars: Int = 200,         // span length reported as "long"
+    // Reports shared_span_len only; labels keep parity with the reference.
     spanCandidateMinJaccard: Double = 0.2, // only near-miss pairs get the span pass
     spanMaxPairsPerDoc: Int = 20,    // span budget per doc (deterministic cap)
     spanMaxTextChars: Int = 8000,    // per-doc char cap for the span pass
-    spanAsDuplicate: Boolean = false, // OFF = label parity with the reference
     // One-permutation-hashing signer (sig/Oph): replaces the k=64
     // permutation evaluations per shingle with ONE binned-min pass —
     // O(|shingles|) signing CPU instead of O(k·|shingles|), the dominant

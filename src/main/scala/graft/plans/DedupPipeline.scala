@@ -33,11 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupPipeline {
 
-  /** Canonical shingle-hash seed lives in sig/Shingles (shared with the
-    * boilerplate-df operator); kept here as an alias for existing callers.
-    */
-  final val ShingleHashSeed = graft.sig.Shingles.HashSeed
-
   /** The schema lineage files are written with (see writeLineage). */
   private[graft] lazy val LineageSchema = org.apache.spark.sql.Encoders.product[LineageRow].schema
 
@@ -275,8 +270,11 @@ object DedupPipeline {
   }
 
   /** Stage 5: verify + decide. Pure column math for the two signature
-    * learners; embedding + shared-span (suffix automaton) pass computed
-    * only for the pair subset whose outcome depends on them.
+    * learners. A pair is a duplicate when its texts match exactly or when
+    * `requiredVotes` learners vote for it; the embedding learner scores
+    * only the gray-zone pairs (one vote short), and the shared-span
+    * (suffix automaton) pass only reports `shared_span_len` for near-miss
+    * non-exact pairs short of consensus, never changing a label.
     *
     * Run counters go into the optional accumulators: the summed task time
     * of the embedding and span passes (`embNanos`, `spanNanos`, filled as
@@ -287,9 +285,11 @@ object DedupPipeline {
     * hashed-shingle array, simhash words and exact hash; every pair gets
     * the exact merge-count Jaccard and the SimHash Hamming distance, and
     * the scored relation is checkpointed narrow (`base`). The embedding
-    * and span subsets are scored from `base` in two independent passes and
-    * left-joined back; the span pass builds each anchor doc's suffix
-    * automaton once and streams all its partners' texts through it.
+    * and span passes each take their pairs from `base` with one predicate
+    * (ranked per doc by (jaccard desc, b) where a budget caps them), are
+    * scored independently and left-joined back; the span pass builds each
+    * anchor doc's suffix automaton once and streams all its partners'
+    * texts through it.
     * Alternative scorers (a partition-aware cogroup, a MinHash-estimate and
     * a b-bit prefilter band) and the suffix-array span pass were measured
     * against this dataflow and removed; the numbers are in
@@ -331,8 +331,8 @@ object DedupPipeline {
       .withColumn("hamming", hammingCol)
       .withColumn("sim_sim", greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble)))
 
-    // base is consumed by FOUR subtrees (span subset, emb subset, the
-    // final left join, and the window budget): checkpointing materializes
+    // base is consumed by three subtrees (span pairs, emb pairs and the
+    // final left join), four with the emb budget: checkpointing materializes
     // the pair join ONCE as this narrow fixed-width relation (~100 B/row).
     // Without it each consumer re-runs the array-carrying join — measured
     // as three separate 2.4 GB map stages at the 150k-page bench. Local
@@ -347,43 +347,39 @@ object DedupPipeline {
 
     val need = conf.requiredVotes
 
-    // Subset that still needs per-text work: embedding tiebreak and/or the
-    // shared-span pass.
-    val needEmb = !$"exact" && lit(conf.embedEnabled) && ($"votes_base" === (need - 1))
-    val wouldBeNonDup = !$"exact" && ($"votes_base" < need) &&
-      !(lit(conf.embedEnabled) && $"votes_base" === (need - 1))
-    val needSpan = lit(conf.spanPassEnabled) &&
-      ($"jaccard" >= conf.spanCandidateMinJaccard) && (needEmb || wouldBeNonDup)
-
-    // the SA pass is advisory (spanAsDuplicate off = parity) — budget it
-    // per doc so boilerplate-heavy corpora can't drown the verify stage
-    val spanW = org.apache.spark.sql.expressions.Window
+    // Each per-text learner takes its pairs straight from `base`, ranked
+    // per anchor doc `a` by (jaccard desc, b) — a total order within a doc,
+    // so a cap keeps a deterministic set.
+    val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy($"a").orderBy($"jaccard".desc, $"b")
-    val cumW = spanW.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val subPre = base.filter(needEmb || needSpan)
-      .withColumn("do_emb", needEmb).withColumn("do_span", needSpan)
-      .withColumn("span_rn", sum(when(needSpan, 1).otherwise(0)).over(cumW))
-      .withColumn("do_span", needSpan && $"span_rn" <= conf.spanMaxPairsPerDoc)
-    // Opt-in per-doc embedding budget (DedupConfig.embMaxPairsPerDoc): keep
-    // each anchor doc's `cap` highest-jaccard gray-zone pairs for the
-    // embedding pass; the rest resolve with vote_emb = false (emb_cos stays
-    // null). Same anchor/window convention as the span budget. Drops are
-    // counted (one extra job, opted-in runs only), logged and reported.
-    val subBudget = conf.embMaxPairsPerDoc match {
-      case None => subPre
+
+    // Embedding tiebreak: the gray-zone pairs, one vote short of consensus.
+    // Opt-in per-doc budget (DedupConfig.embMaxPairsPerDoc): keep each
+    // anchor doc's `cap` highest-jaccard gray-zone pairs; the rest resolve
+    // with vote_emb = false (emb_cos stays null). Drops are counted (one
+    // extra job, opted-in runs only), logged and reported.
+    val embGray = base.filter(!$"exact" && lit(conf.embedEnabled) && $"votes_base" === (need - 1))
+      .select($"a", $"b", $"jaccard")
+    val embPairsIn = (conf.embMaxPairsPerDoc match {
+      case None => embGray
       case Some(cap) =>
-        val d0 = subPre
-          .withColumn("emb_rn", sum(when($"do_emb", 1).otherwise(0)).over(cumW))
-        val dropped = d0.filter($"do_emb" && $"emb_rn" > cap).count()
-        val d = d0.withColumn("do_emb", $"do_emb" && $"emb_rn" <= cap)
+        val ranked = embGray.withColumn("rn", row_number().over(rankW))
+        val dropped = ranked.filter($"rn" > cap).count()
         if (dropped > 0)
           System.err.println(s"[graft.pipeline] emb budget dropped $dropped gray-zone pairs (> $cap per doc)")
         embBudgetDropped.foreach(_.add(dropped))
-        d
-    }
-    val subset = subBudget
-      .filter($"do_emb" || $"do_span")
-      .select($"a", $"b", $"do_emb", $"do_span")
+        ranked.filter($"rn" <= cap)
+    }).select($"a", $"b")
+
+    // Span pass: every non-exact pair short of consensus that is near
+    // enough (spanCandidateMinJaccard). It only reports shared_span_len, so
+    // it is budgeted per doc and boilerplate-heavy corpora can't drown the
+    // verify stage.
+    val spanPairsIn = base
+      .filter(!$"exact" && $"votes_base" < need && $"jaccard" >= conf.spanCandidateMinJaccard)
+      .withColumn("rn", row_number().over(rankW))
+      .filter($"rn" <= conf.spanMaxPairsPerDoc)
+      .select($"a", $"b")
 
     val dim = conf.embedDim
     val spanCap = conf.spanMaxTextChars
@@ -397,23 +393,17 @@ object DedupPipeline {
     // for the identical 1.48M pairs). Per-doc embed is partitioning-
     // independent and is the only shape that survives a real embedding
     // model at corpus scale.
-    val embPairsIn = subset.filter($"do_emb").select($"a", $"b")
-    // cheap emptiness probe over the checkpointed base: when no pair needs
-    // the embedding tiebreak (common under high-threshold configs), skip
-    // the eager docEmb materialization job entirely
-    val anyEmbPairs = !embPairsIn.isEmpty
     val embUrls = embPairsIn.select($"a".as("url"))
       .union(embPairsIn.select($"b".as("url"))).distinct()
-    val docEmbLazy = embUrls.join(norm.select($"url", $"norm_text"), "url")
+    // consumed by both pair sides — materialize so docs embed once
+    val docEmb = ckpt(spark, embUrls.join(norm.select($"url", $"norm_text"), "url")
       .as[(String, String)]
       .map { case (u, t) =>
         val t0 = System.nanoTime()
         val v = CheapEmbed.embed(t, dim)
         embNanos.foreach(_.add(System.nanoTime() - t0))
         (u, v)
-      }.toDF("url", "vec")
-    // consumed by both pair sides — materialize so docs embed once
-    val docEmb = if (anyEmbPairs) ckpt(spark, docEmbLazy, conf) else docEmbLazy
+      }.toDF("url", "vec"), conf)
     // ---- two INDEPENDENT per-pair passes, each ending narrow ----
     // Round 3 ran one conditional-join chain for both learners (vectors and
     // span texts attached in four consecutive SHUFFLE_HASH joins, one
@@ -460,7 +450,7 @@ object DedupPipeline {
     // automaton once per run and streams every a_text through it (LCS is
     // symmetric, so shared_span_len is unchanged). spanNanos sums build and
     // stream time.
-    val spanScored: DataFrame = subset.filter($"do_span").select($"a", $"b")
+    val spanScored: DataFrame = spanPairsIn
       .join(na.hint("SHUFFLE_HASH"), $"a" === $"na_url")
       .join(nb.hint("SHUFFLE_HASH"), $"b" === $"nb_url")
       .select($"a", $"b", $"a_text", $"b_text")
@@ -479,8 +469,6 @@ object DedupPipeline {
       }.toDF("sa_", "sb_", "shared_span_len")
 
     val thrEmb = conf.thrEmbedCosine
-    val spanDup = conf.spanAsDuplicate
-    val spanMin = conf.spanMinChars
 
     val joined = base
       .join(embScored, $"a" === $"ea_" && $"b" === $"eb_", "left")
@@ -495,16 +483,13 @@ object DedupPipeline {
           .otherwise($"votes_base" + $"vote_emb".cast("int")))
 
     val labeled = joined
-      .withColumn("is_dup",
-        $"exact" || ($"votes" >= need) ||
-          (lit(spanDup) && $"shared_span_len" >= spanMin))
+      .withColumn("is_dup", $"exact" || ($"votes" >= need))
       .withColumn("final_label", when($"is_dup", "DUPLICATE").otherwise("NON_DUPLICATE"))
       .withColumn("dup_kind",
         when($"exact", "EXACT").when($"is_dup", "NEAR").otherwise(lit(null).cast("string")))
       .withColumn("reason",
         when($"exact", "exact_content_match")
-          .when($"is_dup" && ($"votes" >= need), "duplicate_by_consensus")
-          .when($"is_dup", "shared_span")
+          .when($"is_dup", "duplicate_by_consensus")
           .otherwise("confident_non_duplicate"))
 
     labeled.select($"a", $"b",

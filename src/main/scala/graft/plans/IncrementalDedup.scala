@@ -147,20 +147,23 @@ object IncrementalDedup {
     // old norm: column-pruned (url, exact_hash) — never the text
     val oldHashes = oldStage[DocNorm]("01_norm").select($"url", $"exact_hash")
 
+    // the batch's exact-group reps, as DedupPipeline.run's repNorm
+    val newRepNorm = newNorm.toDF()
+      .join(newRepsDf.filter($"url" === $"rep").select($"rep"), $"url" === $"rep")
+      .drop("rep")
+
     // new rep -> lexicographically-min old url with the same exact hash
     val exactAttachDf = stage("inc_exact_attach") {
-      newNorm.toDF().join(newRepsDf.filter($"url" === $"rep").select($"rep"), $"url" === $"rep")
-        .select($"url".as("new_url"), $"exact_hash".as("neh"))
+      newRepNorm.select($"url".as("new_url"), $"exact_hash".as("neh"))
         .join(oldHashes, $"neh" === $"exact_hash")
         .groupBy($"new_url").agg(min($"url").as("old_url"))
     }
 
     // only UNMATCHED new reps get signed/banded — exact refetches never
     // reach the signature pass
-    val freshReps = newNorm.toDF()
-      .join(newRepsDf.filter($"url" === $"rep").select($"rep"), $"url" === $"rep")
+    val freshReps = newRepNorm
       .join(exactAttachDf.select($"new_url"), $"url" === $"new_url", "left_anti")
-      .drop("rep").as[DocNorm]
+      .as[DocNorm]
 
     val newSigDf = stage("inc_03_sig") {
       // Boilerplate suppression: sign the new batch with the OLD run's

@@ -43,6 +43,12 @@ object Boilerplate {
 
   private final val SampleSeed = 0xB01E7B01E7L // "boiler"-ish tag
 
+  /** Hot-set size cap (highest-df entries kept, truncation logged). The
+    * natural bound is avg-shingles-per-doc / frac — corpus-size-independent
+    * — so 1M is generous headroom, and the broadcast stays a few MB.
+    */
+  private final val MaxHotSet = 1 << 20
+
   /** Document frequency per shingle over the signature-stage shingle chain:
     * one row per distinct (doc, shingle) — arrays are per-doc distinct, so
     * count(*) per shingle = number of docs containing it.
@@ -69,7 +75,7 @@ object Boilerplate {
 
   /** The hot (boilerplate) shingle set: shingles with df > dfThreshold over
     * the (optionally url-hash-sampled) corpus. Returns a SORTED array for
-    * binary-search suppression. Truncation at boilerplateMaxHotSet keeps
+    * binary-search suppression. Truncation at MaxHotSet keeps
     * the highest-df entries and is logged — the mega-bucket logged-drop
     * convention.
     */
@@ -84,16 +90,15 @@ object Boilerplate {
             java.lang.Long.remainderUnsigned(XXH64.hashString(d.url, SampleSeed), oneIn.toLong) == 0L)
         val n = sampled.count()
         val thr = dfThreshold(frac, n, conf.boilerplateMinDf)
-        val cap = conf.boilerplateMaxHotSet
         val rows = shingleDf(spark, sampled, conf)
           .filter(col("df") > thr)
           .orderBy(col("df").desc, col("shingle").asc)
-          .limit(cap + 1)
+          .limit(MaxHotSet + 1)
           .collect()
-        if (rows.length > cap)
-          System.err.println(s"[graft.boilerplate] hot set truncated to $cap entries " +
-            s"(more shingles exceed df > $thr) — raise boilerplateMaxHotSet or the frac")
-        val hot = rows.iterator.take(cap).map(_.getLong(0)).toArray
+        if (rows.length > MaxHotSet)
+          System.err.println(s"[graft.boilerplate] hot set truncated to $MaxHotSet entries " +
+            s"(more shingles exceed df > $thr) — raise boilerplateMaxDfFrac")
+        val hot = rows.iterator.take(MaxHotSet).map(_.getLong(0)).toArray
         java.util.Arrays.sort(hot)
         System.err.println(s"[graft.boilerplate] ${hot.length} hot shingles " +
           s"(df > $thr over $n sampled docs, frac $frac)")

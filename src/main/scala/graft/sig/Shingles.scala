@@ -16,9 +16,7 @@ import graft.norm.TextNorm
   */
 object Shingles {
 
-  /** Seed for per-token hashing (historical alias:
-    * DedupPipeline.ShingleHashSeed).
-    */
+  /** Seed for per-token hashing (also used by CalibratedDedup.k2Shingles). */
   final val HashSeed = 0x5EED5EEDL
 
   /** Sorted distinct xxh64 hashes of the word k-shingles of `toks`. */

@@ -50,8 +50,9 @@ object Explain {
         "partition sort, streaming adjacent-dup skip + cap — r06).")
     section("verdicts", verdicts,
       "Candidates joined to signatures (shuffle on url); decision columns " +
-        "are plain expressions; the embedding/span subset is the " +
-        "left-joined mapPartitions branch.")
+        "are plain expressions; the embedding and span pairs, each picked " +
+        "from the checkpointed base by one predicate, are two left-joined " +
+        "mapPartitions branches (the span branch ranks its pairs in a Window).")
     section("oracle query q_exact_dup_groups",
       SparkEntry.queries("q_exact_dup_groups")(spark, sfDir),
       "Exact-dup grouping: sha256 over the normalized text, hash aggregate.")

@@ -77,9 +77,12 @@ class ResumeSpec extends AnyFunSuite {
       val reliable = DedupPipeline.run(spark, pagesDs, s"$dir/reliable", conf, resume = false)
         .collect().map(_.toString).sorted
       assert(reliable.toSeq == base.toSeq)
-      // the durable dir was actually used
-      val ck = new File(ckDir)
-      assert(Option(ck.listFiles()).exists(_.nonEmpty), "no RDD was checkpointed to the durable dir")
+      // the durable dir was actually used: setCheckpointDir creates its
+      // UUID subdirectory at once, so look for a checkpointed RDD in it
+      val written = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+      try assert(written.anyMatch(_.getFileName.toString.startsWith("rdd-")),
+        "no RDD was checkpointed to the durable dir")
+      finally written.close()
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
   }
 
