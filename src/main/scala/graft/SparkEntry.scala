@@ -3370,7 +3370,10 @@ object SparkEntry {
     // Hamming via xor/bit_count; emb tiebreak identity-read like
     // q_dedup_verdicts), exact attachment from the norm hashes, and the
     // touched-component merge via the same recursive-CTE min-label fixed
-    // point as the clusters oracle.
+    // point as the clusters oracle. `dup` and `sym` are MATERIALIZED (a
+    // planner hint, same result): inlined, the recursive step re-ran the
+    // whole candidate → verify chain under `sym` and DuckDB ran out of
+    // memory under a 4 GB cap.
     "q_ingest_near_dup" ->
       (s"WITH RECURSIVE nb AS (SELECT band, bucket, url FROM ${incPq(dir, "inc_04_bands")}), " +
         s"obk AS (SELECT o.band, o.bucket, o.url FROM ${bandsPq(dir)} o " +
@@ -3402,7 +3405,7 @@ object SparkEntry {
         s"(CASE WHEN sc.jaccard >= $oThrMin THEN 1 ELSE 0 END) + " +
         s"(CASE WHEN COALESCE(e.emb_cos >= $oThrEmb OR ((e.emb_cos + 1.0::DOUBLE) / 2.0::DOUBLE) >= $oThrEmb, false) THEN 1 ELSE 0 END) AS votes " +
         "FROM sc LEFT JOIN e ON e.a = sc.a AND e.b = sc.b), " +
-        s"dup AS (SELECT a, b FROM w WHERE exact OR votes >= $oVotes), " +
+        s"dup AS MATERIALIZED (SELECT a, b FROM w WHERE exact OR votes >= $oVotes), " +
         s"xatt AS (SELECT min(o.url) AS a, n.url AS b FROM ${incPq(dir, "inc_01_norm")} n " +
         s"JOIN ${incPq(dir, "inc_02_reps")} r ON r.url = n.url AND r.url = r.rep " +
         s"JOIN ${normPq(dir)} o ON o.exact_hash = n.exact_hash GROUP BY n.url), " +
@@ -3413,7 +3416,7 @@ object SparkEntry {
         s"ostars AS (SELECT c.cluster_id AS a, c.url AS b FROM ${clustersPq(dir)} c " +
         "JOIN touched t ON t.cluster_id = c.cluster_id WHERE c.url <> c.cluster_id), " +
         "alledges AS (SELECT a, b FROM edges UNION SELECT a, b FROM ostars), " +
-        "sym AS (SELECT a AS u, b AS v FROM alledges UNION SELECT b, a FROM alledges), " +
+        "sym AS MATERIALIZED (SELECT a AS u, b AS v FROM alledges UNION SELECT b, a FROM alledges), " +
         "reach(u, c) AS (SELECT u, u FROM (SELECT DISTINCT u FROM sym) " +
         "UNION SELECT s.v, r.c FROM reach r JOIN sym s ON s.u = r.u), " +
         "comp AS (SELECT u, min(c) AS comp FROM reach GROUP BY u), " +

@@ -30,8 +30,9 @@ import scala.jdk.CollectionConverters._
   *    min() or an equality join, min-of-ids maps to min-of-keys. Each
   *    round takes the min of a vertex's own label, its neighbours' labels
   *    and its label's label, so it converges in O(log n) rounds (2-3 for
-  *    near-clique duplicate clusters), and ends in a checkpoint that
-  *    truncates lineage (SURVEY.md §4 "must add explicitly").
+  *    near-clique duplicate clusters); each round runs one aggregate and
+  *    checkpoints it, which truncates lineage (SURVEY.md §4 "must add
+  *    explicitly").
   *
   * Both paths order keys as Spark's `min` and `<` do for the column type
   * (binary UTF-8 order for strings, which is NOT `String.compareTo`'s
@@ -193,11 +194,7 @@ object ConnectedComponents {
     // Not checkpointed: iteration 1 references the initial labels twice
     // (message join + self-message union). A per-Spark-stage listing of
     // a 9,425-edge graph (3,451 vertices) on this loop shows one job for
-    // this distinct, read by both references; but each round's aggregate
-    // runs twice (two jobs with the same shuffle counts every round),
-    // apparently because `compOf` reads it with `prev` pruned and so
-    // plans its own exchange. Left as is until a workload whose graph
-    // reaches this path can measure a rework.
+    // this distinct, read by both references.
     var labels = sym.select($"u".as("url")).distinct()
       .withColumn("comp", $"url")
 
@@ -213,25 +210,29 @@ object ConnectedComponents {
       val agg = msgs.groupBy($"u")
         .agg(min($"comp").as("comp"), max(when($"self", $"comp")).as("prev"))
 
-      // pointer jumping: comp := min(comp, label(comp))
-      val compOf = agg.select($"u".as("curl"), $"comp".as("ccomp"))
-      val step2 = agg.join(compOf, agg("comp") === compOf("curl"), "left")
-        .select(agg("u").as("url"),
-          least(agg("comp"), coalesce($"ccomp", agg("comp"))).as("comp"),
-          $"prev")
-
-      // Convergence is counted WHILE the checkpoint job materializes
-      // (accumulator incremented by the same tasks that write the blocks)
-      // instead of by a separate filter+count job per round — one job per
-      // iteration, not two. Only zero-vs-nonzero is read, so a rare
-      // task retry inflating the count cannot change the decision: a
-      // retried task re-observes the same deterministic rows.
+      // The aggregate is checkpointed, and convergence counted WHILE that
+      // job materializes it (accumulator incremented by the same tasks
+      // that write the blocks) instead of by a separate filter+count job.
+      // Only zero-vs-nonzero is read, so a rare task retry inflating the
+      // count cannot change the decision: a retried task re-observes the
+      // same deterministic rows. No min label changed iff the previous
+      // labels were already a fixed point (every component holds one
+      // label, which labels itself), and then the pointer jump below
+      // changes nothing either.
       val changedAcc = spark.sparkContext.longAccumulator(s"graft.cc.changed.$iter")
-      val counted = step2.mapPartitions { it =>
+      val minLabels = ck(agg.mapPartitions { it =>
           it.map { r => if (r.get(1) != r.get(2)) changedAcc.add(1L); r }
-        }(org.apache.spark.sql.Encoders.row(step2.schema))
-      val next = ck(counted)
-      labels = next.select($"url", $"comp")
+        }(org.apache.spark.sql.Encoders.row(agg.schema)))
+
+      // pointer jumping: comp := min(comp, label(comp)). It reads the
+      // aggregate on both sides of a self-join, hence from the checkpoint:
+      // planned twice over `agg`, the two reads prune different columns
+      // and the aggregate runs as two identical exchanges. Left lazy: the
+      // next round (or the caller, after the last) computes it.
+      val compOf = minLabels.select($"u".as("curl"), $"comp".as("ccomp"))
+      labels = minLabels.join(compOf, minLabels("comp") === compOf("curl"), "left")
+        .select(minLabels("u").as("url"),
+          least(minLabels("comp"), coalesce($"ccomp", minLabels("comp"))).as("comp"))
       converged = changedAcc.value == 0L
       iter += 1
     }

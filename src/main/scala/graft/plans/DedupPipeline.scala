@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape (SURVEY.md §3.1): table scan → normalize select → signature
   * mapPartitions → band explode/groupBy (shuffle 1) → bucket self-join
-  * (shuffle 2) → pair verify join back to signatures (shuffle 3) → decision
-  * select → CC iterations → writes. Stage boundaries are the checkpoint /
-  * resume points; per-stage, per-partition lineage is written alongside
-  * outputs (north rule).
+  * (shuffle 2) → pair verify join back to signatures (shuffle 3: the doc
+  * side is broadcast when its counted payload is at most
+  * [[VerifyBroadcastMaxBytes]], else hash-shuffled onto the pairs) →
+  * decision select → connected components → writes. Stage boundaries are
+  * the checkpoint / resume points; per-stage, per-partition lineage is
+  * written alongside outputs (north rule).
   *
   * Scale notes:
   *  - Signatures carry HASHED shingle sets (sorted distinct xxh64), not
@@ -269,6 +271,31 @@ object DedupPipeline {
     reps.filter($"url" =!= $"rep").select($"rep".as("a"), $"url".as("b"))
   }
 
+  /** Largest doc-side payload, as counted by [[verifyDocBytes]], for which
+    * [[verifyStage]] broadcasts its doc-keyed relations (signatures,
+    * embedding vectors, capped span texts) instead of hash-shuffling them
+    * onto the pairs. On the broadcast path the driver collects each of
+    * these relations and every executor keeps one copy of it, so this is
+    * the build side's memory budget on the driver and on each executor.
+    */
+  final val VerifyBroadcastMaxBytes: Long = 64L << 20
+
+  /** The doc-side payload verify ships, counted exactly: 8 bytes per
+    * hashed shingle of `sigs`, one per span-text char of `norm` (each text
+    * capped at `spanMaxTextChars`, as the span pass reads it) and
+    * `4 * embedDim` per `norm` row for the embedding vectors. Keys and row
+    * overhead are not counted. One aggregate over both relations (a
+    * narrow union), so the count costs one scan of each and two jobs.
+    */
+  private[plans] def verifyDocBytes(spark: SparkSession, sigs: Dataset[DocSig], norm: Dataset[DocNorm],
+                                    conf: DedupConfig): Long = {
+    import spark.implicits._
+    val perDoc = sigs.select(($"n_shingles".cast("long") * 8L).as("bytes"))
+      .union(norm.select((least(char_length($"norm_text"), lit(conf.spanMaxTextChars)).cast("long") +
+        4L * conf.embedDim).as("bytes")))
+    perDoc.agg(coalesce(sum($"bytes"), lit(0L))).first().getLong(0)
+  }
+
   /** Stage 5: verify + decide. Pure column math for the two signature
     * learners. A pair is a duplicate when its texts match exactly or when
     * `requiredVotes` learners vote for it; the embedding learner scores
@@ -281,15 +308,28 @@ object DedupPipeline {
     * the result is computed) and the gray-zone pairs the embedding budget
     * denied (`embBudgetDropped`, added on the calling thread).
     *
-    * Dataflow: one SHUFFLE_HASH pair join per side attaches each doc's
-    * hashed-shingle array, simhash words and exact hash; every pair gets
-    * the exact merge-count Jaccard and the SimHash Hamming distance, and
-    * the scored relation is checkpointed narrow (`base`). The embedding
-    * and span passes each take their pairs from `base` with one predicate
-    * (ranked per doc by (jaccard desc, b) where a budget caps them), are
-    * scored independently and left-joined back; the span pass builds each
-    * anchor doc's suffix automaton once and streams all its partners'
-    * texts through it.
+    * Dataflow: one pair join per side attaches each doc's hashed-shingle
+    * array, simhash words and exact hash; every pair gets the exact
+    * merge-count Jaccard and the SimHash Hamming distance, and the scored
+    * relation is checkpointed narrow (`base`). The embedding and span
+    * passes each take their pairs from `base` with one predicate (ranked
+    * per doc by (jaccard desc, b) where a budget caps them), are scored
+    * independently and left-joined back; the span pass builds each anchor
+    * doc's suffix automaton once and streams all its partners' texts
+    * through it.
+    *
+    * How the doc side reaches the pairs follows from an exact count taken
+    * first ([[verifyDocBytes]]). At most `broadcastMaxBytes` (default
+    * [[VerifyBroadcastMaxBytes]]; tests pass 0 to reach the shuffle path):
+    * every pair join broadcasts its doc side, so no exchange carries a
+    * shingle array, vector or text, and the span pairs are exchanged by
+    * `b` as keys only before their texts attach. Above it: every pair join
+    * is a SHUFFLE_HASH join, which ships one doc's payload per pair through
+    * the exchange that keys the pairs by the other doc. Verdicts are the
+    * same on both paths. Returns the verdicts and the stage's run counters
+    * `verify_broadcast` (1 on the broadcast path) and `verify_doc_bytes`
+    * (the counted payload).
+    *
     * Alternative scorers (a partition-aware cogroup, a MinHash-estimate and
     * a b-bit prefilter band) and the suffix-array span pass were measured
     * against this dataflow and removed; the numbers are in
@@ -299,8 +339,21 @@ object DedupPipeline {
                   norm: Dataset[DocNorm], conf: DedupConfig,
                   embNanos: Option[org.apache.spark.util.LongAccumulator] = None,
                   spanNanos: Option[org.apache.spark.util.LongAccumulator] = None,
-                  embBudgetDropped: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[Verdict] = {
+                  embBudgetDropped: Option[org.apache.spark.util.LongAccumulator] = None,
+                  broadcastMaxBytes: Long = VerifyBroadcastMaxBytes): (Dataset[Verdict], Map[String, Long]) = {
     import spark.implicits._
+
+    val docBytes = verifyDocBytes(spark, sigs, norm, conf)
+    val bc = docBytes <= broadcastMaxBytes
+    // The doc-keyed side of every pair join. SHUFFLE_HASH above the bound:
+    // sort-merge would SORT the array-carrying relations — at the
+    // 150k-page bench that is two sorts of ~2.4 GB of fat rows per join,
+    // the verify stage's dominant CPU once the span pass went linear.
+    // Hash-join streams the pairs side instead; the build side is the
+    // per-partition slice of the doc-keyed relation (~tens of MB). The
+    // hint also keeps AQE from turning a small doc side into a broadcast
+    // on its own, so the path is the one the count chose.
+    def docSide(df: DataFrame): DataFrame = if (bc) broadcast(df) else df.hint("SHUFFLE_HASH")
 
     // native Catalyst expression (codegen'd merge over ArrayData, no UDF
     // row conversion) — registered idempotently for sessions built in code;
@@ -318,14 +371,9 @@ object DedupPipeline {
       $"exact_hash".as("a_eh"), $"simhash_hi".as("a_hi"), $"simhash_lo".as("a_lo"))
     val sb = sigs.select($"url".as("b_url"), $"shingles".as("b_sh"),
       $"exact_hash".as("b_eh"), $"simhash_hi".as("b_hi"), $"simhash_lo".as("b_lo"))
-    // SHUFFLE_HASH: sort-merge would SORT the array-carrying relations —
-    // at the 150k-page bench that is two sorts of ~2.4 GB of fat rows per
-    // join, the verify stage's dominant CPU once the span pass went
-    // linear. Hash-join streams the pairs side instead; the build side is
-    // the per-partition slice of the doc-keyed sig relation (~tens of MB).
     val scored = cands.toDF()
-      .join(sa.hint("SHUFFLE_HASH"), $"a" === $"a_url")
-      .join(sb.hint("SHUFFLE_HASH"), $"b" === $"b_url")
+      .join(docSide(sa), $"a" === $"a_url")
+      .join(docSide(sb), $"b" === $"b_url")
       .withColumn("exact", $"a_eh" === $"b_eh")
       .withColumn("jaccard", jaccardCol("a_sh", "b_sh"))
       .withColumn("hamming", hammingCol)
@@ -413,17 +461,16 @@ object DedupPipeline {
     // 450k-page cluster bench those were the two dominant stages (16 + 19 GB
     // of shuffle, 58.8 GB total, measured 2026-08-17). Splitting the paths
     // means each pair ships only the payload its own learner reads, and
-    // each pass ends in a fixed-width (a, b, score) relation, so the fat
-    // bytes cross exactly ONE exchange (the second side join feeds the
-    // map in the same stage). Costs one extra narrow join onto `base` +
-    // a few scheduling-bound jobs — noise at any corpus size against
-    // tens of GB of exchange traffic. Results are bit-identical: same
+    // each pass ends in a fixed-width (a, b, score) relation, so on the
+    // shuffle path the fat bytes cross exactly ONE exchange (the second
+    // side join feeds the map in the same stage), and on the broadcast
+    // path none. Costs one extra narrow join onto `base` + a few
+    // scheduling-bound jobs — noise at any corpus size against tens of GB
+    // of exchange traffic. Results are bit-identical: same
     // per-pair math, same left-join-onto-base semantics.
     val embScored: DataFrame = embPairsIn
-      .join(docEmb.select($"url".as("ea"), $"vec".as("va")).hint("SHUFFLE_HASH"),
-        $"a" === $"ea")
-      .join(docEmb.select($"url".as("eb"), $"vec".as("vb")).hint("SHUFFLE_HASH"),
-        $"b" === $"eb")
+      .join(docSide(docEmb.select($"url".as("ea"), $"vec".as("va"))), $"a" === $"ea")
+      .join(docSide(docEmb.select($"url".as("eb"), $"vec".as("vb"))), $"b" === $"eb")
       .select($"a", $"b", $"va", $"vb")
       .as[(String, String, Array[Float], Array[Float])]
       .mapPartitions { it =>
@@ -435,24 +482,26 @@ object DedupPipeline {
         }
       }.toDF("ea_", "eb_", "emb_cos")
     // Texts are capped to spanMaxTextChars code points IN the projection,
-    // so the pair shuffle never carries bytes the suffix automaton won't
-    // read (a capped text can hold up to 2 x spanCap UTF-16 units; the
-    // automaton workspace grows to fit). No explicit repartition: the
-    // automaton pass is byte-normal (~0.2ms/pair) and AQE's size-based
-    // partitioning spreads it fine.
+    // so neither the pair shuffle nor the broadcast carries bytes the
+    // suffix automaton won't read (a capped text can hold up to 2 x spanCap
+    // UTF-16 units; the automaton workspace grows to fit). The automaton
+    // pass is byte-normal (~0.2ms/pair) and AQE's size-based partitioning
+    // spreads it fine.
     val na = norm.select($"url".as("na_url"),
       substring($"norm_text", 1, spanCap).as("a_text"))
     val nb = norm.select($"url".as("nb_url"),
       substring($"norm_text", 1, spanCap).as("b_text"))
-    // One automaton per anchor doc `b`: the second side join leaves the
-    // pairs hash-partitioned by b, so sorting within partitions (no
-    // exchange) makes each b's pairs one run; the pass builds b's
-    // automaton once per run and streams every a_text through it (LCS is
-    // symmetric, so shared_span_len is unchanged). spanNanos sums build and
-    // stream time.
-    val spanScored: DataFrame = spanPairsIn
-      .join(na.hint("SHUFFLE_HASH"), $"a" === $"na_url")
-      .join(nb.hint("SHUFFLE_HASH"), $"b" === $"nb_url")
+    // One automaton per anchor doc `b`: the pairs reach the pass
+    // hash-partitioned by b — on the shuffle path by the second side
+    // join's exchange, on the broadcast path by an exchange of the key-only
+    // pairs before the (partitioning-preserving) broadcast joins — so
+    // sorting within partitions (no exchange) makes each b's pairs one run;
+    // the pass builds b's automaton once per run and streams every a_text
+    // through it (LCS is symmetric, so shared_span_len is unchanged).
+    // spanNanos sums build and stream time.
+    val spanScored: DataFrame = (if (bc) spanPairsIn.repartition($"b") else spanPairsIn)
+      .join(docSide(na), $"a" === $"na_url")
+      .join(docSide(nb), $"b" === $"nb_url")
       .select($"a", $"b", $"a_text", $"b_text")
       .sortWithinPartitions($"b")
       .as[(String, String, String, String)]
@@ -492,7 +541,7 @@ object DedupPipeline {
           .when($"is_dup", "duplicate_by_consensus")
           .otherwise("confident_non_duplicate"))
 
-    labeled.select($"a", $"b",
+    val verdicts = labeled.select($"a", $"b",
         when($"a" <= $"b", concat($"a", lit("||"), $"b"))
           .otherwise(concat($"b", lit("||"), $"a")).as("pair_key"),
         $"exact", $"jaccard", $"hamming", $"sim_sim", $"emb_cos",
@@ -501,6 +550,7 @@ object DedupPipeline {
         ($"exact" || $"vote_emb").as("vote_emb"),
         $"votes", $"shared_span_len", $"final_label", $"dup_kind", $"reason")
       .as[Verdict]
+    (verdicts, Map(RunMetrics.VerifyBroadcast -> (if (bc) 1L else 0L), RunMetrics.VerifyDocBytes -> docBytes))
   }
 
   /** Stage 6: clustering. CC runs ONLY over the rep-level near-duplicate
@@ -560,8 +610,9 @@ object DedupPipeline {
     * its output and config marker — the north rule's checkpoint-based
     * resume. Run counters live in the marker of the stage that measured
     * them (`dropped_mega_buckets` and `dropped_domain_pairs` with 05_cand;
-    * `emb_budget_dropped`, `emb_wall_ms` and `span_wall_ms` with
-    * 06_verdicts; `cc_rounds` with 07_clusters), so the [[RunMetrics]]
+    * `emb_budget_dropped`, `emb_wall_ms`, `span_wall_ms`,
+    * `verify_broadcast` and `verify_doc_bytes` with 06_verdicts;
+    * `cc_rounds` with 07_clusters), so the [[RunMetrics]]
     * snapshot reports the same values on a resumed run as on the cold run
     * that computed them. A freshly written stage is read back with the
     * schema it was written with, which skips Spark's one-task
@@ -657,15 +708,20 @@ object DedupPipeline {
     val budgetAcc = spark.sparkContext.longAccumulator("graft.verify.embBudgetDropped")
     // summed task time of the per-text learners — the evidence behind the
     // span/embedding budgets
-    val verdictDf = stage("06_verdicts", Map(RunMetrics.EmbBudgetDropped -> budgetAcc.value,
+    var verifyCounters = Map.empty[String, Long]
+    val verdictDf = stage("06_verdicts", verifyCounters ++ Map(RunMetrics.EmbBudgetDropped -> budgetAcc.value,
         RunMetrics.EmbWallMs -> embAcc.value / 1000000L, RunMetrics.SpanWallMs -> spanAcc.value / 1000000L)) {
-      // repNorm, not the full norm: the span-text relations ship whole
-      // through their SHUFFLE_HASH exchanges, so restricting them to
-      // exact-group reps (187k of 450k rows at the scaling corpus) cuts
-      // those exchanges ~2.4x — measured +10% on 06_verdicts when this
-      // was briefly swapped to the full norm in r06. Results identical
-      // either way (pair urls are always reps).
-      verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc)).toDF()
+      // repNorm, not the full norm: the span texts and vectors are counted
+      // against the broadcast bound, and above it ship whole through their
+      // SHUFFLE_HASH exchanges, so restricting them to exact-group reps
+      // (187k of 450k rows at the scaling corpus) cuts both ~2.4x — the
+      // shuffle path measured +10% on 06_verdicts when this was briefly
+      // swapped to the full norm in r06. Results identical either way
+      // (pair urls are always reps).
+      val (verdicts, counters) =
+        verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc))
+      verifyCounters = counters
+      verdicts.toDF()
     }
 
     var clusterCounters = Map.empty[String, Long]
@@ -764,6 +820,7 @@ object DedupPipeline {
       emb_pairs = long("emb_pairs"), span_pairs = long("span_pairs"),
       emb_budget_dropped = counter(RunMetrics.EmbBudgetDropped),
       emb_wall_ms = counter(RunMetrics.EmbWallMs), span_wall_ms = counter(RunMetrics.SpanWallMs),
+      verify_broadcast = counter(RunMetrics.VerifyBroadcast), verify_doc_bytes = counter(RunMetrics.VerifyDocBytes),
       cc_rounds = counter(RunMetrics.CcRounds), stages = stages)
     val out = f.create(new Path(runDir, "metrics.json"), true)
     try out.write(RunMetrics.toJson(record).getBytes("UTF-8"))

@@ -48,10 +48,14 @@ import scala.reflect.runtime.universe.TypeTag
   * persisted stages. As in the pipeline, run counters live in the
   * markers: `inc_05_cand` records `dropped_mega_buckets` and
   * `capped_docs` (docs that lost a partner to the per-doc cap; both exact
-  * unless a task was retried), and `inc_07_assign` records `cc_rounds`
-  * (0 when the driver labelled the components). A freshly written stage
-  * and every old-run stage are read with their known schemas, so no read
-  * runs Spark's schema-inference job; a resumed stage infers its schema.
+  * unless a task was retried), `inc_06_verdicts` records
+  * `verify_broadcast` and `verify_doc_bytes` (which verify path ran, and
+  * the counted payload it was chosen from; see
+  * [[DedupPipeline.verifyStage]]), and `inc_07_assign` records
+  * `cc_rounds` (0 when the driver labelled the components). A freshly
+  * written stage and every old-run stage are read with their known
+  * schemas, so no read runs Spark's schema-inference job; a resumed stage
+  * infers its schema.
   * The returned assignment covers every AFFECTED component (one
   * containing at least one new page), with old members included so sinks
   * can upsert merged clusters atomically.
@@ -110,9 +114,14 @@ object IncrementalDedup {
     f"${r.getLong(0)}%x_$x%016x"
   }
 
+  /** @param verifyBroadcastMaxBytes verify's broadcast bound
+    *        ([[DedupPipeline.VerifyBroadcastMaxBytes]]); tests pass 0 to
+    *        reach the shuffle path.
+    */
   def ingest(spark: SparkSession, oldRunDir: String, newPages: Dataset[Page],
              incDir: String, conf: DedupConfig = DedupConfig.balanced,
-             resume: Boolean = true): DataFrame = {
+             resume: Boolean = true,
+             verifyBroadcastMaxBytes: Long = DedupPipeline.VerifyBroadcastMaxBytes): DataFrame = {
     import spark.implicits._
     val ch = conf.configHash
     requireCompatible(spark, oldRunDir, ch)
@@ -218,7 +227,8 @@ object IncrementalDedup {
         "was retried) — candidate sets for those docs may differ from a full recompute")
 
     // ---- verify: sigs/norm restricted to pair members (semi-joins) ----
-    val verdictDf = stage("inc_06_verdicts") {
+    var verifyCounters = Map.empty[String, Long]
+    val verdictDf = stage("inc_06_verdicts", verifyCounters) {
       val members = candDf.select($"a".as("url")).union(candDf.select($"b".as("url"))).distinct()
       val oldSigs = oldStage[DocSig]("03_sig")
         .join(members, Seq("url"), "left_semi")
@@ -226,7 +236,10 @@ object IncrementalDedup {
       val oldNorm = oldStage[DocNorm]("01_norm")
         .join(members, Seq("url"), "left_semi")
       val normU = newNormDf.unionByName(oldNorm).as[DocNorm]
-      DedupPipeline.verifyStage(spark, candDf.as[CandPair], sigsU, normU, conf).toDF()
+      val (verdicts, counters) = DedupPipeline.verifyStage(spark, candDf.as[CandPair], sigsU, normU, conf,
+        broadcastMaxBytes = verifyBroadcastMaxBytes)
+      verifyCounters = counters
+      verdicts.toDF()
     }
 
     // ---- touched-component clustering ----

@@ -10,10 +10,10 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   *
   * The run summary counts are recomputed from the persisted verdicts and
   * clusters on every run. The run counters (`dropped_*`,
-  * `emb_budget_dropped`, `*_wall_ms`, `cc_rounds`) are read back from the
-  * markers of the stage that measured them (05_cand, 06_verdicts and
-  * 07_clusters, see [[StageStore]]), so a resumed run reports exactly what
-  * its cold run recorded. A run with no candidate pairs reports 0 counts and a
+  * `emb_budget_dropped`, `*_wall_ms`, `verify_*`, `cc_rounds`) are read
+  * back from the markers of the stage that measured them (05_cand,
+  * 06_verdicts and 07_clusters, see [[StageStore]]), so a resumed run
+  * reports exactly what its cold run recorded. A run with no candidate pairs reports 0 counts and a
   * `consensus_rate` of 0.0.
   *
   * @param dropped_mega_buckets LSH buckets dropped by the mega-bucket guard;
@@ -25,6 +25,11 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   *                             tiebreak by `embMaxPairsPerDoc` (0 when unset)
   * @param emb_wall_ms          summed task time of the embedding tiebreak
   * @param span_wall_ms         summed task time of the span pass
+  * @param verify_broadcast     1 when verify broadcast its doc-side
+  *                             relations, 0 when it hash-shuffled them
+  * @param verify_doc_bytes     the doc-side payload verify counted and
+  *                             compared with
+  *                             `DedupPipeline.VerifyBroadcastMaxBytes`
   * @param cc_rounds            rounds of the distributed connected-components
   *                             loop; 0 when the duplicate graph was small
   *                             enough to label on the driver
@@ -49,6 +54,8 @@ final case class RunMetrics(
     emb_budget_dropped: Long,
     emb_wall_ms: Long,
     span_wall_ms: Long,
+    verify_broadcast: Long,
+    verify_doc_bytes: Long,
     cc_rounds: Long,
     stages: Seq[RunMetrics.StageLine])
 
@@ -63,6 +70,8 @@ object RunMetrics {
   private[plans] final val EmbBudgetDropped = "emb_budget_dropped"
   private[plans] final val EmbWallMs = "emb_wall_ms"
   private[plans] final val SpanWallMs = "span_wall_ms"
+  private[plans] final val VerifyBroadcast = "verify_broadcast"
+  private[plans] final val VerifyDocBytes = "verify_doc_bytes"
   private[plans] final val CcRounds = "cc_rounds"
 
   private lazy val mapper = JsonMapper.builder().addModule(DefaultScalaModule).build()

@@ -34,7 +34,7 @@ object Explain {
     val bands = spark.read.parquet(s"$rd/04_bands").as[graft.model.Schemas.BandRow]
     val (cands, _) = DedupPipeline.candidateStage(spark, bands, conf)
     val persistedCands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
-    val verdicts = DedupPipeline.verifyStage(spark, persistedCands, sigs, norm, conf)
+    val (verdicts, _) = DedupPipeline.verifyStage(spark, persistedCands, sigs, norm, conf)
 
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.Explain)\n\n")
@@ -49,7 +49,8 @@ object Explain {
         "dedup + per-doc cap fused into one exchange (repartition by doc, " +
         "partition sort, streaming adjacent-dup skip + cap — r06).")
     section("verdicts", verdicts,
-      "Candidates joined to signatures (shuffle on url); decision columns " +
+      "Candidates joined to signatures (doc side broadcast when its counted " +
+        "payload is at most VerifyBroadcastMaxBytes, else shuffled on url); decision columns " +
         "are plain expressions; the embedding and span pairs, each picked " +
         "from the checkpointed base by one predicate, are two left-joined " +
         "mapPartitions branches (the span branch ranks its pairs in a Window).")

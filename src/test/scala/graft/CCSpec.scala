@@ -3,6 +3,10 @@ package graft
 import graft.cc.ConnectedComponents
 import graft.pages.PagesSource.DetRng
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -12,7 +16,7 @@ import scala.reflect.runtime.universe.TypeTag
   * runs through both paths: the driver union-find (the default for these
   * small graphs) and the distributed loop (driverMaxEdges = 0).
   */
-class CCSpec extends AnyFunSuite {
+class CCSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = TestSpark.spark
 
@@ -170,5 +174,31 @@ class CCSpec extends AnyFunSuite {
         "no RDD was checkpointed to the durable dir")
       finally written.close()
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
+  }
+
+  test("the loop exchanges one min-label aggregate per round") {
+    import spark.implicits._
+    val rng = new DetRng(85)
+    val rand = (0 until 3000).map(_ => (f"v${rng.nextInt(2000)}%04d", f"v${rng.nextInt(2000)}%04d"))
+      .filter(e => e._1 != e._2)
+    val path = (0 until 100).map(i => (f"p${i}%03d", f"p${i + 1}%03d"))
+    val edges = rand ++ path
+    val ((labels, rounds), plans) = TestUtil.executedPlans(spark) {
+      val (df, n) = ConnectedComponents.run(spark, edges.toDF("a", "b"), driverMaxEdges = 0)
+      (df.as[(String, String)].collect().toMap, n)
+    }
+    assert(labels == unionFind(edges))
+    assert(rounds > 1)
+    // every shuffle that ran over a partial min aggregate (a reused
+    // exchange does not run again, and is not a ShuffleExchangeExec)
+    val minAggShuffles = plans.flatMap(p => collect(p) {
+      case e: ShuffleExchangeExec if e.child.exists {
+        case a: BaseAggregateExec => a.aggregateExpressions.exists(x =>
+          x.mode == Partial && x.aggregateFunction.isInstanceOf[Min])
+        case _ => false
+      } => e
+    })
+    assert(minAggShuffles.size == rounds,
+      s"${minAggShuffles.size} min-label aggregate shuffles ran in $rounds rounds")
   }
 }

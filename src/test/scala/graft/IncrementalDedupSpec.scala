@@ -186,6 +186,35 @@ class IncrementalDedupSpec extends AnyFunSuite {
       "capped_docs" -> partners.count(_._2.size > conf.maxCandidatesPerDoc).toLong))
   }
 
+  test("ingest's verdicts are the same on both verify paths") {
+    // members m1-m4 are exact variants of a family's base m0 (they attach
+    // by hash and are never signed); the batch holds m5 (near) and m6
+    // (unrelated), so it is signed and verified against the base
+    val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 12, membersPerFamily = 7)
+    def m(u: String) = u.split("/m")(1).toInt
+    val conf = DedupConfig.balanced
+    val oldDir = freshDir("paths_old")
+    graft.plans.DedupPipeline.run(spark, pages.filter(p => m(p.url) < 5), oldDir, conf, resume = false)
+    val batch = pages.filter(p => m(p.url) >= 5)
+    // inc_06_verdicts' rows and its marker's counters
+    def ingestOn(tag: String, bound: Long): (Set[String], Map[String, Long]) = {
+      val dir = freshDir(tag)
+      graft.plans.IncrementalDedup.ingest(spark, oldDir, batch, dir, conf, verifyBroadcastMaxBytes = bound)
+      val stage = s"$dir/inc_06_verdicts"
+      val markers = new java.io.File(stage).list().filter(_.startsWith("_graft_conf_"))
+      assert(markers.length == 1, markers.toSeq)
+      (spark.read.parquet(stage).collect().map(_.toString).toSet,
+        graft.plans.StageStore.counters(spark, stage, markers.head.stripPrefix("_graft_conf_")))
+    }
+    val (broadcast, bc) = ingestOn("paths_broadcast", graft.plans.DedupPipeline.VerifyBroadcastMaxBytes)
+    val (shuffled, sh) = ingestOn("paths_shuffle", 0L)
+    assert(bc("verify_broadcast") == 1L && sh("verify_broadcast") == 0L)
+    assert(bc("verify_doc_bytes") > 0L && bc("verify_doc_bytes") == sh("verify_doc_bytes"))
+    assert(broadcast.nonEmpty)
+    assert(broadcast == shuffled,
+      s"only-broadcast=${(broadcast -- shuffled).take(3)}, only-shuffle=${(shuffled -- broadcast).take(3)}")
+  }
+
   test("config-mismatched old run is refused") {
     import spark.implicits._
     val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 4, membersPerFamily = 2)

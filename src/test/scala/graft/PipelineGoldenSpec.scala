@@ -104,6 +104,9 @@ class PipelineGoldenSpec extends AnyFunSuite {
     // the golden corpus's duplicate graph is labelled on the driver
     assert(json.contains("\"cc_rounds\":0"))
     assert(m.cc_rounds == 0)
+    // the golden corpus's doc side fits the verify broadcast bound
+    assert(m.verify_broadcast == 1)
+    assert(m.verify_doc_bytes > 0 && m.verify_doc_bytes <= DedupPipeline.VerifyBroadcastMaxBytes)
     assert(m.stages.map(_.stage) ==
       Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters"))
   }
@@ -129,7 +132,7 @@ class PipelineGoldenSpec extends AnyFunSuite {
     val sigs = DedupPipeline.signatureStage(spark, norm, conf)
     val bands = DedupPipeline.bandingStage(spark, sigs, conf)
     val cands = DedupPipeline.candidateStage(spark, bands, conf)._1
-    val verdicts = DedupPipeline.verifyStage(spark, cands, sigs, norm, conf)
+    val verdicts = DedupPipeline.verifyStage(spark, cands, sigs, norm, conf)._1
     val clusters = DedupPipeline.clusterStage(spark, verdicts, reps, conf)._1
     val stages = Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters")
     val fresh = stages.zip(Seq(norm.schema, reps.schema, sigs.schema, bands.schema, cands.schema,

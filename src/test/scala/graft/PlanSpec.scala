@@ -1,6 +1,12 @@
 package graft
 
+import graft.plans.DedupPipeline
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +16,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * into a hot path — a filter stops pushing, an LSH self-join degrades to
   * a nested-loop cross product — these fail before any benchmark notices.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** verifyStage over the sf0.001 pipeline run's persisted stages, on the
+    * path `broadcastMaxBytes` selects (0 reaches the shuffle path).
+    */
+  private def persistedVerify(broadcastMaxBytes: Long): (DataFrame, Map[String, Long]) = {
+    import spark.implicits._
+    val rd = SparkEntry.pipelineRunDir(spark, sf)
+    val norm = spark.read.parquet(s"$rd/01_norm").as[graft.model.Schemas.DocNorm]
+    val sigs = spark.read.parquet(s"$rd/03_sig").as[graft.model.Schemas.DocSig]
+    val cands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
+    val (verdicts, counters) = DedupPipeline.verifyStage(spark, cands, sigs, norm, DedupConfig.balanced,
+      broadcastMaxBytes = broadcastMaxBytes)
+    (verdicts.toDF(), counters)
+  }
 
   test("projected+filtered parquet scan: filter pushed down, schema pruned") {
     val df = spark.read.parquet(s"$sf/documents.parquet")
@@ -86,22 +106,19 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("verify stage: no cartesian; shingle arrays join at most once per side") {
-    import spark.implicits._
-    val rd = SparkEntry.pipelineRunDir(spark, sf)
-    val norm = spark.read.parquet(s"$rd/01_norm").as[graft.model.Schemas.DocNorm]
-    val sigs = spark.read.parquet(s"$rd/03_sig").as[graft.model.Schemas.DocSig]
-    val cands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
-    val verdicts = graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, norm, DedupConfig.balanced)
-    val p = planOf(verdicts.toDF())
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"verify stage planned a cross product:\n$p")
+    Seq(DedupPipeline.VerifyBroadcastMaxBytes, 0L).foreach { bound =>
+      val p = planOf(persistedVerify(bound)._1)
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"verify stage planned a cross product:\n$p")
+    }
   }
 
   test("verify stage: verdicts are invariant to the shuffle-partition count") {
+    // on both paths: broadcast (the default bound) and shuffle (bound 0)
     import spark.implicits._
     val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 7)
     val conf = DedupConfig.balanced
-    def verdicts(): Set[String] = {
+    def verdicts(broadcastMaxBytes: Long): Set[String] = {
       val norm = graft.plans.DedupPipeline.normalizeStage(spark, pages)
       val reps = graft.plans.DedupPipeline.repMap(spark, norm)
       val repNorm = norm.join(reps.filter($"url" === $"rep").select($"rep"),
@@ -109,15 +126,20 @@ class PlanSpec extends AnyFunSuite {
       val sigs = graft.plans.DedupPipeline.signatureStage(spark, repNorm, conf)
       val bands = graft.plans.DedupPipeline.bandingStage(spark, sigs, conf)
       val (cands, _) = graft.plans.DedupPipeline.candidateStage(spark, bands, conf)
-      graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, repNorm, conf)
-        .collect().map(_.toString).toSet
+      val (out, counters) = graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, repNorm, conf,
+        broadcastMaxBytes = broadcastMaxBytes)
+      assert(counters("verify_broadcast") == (if (broadcastMaxBytes > 0) 1L else 0L))
+      out.collect().map(_.toString).toSet
     }
+    val broadcast = DedupPipeline.VerifyBroadcastMaxBytes
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val atDefault = verdicts()
+    val atDefault = verdicts(broadcast)
     assert(atDefault.nonEmpty)
+    assert(verdicts(0L) == atDefault, "the shuffle path's verdicts differ from the broadcast path's")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "3")
-      assert(verdicts() == atDefault)
+      assert(verdicts(broadcast) == atDefault)
+      assert(verdicts(0L) == atDefault)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -206,13 +228,11 @@ class PlanSpec extends AnyFunSuite {
     // cluster bench). After the split, a shuffle exchange may carry doc
     // vectors OR span-capped texts, never both — if a future refactor
     // re-chains the passes, this fails before any benchmark notices.
-    import spark.implicits._
-    val rd = SparkEntry.pipelineRunDir(spark, sf)
-    val norm = spark.read.parquet(s"$rd/01_norm").as[graft.model.Schemas.DocNorm]
-    val sigs = spark.read.parquet(s"$rd/03_sig").as[graft.model.Schemas.DocSig]
-    val cands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
-    val verdicts = graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, norm, DedupConfig.balanced)
-    val p = planOf(verdicts.toDF())
+    // Checked on the shuffle path (bound 0); the broadcast path ships
+    // neither through an exchange (next tests).
+    val (verdicts, counters) = persistedVerify(0L)
+    assert(counters("verify_broadcast") == 0L)
+    val p = planOf(verdicts)
     // formatted explain: each operator is a "(n) OpName" section whose
     // Input/Output lines list the attributes crossing that operator
     val sections = p.split("\\(\\d+\\) ").toSeq
@@ -236,12 +256,10 @@ class PlanSpec extends AnyFunSuite {
     // sort rides on the b-partitioning the second span-text join already
     // has, so the span texts still cross exactly three exchanges (the a
     // texts, the pairs re-keyed by b with their a texts, the b texts).
-    import spark.implicits._
-    val rd = SparkEntry.pipelineRunDir(spark, sf)
-    val norm = spark.read.parquet(s"$rd/01_norm").as[graft.model.Schemas.DocNorm]
-    val sigs = spark.read.parquet(s"$rd/03_sig").as[graft.model.Schemas.DocSig]
-    val cands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
-    val p = planOf(graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, norm, DedupConfig.balanced).toDF())
+    // Checked on the shuffle path (bound 0).
+    val (verdicts, counters) = persistedVerify(0L)
+    assert(counters("verify_broadcast") == 0L)
+    val p = planOf(verdicts)
     val sections = p.split("\\(\\d+\\) ").toSeq
     def io(s: String) = s.linesIterator
       .filter(l => l.trim.startsWith("Input") || l.trim.startsWith("Output")).mkString(" ")
@@ -251,6 +269,56 @@ class PlanSpec extends AnyFunSuite {
     assert(sections.exists(s => s.startsWith("Sort") && io(s).contains("a_text#") &&
       s.linesIterator.exists(l => l.trim.startsWith("Arguments") && l.contains("b#"))),
       s"no anchor sort in the span pass:\n$p")
+  }
+
+  test("verify stage, broadcast path: no exchange carries shingle arrays, vectors or span texts") {
+    // every action verify runs (the size count, the base and docEmb
+    // checkpoints) as executed, plus the verdicts' own plan before
+    // execution, so no pass escapes for lack of pairs
+    val ((verdicts, counters), ran) =
+      TestUtil.executedPlans(spark)(persistedVerify(DedupPipeline.VerifyBroadcastMaxBytes))
+    assert(counters("verify_broadcast") == 1L)
+    assert(counters("verify_doc_bytes") > 0L)
+    val plans = ran :+ verdicts.queryExecution.executedPlan
+    // the doc-side payload columns of the verify joins
+    val payload = Set("a_sh", "b_sh", "va", "vb", "vec", "a_text", "b_text")
+    def payloadOf(p: SparkPlan): Set[String] = p.output.map(_.name).filter(payload).toSet
+    val fat = plans.flatMap(p => collect(p) { case e: ShuffleExchangeExec if payloadOf(e).nonEmpty => e })
+    assert(fat.isEmpty, s"exchanges carry doc payloads on the broadcast path:\n${fat.mkString("\n")}")
+    // sanity: each payload does reach the pairs, through a broadcast
+    val broadcast = plans.flatMap(p => collect(p) { case e: BroadcastExchangeExec => payloadOf(e) }).flatten.toSet
+    Seq(Set("a_sh", "b_sh"), Set("va", "vb"), Set("a_text", "b_text")).foreach(cols =>
+      assert((broadcast & cols).nonEmpty, s"no broadcast carries $cols: $broadcast"))
+  }
+
+  test("verify stage, broadcast path: the span pass exchanges key-only pairs by b before its anchor sort") {
+    // one automaton per anchor doc b needs each b's pairs in one partition:
+    // on the broadcast path the only exchange between the anchor sort and
+    // the span pairs is a hash exchange on b carrying (a, b)
+    val (verdicts, counters) = persistedVerify(DedupPipeline.VerifyBroadcastMaxBytes)
+    assert(counters("verify_broadcast") == 1L)
+    val plan = verdicts.queryExecution.executedPlan // not yet executed: the initial adaptive plan
+    def named(p: SparkPlan, n: String) = p.output.exists(_.name == n)
+    def keys(es: Seq[Expression]) = es.collect { case a: Attribute => a.name }
+    val anchorSorts = collect(plan) {
+      case s: SortExec if named(s, "a_text") && keys(s.sortOrder.map(_.child)) == Seq("b") => s
+    }
+    assert(anchorSorts.size == 1, s"expected one anchor sort:\n$plan")
+    // the first shuffle exchanges met walking down from the sort, not
+    // descending into broadcasts
+    def firstShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Seq(e)
+      case _: BroadcastExchangeExec | _: BroadcastQueryStageExec => Nil
+      case _ => allChildren(p).flatMap(firstShuffles)
+    }
+    val below = firstShuffles(anchorSorts.head)
+    assert(below.size == 1, s"expected one exchange below the anchor sort:\n${anchorSorts.head}")
+    val ex = below.head
+    assert(ex.output.map(_.name).toSet == Set("a", "b"), s"the span pairs' exchange carries ${ex.output}")
+    assert(ex.outputPartitioning match {
+      case h: HashPartitioning => keys(h.expressions) == Seq("b")
+      case _ => false
+    }, s"the span pairs' exchange is not keyed by b: ${ex.outputPartitioning}")
   }
 
   test("sketch and chunking plans: CMS is one partial-agg shuffle; chunking is map-only") {

@@ -135,6 +135,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(coldA.dropped_domain_pairs > 0, s"run A dropped no domain pair: $coldA")
     assert(coldA.emb_budget_dropped > 0, s"run A's embedding budget dropped nothing: $coldA")
     assert(coldA.emb_wall_ms > 0, s"run A timed no embedding work: $coldA")
+    assert(coldA.verify_broadcast == 1 && coldA.verify_doc_bytes > 0, s"run A's verify path: $coldA")
 
     // B: a cold run without caps that embeds nothing must report 0, not
     // A's counters
