@@ -127,24 +127,6 @@ object ConnectedComponents {
   private def encodedLoop(spark: SparkSession, edges: DataFrame, maxIter: Int,
                           ck: DataFrame => DataFrame): (DataFrame, Int) = {
     import spark.implicits._
-    // Partition count scales with the edge relation (~64k edges per task)
-    // but never drops below ~parallelism/4: a small dup-edge set on a big
-    // cluster must still spread its join rounds (collapsing to 2 tasks at
-    // 32 cores serialized CC and cost ~0.1 scaling efficiency — round-2
-    // measurement), while a billion-edge corpus fans out to 4x the cluster
-    // parallelism. Sized from Catalyst's sizeInBytes estimate instead of a
-    // count() job (r06): only the PARTITION COUNT depends on it, results
-    // are partitioning-invariant (CCSpec asserts this), and the /64
-    // divisor deliberately over-estimates edge count so error lands on the
-    // more-partitions side; both the floor and the 4x-parallelism cap
-    // still bound it.
-    val estEdges = (edges.queryExecution.optimizedPlan.stats.sizeInBytes / 64)
-      .min(BigInt(Long.MaxValue)).toLong
-    val par = spark.sparkContext.defaultParallelism
-    val floor = math.max(2, math.min(par / 4, 16))
-    val byEdges = math.min(estEdges / 65536L + 1L, Int.MaxValue.toLong).toInt // no Int wrap at 1e14+ edges
-    val ccParts = math.max(floor, math.min(math.max(par * 4, 8), byEdges))
-
     val sym0 = edges.select($"a".as("u"), $"b".as("v"))
       .union(edges.select($"b".as("u"), $"a".as("v")))
 
@@ -161,7 +143,24 @@ object ConnectedComponents {
       .join(ids.withColumnRenamed("vurl", "u2").withColumnRenamed("vid", "uid"), $"u" === $"u2")
       .join(ids.withColumnRenamed("vurl", "v2").withColumnRenamed("vid", "vid2"), $"v" === $"v2")
       .select($"uid".as("u"), $"vid2".as("v"))
-    val (labelIds, rounds) = minLabelLoop(spark, symIds, ccParts, ck, maxIter)
+    // Partitioned on v — the key every iteration's message join probes —
+    // into the session's shuffle partition count, the count that join
+    // plans its exchanges with, and cached: the static edge relation is
+    // exchanged ONCE here instead of once per round (guide §2.4 "two
+    // operations keyed the same way share one exchange"; CCSpec pins one
+    // sym exchange per run). Cached, not checkpointed: under AQE a
+    // checkpoint reports UnknownPartitioning, so EnsureRequirements would
+    // re-exchange it every round, while the cached relation keeps its hash
+    // partitioning. Its lineage does not grow with the rounds; it is
+    // unpersisted once the loop ends (its labels no longer read it).
+    // No distinct() pass (r06): min-label propagation is unaffected by
+    // duplicate edges (the per-round min aggregation absorbs duplicate
+    // messages), and every in-repo caller feeds already-unique pair
+    // relations — a caller with a HEAVY multigraph should dedup first,
+    // since duplicates ride the per-round join instead of being dropped
+    // once here.
+    val sym = symIds.repartition(spark.sessionState.conf.numShufflePartitions, $"v").persist()
+    val (labelIds, rounds) = try minLabelLoop(spark, sym, ck, maxIter) finally sym.unpersist()
     // decode: vertex id -> key, component id -> key (min id = min key)
     val labels = labelIds
       .join(ids.withColumnRenamed("vid", "uid"), $"url" === $"uid")
@@ -173,24 +172,12 @@ object ConnectedComponents {
   }
 
   /** The min-label + pointer-jumping fixed point over a symmetric edge
-    * relation (u, v) of long ids. Returns (url, comp) and the rounds run.
+    * relation (u, v) of long ids, hash-partitioned on v into the session's
+    * shuffle partition count. Returns (url, comp) and the rounds run.
     */
-  private def minLabelLoop(spark: SparkSession, sym0: DataFrame, ccParts: Int,
+  private def minLabelLoop(spark: SparkSession, sym: DataFrame,
                            ck: DataFrame => DataFrame, maxIter: Int): (DataFrame, Int) = {
     import spark.implicits._
-    // Partitioned on v — the key every iteration's message join probes —
-    // so the static edge relation is exchanged ONCE here instead of once
-    // per round (guide §2.4 "two operations keyed the same way share one
-    // exchange"; localCheckpoint preserves the hash partitioning, so
-    // EnsureRequirements only exchanges the labels side each round).
-    // No distinct() pass (r06): min-label propagation is unaffected by
-    // duplicate edges (the per-round min aggregation absorbs duplicate
-    // messages), and every in-repo caller feeds already-unique pair
-    // relations — a caller with a HEAVY multigraph should dedup first,
-    // since duplicates ride the per-round join instead of being dropped
-    // once here.
-    val sym = sym0.repartition(ccParts, $"v").transform(ck)
-
     // Not checkpointed: iteration 1 references the initial labels twice
     // (message join + self-message union). A per-Spark-stage listing of
     // a 9,425-edge graph (3,451 vertices) on this loop shows one job for

@@ -23,16 +23,14 @@ object BucketGuard {
 
   /** @param ok      surviving (band, bucket) keys — join back onto the
     *                caller's row relation(s)
-    * @param dropped number of buckets dropped for exceeding the cap; exact
-    *                unless a guard task was retried (a retry can only
-    *                over-count it)
+    * @param dropped number of buckets dropped for exceeding the cap
     */
   final case class Guarded(ok: DataFrame, dropped: Long)
 
   /** @param rows DataFrame with at least (band, bucket) columns — one row
     *             per bucket MEMBER (union multiple relations first for a
     *             combined-size guard).
-    * @param tag  short path id for the log line and accumulator name
+    * @param tag  short path id for the log line
     *             (`pipeline`, `inc`, `tokenLsh`, `ann`, ...).
     */
   def okBuckets(spark: SparkSession, rows: DataFrame, maxBucketSize: Long,
@@ -42,22 +40,10 @@ object BucketGuard {
     // for the count + filter consumers AND its blocks are reclaimed by the
     // ContextCleaner when the plan goes out of scope — persist would leak
     // one cached relation per guarded LSH pass for the session lifetime.
-    // The dropped-bucket count is accumulated by the SAME tasks that
-    // materialize the checkpoint (was a separate filter+count job over the
-    // checkpointed sizes — one job per guarded LSH pass saved). A retried
-    // task re-observes identical rows and adds them again, so a retry can
-    // only over-count; the planted-bucket specs see the exact value on the
-    // happy path.
-    val acc = spark.sparkContext.longAccumulator(s"graft.$tag.droppedBucketsAcc")
-    val sized = rows.groupBy($"band", $"bucket").count()
-    // Row-encoded pass-through (callers use int, long AND string bucket
-    // types — winnow fingerprints are strings): schema and values are
-    // preserved exactly, only the side-effect count is added.
-    val sizes = sized.mapPartitions { it =>
-        it.map { r => if (r.getLong(2) > maxBucketSize) acc.add(1L); r }
-      }(org.apache.spark.sql.Encoders.row(sized.schema))
-      .localCheckpoint()
-    val dropped = acc.value
+    // The drop count reads the checkpointed sizes, so it is exact; an RDD
+    // count is one job, where a Dataset count adds an exchange.
+    val sizes = rows.groupBy($"band", $"bucket").count().localCheckpoint()
+    val dropped = sizes.filter($"count" > maxBucketSize).rdd.count()
     if (dropped > 0)
       System.err.println(
         s"[graft.$tag] dropped $dropped mega-buckets (> $maxBucketSize members)")

@@ -35,9 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupPipeline {
 
-  /** The schema lineage files are written with (see writeLineage). */
-  private[graft] lazy val LineageSchema = org.apache.spark.sql.Encoders.product[LineageRow].schema
-
   /** Materialize a reused relation: localCheckpoint by default (blocks on
     * executors, reclaimed by the ContextCleaner), reliable checkpoint()
     * when conf.reliableCheckpoints — see the DedupConfig field Scaladoc.
@@ -581,92 +578,27 @@ object DedupPipeline {
 
   // ---------- orchestration with persist / resume / lineage ----------
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The pipeline's persisted stages, in run order. */
+  private val Stages = Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters")
 
-  /** One lineage row per non-empty partition of the stage output; a stage
-    * with no rows gets one 0-row line (partition 0), so every stage shows
-    * up in metrics.json. Lines are counted as they are written, so only an
-    * empty stage pays a second (tiny) job.
-    */
-  private def writeLineage(spark: SparkSession, runDir: String, runId: String, stage: String,
-                           confHash: String, df: DataFrame, wallMs: Long): Unit = {
-    import spark.implicits._
-    val lines = spark.sparkContext.longAccumulator
-    val countLine = udf { (rows: Long) => lines.add(1L); rows }.asNondeterministic()
-    // columns in LineageRow order, so the snapshot reads them back with
-    // LineageSchema
-    def write(perPartition: DataFrame): Unit = perPartition
-      .select(lit(runId).as("run_id"), lit(stage).as("stage"), $"partition_id", $"rows",
-        lit(wallMs).as("wall_ms"), lit(confHash).as("config_hash"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$runDir/lineage/$stage")
-    write(df.groupBy(spark_partition_id().as("partition_id")).agg(count(lit(1)).as("rows"))
-      .select($"partition_id", countLine($"rows").as("rows")))
-    if (lines.value == 0L) write(Seq((0, 0L)).toDF("partition_id", "rows"))
-  }
-
-  /** Run (or resume) the full pipeline. Every stage persists to
-    * `$runDir/<stage>` and is skipped on re-run when [[StageStore]] finds
-    * its output and config marker — the north rule's checkpoint-based
-    * resume. Run counters live in the marker of the stage that measured
-    * them (`dropped_mega_buckets` and `dropped_domain_pairs` with 05_cand;
-    * `emb_budget_dropped`, `emb_wall_ms`, `span_wall_ms`,
+  /** Run (or resume) the full pipeline. Every stage goes through
+    * [[StageStore.Run]]: it persists to `$runDir/<stage>` with its lineage
+    * under `$runDir/lineage/<stage>`, and is skipped on re-run when
+    * [[StageStore]] finds its output and config marker — the north rule's
+    * checkpoint-based resume. Run counters live in the marker of the stage
+    * that measured them (`dropped_mega_buckets` and `dropped_domain_pairs`
+    * with 05_cand; `emb_budget_dropped`, `emb_wall_ms`, `span_wall_ms`,
     * `verify_broadcast` and `verify_doc_bytes` with 06_verdicts;
-    * `cc_rounds` with 07_clusters), so the [[RunMetrics]]
-    * snapshot reports the same values on a resumed run as on the cold run
-    * that computed them. A freshly written stage is read back with the
-    * schema it was written with, which skips Spark's one-task
-    * schema-inference job; a resumed stage is read back inferring it.
-    *
-    * Lineage snapshots are written CONCURRENTLY with the next stage's
-    * compute (guide §2.6 "overlap independent jobs"): the lineage job for
-    * stage N depends only on N's persisted parquet, so it back-fills
-    * executor slots freed by N+1's stragglers instead of serializing ~7
-    * extra jobs onto the critical path. A stage is marked done only after
-    * its lineage is written, so a failed lineage write leaves the stage
-    * unmarked and a rerun recomputes it. All lineage futures are awaited
-    * (and their failures rethrown) before the metrics snapshot reads the
-    * lineage dirs, so the post-run state is identical to the sequential
-    * orchestration.
+    * `cc_rounds` with 07_clusters; `wall_ms` with every stage), so the
+    * [[RunMetrics]] snapshot reports the same values on a resumed run as on
+    * the cold run that computed them.
     */
   def run(spark: SparkSession, pages: Dataset[Page], runDir: String,
           conf: DedupConfig = DedupConfig.balanced,
           resume: Boolean = true): DataFrame = {
     import spark.implicits._
     val ch = conf.configHash
-    val runId = s"run_$ch"
-    val pendingLineage = scala.collection.mutable.ArrayBuffer.empty[java.util.concurrent.Future[_]]
-
-    // `counters` is evaluated after the stage output is written
-    def stage(name: String, counters: => Map[String, Long] = Map.empty)(compute: => DataFrame): DataFrame = {
-      val dir = s"$runDir/$name"
-      if (resume && StageStore.done(spark, dir, ch)) {
-        spark.read.parquet(dir)
-      } else {
-        // label every job this stage triggers (incl. eager checkpoints
-        // inside the stage computation) — guide §1.5
-        spark.sparkContext.setJobDescription(s"pipeline: $name")
-        val t0 = System.nanoTime()
-        val written = try {
-          val out = compute
-          out.write.mode(SaveMode.Overwrite).parquet(dir)
-          // with the schema just written: no schema-inference job
-          spark.read.schema(out.schema).parquet(dir)
-        } finally spark.sparkContext.setJobDescription(null)
-        val ms = (System.nanoTime() - t0) / 1000000
-        // evaluated here, on the driver thread, as the stage finishes; the
-        // marker that records them is written once the lineage is
-        val stageCounters = counters
-        pendingLineage += lineagePool.submit(new Runnable {
-          def run(): Unit = {
-            spark.sparkContext.setJobDescription(s"pipeline: lineage $name")
-            writeLineage(spark, runDir, runId, name, ch, written, ms)
-            StageStore.mark(spark, dir, ch, stageCounters)
-          }
-        })
-        written
-      }
-    }
+    val stage = new StageStore.Run(spark, runDir, ch, "pipeline", resume)
 
     val normDf = stage("01_norm") { normalizeStage(spark, pages).toDF() }
     val norm = normDf.as[DocNorm]
@@ -695,22 +627,18 @@ object DedupPipeline {
     val bandDf = stage("04_bands") { bandingStage(spark, sigs, conf).toDF() }
     val bands = bandDf.as[BandRow]
 
-    var candCounters = Map.empty[String, Long]
-    val candDf = stage("05_cand", candCounters) {
+    val candDf = stage.counted("05_cand") {
       val (pairs, counters) = candidateStage(spark, bands, conf)
-      candCounters = counters
-      pairs.toDF()
+      (pairs.toDF(), () => counters)
     }
     val cands = candDf.as[CandPair]
 
-    val embAcc = spark.sparkContext.longAccumulator("graft.verify.embNanos")
-    val spanAcc = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
-    val budgetAcc = spark.sparkContext.longAccumulator("graft.verify.embBudgetDropped")
-    // summed task time of the per-text learners — the evidence behind the
-    // span/embedding budgets
-    var verifyCounters = Map.empty[String, Long]
-    val verdictDf = stage("06_verdicts", verifyCounters ++ Map(RunMetrics.EmbBudgetDropped -> budgetAcc.value,
-        RunMetrics.EmbWallMs -> embAcc.value / 1000000L, RunMetrics.SpanWallMs -> spanAcc.value / 1000000L)) {
+    val verdictDf = stage.counted("06_verdicts") {
+      // summed task time of the per-text learners — the evidence behind the
+      // span/embedding budgets
+      val embAcc = spark.sparkContext.longAccumulator("graft.verify.embNanos")
+      val spanAcc = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
+      val budgetAcc = spark.sparkContext.longAccumulator("graft.verify.embBudgetDropped")
       // repNorm, not the full norm: the span texts and vectors are counted
       // against the broadcast bound, and above it ship whole through their
       // SHUFFLE_HASH exchanges, so restricting them to exact-group reps
@@ -720,88 +648,55 @@ object DedupPipeline {
       // (pair urls are always reps).
       val (verdicts, counters) =
         verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc))
-      verifyCounters = counters
-      verdicts.toDF()
+      (verdicts.toDF(), () => counters ++ Map(RunMetrics.EmbBudgetDropped -> budgetAcc.value,
+        RunMetrics.EmbWallMs -> embAcc.value / 1000000L, RunMetrics.SpanWallMs -> spanAcc.value / 1000000L))
     }
 
-    var clusterCounters = Map.empty[String, Long]
-    val clusters = stage("07_clusters", clusterCounters) {
+    val clusters = stage.counted("07_clusters") {
       val (df, counters) = clusterStage(spark, verdictDf.as[Verdict], repsDf, conf)
-      clusterCounters = counters
-      df
+      (df, () => counters)
     }
 
-    // lineage (and with it every stage marker) must be fully on disk — and
-    // any write failure surfaced, as the sequential orchestration would
-    // have — before the snapshot reads it
-    pendingLineage.foreach(_.get())
-    writeMetricsSnapshot(spark, runDir, runId, ch, verdictDf, clusters)
+    writeMetricsSnapshot(spark, runDir, ch, verdictDf, clusters)
     clusters
   }
 
-  /** Two daemon threads for the off-critical-path lineage writes: one per
-    * in-flight stage is plenty, and daemon threads never block JVM exit.
-    */
-  private lazy val lineagePool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(2, new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-lineage-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      }
-    })
-
-  /** M11 — writes the run's [[RunMetrics]] record as `metrics.json`,
-    * assembled from the persisted stage outputs and markers.
+  /** M11 — writes the run's [[RunMetrics]] record as `metrics.json`. Stage
+    * lines, run counters and `clustered_docs` come from the stage markers
+    * and the committed files' footers; only the verdict summary and the
+    * cluster count run Spark jobs.
     *
-    * Observability only: never allowed to fail the run — every read is
-    * existence-checked and the whole write is exception-fenced (a missing
-    * lineage dir on a fully-resumed run must not take down the pipeline).
+    * Observability only: never allowed to fail the run — the whole write
+    * is exception-fenced.
     */
-  private def writeMetricsSnapshot(spark: SparkSession, runDir: String, runId: String,
-                                   confHash: String, verdicts: DataFrame, clusters: DataFrame): Unit =
-    try writeMetricsSnapshotUnsafe(spark, runDir, runId, confHash, verdicts, clusters)
+  private def writeMetricsSnapshot(spark: SparkSession, runDir: String, confHash: String,
+                                   verdicts: DataFrame, clusters: DataFrame): Unit =
+    try writeMetricsSnapshotUnsafe(spark, runDir, confHash, verdicts, clusters)
     catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] metrics snapshot skipped for $runDir: ${e.getMessage}")
     }
 
-  private def writeMetricsSnapshotUnsafe(spark: SparkSession, runDir: String, runId: String,
-                                         confHash: String, verdicts: DataFrame, clusters: DataFrame): Unit = {
+  private def writeMetricsSnapshotUnsafe(spark: SparkSession, runDir: String, confHash: String,
+                                         verdicts: DataFrame, clusters: DataFrame): Unit = {
     import spark.implicits._
     // ONE aggregation job over the verdicts for both the run summary and
     // the per-text learner pair counts
-    val summaryF = lineagePool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.Row] {
-      def call(): org.apache.spark.sql.Row = {
-        spark.sparkContext.setJobDescription("pipeline: metrics summary")
-        graft.metrics.Metrics.runSummary(verdicts,
-          sum(when($"emb_cos".isNotNull, 1).otherwise(0)).as("emb_pairs"),
-          sum(when($"shared_span_len" > 0, 1).otherwise(0)).as("span_pairs")).first()
-      }
-    })
-    // cluster counts run concurrently with the verdict aggregation (two
-    // independent tiny jobs — guide §2.6)
-    val cRow = clusters.agg(
-      countDistinct($"cluster_id").as("n"), count(lit(1)).as("docs")).first()
-    val lineageDir = new Path(s"$runDir/lineage")
-    val f = fs(spark, runDir)
-    // explicit per-stage paths, not a "lineage/*" glob: Spark's source
-    // resolution stats the literal glob string first and logs a spurious
-    // WARN + FileNotFoundException stack (harmless but it pollutes the
-    // bench log the driver parses)
-    val stageDirs =
-      if (!f.exists(lineageDir)) Array.empty[String]
-      else f.listStatus(lineageDir).filter(_.isDirectory).map(_.getPath.toString)
-    val stages =
-      if (stageDirs.isEmpty) Seq.empty
-      else spark.read.schema(LineageSchema).parquet(stageDirs.toIndexedSeq: _*)
-        .groupBy($"stage").agg(max($"wall_ms").as("wall_ms"), sum($"rows").as("rows"))
-        .orderBy($"stage").as[RunMetrics.StageLine].collect().toSeq
-    val counters = Seq("05_cand", "06_verdicts", "07_clusters")
-      .map(stage => StageStore.counters(spark, s"$runDir/$stage", confHash)).reduce(_ ++ _)
+    spark.sparkContext.setJobDescription("pipeline: metrics summary")
+    val summary = try graft.metrics.Metrics.runSummary(verdicts,
+      sum(when($"emb_cos".isNotNull, 1).otherwise(0)).as("emb_pairs"),
+      sum(when($"shared_span_len" > 0, 1).otherwise(0)).as("span_pairs")).first()
+    finally spark.sparkContext.setJobDescription(null)
+    // a cluster's id is its least member url, so exactly one of its rows
+    // carries its own id: one scan, no exchange
+    val nClusters = clusters.filter($"url" === $"cluster_id").rdd.count()
+    val markers = Stages.map(s => s -> StageStore.counters(spark, s"$runDir/$s", confHash))
+    val stages = markers.map { case (s, c) =>
+      RunMetrics.StageLine(s, c.getOrElse(StageStore.WallMs, 0L),
+        StageStore.partRows(spark, s"$runDir/$s").map(_._2).sum)
+    }
+    val counters = markers.map(_._2).reduce(_ ++ _)
     def counter(name: String) = counters.getOrElse(name, 0L)
-    val summary = summaryF.get()
     // sums over a run with no candidate pairs are null: report 0
     def long(field: String) = {
       val i = summary.fieldIndex(field)
@@ -809,12 +704,12 @@ object DedupPipeline {
     }
     val rate = summary.fieldIndex("consensus_rate")
     val record = RunMetrics(
-      run_id = runId, config_hash = confHash,
+      run_id = s"run_$confHash", config_hash = confHash,
       total_pairs = long("total_pairs"), duplicates = long("duplicates"),
       non_duplicates = long("non_duplicates"), uncertain = long("uncertain"),
       exact_dups = long("exact_dups"), near_dups = long("near_dups"),
       consensus_rate = if (summary.isNullAt(rate)) 0.0 else summary.getDouble(rate),
-      clusters = cRow.getLong(0), clustered_docs = cRow.getLong(1),
+      clusters = nClusters, clustered_docs = stages.last.rows, // 07_clusters
       dropped_mega_buckets = counter(RunMetrics.DroppedMegaBuckets),
       dropped_domain_pairs = counter(RunMetrics.DroppedDomainPairs),
       emb_pairs = long("emb_pairs"), span_pairs = long("span_pairs"),
@@ -822,7 +717,8 @@ object DedupPipeline {
       emb_wall_ms = counter(RunMetrics.EmbWallMs), span_wall_ms = counter(RunMetrics.SpanWallMs),
       verify_broadcast = counter(RunMetrics.VerifyBroadcast), verify_doc_bytes = counter(RunMetrics.VerifyDocBytes),
       cc_rounds = counter(RunMetrics.CcRounds), stages = stages)
-    val out = f.create(new Path(runDir, "metrics.json"), true)
+    val out = new Path(runDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new Path(runDir, "metrics.json"), true)
     try out.write(RunMetrics.toJson(record).getBytes("UTF-8"))
     finally out.close()
   }

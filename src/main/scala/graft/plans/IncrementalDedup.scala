@@ -40,17 +40,19 @@ import scala.reflect.runtime.universe.TypeTag
   * under the exact shingle/signature config that produced the old run, so
   * ingest refuses an old run dir whose config marker differs.
   *
-  * Outputs persist under `incDir` with the same [[StageStore]] markers as
-  * DedupPipeline.run — except that the incremental markers also carry a
-  * BATCH token (row count + order-independent xxh64 content hash of the
-  * new batch), so re-running against the same incDir with a DIFFERENT
-  * batch recomputes instead of silently returning the previous batch's
-  * persisted stages. As in the pipeline, run counters live in the
-  * markers: `inc_05_cand` records `dropped_mega_buckets` and
-  * `capped_docs` (docs that lost a partner to the per-doc cap; both exact
-  * unless a task was retried), `inc_06_verdicts` records
-  * `verify_broadcast` and `verify_doc_bytes` (which verify path ran, and
-  * the counted payload it was chosen from; see
+  * Outputs persist under `incDir` through the same stage runner as
+  * DedupPipeline.run ([[StageStore.Run]]): markers, lineage under
+  * `incDir/lineage/<stage>` and `wall_ms` in every marker — except that
+  * the incremental tag also carries a BATCH token (row count +
+  * order-independent xxh64 content hash of the new batch), so re-running
+  * against the same incDir with a DIFFERENT batch recomputes instead of
+  * silently returning the previous batch's persisted stages; the lineage
+  * rows carry that tag as their `config_hash`. As in the pipeline, run
+  * counters live in the markers: `inc_05_cand` records
+  * `dropped_mega_buckets` and `capped_docs` (docs that lost a partner to
+  * the per-doc cap; exact unless a task was retried), `inc_06_verdicts`
+  * records `verify_broadcast` and `verify_doc_bytes` (which verify path
+  * ran, and the counted payload it was chosen from; see
   * [[DedupPipeline.verifyStage]]), and `inc_07_assign` records
   * `cc_rounds` (0 when the driver labelled the components). A freshly
   * written stage and every old-run stage are read with their known
@@ -127,23 +129,7 @@ object IncrementalDedup {
     requireCompatible(spark, oldRunDir, ch)
     val marker = s"${ch}_b${batchToken(spark, newPages)}"
 
-    // `counters` is evaluated after the stage output is written
-    def stage(name: String, counters: => Map[String, Long] = Map.empty)(compute: => DataFrame): DataFrame = {
-      val dir = s"$incDir/$name"
-      if (resume && StageStore.done(spark, dir, marker)) spark.read.parquet(dir)
-      else {
-        // job labels as in DedupPipeline.run (guide §1.5)
-        spark.sparkContext.setJobDescription(s"incremental: $name")
-        val schema = try {
-          val out = compute
-          out.write.mode(SaveMode.Overwrite).parquet(dir)
-          out.schema
-        } finally spark.sparkContext.setJobDescription(null)
-        StageStore.mark(spark, dir, marker, counters)
-        // with the schema just written: no schema-inference job
-        spark.read.schema(schema).parquet(dir)
-      }
-    }
+    val stage = new StageStore.Run(spark, incDir, marker, "incremental", resume)
     // an old-run stage, read with the schema DedupPipeline.run wrote it with
     def oldStage[T <: Product : TypeTag](name: String): DataFrame =
       spark.read.schema(Encoders.product[T].schema).parquet(s"$oldRunDir/$name")
@@ -194,9 +180,7 @@ object IncrementalDedup {
 
     // ---- candidates: probe only buckets containing a new row ----
     val cappedDocs = spark.sparkContext.longAccumulator("graft.ingest.cappedDocs")
-    var droppedBuckets = 0L
-    val candDf = stage("inc_05_cand",
-        Map(RunMetrics.DroppedMegaBuckets -> droppedBuckets, CappedDocs -> cappedDocs.value)) {
+    val candDf = stage.counted("inc_05_cand") {
       val nbAll = newBandDf.select($"band", $"bucket", $"url")
       val newKeys = nbAll.select($"band", $"bucket").distinct()
       val oldBands = oldStage[BandRow]("04_bands")
@@ -206,7 +190,6 @@ object IncrementalDedup {
       // bucket is degenerate regardless of which side its members came from
       val g = graft.lsh.BucketGuard
         .okBuckets(spark, nbAll.unionByName(oldInNew), conf.maxBucketSize, "inc")
-      droppedBuckets = g.dropped
       val nb = nbAll.join(g.ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
       val ob = oldInNew.join(g.ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
       val intra = nb.select($"band", $"bucket", $"url".as("a"))
@@ -217,7 +200,8 @@ object IncrementalDedup {
         .join(ob.select($"band".as("b2"), $"bucket".as("k2"), $"url".as("ou")),
           $"band" === $"b2" && $"bucket" === $"k2")
         .select(least($"nu", $"ou").as("a"), greatest($"nu", $"ou").as("b"))
-      DedupPipeline.capPerDoc(spark, intra.union(cross), conf.maxCandidatesPerDoc, Some(cappedDocs))
+      (DedupPipeline.capPerDoc(spark, intra.union(cross), conf.maxCandidatesPerDoc, Some(cappedDocs)),
+        () => Map(RunMetrics.DroppedMegaBuckets -> g.dropped, CappedDocs -> cappedDocs.value))
     }
     // cap-boundary divergence from full recompute (object Scaladoc) —
     // mirror the mega-bucket logged-drop convention when it fires
@@ -227,24 +211,24 @@ object IncrementalDedup {
         "was retried) — candidate sets for those docs may differ from a full recompute")
 
     // ---- verify: sigs/norm restricted to pair members (semi-joins) ----
-    var verifyCounters = Map.empty[String, Long]
-    val verdictDf = stage("inc_06_verdicts", verifyCounters) {
+    val verdictDf = stage.counted("inc_06_verdicts") {
       val members = candDf.select($"a".as("url")).union(candDf.select($"b".as("url"))).distinct()
+      // each restricted relation is built once: verify's size count, its
+      // broadcast builds and the embedding pass read the blocks instead of
+      // re-running the semi-join over the old run's full text
       val oldSigs = oldStage[DocSig]("03_sig")
         .join(members, Seq("url"), "left_semi")
-      val sigsU = newSigDf.unionByName(oldSigs).as[DocSig]
+      val sigsU = DedupPipeline.ckpt(spark, newSigDf.unionByName(oldSigs), conf).as[DocSig]
       val oldNorm = oldStage[DocNorm]("01_norm")
         .join(members, Seq("url"), "left_semi")
-      val normU = newNormDf.unionByName(oldNorm).as[DocNorm]
+      val normU = DedupPipeline.ckpt(spark, newNormDf.unionByName(oldNorm), conf).as[DocNorm]
       val (verdicts, counters) = DedupPipeline.verifyStage(spark, candDf.as[CandPair], sigsU, normU, conf,
         broadcastMaxBytes = verifyBroadcastMaxBytes)
-      verifyCounters = counters
-      verdicts.toDF()
+      (verdicts.toDF(), () => counters)
     }
 
     // ---- touched-component clustering ----
-    var ccRounds = 0L
-    stage("inc_07_assign", Map(RunMetrics.CcRounds -> ccRounds)) {
+    stage.counted("inc_07_assign") {
       val dupEdges = verdictDf.filter($"final_label" === "DUPLICATE").select($"a", $"b")
       val exactEdges = exactAttachDf.select($"old_url".as("a"), $"new_url".as("b"))
       val newStars = DedupPipeline.exactEdges(spark, newRepsDf)
@@ -262,7 +246,6 @@ object IncrementalDedup {
 
       val (labels, rounds) = graft.cc.ConnectedComponents
         .run(spark, edges.union(oldStars), reliable = conf.reliableCheckpoints)
-      ccRounds = rounds
       val comp = labels.select($"url".as("m"), $"comp")
       // attach new exact-group members through the new rep map; old urls
       // and new reps are already vertices
@@ -273,11 +256,12 @@ object IncrementalDedup {
       val assigned = newMembers.unionByName(oldMembers).distinct()
       val newUrls = newNormDf.select($"url").withColumn("is_new", lit(true))
       val sizes = assigned.groupBy($"cluster_id").agg(count(lit(1)).as("cluster_size"))
-      assigned.join(sizes, "cluster_id")
+      (assigned.join(sizes, "cluster_id")
         .filter($"cluster_size" >= 2)
         .join(newUrls, Seq("url"), "left")
         .select($"url", $"cluster_id", $"cluster_size",
-          coalesce($"is_new", lit(false)).as("is_new"))
+          coalesce($"is_new", lit(false)).as("is_new")),
+        () => Map(RunMetrics.CcRounds -> rounds.toLong))
     }
   }
 

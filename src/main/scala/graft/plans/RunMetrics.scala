@@ -8,17 +8,16 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * class serialized compact, fields in declaration order; field names are
   * the JSON names.
   *
-  * The run summary counts are recomputed from the persisted verdicts and
-  * clusters on every run. The run counters (`dropped_*`,
-  * `emb_budget_dropped`, `*_wall_ms`, `verify_*`, `cc_rounds`) are read
-  * back from the markers of the stage that measured them (05_cand,
-  * 06_verdicts and 07_clusters, see [[StageStore]]), so a resumed run
-  * reports exactly what its cold run recorded. A run with no candidate pairs reports 0 counts and a
-  * `consensus_rate` of 0.0.
+  * The verdict summary counts and the cluster count are recomputed from
+  * the persisted verdicts and clusters on every run; `clustered_docs` is
+  * the row count in 07_clusters' parquet footers. The run counters
+  * (`dropped_*`, `emb_budget_dropped`, `*_wall_ms`, `verify_*`,
+  * `cc_rounds`) are read back from the markers of the stage that measured
+  * them (05_cand, 06_verdicts and 07_clusters, see [[StageStore]]), so a
+  * resumed run reports exactly what its cold run recorded. A run with no
+  * candidate pairs reports 0 counts and a `consensus_rate` of 0.0.
   *
-  * @param dropped_mega_buckets LSH buckets dropped by the mega-bucket guard;
-  *                             exact unless a guard task was retried
-  *                             (retries can only over-count it)
+  * @param dropped_mega_buckets LSH buckets dropped by the mega-bucket guard
   * @param dropped_domain_pairs candidate pairs dropped by
   *                             `maxCandidatesPerDomain` (0 when unset)
   * @param emb_budget_dropped   gray-zone pairs denied the embedding
@@ -33,7 +32,8 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * @param cc_rounds            rounds of the distributed connected-components
   *                             loop; 0 when the duplicate graph was small
   *                             enough to label on the driver
-  * @param stages               per-stage wall time and rows, from lineage
+  * @param stages               per stage: rows from the committed files'
+  *                             parquet footers, wall_ms from the marker
   */
 final case class RunMetrics(
     run_id: String,

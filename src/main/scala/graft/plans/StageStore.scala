@@ -1,7 +1,10 @@
 package graft.plans
 
+import graft.model.Schemas.LineageRow
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -16,10 +19,17 @@ import java.nio.charset.StandardCharsets.UTF_8
   * counters its cold run recorded. A marker whose body is anything else —
   * e.g. just the tag, as older writers left it — reads as no counters.
   *
+  * [[Run]] is the one stage runner of [[DedupPipeline.run]] and
+  * [[IncrementalDedup.ingest]]: it resumes a done stage, else computes,
+  * writes, records lineage and marks it.
+  *
   * All I/O goes through the Hadoop FileSystem of the directory, so markers
   * work on any store a run dir can live on, not only the local disk.
   */
 object StageStore {
+
+  /** Marker counter holding the stage's compute-and-write time. */
+  final val WallMs = "wall_ms"
 
   private def markerOf(dir: String, tag: String) = new Path(dir, s"_graft_conf_$tag")
 
@@ -58,6 +68,74 @@ object StageStore {
           case _ => None
         }
       }.toMap
+    }
+  }
+
+  /** Rows of `dir`'s committed `part-NNNNN-*` files, read from their
+    * parquet footers on the driver and summed per NNNNN, the partition of
+    * the task that wrote the file; sorted by partition. A writer commits
+    * only its successful attempts' files, so a retried task counts once,
+    * and an empty output's one schema-only file reads as (0, 0).
+    */
+  def partRows(spark: SparkSession, dir: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    fs(spark, dir).listStatus(new Path(dir)).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+      .map { p =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+        p.getName.split("-")(1).toInt -> (try r.getRecordCount finally r.close())
+      }
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
+  }
+
+  /** The stages of one run: each stage `name` persists to `root/name`, is
+    * marked under `tag`, and its jobs are labelled `<label>: name`.
+    *
+    * A stage found done is read back inferring its schema. Otherwise its
+    * jobs are labelled, `compute` runs and its frame is written; then its
+    * counters thunk is read (accumulators filled by that write are final
+    * by now), one lineage row per written partition goes to
+    * `root/lineage/name` (one one-task job labelled `<label>: lineage
+    * name`), and the stage is marked with the counters plus
+    * [[WallMs]], the compute-and-write time. A stage is marked only after
+    * its lineage is written, so a failed lineage write leaves it to be
+    * recomputed. The written stage is read back with the schema it was
+    * written with, which skips Spark's schema-inference job.
+    */
+  final class Run(spark: SparkSession, root: String, tag: String, label: String, resume: Boolean) {
+
+    /** A stage without counters. */
+    def apply(name: String)(compute: => DataFrame): DataFrame = counted(name)((compute, () => Map.empty))
+
+    /** A stage whose compute returns its frame and a thunk of the counters
+      * measured while that frame is written.
+      */
+    def counted(name: String)(compute: => (DataFrame, () => Map[String, Long])): DataFrame = {
+      val dir = s"$root/$name"
+      if (resume && done(spark, dir, tag)) spark.read.parquet(dir)
+      else {
+        val sc = spark.sparkContext
+        val t0 = System.nanoTime()
+        val (schema, counters) = try {
+          sc.setJobDescription(s"$label: $name")
+          val (out, measured) = compute
+          out.write.mode(SaveMode.Overwrite).parquet(dir)
+          val ms = (System.nanoTime() - t0) / 1000000
+          val counters = measured() + (WallMs -> ms)
+          sc.setJobDescription(s"$label: lineage $name")
+          writeLineage(name, dir, ms)
+          (out.schema, counters)
+        } finally sc.setJobDescription(null)
+        mark(spark, dir, tag, counters)
+        spark.read.schema(schema).parquet(dir)
+      }
+    }
+
+    private def writeLineage(name: String, dir: String, ms: Long): Unit = {
+      val rows = partRows(spark, dir).map { case (partition, n) =>
+        LineageRow(s"run_$tag", name, partition, n, ms, tag)
+      }
+      spark.createDataFrame(rows).coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$root/lineage/$name")
     }
   }
 }

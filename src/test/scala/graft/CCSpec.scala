@@ -4,9 +4,13 @@ import graft.cc.ConnectedComponents
 import graft.pages.PagesSource.DetRng
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.UTF_8
@@ -176,7 +180,11 @@ class CCSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally prev.foreach(spark.sparkContext.setCheckpointDir)
   }
 
-  test("the loop exchanges one min-label aggregate per round") {
+  /** A random graph plus a 100-edge path, labelled by the loop
+    * (driverMaxEdges = 0) and checked against union-find: the loop's
+    * rounds and the executed plan of every action it ran.
+    */
+  private lazy val forcedLoop: (Int, Seq[SparkPlan]) = {
     import spark.implicits._
     val rng = new DetRng(85)
     val rand = (0 until 3000).map(_ => (f"v${rng.nextInt(2000)}%04d", f"v${rng.nextInt(2000)}%04d"))
@@ -189,6 +197,11 @@ class CCSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     assert(labels == unionFind(edges))
     assert(rounds > 1)
+    (rounds, plans)
+  }
+
+  test("the loop exchanges one min-label aggregate per round") {
+    val (rounds, plans) = forcedLoop
     // every shuffle that ran over a partial min aggregate (a reused
     // exchange does not run again, and is not a ShuffleExchangeExec)
     val minAggShuffles = plans.flatMap(p => collect(p) {
@@ -200,5 +213,25 @@ class CCSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     })
     assert(minAggShuffles.size == rounds,
       s"${minAggShuffles.size} min-label aggregate shuffles ran in $rounds rounds")
+  }
+
+  test("the loop exchanges its edge relation once per run") {
+    val (rounds, plans) = forcedLoop
+    // the executed plans and, once each, the plans of the relations they
+    // read from the cache (a cached relation runs its plan once)
+    val cached = plans.flatMap(p => collect(p) { case s: InMemoryTableScanExec => s.relation.cacheBuilder })
+      .distinct.map(_.cachedPlan)
+    // every shuffle that ran over the id-encoded symmetric edges (u, v),
+    // keyed by v
+    val symShuffles = (plans ++ cached).flatMap(p => collect(p) {
+      case e: ShuffleExchangeExec if e.child.output.map(a => a.name -> a.dataType) ==
+          Seq("u" -> LongType, "v" -> LongType) && (e.outputPartitioning match {
+            case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)) == Seq("v")
+            case _ => false
+          }) => e
+    })
+    assert(symShuffles.size == 1, s"${symShuffles.size} sym exchanges ran in $rounds rounds")
+    assert(symShuffles.head.outputPartitioning.numPartitions ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
   }
 }

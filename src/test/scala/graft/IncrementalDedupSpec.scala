@@ -183,7 +183,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val counters = graft.plans.StageStore.counters(spark, s"$incDir/inc_05_cand",
       markers.head.stripPrefix("_graft_conf_"))
     assert(counters == Map("dropped_mega_buckets" -> 0L,
-      "capped_docs" -> partners.count(_._2.size > conf.maxCandidatesPerDoc).toLong))
+      "capped_docs" -> partners.count(_._2.size > conf.maxCandidatesPerDoc).toLong,
+      "wall_ms" -> counters.getOrElse("wall_ms", -1L)))
   }
 
   test("ingest's verdicts are the same on both verify paths") {
@@ -213,6 +214,38 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(broadcast.nonEmpty)
     assert(broadcast == shuffled,
       s"only-broadcast=${(broadcast -- shuffled).take(3)}, only-shuffle=${(shuffled -- broadcast).take(3)}")
+  }
+
+  test("ingest writes lineage for every stage; a resumed ingest leaves every marker byte-identical") {
+    import spark.implicits._
+    val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 4)
+    def m(u: String) = u.split("/m")(1).toInt
+    val conf = DedupConfig.balanced
+    val baseDir = freshDir("lineage_base")
+    graft.plans.DedupPipeline.run(spark, pages.filter(p => m(p.url) < 3), baseDir, conf, resume = false)
+    val batch = pages.filter(p => m(p.url) >= 3)
+    val incDir = freshDir("lineage_inc")
+    val stages = Seq("inc_01_norm", "inc_02_reps", "inc_exact_attach", "inc_03_sig", "inc_04_bands",
+      "inc_05_cand", "inc_06_verdicts", "inc_07_assign")
+    // every stage's marker file name and bytes
+    def markers(): Map[String, Seq[Byte]] = stages.flatMap { s =>
+      new java.io.File(s"$incDir/$s").listFiles().filter(_.getName.startsWith("_graft_conf_"))
+        .map(f => s"$s/${f.getName}" -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+    }.toMap
+
+    graft.plans.IncrementalDedup.ingest(spark, baseDir, batch, incDir, conf)
+    val cold = markers()
+    assert(cold.size == stages.size, cold.keys)
+    assert(cold.values.forall(b => new String(b.toArray, "UTF-8").linesIterator.exists(_.startsWith("wall_ms="))))
+    val tag = cold.keys.head.split("/_graft_conf_")(1)
+    assert(tag.startsWith(s"${conf.configHash}_b"), tag)
+
+    val lineage = spark.read.parquet(stages.map(s => s"$incDir/lineage/$s"): _*)
+    assert(lineage.select($"stage").distinct().as[String].collect().sorted.toSeq == stages.sorted)
+    assert(lineage.select($"config_hash").distinct().as[String].collect().toSeq == Seq(tag))
+
+    graft.plans.IncrementalDedup.ingest(spark, baseDir, batch, incDir, conf)
+    assert(markers() == cold, "a resumed ingest rewrote a marker")
   }
 
   test("config-mismatched old run is refused") {

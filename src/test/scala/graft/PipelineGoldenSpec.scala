@@ -112,10 +112,21 @@ class PipelineGoldenSpec extends AnyFunSuite {
   }
 
   test("lineage rows exist for every stage partition") {
-    val lineage = spark.read.parquet("/tmp/graft_test_pipeline/lineage/*")
+    clustersByUrl // force the pipeline run
+    val dir = "/tmp/graft_test_pipeline"
+    val lineage = spark.read.parquet(s"$dir/lineage/*")
     val stages = lineage.select("stage").distinct().collect().map(_.getString(0)).sorted
     assert(stages.toSeq == Seq("01_norm", "02_reps", "03_sig", "04_bands", "05_cand", "06_verdicts", "07_clusters"))
     assert(lineage.filter(col("rows") < 0).count() == 0)
+    // each stage's lines are its committed files: their rows sum to a
+    // recount of the stage, one line per part-NNNNN id
+    stages.foreach { s =>
+      val lines = lineage.filter(col("stage") === s).select("partition_id", "rows").collect()
+      assert(lines.map(_.getLong(1)).sum == spark.read.parquet(s"$dir/$s").count(), s)
+      val partIds = new java.io.File(s"$dir/$s").list().filter(_.startsWith("part-"))
+        .map(_.split("-")(1).toInt).toSet
+      assert(lines.map(_.getInt(0)).sorted.toSeq == partIds.toSeq.sorted, s)
+    }
   }
 
   test("stage read-backs pin the schemas Spark infers") {
@@ -140,7 +151,7 @@ class PipelineGoldenSpec extends AnyFunSuite {
     // incremental ingest reads old-run stages with the case-class schemas
     val oldRun = Seq("01_norm" -> Encoders.product[DocNorm].schema, "03_sig" -> Encoders.product[DocSig].schema,
       "04_bands" -> Encoders.product[BandRow].schema, "07_clusters" -> Encoders.product[ClusterRow].schema)
-    val lineage = stages.map(s => s"lineage/$s" -> DedupPipeline.LineageSchema)
+    val lineage = stages.map(s => s"lineage/$s" -> Encoders.product[LineageRow].schema)
     (fresh ++ oldRun ++ lineage).foreach { case (stage, schema) =>
       val path = s"$dir/$stage"
       assert(spark.read.schema(schema).parquet(path).schema == spark.read.parquet(path).schema, stage)

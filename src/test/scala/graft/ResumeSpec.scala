@@ -181,7 +181,7 @@ class ResumeSpec extends AnyFunSuite {
     new File(dir).mkdirs()
     // a regular file where the lineage directory goes: every lineage write fails
     java.nio.file.Files.writeString(new File(s"$dir/lineage").toPath, "not a directory")
-    intercept[java.util.concurrent.ExecutionException] {
+    intercept[org.apache.hadoop.fs.ParentNotDirectoryException] {
       DedupPipeline.run(spark, pagesDs, dir, DedupConfig.balanced, resume = true)
     }
     assert(new File(s"$dir/01_norm/_SUCCESS").exists(), "01_norm output was not written")
