@@ -131,14 +131,23 @@ object DedupPipeline {
     val g = graft.lsh.BucketGuard.okBuckets(spark, bands.toDF(), conf.maxBucketSize, "pipeline")
     val bx = bands.toDF().join(g.ok, Seq("band", "bucket"))
       .select($"band", $"bucket", $"url")
-    val left = bx.select($"band", $"bucket", $"url".as("a"))
-    val right = bx.select($"band".as("band2"), $"bucket".as("bucket2"), $"url".as("b"))
-    val joined = left.join(right,
-        $"band" === $"band2" && $"bucket" === $"bucket2" && $"a" < $"b")
-      .select($"a", $"b")
+    val joined = selfPairs(spark, bx)
     val (pairs, droppedPairs) = domainCap(spark, capPerDoc(spark, joined, conf.maxCandidatesPerDoc), conf)
     (pairs.as[CandPair], Map(
       RunMetrics.DroppedMegaBuckets -> g.dropped, RunMetrics.DroppedDomainPairs -> droppedPairs))
+  }
+
+  /** The bucket self-join of `rows` (band, bucket, url): every (a, b) pair
+    * of urls sharing a (band, bucket), with a < b, once per shared bucket.
+    * Both sides are `rows` itself under two aliases, with no column renamed
+    * below the join, so they plan as one relation and Spark's exchange
+    * reuse serves both from one exchange.
+    */
+  private[plans] def selfPairs(spark: SparkSession, rows: DataFrame): DataFrame = {
+    import spark.implicits._
+    rows.as("l").join(rows.as("r"),
+        $"l.band" === $"r.band" && $"l.bucket" === $"r.bucket" && $"l.url" < $"r.url")
+      .select($"l.url".as("a"), $"r.url".as("b"))
   }
 
   /** Pair dedup + per-doc candidate cap (near_duplicate.py:408) in ONE
@@ -320,7 +329,11 @@ object DedupPipeline {
     * [[VerifyBroadcastMaxBytes]]; tests pass 0 to reach the shuffle path):
     * every pair join broadcasts its doc side, so no exchange carries a
     * shingle array, vector or text, and the span pairs are exchanged by
-    * `b` as keys only before their texts attach. Above it: every pair join
+    * `b` as keys only before their texts attach. The embedding pass
+    * broadcasts its gray-zone url set into a semi-join on `norm`, so each
+    * text is embedded where it lies and neither an exchange nor a
+    * broadcast carries a full text (the count bounds that set too: every
+    * counted doc carries 4·embedDim bytes). Above it: every pair join
     * is a SHUFFLE_HASH join, which ships one doc's payload per pair through
     * the exchange that keys the pairs by the other doc. Verdicts are the
     * same on both paths. Returns the verdicts and the stage's run counters
@@ -440,8 +453,11 @@ object DedupPipeline {
     // model at corpus scale.
     val embUrls = embPairsIn.select($"a".as("url"))
       .union(embPairsIn.select($"b".as("url"))).distinct()
-    // consumed by both pair sides — materialize so docs embed once
-    val docEmb = ckpt(spark, embUrls.join(norm.select($"url", $"norm_text"), "url")
+    // Texts are embedded where they lie: the gray-zone url set is semi-
+    // joined onto `norm`, as the broadcast side on the broadcast path.
+    // Consumed by both pair sides — materialize so docs embed once.
+    val docEmb = ckpt(spark, norm.select($"url", $"norm_text")
+      .join(if (bc) broadcast(embUrls) else embUrls, Seq("url"), "left_semi")
       .as[(String, String)]
       .map { case (u, t) =>
         val t0 = System.nanoTime()
@@ -482,8 +498,9 @@ object DedupPipeline {
     // so neither the pair shuffle nor the broadcast carries bytes the
     // suffix automaton won't read (a capped text can hold up to 2 x spanCap
     // UTF-16 units; the automaton workspace grows to fit). The automaton
-    // pass is byte-normal (~0.2ms/pair) and AQE's size-based partitioning
-    // spreads it fine.
+    // pass is byte-normal (~0.2ms/pair) but its key-only input is small, so
+    // AQE's size-based coalescing can put the whole pass in one task (on
+    // `dense` seed 1: 16.7k pairs, 1.2 s in a single task).
     val na = norm.select($"url".as("na_url"),
       substring($"norm_text", 1, spanCap).as("a_text"))
     val nb = norm.select($"url".as("nb_url"),
@@ -683,13 +700,14 @@ object DedupPipeline {
     // ONE aggregation job over the verdicts for both the run summary and
     // the per-text learner pair counts
     spark.sparkContext.setJobDescription("pipeline: metrics summary")
-    val summary = try graft.metrics.Metrics.runSummary(verdicts,
-      sum(when($"emb_cos".isNotNull, 1).otherwise(0)).as("emb_pairs"),
-      sum(when($"shared_span_len" > 0, 1).otherwise(0)).as("span_pairs")).first()
-    finally spark.sparkContext.setJobDescription(null)
-    // a cluster's id is its least member url, so exactly one of its rows
-    // carries its own id: one scan, no exchange
-    val nClusters = clusters.filter($"url" === $"cluster_id").rdd.count()
+    val (summary, nClusters) = try {
+      val summary = graft.metrics.Metrics.runSummary(verdicts,
+        sum(when($"emb_cos".isNotNull, 1).otherwise(0)).as("emb_pairs"),
+        sum(when($"shared_span_len" > 0, 1).otherwise(0)).as("span_pairs")).first()
+      // a cluster's id is its least member url, so exactly one of its rows
+      // carries its own id: one scan, no exchange
+      (summary, clusters.filter($"url" === $"cluster_id").rdd.count())
+    } finally spark.sparkContext.setJobDescription(null)
     val markers = Stages.map(s => s -> StageStore.counters(spark, s"$runDir/$s", confHash))
     val stages = markers.map { case (s, c) =>
       RunMetrics.StageLine(s, c.getOrElse(StageStore.WallMs, 0L),

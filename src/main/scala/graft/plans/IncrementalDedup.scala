@@ -107,11 +107,13 @@ object IncrementalDedup {
     // hash EVERY Page field the pipeline reads (url, text, lang, warc_ts,
     // html bytes): a re-ingest of the same urls/texts with e.g. a corrected
     // lang column is a DIFFERENT batch and must not resume the old stages.
-    val r = pages.toDF()
+    spark.sparkContext.setJobDescription("incremental: batch token")
+    val r = try pages.toDF()
       .select(xxhash64($"url", coalesce($"text", lit("")),
         coalesce($"lang", lit("")), coalesce($"warc_ts".cast("long"), lit(0L)),
         coalesce(xxhash64($"html"), lit(0L))).as("h"))
       .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x")).first()
+    finally spark.sparkContext.setJobDescription(null)
     val x = if (r.isNullAt(1)) 0L else r.getLong(1)
     f"${r.getLong(0)}%x_$x%016x"
   }
@@ -183,23 +185,26 @@ object IncrementalDedup {
     val candDf = stage.counted("inc_05_cand") {
       val nbAll = newBandDf.select($"band", $"bucket", $"url")
       val newKeys = nbAll.select($"band", $"bucket").distinct()
-      val oldBands = oldStage[BandRow]("04_bands")
+      val oldBands = oldStage[BandRow]("04_bands").select($"band", $"bucket", $"url")
       val oldInNew = oldBands.join(newKeys, Seq("band", "bucket"), "left_semi")
-        .select($"band", $"bucket", $"url")
       // mega-bucket guard on the COMBINED size (shared impl): a degenerate
       // bucket is degenerate regardless of which side its members came from
       val g = graft.lsh.BucketGuard
         .okBuckets(spark, nbAll.unionByName(oldInNew), conf.maxBucketSize, "inc")
-      val nb = nbAll.join(g.ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
-      val ob = oldInNew.join(g.ok, Seq("band", "bucket")).select($"band", $"bucket", $"url")
-      val intra = nb.select($"band", $"bucket", $"url".as("a"))
-        .join(nb.select($"band".as("b2"), $"bucket".as("k2"), $"url".as("b")),
-          $"band" === $"b2" && $"bucket" === $"k2" && $"a" < $"b")
-        .select($"a", $"b")
-      val cross = nb.select($"band", $"bucket", $"url".as("nu"))
-        .join(ob.select($"band".as("b2"), $"bucket".as("k2"), $"url".as("ou")),
-          $"band" === $"b2" && $"bucket" === $"k2")
-        .select(least($"nu", $"ou").as("a"), greatest($"nu", $"ou").as("b"))
+      // One `nb` relation feeds both sides of the intra self-join and the new
+      // side of the cross join, so one exchange serves all three. Urls are
+      // never null; the explicit filter is the one the self-join's a < b
+      // infers, so the cross join's new side plans the same. Semi-joins
+      // keep nb's and ob's size estimates their own bands' (an inner join's
+      // is the product of its sides), so a batch under the broadcast
+      // threshold broadcasts nb into both joins with no exchange at all.
+      val nb = nbAll.join(g.ok, Seq("band", "bucket"), "left_semi").filter($"url".isNotNull)
+      // every guarded bucket holds a new row (old rows count only in the
+      // batch's buckets), so g.ok already restricts the old bands to them
+      val ob = oldBands.join(g.ok, Seq("band", "bucket"), "left_semi")
+      val intra = DedupPipeline.selfPairs(spark, nb)
+      val cross = nb.as("n").join(ob.as("o"), $"n.band" === $"o.band" && $"n.bucket" === $"o.bucket")
+        .select(least($"n.url", $"o.url").as("a"), greatest($"n.url", $"o.url").as("b"))
       (DedupPipeline.capPerDoc(spark, intra.union(cross), conf.maxCandidatesPerDoc, Some(cappedDocs)),
         () => Map(RunMetrics.DroppedMegaBuckets -> g.dropped, CappedDocs -> cappedDocs.value))
     }
@@ -212,10 +217,12 @@ object IncrementalDedup {
 
     // ---- verify: sigs/norm restricted to pair members (semi-joins) ----
     val verdictDf = stage.counted("inc_06_verdicts") {
-      val members = candDf.select($"a".as("url")).union(candDf.select($"b".as("url"))).distinct()
-      // each restricted relation is built once: verify's size count, its
+      // the member set is materialized once for both semi-joins, and each
+      // restricted relation is built once: verify's size count, its
       // broadcast builds and the embedding pass read the blocks instead of
       // re-running the semi-join over the old run's full text
+      val members = DedupPipeline.ckpt(spark,
+        candDf.select($"a".as("url")).union(candDf.select($"b".as("url"))).distinct(), conf)
       val oldSigs = oldStage[DocSig]("03_sig")
         .join(members, Seq("url"), "left_semi")
       val sigsU = DedupPipeline.ckpt(spark, newSigDf.unionByName(oldSigs), conf).as[DocSig]

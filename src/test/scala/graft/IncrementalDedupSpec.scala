@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact refetches must short-circuit before signing, and config-mismatched
   * old runs must be refused.
   */
-class IncrementalDedupSpec extends AnyFunSuite {
+class IncrementalDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = TestSpark.spark
 
@@ -214,6 +217,44 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(broadcast.nonEmpty)
     assert(broadcast == shuffled,
       s"only-broadcast=${(broadcast -- shuffled).take(3)}, only-shuffle=${(shuffled -- broadcast).take(3)}")
+  }
+
+  test("ingest exchanges the new bands, their bucket keys and the pair members at most once each") {
+    val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 10, membersPerFamily = 6)
+    def m(u: String) = u.split("/m")(1).toInt
+    val conf = DedupConfig.balanced
+    val oldDir = freshDir("exchanges_old")
+    graft.plans.DedupPipeline.run(spark, pages.filter(p => m(p.url) < 3), oldDir, conf, resume = false)
+    // the stage directories a plan's file scans read
+    def reads(p: SparkPlan): Set[String] =
+      collect(p) { case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName) }.flatten.toSet
+    // per relation, the shuffle exchanges of its width computed from its
+    // stage directory alone, in one ingest of the held-out members
+    def crossings(tag: String): Map[String, Int] = {
+      val (_, ran) = TestUtil.executedPlans(spark) {
+        graft.plans.IncrementalDedup.ingest(spark, oldDir, pages.filter(p => m(p.url) >= 3), freshDir(tag), conf)
+      }
+      def exchangesOver(dir: String, width: Int) = ran.map(p => collect(p) {
+        case e: ShuffleExchangeExec if e.output.size == width && reads(e) == Set(dir) => e
+      }.size).sum
+      Map(
+        // inc_05_cand: the guarded new bands (band, bucket, url) feed the
+        // intra self-join's two sides and the cross join's new side; their
+        // (band, bucket) set restricts the old bands in the guard
+        "new bands" -> exchangesOver("inc_04_bands", 3),
+        "new bucket keys" -> exchangesOver("inc_04_bands", 2),
+        // inc_06_verdicts: the pair members restrict the old signatures and texts
+        "pair members" -> exchangesOver("inc_05_cand", 1))
+    }
+    // this batch's new bands are broadcast into both candidate joins
+    val small = crossings("exchanges_inc")
+    assert(small("new bands") == 0 && small("new bucket keys") == 1 && small("pair members") == 1, small)
+    // with no broadcast, one exchange of the new bands serves all three sides
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val shuffled = try crossings("exchanges_inc_shuffled")
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert(shuffled("new bands") == 1, shuffled)
   }
 
   test("ingest writes lineage for every stage; a resumed ingest leaves every marker byte-identical") {

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,12 +26,18 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
   /** verifyStage over the sf0.001 pipeline run's persisted stages, on the
-    * path `broadcastMaxBytes` selects (0 reaches the shuffle path).
+    * path `broadcastMaxBytes` selects (0 reaches the shuffle path). The doc
+    * texts are the whole 01_norm, or with `repsOnly` its exact-group reps
+    * joined as DedupPipeline.run joins them.
     */
-  private def persistedVerify(broadcastMaxBytes: Long): (DataFrame, Map[String, Long]) = {
+  private def persistedVerify(broadcastMaxBytes: Long, repsOnly: Boolean = false): (DataFrame, Map[String, Long]) = {
     import spark.implicits._
     val rd = SparkEntry.pipelineRunDir(spark, sf)
-    val norm = spark.read.parquet(s"$rd/01_norm").as[graft.model.Schemas.DocNorm]
+    val allNorm = spark.read.parquet(s"$rd/01_norm")
+    val norm = (if (!repsOnly) allNorm else {
+      val reps = spark.read.parquet(s"$rd/02_reps")
+      allNorm.join(reps.filter($"url" === $"rep").select($"rep"), allNorm("url") === $"rep").drop("rep")
+    }).as[graft.model.Schemas.DocNorm]
     val sigs = spark.read.parquet(s"$rd/03_sig").as[graft.model.Schemas.DocSig]
     val cands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
     val (verdicts, counters) = DedupPipeline.verifyStage(spark, cands, sigs, norm, DedupConfig.balanced,
@@ -86,6 +93,27 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"candidate stage planned a cross product:\n$p")
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
       p.contains("BroadcastHashJoin"), s"no hash/merge equi-join in candidate stage:\n$p")
+  }
+
+  test("pipeline candidate stage: the bucket self-join's two sides share one exchange") {
+    import spark.implicits._
+    val rd = SparkEntry.pipelineRunDir(spark, sf)
+    val bands = spark.read.parquet(s"$rd/04_bands").as[graft.model.Schemas.BandRow]
+    val (pairs, ran) = TestUtil.executedPlans(spark) {
+      graft.plans.DedupPipeline.candidateStage(spark, bands, DedupConfig.balanced)._1.collect()
+    }
+    assert(pairs.nonEmpty)
+    // the guarded band relation: one row per bucket member, hash-partitioned
+    // by (band, bucket) for the self-join; the guard's per-bucket count is
+    // exchanged above its partial aggregate
+    def bucketKeyed(e: ShuffleExchangeExec) = e.output.size == 3 && (e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.size == 2
+      case _ => false
+    }) && find(e.child)(_.isInstanceOf[BaseAggregateExec]).isEmpty
+    val bandExchanges = ran.flatMap(p => collect(p) { case e: ShuffleExchangeExec if bucketKeyed(e) => e })
+    assert(bandExchanges.size == 1,
+      s"the self-join exchanges the band relation ${bandExchanges.size} times:\n${bandExchanges.mkString("\n")}")
+    assert(ran.exists(p => collect(p) { case r: ReusedExchangeExec => r }.nonEmpty), s"no reused exchange:\n$ran")
   }
 
   test("small-dimension join broadcasts (label assignment)") {
@@ -274,21 +302,28 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("verify stage, broadcast path: no exchange carries shingle arrays, vectors or span texts") {
     // every action verify runs (the size count, the base and docEmb
     // checkpoints) as executed, plus the verdicts' own plan before
-    // execution, so no pass escapes for lack of pairs
-    val ((verdicts, counters), ran) =
-      TestUtil.executedPlans(spark)(persistedVerify(DedupPipeline.VerifyBroadcastMaxBytes))
-    assert(counters("verify_broadcast") == 1L)
-    assert(counters("verify_doc_bytes") > 0L)
-    val plans = ran :+ verdicts.queryExecution.executedPlan
-    // the doc-side payload columns of the verify joins
-    val payload = Set("a_sh", "b_sh", "va", "vb", "vec", "a_text", "b_text")
-    def payloadOf(p: SparkPlan): Set[String] = p.output.map(_.name).filter(payload).toSet
-    val fat = plans.flatMap(p => collect(p) { case e: ShuffleExchangeExec if payloadOf(e).nonEmpty => e })
-    assert(fat.isEmpty, s"exchanges carry doc payloads on the broadcast path:\n${fat.mkString("\n")}")
-    // sanity: each payload does reach the pairs, through a broadcast
-    val broadcast = plans.flatMap(p => collect(p) { case e: BroadcastExchangeExec => payloadOf(e) }).flatten.toSet
-    Seq(Set("a_sh", "b_sh"), Set("va", "vb"), Set("a_text", "b_text")).foreach(cols =>
-      assert((broadcast & cols).nonEmpty, s"no broadcast carries $cols: $broadcast"))
+    // execution, so no pass escapes for lack of pairs; over the whole
+    // 01_norm and over the pipeline's exact-group reps
+    Seq(false, true).foreach { repsOnly =>
+      val ((verdicts, counters), ran) =
+        TestUtil.executedPlans(spark)(persistedVerify(DedupPipeline.VerifyBroadcastMaxBytes, repsOnly))
+      assert(counters("verify_broadcast") == 1L)
+      assert(counters("verify_doc_bytes") > 0L)
+      val plans = ran :+ verdicts.queryExecution.executedPlan
+      // the doc-side payload columns of the verify joins, and the full text
+      // the embedding pass reads
+      val payload = Set("a_sh", "b_sh", "va", "vb", "vec", "a_text", "b_text", "norm_text")
+      def payloadOf(p: SparkPlan): Set[String] = p.output.map(_.name).filter(payload).toSet
+      val fat = plans.flatMap(p => collect(p) { case e: ShuffleExchangeExec if payloadOf(e).nonEmpty => e })
+      assert(fat.isEmpty,
+        s"exchanges carry doc payloads on the broadcast path (repsOnly=$repsOnly):\n${fat.mkString("\n")}")
+      // each payload does reach the pairs, through a broadcast; the texts
+      // only capped to the span pass's length, never whole
+      val broadcast = plans.flatMap(p => collect(p) { case e: BroadcastExchangeExec => payloadOf(e) }).flatten.toSet
+      Seq(Set("a_sh", "b_sh"), Set("va", "vb"), Set("a_text", "b_text")).foreach(cols =>
+        assert((broadcast & cols).nonEmpty, s"no broadcast carries $cols (repsOnly=$repsOnly): $broadcast"))
+      assert(!broadcast("norm_text"), s"a broadcast carries the full texts (repsOnly=$repsOnly)")
+    }
   }
 
   test("verify stage, broadcast path: the span pass exchanges key-only pairs by b before its anchor sort") {
