@@ -8,7 +8,8 @@ import graft.model.Schemas._
 import graft.norm.TextNorm
 import graft.sig.{CheapEmbed, MinHashSig, SimHash}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end near-duplicate detection + clustering pipeline.
@@ -302,43 +303,81 @@ object DedupPipeline {
     perDoc.agg(coalesce(sum($"bytes"), lit(0L))).first().getLong(0)
   }
 
+  /** `base`'s columns: one candidate pair scored by the two signature
+    * learners, before the per-text learners run.
+    */
+  private[plans] final case class ScoredPair(a: String, b: String, exact: Boolean, jaccard: Double,
+                                             hamming: Int, sim_sim: Double, vote_sim: Boolean,
+                                             vote_min: Boolean, votes_base: Int)
+
+  /** The embedding learner's score of one pair; its time goes to `nanos`. */
+  private def embCosine(va: Array[Float], vb: Array[Float],
+                        nanos: Option[org.apache.spark.util.LongAccumulator]): Double = {
+    val t0 = System.nanoTime()
+    val cos = CheapEmbed.cosine(va, vb)
+    nanos.foreach(_.add(System.nanoTime() - t0))
+    cos
+  }
+
+  /** The span learner over one partition: `apply(anchor, anchorText,
+    * other)` builds the anchor's suffix automaton when the anchor differs
+    * from the previous call's and streams `other` through it, so a pass
+    * whose rows arrive grouped by anchor builds each anchor once (LCS is
+    * symmetric, so either side of a pair can be the anchor). Build and
+    * stream time go to `nanos`.
+    */
+  private final class SpanScorer(spanCap: Int, nanos: Option[org.apache.spark.util.LongAccumulator]) {
+    private val ws = new graft.sa.SuffixAutomaton.Workspace(spanCap)
+    private var built: String = null // the anchor whose automaton ws holds
+    def apply(anchor: String, anchorText: String, other: String): Int = {
+      val t0 = System.nanoTime()
+      if (anchor != built) { graft.sa.SuffixAutomaton.build(anchorText, ws); built = anchor }
+      val span = graft.sa.SuffixAutomaton.stream(other, ws)
+      nanos.foreach(_.add(System.nanoTime() - t0))
+      span
+    }
+  }
+
   /** Stage 5: verify + decide. Pure column math for the two signature
     * learners. A pair is a duplicate when its texts match exactly or when
     * `requiredVotes` learners vote for it; the embedding learner scores
     * only the gray-zone pairs (one vote short), and the shared-span
     * (suffix automaton) pass only reports `shared_span_len` for near-miss
-    * non-exact pairs short of consensus, never changing a label.
+    * non-exact pairs short of consensus, never changing a label. Each
+    * per-text learner takes its pairs from the scored pairs (`base`) with
+    * one predicate, ranked per anchor doc `a` by (jaccard desc, b) where a
+    * budget caps them (`embMaxPairsPerDoc`, `spanMaxPairsPerDoc`).
     *
     * Run counters go into the optional accumulators: the summed task time
     * of the embedding and span passes (`embNanos`, `spanNanos`, filled as
     * the result is computed) and the gray-zone pairs the embedding budget
     * denied (`embBudgetDropped`, added on the calling thread).
     *
-    * Dataflow: one pair join per side attaches each doc's hashed-shingle
-    * array, simhash words and exact hash; every pair gets the exact
-    * merge-count Jaccard and the SimHash Hamming distance, and the scored
-    * relation is checkpointed narrow (`base`). The embedding and span
-    * passes each take their pairs from `base` with one predicate (ranked
-    * per doc by (jaccard desc, b) where a budget caps them), are scored
-    * independently and left-joined back; the span pass builds each anchor
-    * doc's suffix automaton once and streams all its partners' texts
-    * through it.
+    * One pair join per side attaches each doc's hashed-shingle array,
+    * simhash words and exact hash; every pair gets the exact merge-count
+    * Jaccard and the SimHash Hamming distance, and the scored relation is
+    * checkpointed narrow (`base`). Each doc's embedding is computed once,
+    * in place: the gray-zone url set is semi-joined onto `norm`.
     *
     * How the doc side reaches the pairs follows from an exact count taken
     * first ([[verifyDocBytes]]). At most `broadcastMaxBytes` (default
-    * [[VerifyBroadcastMaxBytes]]; tests pass 0 to reach the shuffle path):
-    * every pair join broadcasts its doc side, so no exchange carries a
-    * shingle array, vector or text, and the span pairs are exchanged by
-    * `b` as keys only before their texts attach. The embedding pass
-    * broadcasts its gray-zone url set into a semi-join on `norm`, so each
-    * text is embedded where it lies and neither an exchange nor a
-    * broadcast carries a full text (the count bounds that set too: every
-    * counted doc carries 4·embedDim bytes). Above it: every pair join
-    * is a SHUFFLE_HASH join, which ships one doc's payload per pair through
-    * the exchange that keys the pairs by the other doc. Verdicts are the
-    * same on both paths. Returns the verdicts and the stage's run counters
-    * `verify_broadcast` (1 on the broadcast path) and `verify_doc_bytes`
-    * (the counted payload).
+    * [[VerifyBroadcastMaxBytes]]; tests pass 0 to reach the shuffle path),
+    * every doc relation is broadcast and the pairs cross ONE exchange:
+    * the key-only candidates, hash-keyed by `a`. `base` keeps that layout,
+    * sorted by (a, jaccard desc, b), so a window with no exchange of its
+    * own ranks both learners' pairs, and one narrow pass attaches the
+    * vectors and capped texts a pair's learners read (null for the rest),
+    * computes `emb_cos` and `shared_span_len` — one suffix automaton per
+    * anchor `a` — and feeds the verdict columns. No exchange or broadcast
+    * carries a full text (the count bounds the gray-zone url set too:
+    * every counted doc carries 4·embedDim bytes). Above the bound every
+    * pair join is a SHUFFLE_HASH join, which ships one doc's payload per
+    * pair through the exchange that keys the pairs by the other doc, and
+    * the two learners run as independent passes left-joined back onto
+    * `base` (see the comment there). Verdicts are the same on both paths.
+    * Returns the verdicts and the stage's run counters `verify_broadcast`
+    * (1 on the broadcast path) and `verify_doc_bytes` (the counted
+    * payload).
     *
     * Alternative scorers (a partition-aware cogroup, a MinHash-estimate and
     * a b-bit prefilter band) and the suffix-array span pass were measured
@@ -381,63 +420,37 @@ object DedupPipeline {
       $"exact_hash".as("a_eh"), $"simhash_hi".as("a_hi"), $"simhash_lo".as("a_lo"))
     val sb = sigs.select($"url".as("b_url"), $"shingles".as("b_sh"),
       $"exact_hash".as("b_eh"), $"simhash_hi".as("b_hi"), $"simhash_lo".as("b_lo"))
-    val scored = cands.toDF()
+    val scoredCols = Encoders.product[ScoredPair].schema.fieldNames.toSeq.map(col)
+    // the broadcast path's one pair exchange: key-only, by anchor doc a
+    val scored = (if (bc) cands.toDF().repartition($"a") else cands.toDF())
       .join(docSide(sa), $"a" === $"a_url")
       .join(docSide(sb), $"b" === $"b_url")
       .withColumn("exact", $"a_eh" === $"b_eh")
       .withColumn("jaccard", jaccardCol("a_sh", "b_sh"))
       .withColumn("hamming", hammingCol)
       .withColumn("sim_sim", greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble)))
-
-    // base is consumed by three subtrees (span pairs, emb pairs and the
-    // final left join), four with the emb budget: checkpointing materializes
-    // the pair join ONCE as this narrow fixed-width relation (~100 B/row).
-    // Without it each consumer re-runs the array-carrying join — measured
-    // as three separate 2.4 GB map stages at the 150k-page bench. Local
-    // blocks are reclaimed by the ContextCleaner when the plan goes out of
-    // scope; reliableCheckpoints switches to durable checkpoint().
-    val base = ckpt(spark, scored
       .withColumn("vote_sim", $"sim_sim" >= conf.thrSimhash)
       .withColumn("vote_min", $"jaccard" >= conf.thrMinhash)
       .withColumn("votes_base", $"vote_sim".cast("int") + $"vote_min".cast("int"))
-      .select($"a", $"b", $"exact", $"jaccard", $"hamming", $"sim_sim",
-        $"vote_sim", $"vote_min", $"votes_base"), conf)
+      .select(scoredCols: _*)
 
     val need = conf.requiredVotes
-
-    // Each per-text learner takes its pairs straight from `base`, ranked
-    // per anchor doc `a` by (jaccard desc, b) — a total order within a doc,
-    // so a cap keeps a deterministic set.
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy($"a").orderBy($"jaccard".desc, $"b")
-
     // Embedding tiebreak: the gray-zone pairs, one vote short of consensus.
     // Opt-in per-doc budget (DedupConfig.embMaxPairsPerDoc): keep each
     // anchor doc's `cap` highest-jaccard gray-zone pairs; the rest resolve
     // with vote_emb = false (emb_cos stays null). Drops are counted (one
     // extra job, opted-in runs only), logged and reported.
-    val embGray = base.filter(!$"exact" && lit(conf.embedEnabled) && $"votes_base" === (need - 1))
-      .select($"a", $"b", $"jaccard")
-    val embPairsIn = (conf.embMaxPairsPerDoc match {
-      case None => embGray
-      case Some(cap) =>
-        val ranked = embGray.withColumn("rn", row_number().over(rankW))
-        val dropped = ranked.filter($"rn" > cap).count()
-        if (dropped > 0)
-          System.err.println(s"[graft.pipeline] emb budget dropped $dropped gray-zone pairs (> $cap per doc)")
-        embBudgetDropped.foreach(_.add(dropped))
-        ranked.filter($"rn" <= cap)
-    }).select($"a", $"b")
-
+    val embGray = !$"exact" && lit(conf.embedEnabled) && $"votes_base" === (need - 1)
+    def budgetDropped(cap: Int, dropped: Long): Unit = {
+      if (dropped > 0)
+        System.err.println(s"[graft.pipeline] emb budget dropped $dropped gray-zone pairs (> $cap per doc)")
+      embBudgetDropped.foreach(_.add(dropped))
+    }
     // Span pass: every non-exact pair short of consensus that is near
     // enough (spanCandidateMinJaccard). It only reports shared_span_len, so
     // it is budgeted per doc and boilerplate-heavy corpora can't drown the
     // verify stage.
-    val spanPairsIn = base
-      .filter(!$"exact" && $"votes_base" < need && $"jaccard" >= conf.spanCandidateMinJaccard)
-      .withColumn("rn", row_number().over(rankW))
-      .filter($"rn" <= conf.spanMaxPairsPerDoc)
-      .select($"a", $"b")
+    val spanNear = !$"exact" && $"votes_base" < need && $"jaccard" >= conf.spanCandidateMinJaccard
 
     val dim = conf.embedDim
     val spanCap = conf.spanMaxTextChars
@@ -450,92 +463,133 @@ object DedupPipeline {
     // (measured 9.5 core-s at 4 shuffle partitions vs 100.6 core-s at 16
     // for the identical 1.48M pairs). Per-doc embed is partitioning-
     // independent and is the only shape that survives a real embedding
-    // model at corpus scale.
-    val embUrls = embPairsIn.select($"a".as("url"))
-      .union(embPairsIn.select($"b".as("url"))).distinct()
-    // Texts are embedded where they lie: the gray-zone url set is semi-
-    // joined onto `norm`, as the broadcast side on the broadcast path.
-    // Consumed by both pair sides — materialize so docs embed once.
-    val docEmb = ckpt(spark, norm.select($"url", $"norm_text")
-      .join(if (bc) broadcast(embUrls) else embUrls, Seq("url"), "left_semi")
-      .as[(String, String)]
-      .map { case (u, t) =>
-        val t0 = System.nanoTime()
-        val v = CheapEmbed.embed(t, dim)
-        embNanos.foreach(_.add(System.nanoTime() - t0))
-        (u, v)
-      }.toDF("url", "vec"), conf)
-    // ---- two INDEPENDENT per-pair passes, each ending narrow ----
-    // Round 3 ran one conditional-join chain for both learners (vectors and
-    // span texts attached in four consecutive SHUFFLE_HASH joins, one
-    // mapPartitions). That cascade re-ships every earlier payload through
-    // every later exchange: by the span joins each emb pair carried
-    // va+vb (2 x embedDim floats = 3 kB) plus a span-capped text — at the
-    // 450k-page cluster bench those were the two dominant stages (16 + 19 GB
-    // of shuffle, 58.8 GB total, measured 2026-08-17). Splitting the paths
-    // means each pair ships only the payload its own learner reads, and
-    // each pass ends in a fixed-width (a, b, score) relation, so on the
-    // shuffle path the fat bytes cross exactly ONE exchange (the second
-    // side join feeds the map in the same stage), and on the broadcast
-    // path none. Costs one extra narrow join onto `base` + a few
-    // scheduling-bound jobs — noise at any corpus size against tens of GB
-    // of exchange traffic. Results are bit-identical: same
-    // per-pair math, same left-join-onto-base semantics.
-    val embScored: DataFrame = embPairsIn
-      .join(docSide(docEmb.select($"url".as("ea"), $"vec".as("va"))), $"a" === $"ea")
-      .join(docSide(docEmb.select($"url".as("eb"), $"vec".as("vb"))), $"b" === $"eb")
-      .select($"a", $"b", $"va", $"vb")
-      .as[(String, String, Array[Float], Array[Float])]
-      .mapPartitions { it =>
-        it.map { case (a, b, va, vb) =>
+    // model at corpus scale. Texts are embedded where they lie: the
+    // gray-zone url set is semi-joined onto `norm`, as the broadcast side
+    // on the broadcast path. Consumed by both pair sides — materialize so
+    // docs embed once.
+    def embedDocs(embPairs: DataFrame): DataFrame = {
+      val embUrls = embPairs.select($"a".as("url")).union(embPairs.select($"b".as("url"))).distinct()
+      ckpt(spark, norm.select($"url", $"norm_text")
+        .join(if (bc) broadcast(embUrls) else embUrls, Seq("url"), "left_semi")
+        .as[(String, String)]
+        .map { case (u, t) =>
           val t0 = System.nanoTime()
-          val cos = CheapEmbed.cosine(va, vb)
+          val v = CheapEmbed.embed(t, dim)
           embNanos.foreach(_.add(System.nanoTime() - t0))
-          (a, b, cos)
-        }
-      }.toDF("ea_", "eb_", "emb_cos")
+          (u, v)
+        }.toDF("url", "vec"), conf)
+    }
+    def vecSide(docEmb: DataFrame, side: String) =
+      docSide(docEmb.select($"url".as(s"e$side"), $"vec".as(s"v$side")))
     // Texts are capped to spanMaxTextChars code points IN the projection,
     // so neither the pair shuffle nor the broadcast carries bytes the
     // suffix automaton won't read (a capped text can hold up to 2 x spanCap
     // UTF-16 units; the automaton workspace grows to fit). The automaton
-    // pass is byte-normal (~0.2ms/pair) but its key-only input is small, so
-    // AQE's size-based coalescing can put the whole pass in one task (on
-    // `dense` seed 1: 16.7k pairs, 1.2 s in a single task).
-    val na = norm.select($"url".as("na_url"),
-      substring($"norm_text", 1, spanCap).as("a_text"))
-    val nb = norm.select($"url".as("nb_url"),
-      substring($"norm_text", 1, spanCap).as("b_text"))
-    // One automaton per anchor doc `b`: the pairs reach the pass
-    // hash-partitioned by b — on the shuffle path by the second side
-    // join's exchange, on the broadcast path by an exchange of the key-only
-    // pairs before the (partitioning-preserving) broadcast joins — so
-    // sorting within partitions (no exchange) makes each b's pairs one run;
-    // the pass builds b's automaton once per run and streams every a_text
-    // through it (LCS is symmetric, so shared_span_len is unchanged).
-    // spanNanos sums build and stream time.
-    val spanScored: DataFrame = (if (bc) spanPairsIn.repartition($"b") else spanPairsIn)
-      .join(docSide(na), $"a" === $"na_url")
-      .join(docSide(nb), $"b" === $"nb_url")
-      .select($"a", $"b", $"a_text", $"b_text")
-      .sortWithinPartitions($"b")
-      .as[(String, String, String, String)]
-      .mapPartitions { it =>
-        val ws = new graft.sa.SuffixAutomaton.Workspace(spanCap)
-        var built: String = null // the b whose automaton ws holds
-        it.map { case (a, b, at, bt) =>
-          val t0 = System.nanoTime()
-          if (b != built) { graft.sa.SuffixAutomaton.build(bt, ws); built = b }
-          val span = graft.sa.SuffixAutomaton.stream(at, ws)
-          spanNanos.foreach(_.add(System.nanoTime() - t0))
-          (a, b, span)
-        }
-      }.toDF("sa_", "sb_", "shared_span_len")
+    // pass is byte-normal (~0.2ms/pair) but its exchanged input is small
+    // (keys only on the broadcast path), so AQE's size-based coalescing can
+    // put the whole pass in one task (on `dense` seed 1: 16.7k span pairs,
+    // 1.2 s in a single task).
+    def textSide(side: String) = docSide(norm.select($"url".as(s"n${side}_url"),
+      substring($"norm_text", 1, spanCap).as(s"${side}_text")))
+
+    val perPair: DataFrame = if (bc) {
+      // ---- broadcast path: one anchor-keyed pass ----
+      // `base` is the pairs as exchanged by `a`, sorted by (a, jaccard
+      // desc, b) for the window: a running count over that order ranks
+      // each learner's pairs within their anchor exactly as row_number()
+      // over the learner's own pairs would (b is unique within a).
+      val perA = Window.partitionBy($"a").orderBy($"jaccard".desc, $"b")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      def rankAmong(pairs: Column) = sum(pairs.cast("int")).over(perA)
+      val base = ckpt(spark, scored
+        .withColumn("do_emb", conf.embMaxPairsPerDoc.fold(embGray)(cap => embGray && rankAmong(embGray) <= cap))
+        .withColumn("do_span", spanNear && rankAmong(spanNear) <= conf.spanMaxPairsPerDoc), conf)
+      conf.embMaxPairsPerDoc.foreach(cap => budgetDropped(cap, base.filter(embGray && !$"do_emb").count()))
+      val docEmb = embedDocs(base.filter($"do_emb"))
+      // The payload joins stream `base` in its order; a key is null, so
+      // the payload null, where the pair's learner does not run. Each doc
+      // relation is broadcast once and reused for both pair sides.
+      base
+        .join(vecSide(docEmb, "a"), when($"do_emb", $"a") === $"ea", "left")
+        .join(vecSide(docEmb, "b"), when($"do_emb", $"b") === $"eb", "left")
+        .join(textSide("a"), when($"do_span", $"a") === $"na_url", "left")
+        .join(textSide("b"), when($"do_span", $"b") === $"nb_url", "left")
+        .select(struct(scoredCols: _*).as("p"), $"va", $"vb", $"a_text", $"b_text")
+        .as[(ScoredPair, Array[Float], Array[Float], String, String)]
+        .mapPartitions { it =>
+          // one automaton per anchor doc a: its pairs are one run
+          val span = new SpanScorer(spanCap, spanNanos)
+          it.map { case (p, va, vb, at, bt) =>
+            (p, Option(va).map(embCosine(_, vb, embNanos)), if (at == null) 0 else span(p.a, at, bt))
+          }
+        }.toDF("p", "emb_cos", "shared_span_len")
+        .select($"p.*", $"emb_cos", $"shared_span_len")
+    } else {
+      // base is consumed by three subtrees (span pairs, emb pairs and the
+      // final left join), four with the emb budget: checkpointing
+      // materializes the pair join ONCE as this narrow fixed-width relation
+      // (~100 B/row). Without it each consumer re-runs the array-carrying
+      // join — measured as three separate 2.4 GB map stages at the
+      // 150k-page bench. Local blocks are reclaimed by the ContextCleaner
+      // when the plan goes out of scope; reliableCheckpoints switches to
+      // durable checkpoint().
+      val base = ckpt(spark, scored, conf)
+      // ranked per anchor doc `a` by (jaccard desc, b) — a total order
+      // within a doc, so a cap keeps a deterministic set
+      val rankW = Window.partitionBy($"a").orderBy($"jaccard".desc, $"b")
+      val embPairsIn = (conf.embMaxPairsPerDoc match {
+        case None => base.filter(embGray)
+        case Some(cap) =>
+          val ranked = base.filter(embGray).withColumn("rn", row_number().over(rankW))
+          budgetDropped(cap, ranked.filter($"rn" > cap).count())
+          ranked.filter($"rn" <= cap)
+      }).select($"a", $"b")
+      val spanPairsIn = base.filter(spanNear)
+        .withColumn("rn", row_number().over(rankW))
+        .filter($"rn" <= conf.spanMaxPairsPerDoc)
+        .select($"a", $"b")
+      val docEmb = embedDocs(embPairsIn)
+      // ---- two INDEPENDENT per-pair passes, each ending narrow ----
+      // Round 3 ran one conditional-join chain for both learners (vectors
+      // and span texts attached in four consecutive SHUFFLE_HASH joins, one
+      // mapPartitions). That cascade re-ships every earlier payload through
+      // every later exchange: by the span joins each emb pair carried
+      // va+vb (2 x embedDim floats = 3 kB) plus a span-capped text — at the
+      // 450k-page cluster bench those were the two dominant stages (16 + 19
+      // GB of shuffle, 58.8 GB total, measured 2026-08-17). Splitting the
+      // paths means each pair ships only the payload its own learner reads,
+      // and each pass ends in a fixed-width (a, b, score) relation, so the
+      // fat bytes cross exactly ONE exchange (the second side join feeds
+      // the map in the same stage). Costs one extra narrow join onto
+      // `base` + a few scheduling-bound jobs — noise at any corpus size
+      // against tens of GB of exchange traffic.
+      val embScored = embPairsIn
+        .join(vecSide(docEmb, "a"), $"a" === $"ea")
+        .join(vecSide(docEmb, "b"), $"b" === $"eb")
+        .select($"a", $"b", $"va", $"vb")
+        .as[(String, String, Array[Float], Array[Float])]
+        .map { case (a, b, va, vb) => (a, b, embCosine(va, vb, embNanos)) }
+        .toDF("ea_", "eb_", "emb_cos")
+      // One automaton per anchor doc `b`: the second side join's exchange
+      // hash-partitions the pairs by b, so sorting within partitions (no
+      // exchange) makes each b's pairs one run.
+      val spanScored = spanPairsIn
+        .join(textSide("a"), $"a" === $"na_url")
+        .join(textSide("b"), $"b" === $"nb_url")
+        .select($"a", $"b", $"a_text", $"b_text")
+        .sortWithinPartitions($"b")
+        .as[(String, String, String, String)]
+        .mapPartitions { it =>
+          val span = new SpanScorer(spanCap, spanNanos)
+          it.map { case (a, b, at, bt) => (a, b, span(b, bt, at)) }
+        }.toDF("sa_", "sb_", "shared_span_len")
+      base
+        .join(embScored, $"a" === $"ea_" && $"b" === $"eb_", "left")
+        .join(spanScored, $"a" === $"sa_" && $"b" === $"sb_", "left")
+    }
 
     val thrEmb = conf.thrEmbedCosine
-
-    val joined = base
-      .join(embScored, $"a" === $"ea_" && $"b" === $"eb_", "left")
-      .join(spanScored, $"a" === $"sa_" && $"b" === $"sb_", "left")
+    val labeled = perPair
       .withColumn("shared_span_len", coalesce($"shared_span_len", lit(0)))
       // Embedding vote (arbiter.py:260-320, uncalibrated): backstop
       // cos >= cosine_threshold OR (cos+1)/2 >= cosine_threshold.
@@ -544,8 +598,6 @@ object DedupPipeline {
       .withColumn("votes",
         when($"exact", lit(3))
           .otherwise($"votes_base" + $"vote_emb".cast("int")))
-
-    val labeled = joined
       .withColumn("is_dup", $"exact" || ($"votes" >= need))
       .withColumn("final_label", when($"is_dup", "DUPLICATE").otherwise("NON_DUPLICATE"))
       .withColumn("dup_kind",
@@ -662,9 +714,15 @@ object DedupPipeline {
       // (187k of 450k rows at the scaling corpus) cuts both ~2.4x — the
       // shuffle path measured +10% on 06_verdicts when this was briefly
       // swapped to the full norm in r06. Results identical either way
-      // (pair urls are always reps).
+      // (pair urls are always reps). Materialized once, as ingest does its
+      // texts: verify's size count, its embedding pass and its text sides
+      // read the blocks instead of re-running the rep join, and no plan of
+      // verify's holds that join, so Spark injects no runtime bloom filter
+      // over 02_reps into it (that subquery cost 2 jobs and an exchange,
+      // and the join it pruned ran as a broadcast anyway).
+      val verifyNorm = ckpt(spark, repNorm.toDF(), conf).as[DocNorm]
       val (verdicts, counters) =
-        verifyStage(spark, cands, sigs, repNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc))
+        verifyStage(spark, cands, sigs, verifyNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc))
       (verdicts.toDF(), () => counters ++ Map(RunMetrics.EmbBudgetDropped -> budgetAcc.value,
         RunMetrics.EmbWallMs -> embAcc.value / 1000000L, RunMetrics.SpanWallMs -> spanAcc.value / 1000000L))
     }

@@ -193,30 +193,45 @@ class IncrementalDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("ingest's verdicts are the same on both verify paths") {
     // members m1-m4 are exact variants of a family's base m0 (they attach
     // by hash and are never signed); the batch holds m5 (near) and m6
-    // (unrelated), so it is signed and verified against the base
-    val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 12, membersPerFamily = 7)
+    // (unrelated), so it is signed and verified against the base. With
+    // caps of one pair per doc, families of 14 also put a second near
+    // variant (m12) and a second unrelated one (m13) in the batch.
     def m(u: String) = u.split("/m")(1).toInt
-    val conf = DedupConfig.balanced
-    val oldDir = freshDir("paths_old")
-    graft.plans.DedupPipeline.run(spark, pages.filter(p => m(p.url) < 5), oldDir, conf, resume = false)
-    val batch = pages.filter(p => m(p.url) >= 5)
-    // inc_06_verdicts' rows and its marker's counters
-    def ingestOn(tag: String, bound: Long): (Set[String], Map[String, Long]) = {
-      val dir = freshDir(tag)
-      graft.plans.IncrementalDedup.ingest(spark, oldDir, batch, dir, conf, verifyBroadcastMaxBytes = bound)
-      val stage = s"$dir/inc_06_verdicts"
-      val markers = new java.io.File(stage).list().filter(_.startsWith("_graft_conf_"))
-      assert(markers.length == 1, markers.toSeq)
-      (spark.read.parquet(stage).collect().map(_.toString).toSet,
-        graft.plans.StageStore.counters(spark, stage, markers.head.stripPrefix("_graft_conf_")))
+    val binding = DedupConfig.balanced.copy(spanMaxPairsPerDoc = 1, embMaxPairsPerDoc = Some(1))
+    Seq((DedupConfig.balanced, 7), (binding, 14)).foreach { case (conf, members) =>
+      val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 12, membersPerFamily = members)
+      val oldDir = freshDir(s"paths_old_$members")
+      graft.plans.DedupPipeline.run(spark, pages.filter(p => m(p.url) < 5), oldDir, conf, resume = false)
+      val batch = pages.filter(p => m(p.url) >= 5)
+      // inc_06_verdicts' rows and its marker's counters
+      def ingestOn(tag: String, bound: Long): (Seq[graft.model.Schemas.Verdict], Map[String, Long]) = {
+        import spark.implicits._
+        val dir = freshDir(tag)
+        graft.plans.IncrementalDedup.ingest(spark, oldDir, batch, dir, conf, verifyBroadcastMaxBytes = bound)
+        val stage = s"$dir/inc_06_verdicts"
+        val markers = new java.io.File(stage).list().filter(_.startsWith("_graft_conf_"))
+        assert(markers.length == 1, markers.toSeq)
+        (spark.read.parquet(stage).as[graft.model.Schemas.Verdict].collect().toSeq,
+          graft.plans.StageStore.counters(spark, stage, markers.head.stripPrefix("_graft_conf_")))
+      }
+      val (verdicts, bc) = ingestOn(s"paths_broadcast_$members", graft.plans.DedupPipeline.VerifyBroadcastMaxBytes)
+      val broadcast = verdicts.map(_.toString).toSet
+      val (shuffledRows, sh) = ingestOn(s"paths_shuffle_$members", 0L)
+      val shuffled = shuffledRows.map(_.toString).toSet
+      assert(bc("verify_broadcast") == 1L && sh("verify_broadcast") == 0L)
+      assert(bc("verify_doc_bytes") > 0L && bc("verify_doc_bytes") == sh("verify_doc_bytes"))
+      assert(broadcast.nonEmpty)
+      assert(broadcast == shuffled,
+        s"only-broadcast=${(broadcast -- shuffled).take(3)}, only-shuffle=${(shuffled -- broadcast).take(3)}")
+      if (conf == binding) {
+        // the embedding cap binds: an anchor doc has two gray-zone pairs
+        // (one vote short), and each anchor keeps one
+        def perAnchor(p: graft.model.Schemas.Verdict => Boolean) =
+          verdicts.filter(v => !v.exact && p(v)).groupBy(_.a).values.map(_.size).max
+        assert(perAnchor(v => Seq(v.vote_sim, v.vote_min).count(identity) == conf.requiredVotes - 1) > 1)
+        assert(perAnchor(_.emb_cos.isDefined) == 1)
+      }
     }
-    val (broadcast, bc) = ingestOn("paths_broadcast", graft.plans.DedupPipeline.VerifyBroadcastMaxBytes)
-    val (shuffled, sh) = ingestOn("paths_shuffle", 0L)
-    assert(bc("verify_broadcast") == 1L && sh("verify_broadcast") == 0L)
-    assert(bc("verify_doc_bytes") > 0L && bc("verify_doc_bytes") == sh("verify_doc_bytes"))
-    assert(broadcast.nonEmpty)
-    assert(broadcast == shuffled,
-      s"only-broadcast=${(broadcast -- shuffled).take(3)}, only-shuffle=${(shuffled -- broadcast).take(3)}")
   }
 
   test("ingest exchanges the new bands, their bucket keys and the pair members at most once each") {

@@ -2,12 +2,13 @@ package graft
 
 import graft.plans.DedupPipeline
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, BroadcastQueryStageExec}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,6 +26,9 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def planOf(df: DataFrame): String =
     df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
+  /** The sf0.001 pipeline run, made (or resumed) once for the suite. */
+  private lazy val runDir = SparkEntry.pipelineRunDir(spark, sf)
+
   /** verifyStage over the sf0.001 pipeline run's persisted stages, on the
     * path `broadcastMaxBytes` selects (0 reaches the shuffle path). The doc
     * texts are the whole 01_norm, or with `repsOnly` its exact-group reps
@@ -32,7 +36,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     */
   private def persistedVerify(broadcastMaxBytes: Long, repsOnly: Boolean = false): (DataFrame, Map[String, Long]) = {
     import spark.implicits._
-    val rd = SparkEntry.pipelineRunDir(spark, sf)
+    val rd = runDir
     val allNorm = spark.read.parquet(s"$rd/01_norm")
     val norm = (if (!repsOnly) allNorm else {
       val reps = spark.read.parquet(s"$rd/02_reps")
@@ -142,11 +146,17 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("verify stage: verdicts are invariant to the shuffle-partition count") {
-    // on both paths: broadcast (the default bound) and shuffle (bound 0)
+    // on both paths: broadcast (the default bound) and shuffle (bound 0),
+    // with the default per-doc caps, and with caps of one pair per doc on
+    // families with two near variants (members 5 and 12), so a base doc
+    // has more pairs than the caps keep
     import spark.implicits._
-    val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 7)
-    val conf = DedupConfig.balanced
-    def verdicts(broadcastMaxBytes: Long): Set[String] = {
+    val corpus = Map(7 -> graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 7)._1,
+      14 -> graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 14)._1)
+    val binding = DedupConfig.balanced.copy(spanMaxPairsPerDoc = 1, embMaxPairsPerDoc = Some(1))
+    // the verdicts and the embedding budget's drop count
+    def verdicts(conf: DedupConfig, broadcastMaxBytes: Long): (Seq[graft.model.Schemas.Verdict], Long) = {
+      val pages = corpus(if (conf == binding) 14 else 7)
       val norm = graft.plans.DedupPipeline.normalizeStage(spark, pages)
       val reps = graft.plans.DedupPipeline.repMap(spark, norm)
       val repNorm = norm.join(reps.filter($"url" === $"rep").select($"rep"),
@@ -154,21 +164,41 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val sigs = graft.plans.DedupPipeline.signatureStage(spark, repNorm, conf)
       val bands = graft.plans.DedupPipeline.bandingStage(spark, sigs, conf)
       val (cands, _) = graft.plans.DedupPipeline.candidateStage(spark, bands, conf)
+      val dropped = spark.sparkContext.longAccumulator
       val (out, counters) = graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, repNorm, conf,
-        broadcastMaxBytes = broadcastMaxBytes)
+        embBudgetDropped = Some(dropped), broadcastMaxBytes = broadcastMaxBytes)
       assert(counters("verify_broadcast") == (if (broadcastMaxBytes > 0) 1L else 0L))
-      out.collect().map(_.toString).toSet
+      (out.collect().toSeq.sortBy(_.pair_key), dropped.value)
+    }
+    // every verdict column, rendered, and the drop count
+    def rendered(conf: DedupConfig, broadcastMaxBytes: Long) = {
+      val (vs, dropped) = verdicts(conf, broadcastMaxBytes)
+      (vs.map(_.toString), dropped)
     }
     val broadcast = DedupPipeline.VerifyBroadcastMaxBytes
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val atDefault = verdicts(broadcast)
-    assert(atDefault.nonEmpty)
-    assert(verdicts(0L) == atDefault, "the shuffle path's verdicts differ from the broadcast path's")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "3")
-      assert(verdicts(broadcast) == atDefault)
-      assert(verdicts(0L) == atDefault)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Seq(DedupConfig.balanced, binding).foreach { conf =>
+      val atDefault = rendered(conf, broadcast)
+      assert(atDefault._1.nonEmpty)
+      assert(rendered(conf, 0L) == atDefault, s"the shuffle path's verdicts differ from the broadcast path's: $conf")
+      try {
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        assert(rendered(conf, broadcast) == atDefault)
+        assert(rendered(conf, 0L) == atDefault)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    // the binding caps do bind: some anchor doc has more than one pair each
+    // learner could take, and each anchor keeps one
+    val (capped, dropped) = verdicts(binding, broadcast)
+    val need = binding.requiredVotes
+    def votesBase(v: graft.model.Schemas.Verdict) = Seq(v.vote_sim, v.vote_min).count(identity)
+    def perAnchor(p: graft.model.Schemas.Verdict => Boolean) =
+      capped.filter(v => !v.exact && p(v)).groupBy(_.a).values.map(_.size).max
+    assert(perAnchor(votesBase(_) == need - 1) > 1, "no anchor has two gray-zone pairs")
+    assert(perAnchor(v => votesBase(v) < need && v.jaccard >= binding.spanCandidateMinJaccard) > 1,
+      "no anchor has two span pairs")
+    assert(dropped > 0)
+    assert(perAnchor(_.emb_cos.isDefined) == 1 && perAnchor(_.shared_span_len > 0) == 1)
   }
 
   test("winnow: derivation is shuffle-free; matching is an equi-join, no cartesian") {
@@ -326,34 +356,34 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("verify stage, broadcast path: the span pass exchanges key-only pairs by b before its anchor sort") {
-    // one automaton per anchor doc b needs each b's pairs in one partition:
-    // on the broadcast path the only exchange between the anchor sort and
-    // the span pairs is a hash exchange on b carrying (a, b)
-    val (verdicts, counters) = persistedVerify(DedupPipeline.VerifyBroadcastMaxBytes)
-    assert(counters("verify_broadcast") == 1L)
-    val plan = verdicts.queryExecution.executedPlan // not yet executed: the initial adaptive plan
-    def named(p: SparkPlan, n: String) = p.output.exists(_.name == n)
-    def keys(es: Seq[Expression]) = es.collect { case a: Attribute => a.name }
-    val anchorSorts = collect(plan) {
-      case s: SortExec if named(s, "a_text") && keys(s.sortOrder.map(_.child)) == Seq("b") => s
+  test("verify stage, broadcast path: the pairs cross one exchange, keyed by a, and no join is keyed on (a, b)") {
+    // every action verify runs, the verdicts' own collect included: besides
+    // the size count's global aggregate and the embedding pass's url set,
+    // the only exchange is the pairs' one, hash-keyed by anchor doc a; the
+    // per-text learners rank, score and join back onto it with none
+    runDir // the persisted stages, made outside the listened actions
+    val ((rows, counters), ran) = TestUtil.executedPlans(spark) {
+      val (verdicts, counters) = persistedVerify(DedupPipeline.VerifyBroadcastMaxBytes)
+      (verdicts.collect(), counters)
     }
-    assert(anchorSorts.size == 1, s"expected one anchor sort:\n$plan")
-    // the first shuffle exchanges met walking down from the sort, not
-    // descending into broadcasts
-    def firstShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case e: ShuffleExchangeExec => Seq(e)
-      case _: BroadcastExchangeExec | _: BroadcastQueryStageExec => Nil
-      case _ => allChildren(p).flatMap(firstShuffles)
+    assert(rows.nonEmpty && counters("verify_broadcast") == 1L)
+    def names(es: Seq[Expression]) = es.flatMap(_.references.map(_.name)).toSet
+    val exchanges = ran.flatMap(p => collect(p) { case e: ShuffleExchangeExec => e })
+    def keyedBy(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning => Some(names(h.expressions))
+      case _ => None
     }
-    val below = firstShuffles(anchorSorts.head)
-    assert(below.size == 1, s"expected one exchange below the anchor sort:\n${anchorSorts.head}")
-    val ex = below.head
-    assert(ex.output.map(_.name).toSet == Set("a", "b"), s"the span pairs' exchange carries ${ex.output}")
-    assert(ex.outputPartitioning match {
-      case h: HashPartitioning => keys(h.expressions) == Seq("b")
-      case _ => false
-    }, s"the span pairs' exchange is not keyed by b: ${ex.outputPartitioning}")
+    val sizeCount = exchanges.filter(_.outputPartitioning == SinglePartition)
+    val embUrls = exchanges.filter(e => keyedBy(e).contains(Set("url")) && e.output.map(_.name) == Seq("url"))
+    val pairs = exchanges.filter(e => keyedBy(e).contains(Set("a")))
+    assert(sizeCount.size == 1 && embUrls.size == 1, s"size count: $sizeCount, url set: $embUrls")
+    assert(pairs.size == 1, s"the pairs cross ${pairs.size} exchanges keyed by a:\n${pairs.mkString("\n")}")
+    val other = exchanges.filterNot(e => (sizeCount ++ embUrls ++ pairs).exists(_ eq e))
+    assert(other.isEmpty, s"other exchanges:\n${other.mkString("\n")}")
+    val pairJoins = ran.flatMap(p => collect(p) {
+      case j: BaseJoinExec if Seq(j.leftKeys, j.rightKeys).exists(ks => Set("a", "b").subsetOf(names(ks))) => j
+    })
+    assert(pairJoins.isEmpty, s"joins keyed on (a, b):\n${pairJoins.mkString("\n")}")
   }
 
   test("sketch and chunking plans: CMS is one partial-agg shuffle; chunking is map-only") {

@@ -14,7 +14,8 @@ object TestUtil {
 
   /** Runs `body` and returns its result with the executed physical plan of
     * every Dataset action it ran (collects, counts, checkpoints), in the
-    * order they finished. Under AQE a plan is the final adaptive plan.
+    * order they finished, and of no action that finished before it. Under
+    * AQE a plan is the final adaptive plan.
     */
   def executedPlans[T](spark: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
@@ -22,6 +23,8 @@ object TestUtil {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    // actions that finished before `body` may still be queued on the bus
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val out = body
