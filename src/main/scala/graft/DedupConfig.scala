@@ -43,17 +43,6 @@ final case class DedupConfig(
     // domain keeps its first `cap` pairs by (a, b) via a salted two-phase
     // top-k (no single-task sort of a flooded domain), drops logged.
     maxCandidatesPerDomain: Option[Int] = None,
-    // Per-doc EMBEDDING-pair budget — the density knob the 900k-page
-    // scaling measurement isolates (BENCH/BASELINE.md round-4 density
-    // stress): at 68 pairs/doc, 83% of verified pairs sat in the one-vote
-    // gray zone and took the embedding tiebreak (50.8M emb pairs, the
-    // dominant verify exchange). When set, each doc keeps only its `cap`
-    // highest-jaccard gray-zone pairs for the embedding pass (deterministic
-    // tie-break by partner url); dropped pairs score vote_emb = false —
-    // i.e. they resolve NON_DUPLICATE unless another learner already
-    // carried them, a disclosed recall trade documented with a logged drop
-    // count. Opt-in (None = parity: the reference embeds every gray pair).
-    embMaxPairsPerDoc: Option[Int] = None,
     // ---- corpus-level boilerplate shingle suppression (density knob) ----
     // The pair-density lever the 900k-page scaling measurement motivates
     // (BENCH/BASELINE.md round-4 density stress): shingles appearing in more

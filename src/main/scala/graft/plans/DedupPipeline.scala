@@ -303,19 +303,17 @@ object DedupPipeline {
     perDoc.agg(coalesce(sum($"bytes"), lit(0L))).first().getLong(0)
   }
 
-  /** `base`'s columns: one candidate pair scored by the two signature
-    * learners, before the per-text learners run.
+  /** `base`'s columns: one candidate pair measured by the two signature
+    * learners, before the per-text learners run; their votes are
+    * expressions over these columns.
     */
-  private[plans] final case class ScoredPair(a: String, b: String, exact: Boolean, jaccard: Double,
-                                             hamming: Int, sim_sim: Double, vote_sim: Boolean,
-                                             vote_min: Boolean, votes_base: Int)
+  private[plans] final case class ScoredPair(a: String, b: String, exact: Boolean, jaccard: Double, hamming: Int)
 
   /** The embedding learner's score of one pair; its time goes to `nanos`. */
-  private def embCosine(va: Array[Float], vb: Array[Float],
-                        nanos: Option[org.apache.spark.util.LongAccumulator]): Double = {
+  private def embCosine(va: Array[Float], vb: Array[Float], nanos: org.apache.spark.util.LongAccumulator): Double = {
     val t0 = System.nanoTime()
     val cos = CheapEmbed.cosine(va, vb)
-    nanos.foreach(_.add(System.nanoTime() - t0))
+    nanos.add(System.nanoTime() - t0)
     cos
   }
 
@@ -326,14 +324,14 @@ object DedupPipeline {
     * symmetric, so either side of a pair can be the anchor). Build and
     * stream time go to `nanos`.
     */
-  private final class SpanScorer(spanCap: Int, nanos: Option[org.apache.spark.util.LongAccumulator]) {
+  private final class SpanScorer(spanCap: Int, nanos: org.apache.spark.util.LongAccumulator) {
     private val ws = new graft.sa.SuffixAutomaton.Workspace(spanCap)
     private var built: String = null // the anchor whose automaton ws holds
     def apply(anchor: String, anchorText: String, other: String): Int = {
       val t0 = System.nanoTime()
       if (anchor != built) { graft.sa.SuffixAutomaton.build(anchorText, ws); built = anchor }
       val span = graft.sa.SuffixAutomaton.stream(other, ws)
-      nanos.foreach(_.add(System.nanoTime() - t0))
+      nanos.add(System.nanoTime() - t0)
       span
     }
   }
@@ -345,39 +343,47 @@ object DedupPipeline {
     * (suffix automaton) pass only reports `shared_span_len` for near-miss
     * non-exact pairs short of consensus, never changing a label. Each
     * per-text learner takes its pairs from the scored pairs (`base`) with
-    * one predicate, ranked per anchor doc `a` by (jaccard desc, b) where a
-    * budget caps them (`embMaxPairsPerDoc`, `spanMaxPairsPerDoc`).
+    * one predicate; the span pass keeps each anchor doc `a`'s first
+    * `spanMaxPairsPerDoc` by (jaccard desc, b).
     *
-    * Run counters go into the optional accumulators: the summed task time
-    * of the embedding and span passes (`embNanos`, `spanNanos`, filled as
-    * the result is computed) and the gray-zone pairs the embedding budget
-    * denied (`embBudgetDropped`, added on the calling thread).
-    *
-    * One pair join per side attaches each doc's hashed-shingle array,
-    * simhash words and exact hash; every pair gets the exact merge-count
-    * Jaccard and the SimHash Hamming distance, and the scored relation is
+    * One dataflow on both sides of the broadcast bound. One pair join per
+    * side attaches each doc's hashed-shingle array, simhash words and
+    * exact hash, `b`'s first and `a`'s last, so the scored pairs end
+    * hash-partitioned by `a`; every pair gets the exact merge-count
+    * Jaccard and the SimHash Hamming distance, a window with no exchange
+    * of its own ranks the span pairs per `a`, and the result is
     * checkpointed narrow (`base`). Each doc's embedding is computed once,
-    * in place: the gray-zone url set is semi-joined onto `norm`.
+    * in place: the gray-zone url set is semi-joined onto `norm`. Then `a`'s
+    * vector and capped text attach (joins keyed on `a`) and are nulled
+    * where the pair's learner does not run, the pairs cross ONE exchange
+    * keyed by `b` carrying only those payloads, `b`'s side attaches, and
+    * one pass scores both learners with one suffix automaton per anchor
+    * doc. Each payload column crosses at most one pair exchange: round 3
+    * chained the learners' four joins so that every later exchange
+    * re-shipped every earlier payload (16 + 19 GB of the 58.8 GB shuffle
+    * at the 450k-page cluster bench).
     *
     * How the doc side reaches the pairs follows from an exact count taken
     * first ([[verifyDocBytes]]). At most `broadcastMaxBytes` (default
     * [[VerifyBroadcastMaxBytes]]; tests pass 0 to reach the shuffle path),
-    * every doc relation is broadcast and the pairs cross ONE exchange:
-    * the key-only candidates, hash-keyed by `a`. `base` keeps that layout,
-    * sorted by (a, jaccard desc, b), so a window with no exchange of its
-    * own ranks both learners' pairs, and one narrow pass attaches the
-    * vectors and capped texts a pair's learners read (null for the rest),
-    * computes `emb_cos` and `shared_span_len` — one suffix automaton per
-    * anchor `a` — and feeds the verdict columns. No exchange or broadcast
-    * carries a full text (the count bounds the gray-zone url set too:
-    * every counted doc carries 4·embedDim bytes). Above the bound every
-    * pair join is a SHUFFLE_HASH join, which ships one doc's payload per
-    * pair through the exchange that keys the pairs by the other doc, and
-    * the two learners run as independent passes left-joined back onto
-    * `base` (see the comment there). Verdicts are the same on both paths.
-    * Returns the verdicts and the stage's run counters `verify_broadcast`
-    * (1 on the broadcast path) and `verify_doc_bytes` (the counted
-    * payload).
+    * every doc relation is broadcast, the key-only candidates cross the
+    * one exchange (keyed by `a`), no other pair exchange runs, and the span
+    * anchor is `a`: `base` keeps the exchange's layout, sorted by (a,
+    * jaccard desc, b). No exchange or broadcast carries a full text (the
+    * count bounds the gray-zone url set too: every counted doc carries
+    * 4·embedDim bytes). Above the bound every pair join is a SHUFFLE_HASH
+    * join, which ships one doc's payload per pair through the exchange
+    * that keys the pairs by the other doc, and the span anchor is `b`,
+    * the pairs sorted by it after the `b` exchange. A local checkpoint
+    * reports no partitioning under AQE, so there the `a`-keyed joins
+    * exchange the narrow `base` by `a` once more. Verdicts are the same on
+    * both paths.
+    *
+    * Returns the verdicts and a thunk of the stage's run counters, to read
+    * once the verdicts are computed: `verify_broadcast` (1 on the
+    * broadcast path), `verify_doc_bytes` (the counted payload) and
+    * `emb_wall_ms` / `span_wall_ms` (the summed task time of the embedding
+    * and span passes).
     *
     * Alternative scorers (a partition-aware cogroup, a MinHash-estimate and
     * a b-bit prefilter band) and the suffix-array span pass were measured
@@ -386,10 +392,7 @@ object DedupPipeline {
     */
   def verifyStage(spark: SparkSession, cands: Dataset[CandPair], sigs: Dataset[DocSig],
                   norm: Dataset[DocNorm], conf: DedupConfig,
-                  embNanos: Option[org.apache.spark.util.LongAccumulator] = None,
-                  spanNanos: Option[org.apache.spark.util.LongAccumulator] = None,
-                  embBudgetDropped: Option[org.apache.spark.util.LongAccumulator] = None,
-                  broadcastMaxBytes: Long = VerifyBroadcastMaxBytes): (Dataset[Verdict], Map[String, Long]) = {
+                  broadcastMaxBytes: Long = VerifyBroadcastMaxBytes): (Dataset[Verdict], () => Map[String, Long]) = {
     import spark.implicits._
 
     val docBytes = verifyDocBytes(spark, sigs, norm, conf)
@@ -399,10 +402,18 @@ object DedupPipeline {
     // 150k-page bench that is two sorts of ~2.4 GB of fat rows per join,
     // the verify stage's dominant CPU once the span pass went linear.
     // Hash-join streams the pairs side instead; the build side is the
-    // per-partition slice of the doc-keyed relation (~tens of MB). The
-    // hint also keeps AQE from turning a small doc side into a broadcast
-    // on its own, so the path is the one the count chose.
+    // per-partition slice of the doc-keyed relation (~tens of MB; the b
+    // join below builds from the pairs instead). The hint also keeps AQE
+    // from turning a small doc side into a broadcast on its own, so the
+    // path is the one the count chose.
     def docSide(df: DataFrame): DataFrame = if (bc) broadcast(df) else df.hint("SHUFFLE_HASH")
+    // the span anchor: base's own order runs each a's pairs together on the
+    // broadcast path; above the bound the pairs arrive by b
+    val anchorA = bc
+    // summed task time of the per-text learners — the evidence behind the
+    // span budget
+    val embNanos = spark.sparkContext.longAccumulator("graft.verify.embNanos")
+    val spanNanos = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
 
     // native Catalyst expression (codegen'd merge over ArrayData, no UDF
     // row conversion) — registered idempotently for sessions built in code;
@@ -415,45 +426,60 @@ object DedupPipeline {
     val bits = conf.simhashBits
     val hammingCol = (bit_count($"a_hi".bitwiseXOR($"b_hi")) +
       bit_count($"a_lo".bitwiseXOR($"b_lo"))).as("hamming")
+    // the signature learners' votes, from the measured columns
+    val simSim = greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble))
+    val voteSim = simSim >= conf.thrSimhash
+    val voteMin = $"jaccard" >= conf.thrMinhash
+    val votesBase = voteSim.cast("int") + voteMin.cast("int")
 
     val sa = sigs.select($"url".as("a_url"), $"shingles".as("a_sh"),
       $"exact_hash".as("a_eh"), $"simhash_hi".as("a_hi"), $"simhash_lo".as("a_lo"))
     val sb = sigs.select($"url".as("b_url"), $"shingles".as("b_sh"),
       $"exact_hash".as("b_eh"), $"simhash_hi".as("b_hi"), $"simhash_lo".as("b_lo"))
     val scoredCols = Encoders.product[ScoredPair].schema.fieldNames.toSeq.map(col)
-    // the broadcast path's one pair exchange: key-only, by anchor doc a
-    val scored = (if (bc) cands.toDF().repartition($"a") else cands.toDF())
+    // b's side first, then a's: above the bound the a join's exchange is the
+    // pairs' last, and on the broadcast path the one key-only exchange is by
+    // a, so the scored pairs are hash-partitioned by a on both paths. Above
+    // the bound the b join builds its hash table from the key-only pairs and
+    // streams b's signatures through it, so each b's pairs leave the join as
+    // one run and the a exchange carries runs of one shingle array, which
+    // lz4 compresses (built from the signatures, that exchange measured
+    // 234 MB instead of 154 MB at 30k pages)
+    val bJoined = if (bc) cands.toDF().repartition($"a").join(broadcast(sb), $"b" === $"b_url")
+      else cands.toDF().hint("SHUFFLE_HASH").join(sb, $"b" === $"b_url")
+    val scored = bJoined
       .join(docSide(sa), $"a" === $"a_url")
-      .join(docSide(sb), $"b" === $"b_url")
       .withColumn("exact", $"a_eh" === $"b_eh")
       .withColumn("jaccard", jaccardCol("a_sh", "b_sh"))
       .withColumn("hamming", hammingCol)
-      .withColumn("sim_sim", greatest(lit(0.0), lit(1.0) - $"hamming" / lit(bits.toDouble)))
-      .withColumn("vote_sim", $"sim_sim" >= conf.thrSimhash)
-      .withColumn("vote_min", $"jaccard" >= conf.thrMinhash)
-      .withColumn("votes_base", $"vote_sim".cast("int") + $"vote_min".cast("int"))
       .select(scoredCols: _*)
 
     val need = conf.requiredVotes
     // Embedding tiebreak: the gray-zone pairs, one vote short of consensus.
-    // Opt-in per-doc budget (DedupConfig.embMaxPairsPerDoc): keep each
-    // anchor doc's `cap` highest-jaccard gray-zone pairs; the rest resolve
-    // with vote_emb = false (emb_cos stays null). Drops are counted (one
-    // extra job, opted-in runs only), logged and reported.
-    val embGray = !$"exact" && lit(conf.embedEnabled) && $"votes_base" === (need - 1)
-    def budgetDropped(cap: Int, dropped: Long): Unit = {
-      if (dropped > 0)
-        System.err.println(s"[graft.pipeline] emb budget dropped $dropped gray-zone pairs (> $cap per doc)")
-      embBudgetDropped.foreach(_.add(dropped))
-    }
+    val embGray = !$"exact" && lit(conf.embedEnabled) && votesBase === (need - 1)
     // Span pass: every non-exact pair short of consensus that is near
     // enough (spanCandidateMinJaccard). It only reports shared_span_len, so
     // it is budgeted per doc and boilerplate-heavy corpora can't drown the
     // verify stage.
-    val spanNear = !$"exact" && $"votes_base" < need && $"jaccard" >= conf.spanCandidateMinJaccard
+    val spanNear = !$"exact" && votesBase < need && $"jaccard" >= conf.spanCandidateMinJaccard
 
     val dim = conf.embedDim
     val spanCap = conf.spanMaxTextChars
+
+    // `base` is consumed by the embedding pass's url set and by the scoring
+    // pass: checkpointing materializes the pair join ONCE as this narrow
+    // fixed-width relation (~100 B/row). Without it each consumer re-runs
+    // the array-carrying join — measured as separate 2.4 GB map stages at
+    // the 150k-page bench. The span pairs are ranked per anchor doc a by
+    // (jaccard desc, b), a total order within a doc, so the cap keeps a
+    // deterministic set: a running count over that order, in the scored
+    // pairs' a-partitioning, with no exchange of its own. Local blocks are
+    // reclaimed by the ContextCleaner when the plan goes out of scope;
+    // reliableCheckpoints switches to durable checkpoint().
+    val perA = Window.partitionBy($"a").orderBy($"jaccard".desc, $"b")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val base = ckpt(spark, scored.withColumn("do_span",
+      spanNear && sum(spanNear.cast("int")).over(perA) <= conf.spanMaxPairsPerDoc), conf)
 
     // ---- embedding tiebreak, two-phase (per-doc embed ONCE) ----
     // Each doc in an emb-needing pair is embedded exactly once and the
@@ -467,20 +493,18 @@ object DedupPipeline {
     // gray-zone url set is semi-joined onto `norm`, as the broadcast side
     // on the broadcast path. Consumed by both pair sides — materialize so
     // docs embed once.
-    def embedDocs(embPairs: DataFrame): DataFrame = {
-      val embUrls = embPairs.select($"a".as("url")).union(embPairs.select($"b".as("url"))).distinct()
-      ckpt(spark, norm.select($"url", $"norm_text")
-        .join(if (bc) broadcast(embUrls) else embUrls, Seq("url"), "left_semi")
-        .as[(String, String)]
-        .map { case (u, t) =>
-          val t0 = System.nanoTime()
-          val v = CheapEmbed.embed(t, dim)
-          embNanos.foreach(_.add(System.nanoTime() - t0))
-          (u, v)
-        }.toDF("url", "vec"), conf)
-    }
-    def vecSide(docEmb: DataFrame, side: String) =
-      docSide(docEmb.select($"url".as(s"e$side"), $"vec".as(s"v$side")))
+    val embPairs = base.filter(embGray)
+    val embUrls = embPairs.select($"a".as("url")).union(embPairs.select($"b".as("url"))).distinct()
+    val docEmb = ckpt(spark, norm.select($"url", $"norm_text")
+      .join(if (bc) broadcast(embUrls) else embUrls, Seq("url"), "left_semi")
+      .as[(String, String)]
+      .map { case (u, t) =>
+        val t0 = System.nanoTime()
+        val v = CheapEmbed.embed(t, dim)
+        embNanos.add(System.nanoTime() - t0)
+        (u, v)
+      }.toDF("url", "vec"), conf)
+    def vecSide(side: String) = docSide(docEmb.select($"url".as(s"e$side"), $"vec".as(s"v$side")))
     // Texts are capped to spanMaxTextChars code points IN the projection,
     // so neither the pair shuffle nor the broadcast carries bytes the
     // suffix automaton won't read (a capped text can hold up to 2 x spanCap
@@ -492,112 +516,42 @@ object DedupPipeline {
     def textSide(side: String) = docSide(norm.select($"url".as(s"n${side}_url"),
       substring($"norm_text", 1, spanCap).as(s"${side}_text")))
 
-    val perPair: DataFrame = if (bc) {
-      // ---- broadcast path: one anchor-keyed pass ----
-      // `base` is the pairs as exchanged by `a`, sorted by (a, jaccard
-      // desc, b) for the window: a running count over that order ranks
-      // each learner's pairs within their anchor exactly as row_number()
-      // over the learner's own pairs would (b is unique within a).
-      val perA = Window.partitionBy($"a").orderBy($"jaccard".desc, $"b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      def rankAmong(pairs: Column) = sum(pairs.cast("int")).over(perA)
-      val base = ckpt(spark, scored
-        .withColumn("do_emb", conf.embMaxPairsPerDoc.fold(embGray)(cap => embGray && rankAmong(embGray) <= cap))
-        .withColumn("do_span", spanNear && rankAmong(spanNear) <= conf.spanMaxPairsPerDoc), conf)
-      conf.embMaxPairsPerDoc.foreach(cap => budgetDropped(cap, base.filter(embGray && !$"do_emb").count()))
-      val docEmb = embedDocs(base.filter($"do_emb"))
-      // The payload joins stream `base` in its order; a key is null, so
-      // the payload null, where the pair's learner does not run. Each doc
-      // relation is broadcast once and reused for both pair sides.
-      base
-        .join(vecSide(docEmb, "a"), when($"do_emb", $"a") === $"ea", "left")
-        .join(vecSide(docEmb, "b"), when($"do_emb", $"b") === $"eb", "left")
-        .join(textSide("a"), when($"do_span", $"a") === $"na_url", "left")
-        .join(textSide("b"), when($"do_span", $"b") === $"nb_url", "left")
-        .select(struct(scoredCols: _*).as("p"), $"va", $"vb", $"a_text", $"b_text")
-        .as[(ScoredPair, Array[Float], Array[Float], String, String)]
-        .mapPartitions { it =>
-          // one automaton per anchor doc a: its pairs are one run
-          val span = new SpanScorer(spanCap, spanNanos)
-          it.map { case (p, va, vb, at, bt) =>
-            (p, Option(va).map(embCosine(_, vb, embNanos)), if (at == null) 0 else span(p.a, at, bt))
-          }
-        }.toDF("p", "emb_cos", "shared_span_len")
-        .select($"p.*", $"emb_cos", $"shared_span_len")
-    } else {
-      // base is consumed by three subtrees (span pairs, emb pairs and the
-      // final left join), four with the emb budget: checkpointing
-      // materializes the pair join ONCE as this narrow fixed-width relation
-      // (~100 B/row). Without it each consumer re-runs the array-carrying
-      // join — measured as three separate 2.4 GB map stages at the
-      // 150k-page bench. Local blocks are reclaimed by the ContextCleaner
-      // when the plan goes out of scope; reliableCheckpoints switches to
-      // durable checkpoint().
-      val base = ckpt(spark, scored, conf)
-      // ranked per anchor doc `a` by (jaccard desc, b) — a total order
-      // within a doc, so a cap keeps a deterministic set
-      val rankW = Window.partitionBy($"a").orderBy($"jaccard".desc, $"b")
-      val embPairsIn = (conf.embMaxPairsPerDoc match {
-        case None => base.filter(embGray)
-        case Some(cap) =>
-          val ranked = base.filter(embGray).withColumn("rn", row_number().over(rankW))
-          budgetDropped(cap, ranked.filter($"rn" > cap).count())
-          ranked.filter($"rn" <= cap)
-      }).select($"a", $"b")
-      val spanPairsIn = base.filter(spanNear)
-        .withColumn("rn", row_number().over(rankW))
-        .filter($"rn" <= conf.spanMaxPairsPerDoc)
-        .select($"a", $"b")
-      val docEmb = embedDocs(embPairsIn)
-      // ---- two INDEPENDENT per-pair passes, each ending narrow ----
-      // Round 3 ran one conditional-join chain for both learners (vectors
-      // and span texts attached in four consecutive SHUFFLE_HASH joins, one
-      // mapPartitions). That cascade re-ships every earlier payload through
-      // every later exchange: by the span joins each emb pair carried
-      // va+vb (2 x embedDim floats = 3 kB) plus a span-capped text — at the
-      // 450k-page cluster bench those were the two dominant stages (16 + 19
-      // GB of shuffle, 58.8 GB total, measured 2026-08-17). Splitting the
-      // paths means each pair ships only the payload its own learner reads,
-      // and each pass ends in a fixed-width (a, b, score) relation, so the
-      // fat bytes cross exactly ONE exchange (the second side join feeds
-      // the map in the same stage). Costs one extra narrow join onto
-      // `base` + a few scheduling-bound jobs — noise at any corpus size
-      // against tens of GB of exchange traffic.
-      val embScored = embPairsIn
-        .join(vecSide(docEmb, "a"), $"a" === $"ea")
-        .join(vecSide(docEmb, "b"), $"b" === $"eb")
-        .select($"a", $"b", $"va", $"vb")
-        .as[(String, String, Array[Float], Array[Float])]
-        .map { case (a, b, va, vb) => (a, b, embCosine(va, vb, embNanos)) }
-        .toDF("ea_", "eb_", "emb_cos")
-      // One automaton per anchor doc `b`: the second side join's exchange
-      // hash-partitions the pairs by b, so sorting within partitions (no
-      // exchange) makes each b's pairs one run.
-      val spanScored = spanPairsIn
-        .join(textSide("a"), $"a" === $"na_url")
-        .join(textSide("b"), $"b" === $"nb_url")
-        .select($"a", $"b", $"a_text", $"b_text")
-        .sortWithinPartitions($"b")
-        .as[(String, String, String, String)]
-        .mapPartitions { it =>
-          val span = new SpanScorer(spanCap, spanNanos)
-          it.map { case (a, b, at, bt) => (a, b, span(b, bt, at)) }
-        }.toDF("sa_", "sb_", "shared_span_len")
-      base
-        .join(embScored, $"a" === $"ea_" && $"b" === $"eb_", "left")
-        .join(spanScored, $"a" === $"sa_" && $"b" === $"sb_", "left")
-    }
+    // a's payloads attach where the pairs lie, keyed on a itself (an
+    // expression key would re-key the pairs), and are nulled where the
+    // pair's learner does not run BEFORE the b-keyed joins, so the b
+    // exchange carries each payload only for the pairs that read it. The
+    // b-keyed joins share that one exchange; on the broadcast path every
+    // join streams base in its order.
+    val withA = base
+      .join(vecSide("a"), $"a" === $"ea", "left")
+      .join(textSide("a"), $"a" === $"na_url", "left")
+      .select(scoredCols ++ Seq(when(embGray, $"va").as("va"), when($"do_span", $"a_text").as("a_text")): _*)
+      .join(vecSide("b"), $"b" === $"eb", "left")
+      .join(textSide("b"), $"b" === $"nb_url", "left")
+      .select(scoredCols ++ Seq($"va", when($"va".isNotNull, $"vb").as("vb"),
+        $"a_text", when($"a_text".isNotNull, $"b_text").as("b_text")): _*)
+    val perPair = (if (anchorA) withA else withA.sortWithinPartitions($"b"))
+      .select(struct(scoredCols: _*).as("p"), $"va", $"vb", $"a_text", $"b_text")
+      .as[(ScoredPair, Array[Float], Array[Float], String, String)]
+      .mapPartitions { it =>
+        // one automaton per anchor doc: its pairs are one run
+        val span = new SpanScorer(spanCap, spanNanos)
+        it.map { case (p, va, vb, at, bt) =>
+          (p, Option(va).map(embCosine(_, vb, embNanos)),
+            if (at == null) 0 else if (anchorA) span(p.a, at, bt) else span(p.b, bt, at))
+        }
+      }.toDF("p", "emb_cos", "shared_span_len")
+      .select($"p.*", $"emb_cos", $"shared_span_len")
 
     val thrEmb = conf.thrEmbedCosine
     val labeled = perPair
-      .withColumn("shared_span_len", coalesce($"shared_span_len", lit(0)))
       // Embedding vote (arbiter.py:260-320, uncalibrated): backstop
       // cos >= cosine_threshold OR (cos+1)/2 >= cosine_threshold.
       .withColumn("vote_emb", coalesce(
         ($"emb_cos" >= thrEmb) || ((($"emb_cos" + 1.0) / 2.0) >= thrEmb), lit(false)))
       .withColumn("votes",
         when($"exact", lit(3))
-          .otherwise($"votes_base" + $"vote_emb".cast("int")))
+          .otherwise(votesBase + $"vote_emb".cast("int")))
       .withColumn("is_dup", $"exact" || ($"votes" >= need))
       .withColumn("final_label", when($"is_dup", "DUPLICATE").otherwise("NON_DUPLICATE"))
       .withColumn("dup_kind",
@@ -610,13 +564,14 @@ object DedupPipeline {
     val verdicts = labeled.select($"a", $"b",
         when($"a" <= $"b", concat($"a", lit("||"), $"b"))
           .otherwise(concat($"b", lit("||"), $"a")).as("pair_key"),
-        $"exact", $"jaccard", $"hamming", $"sim_sim", $"emb_cos",
-        ($"exact" || $"vote_sim").as("vote_sim"),
-        ($"exact" || $"vote_min").as("vote_min"),
+        $"exact", $"jaccard", $"hamming", simSim.as("sim_sim"), $"emb_cos",
+        ($"exact" || voteSim).as("vote_sim"),
+        ($"exact" || voteMin).as("vote_min"),
         ($"exact" || $"vote_emb").as("vote_emb"),
         $"votes", $"shared_span_len", $"final_label", $"dup_kind", $"reason")
       .as[Verdict]
-    (verdicts, Map(RunMetrics.VerifyBroadcast -> (if (bc) 1L else 0L), RunMetrics.VerifyDocBytes -> docBytes))
+    (verdicts, () => Map(RunMetrics.VerifyBroadcast -> (if (bc) 1L else 0L), RunMetrics.VerifyDocBytes -> docBytes,
+      RunMetrics.EmbWallMs -> embNanos.value / 1000000L, RunMetrics.SpanWallMs -> spanNanos.value / 1000000L))
   }
 
   /** Stage 6: clustering. CC runs ONLY over the rep-level near-duplicate
@@ -656,8 +611,8 @@ object DedupPipeline {
     * [[StageStore]] finds its output and config marker — the north rule's
     * checkpoint-based resume. Run counters live in the marker of the stage
     * that measured them (`dropped_mega_buckets` and `dropped_domain_pairs`
-    * with 05_cand; `emb_budget_dropped`, `emb_wall_ms`, `span_wall_ms`,
-    * `verify_broadcast` and `verify_doc_bytes` with 06_verdicts;
+    * with 05_cand; `emb_wall_ms`, `span_wall_ms`, `verify_broadcast` and
+    * `verify_doc_bytes` with 06_verdicts;
     * `cc_rounds` with 07_clusters; `wall_ms` with every stage), so the
     * [[RunMetrics]] snapshot reports the same values on a resumed run as on
     * the cold run that computed them.
@@ -703,11 +658,6 @@ object DedupPipeline {
     val cands = candDf.as[CandPair]
 
     val verdictDf = stage.counted("06_verdicts") {
-      // summed task time of the per-text learners — the evidence behind the
-      // span/embedding budgets
-      val embAcc = spark.sparkContext.longAccumulator("graft.verify.embNanos")
-      val spanAcc = spark.sparkContext.longAccumulator("graft.verify.spanNanos")
-      val budgetAcc = spark.sparkContext.longAccumulator("graft.verify.embBudgetDropped")
       // repNorm, not the full norm: the span texts and vectors are counted
       // against the broadcast bound, and above it ship whole through their
       // SHUFFLE_HASH exchanges, so restricting them to exact-group reps
@@ -721,10 +671,8 @@ object DedupPipeline {
       // over 02_reps into it (that subquery cost 2 jobs and an exchange,
       // and the join it pruned ran as a broadcast anyway).
       val verifyNorm = ckpt(spark, repNorm.toDF(), conf).as[DocNorm]
-      val (verdicts, counters) =
-        verifyStage(spark, cands, sigs, verifyNorm, conf, Some(embAcc), Some(spanAcc), Some(budgetAcc))
-      (verdicts.toDF(), () => counters ++ Map(RunMetrics.EmbBudgetDropped -> budgetAcc.value,
-        RunMetrics.EmbWallMs -> embAcc.value / 1000000L, RunMetrics.SpanWallMs -> spanAcc.value / 1000000L))
+      val (verdicts, counters) = verifyStage(spark, cands, sigs, verifyNorm, conf)
+      (verdicts.toDF(), counters)
     }
 
     val clusters = stage.counted("07_clusters") {
@@ -789,7 +737,6 @@ object DedupPipeline {
       dropped_mega_buckets = counter(RunMetrics.DroppedMegaBuckets),
       dropped_domain_pairs = counter(RunMetrics.DroppedDomainPairs),
       emb_pairs = long("emb_pairs"), span_pairs = long("span_pairs"),
-      emb_budget_dropped = counter(RunMetrics.EmbBudgetDropped),
       emb_wall_ms = counter(RunMetrics.EmbWallMs), span_wall_ms = counter(RunMetrics.SpanWallMs),
       verify_broadcast = counter(RunMetrics.VerifyBroadcast), verify_doc_bytes = counter(RunMetrics.VerifyDocBytes),
       cc_rounds = counter(RunMetrics.CcRounds), stages = stages)

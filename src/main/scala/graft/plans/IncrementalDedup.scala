@@ -52,9 +52,10 @@ import scala.reflect.runtime.universe.TypeTag
   * `dropped_mega_buckets` and `capped_docs` (docs that lost a partner to
   * the per-doc cap; exact unless a task was retried), `inc_06_verdicts`
   * records `verify_broadcast` and `verify_doc_bytes` (which verify path
-  * ran, and the counted payload it was chosen from; see
-  * [[DedupPipeline.verifyStage]]), and `inc_07_assign` records
-  * `cc_rounds` (0 when the driver labelled the components). A freshly
+  * ran, and the counted payload it was chosen from) and `emb_wall_ms` /
+  * `span_wall_ms` (see [[DedupPipeline.verifyStage]]), and
+  * `inc_07_assign` records `cc_rounds` (0 when the driver labelled the
+  * components). A freshly
   * written stage and every old-run stage are read with their known
   * schemas, so no read runs Spark's schema-inference job; a resumed stage
   * infers its schema.
@@ -231,7 +232,7 @@ object IncrementalDedup {
       val normU = DedupPipeline.ckpt(spark, newNormDf.unionByName(oldNorm), conf).as[DocNorm]
       val (verdicts, counters) = DedupPipeline.verifyStage(spark, candDf.as[CandPair], sigsU, normU, conf,
         broadcastMaxBytes = verifyBroadcastMaxBytes)
-      (verdicts.toDF(), () => counters)
+      (verdicts.toDF(), counters)
     }
 
     // ---- touched-component clustering ----

@@ -11,17 +11,15 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * The verdict summary counts and the cluster count are recomputed from
   * the persisted verdicts and clusters on every run; `clustered_docs` is
   * the row count in 07_clusters' parquet footers. The run counters
-  * (`dropped_*`, `emb_budget_dropped`, `*_wall_ms`, `verify_*`,
-  * `cc_rounds`) are read back from the markers of the stage that measured
-  * them (05_cand, 06_verdicts and 07_clusters, see [[StageStore]]), so a
-  * resumed run reports exactly what its cold run recorded. A run with no
-  * candidate pairs reports 0 counts and a `consensus_rate` of 0.0.
+  * (`dropped_*`, `*_wall_ms`, `verify_*`, `cc_rounds`) are read back from
+  * the markers of the stage that measured them (05_cand, 06_verdicts and
+  * 07_clusters, see [[StageStore]]), so a resumed run reports exactly
+  * what its cold run recorded. A run with no candidate pairs reports 0
+  * counts and a `consensus_rate` of 0.0.
   *
   * @param dropped_mega_buckets LSH buckets dropped by the mega-bucket guard
   * @param dropped_domain_pairs candidate pairs dropped by
   *                             `maxCandidatesPerDomain` (0 when unset)
-  * @param emb_budget_dropped   gray-zone pairs denied the embedding
-  *                             tiebreak by `embMaxPairsPerDoc` (0 when unset)
   * @param emb_wall_ms          summed task time of the embedding tiebreak
   * @param span_wall_ms         summed task time of the span pass
   * @param verify_broadcast     1 when verify broadcast its doc-side
@@ -51,7 +49,6 @@ final case class RunMetrics(
     dropped_domain_pairs: Long,
     emb_pairs: Long,
     span_pairs: Long,
-    emb_budget_dropped: Long,
     emb_wall_ms: Long,
     span_wall_ms: Long,
     verify_broadcast: Long,
@@ -67,7 +64,6 @@ object RunMetrics {
   // metrics.json names
   private[plans] final val DroppedMegaBuckets = "dropped_mega_buckets"
   private[plans] final val DroppedDomainPairs = "dropped_domain_pairs"
-  private[plans] final val EmbBudgetDropped = "emb_budget_dropped"
   private[plans] final val EmbWallMs = "emb_wall_ms"
   private[plans] final val SpanWallMs = "span_wall_ms"
   private[plans] final val VerifyBroadcast = "verify_broadcast"

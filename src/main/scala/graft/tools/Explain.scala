@@ -51,11 +51,11 @@ object Explain {
     section("verdicts", verdicts,
       "Candidates joined to signatures (doc side broadcast when its counted " +
         "payload is at most VerifyBroadcastMaxBytes, else shuffled on url); decision columns " +
-        "are plain expressions. On the broadcast path (this plan) the key-only pairs cross " +
-        "one exchange by `a` into the checkpointed base, whose Window ranks both per-text " +
-        "learners' pairs; one mapPartitions scores them after broadcast left joins attach " +
-        "vectors and capped texts. Above the bound the embedding and span pairs are two " +
-        "left-joined mapPartitions branches.")
+        "are plain expressions. One dataflow on both paths: the checkpointed base's Window " +
+        "ranks the span pairs per `a`, `a`'s vector and capped text attach, the pairs meet " +
+        "`b`'s side and one mapPartitions scores both learners. On the broadcast path (this " +
+        "plan) the key-only pairs cross one exchange by `a` and every join is a broadcast; " +
+        "above the bound `a`'s payloads cross one exchange by `b`.")
     section("oracle query q_exact_dup_groups",
       SparkEntry.queries("q_exact_dup_groups")(spark, sfDir),
       "Exact-dup grouping: sha256 over the normalized text, hash aggregate.")

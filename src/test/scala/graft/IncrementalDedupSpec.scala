@@ -193,11 +193,11 @@ class IncrementalDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("ingest's verdicts are the same on both verify paths") {
     // members m1-m4 are exact variants of a family's base m0 (they attach
     // by hash and are never signed); the batch holds m5 (near) and m6
-    // (unrelated), so it is signed and verified against the base. With
-    // caps of one pair per doc, families of 14 also put a second near
+    // (unrelated), so it is signed and verified against the base. With a
+    // span cap of one pair per doc, families of 14 also put a second near
     // variant (m12) and a second unrelated one (m13) in the batch.
     def m(u: String) = u.split("/m")(1).toInt
-    val binding = DedupConfig.balanced.copy(spanMaxPairsPerDoc = 1, embMaxPairsPerDoc = Some(1))
+    val binding = DedupConfig.balanced.copy(spanMaxPairsPerDoc = 1)
     Seq((DedupConfig.balanced, 7), (binding, 14)).foreach { case (conf, members) =>
       val (pages, _) = graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 12, membersPerFamily = members)
       val oldDir = freshDir(s"paths_old_$members")
@@ -220,16 +220,20 @@ class IncrementalDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val shuffled = shuffledRows.map(_.toString).toSet
       assert(bc("verify_broadcast") == 1L && sh("verify_broadcast") == 0L)
       assert(bc("verify_doc_bytes") > 0L && bc("verify_doc_bytes") == sh("verify_doc_bytes"))
+      // both markers hold the learners' task times
+      Seq(bc, sh).foreach(c => assert(c.keySet == Set("verify_broadcast", "verify_doc_bytes", "emb_wall_ms",
+        "span_wall_ms", "wall_ms"), c))
       assert(broadcast.nonEmpty)
       assert(broadcast == shuffled,
         s"only-broadcast=${(broadcast -- shuffled).take(3)}, only-shuffle=${(shuffled -- broadcast).take(3)}")
       if (conf == binding) {
-        // the embedding cap binds: an anchor doc has two gray-zone pairs
-        // (one vote short), and each anchor keeps one
+        // the span cap binds: an anchor doc has two pairs the span pass
+        // could take (near, short of consensus), and each anchor keeps one
         def perAnchor(p: graft.model.Schemas.Verdict => Boolean) =
           verdicts.filter(v => !v.exact && p(v)).groupBy(_.a).values.map(_.size).max
-        assert(perAnchor(v => Seq(v.vote_sim, v.vote_min).count(identity) == conf.requiredVotes - 1) > 1)
-        assert(perAnchor(_.emb_cos.isDefined) == 1)
+        assert(perAnchor(v => Seq(v.vote_sim, v.vote_min).count(identity) < conf.requiredVotes &&
+          v.jaccard >= conf.spanCandidateMinJaccard) > 1)
+        assert(perAnchor(_.shared_span_len > 0) == 1)
       }
     }
   }

@@ -100,7 +100,7 @@ class PipelineGoldenSpec extends AnyFunSuite {
     assert(m.duplicates == verdicts.filter($"final_label" === "DUPLICATE").count())
     assert(m.clustered_docs == clustersByUrl.size.toLong)
     assert(m.clusters == clustersByUrl.values.toSet.size.toLong)
-    assert(m.dropped_domain_pairs == 0 && m.emb_budget_dropped == 0)
+    assert(m.dropped_domain_pairs == 0)
     // the golden corpus's duplicate graph is labelled on the driver
     assert(json.contains("\"cc_rounds\":0"))
     assert(m.cc_rounds == 0)

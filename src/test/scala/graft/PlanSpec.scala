@@ -46,7 +46,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val cands = spark.read.parquet(s"$rd/05_cand").as[graft.model.Schemas.CandPair]
     val (verdicts, counters) = DedupPipeline.verifyStage(spark, cands, sigs, norm, DedupConfig.balanced,
       broadcastMaxBytes = broadcastMaxBytes)
-    (verdicts.toDF(), counters)
+    (verdicts.toDF(), counters())
   }
 
   test("projected+filtered parquet scan: filter pushed down, schema pruned") {
@@ -147,15 +147,14 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("verify stage: verdicts are invariant to the shuffle-partition count") {
     // on both paths: broadcast (the default bound) and shuffle (bound 0),
-    // with the default per-doc caps, and with caps of one pair per doc on
-    // families with two near variants (members 5 and 12), so a base doc
-    // has more pairs than the caps keep
+    // with the default per-doc span cap, and with a cap of one pair per doc
+    // on families with two near variants (members 5 and 12), so a base doc
+    // has more pairs than the cap keeps
     import spark.implicits._
     val corpus = Map(7 -> graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 7)._1,
       14 -> graft.pages.PagesSource.syntheticCorpus(spark, nFamilies = 8, membersPerFamily = 14)._1)
-    val binding = DedupConfig.balanced.copy(spanMaxPairsPerDoc = 1, embMaxPairsPerDoc = Some(1))
-    // the verdicts and the embedding budget's drop count
-    def verdicts(conf: DedupConfig, broadcastMaxBytes: Long): (Seq[graft.model.Schemas.Verdict], Long) = {
+    val binding = DedupConfig.balanced.copy(spanMaxPairsPerDoc = 1)
+    def verdicts(conf: DedupConfig, broadcastMaxBytes: Long): Seq[graft.model.Schemas.Verdict] = {
       val pages = corpus(if (conf == binding) 14 else 7)
       val norm = graft.plans.DedupPipeline.normalizeStage(spark, pages)
       val reps = graft.plans.DedupPipeline.repMap(spark, norm)
@@ -164,22 +163,19 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val sigs = graft.plans.DedupPipeline.signatureStage(spark, repNorm, conf)
       val bands = graft.plans.DedupPipeline.bandingStage(spark, sigs, conf)
       val (cands, _) = graft.plans.DedupPipeline.candidateStage(spark, bands, conf)
-      val dropped = spark.sparkContext.longAccumulator
       val (out, counters) = graft.plans.DedupPipeline.verifyStage(spark, cands, sigs, repNorm, conf,
-        embBudgetDropped = Some(dropped), broadcastMaxBytes = broadcastMaxBytes)
-      assert(counters("verify_broadcast") == (if (broadcastMaxBytes > 0) 1L else 0L))
-      (out.collect().toSeq.sortBy(_.pair_key), dropped.value)
+        broadcastMaxBytes = broadcastMaxBytes)
+      val rows = out.collect().toSeq.sortBy(_.pair_key)
+      assert(counters()("verify_broadcast") == (if (broadcastMaxBytes > 0) 1L else 0L))
+      rows
     }
-    // every verdict column, rendered, and the drop count
-    def rendered(conf: DedupConfig, broadcastMaxBytes: Long) = {
-      val (vs, dropped) = verdicts(conf, broadcastMaxBytes)
-      (vs.map(_.toString), dropped)
-    }
+    // every verdict column, rendered
+    def rendered(conf: DedupConfig, broadcastMaxBytes: Long) = verdicts(conf, broadcastMaxBytes).map(_.toString)
     val broadcast = DedupPipeline.VerifyBroadcastMaxBytes
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     Seq(DedupConfig.balanced, binding).foreach { conf =>
       val atDefault = rendered(conf, broadcast)
-      assert(atDefault._1.nonEmpty)
+      assert(atDefault.nonEmpty)
       assert(rendered(conf, 0L) == atDefault, s"the shuffle path's verdicts differ from the broadcast path's: $conf")
       try {
         spark.conf.set("spark.sql.shuffle.partitions", "3")
@@ -187,9 +183,10 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         assert(rendered(conf, 0L) == atDefault)
       } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
-    // the binding caps do bind: some anchor doc has more than one pair each
-    // learner could take, and each anchor keeps one
-    val (capped, dropped) = verdicts(binding, broadcast)
+    // the binding cap does bind: some anchor doc has more than one pair the
+    // span pass could take, and each anchor keeps one; the gray-zone pairs
+    // of an anchor are all embedded
+    val capped = verdicts(binding, broadcast)
     val need = binding.requiredVotes
     def votesBase(v: graft.model.Schemas.Verdict) = Seq(v.vote_sim, v.vote_min).count(identity)
     def perAnchor(p: graft.model.Schemas.Verdict => Boolean) =
@@ -197,8 +194,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(perAnchor(votesBase(_) == need - 1) > 1, "no anchor has two gray-zone pairs")
     assert(perAnchor(v => votesBase(v) < need && v.jaccard >= binding.spanCandidateMinJaccard) > 1,
       "no anchor has two span pairs")
-    assert(dropped > 0)
-    assert(perAnchor(_.emb_cos.isDefined) == 1 && perAnchor(_.shared_span_len > 0) == 1)
+    assert(perAnchor(_.emb_cos.isDefined) > 1 && perAnchor(_.shared_span_len > 0) == 1)
   }
 
   test("winnow: derivation is shuffle-free; matching is an equi-join, no cartesian") {
@@ -279,34 +275,41 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(!p.contains("SinglePartition"), s"sharding planned a 1-partition exchange:\n$p")
   }
 
-  test("verify stage: no exchange mixes embedding vectors with span texts") {
-    // The round-4 emb/span pass split as a machine-checked invariant: the
-    // round-3 cascade shipped each pair's vectors through the span-text
-    // joins' exchanges (16 + 19 GB of the 58.8 GB shuffle at the 450k-page
-    // cluster bench). After the split, a shuffle exchange may carry doc
-    // vectors OR span-capped texts, never both — if a future refactor
-    // re-chains the passes, this fails before any benchmark notices.
-    // Checked on the shuffle path (bound 0); the broadcast path ships
-    // neither through an exchange (next tests).
-    val (verdicts, counters) = persistedVerify(0L)
-    assert(counters("verify_broadcast") == 0L)
-    val p = planOf(verdicts)
-    // formatted explain: each operator is a "(n) OpName" section whose
-    // Input/Output lines list the attributes crossing that operator
-    val sections = p.split("\\(\\d+\\) ").toSeq
-    val exchangeAttrLists = sections
-      .filter(s => s.startsWith("Exchange") || s.startsWith("AQEShuffleRead"))
-      .map(_.linesIterator
-        .filter(l => l.trim.startsWith("Input") || l.trim.startsWith("Output"))
-        .mkString(" "))
-    def hasVec(io: String) = io.contains("va#") || io.contains("vb#") || io.contains("vec#")
-    def hasText(io: String) = io.contains("a_text#") || io.contains("b_text#")
-    val mixed = exchangeAttrLists.filter(io => hasVec(io) && hasText(io))
-    assert(mixed.isEmpty,
-      s"an exchange carries both vectors and span texts (cascade regression):\n${mixed.mkString("\n")}")
-    // sanity: the parse actually saw the two heavy paths' exchanges
-    assert(exchangeAttrLists.exists(hasVec), s"no vector-carrying exchange found — parse broke?\n$p")
-    assert(exchangeAttrLists.exists(hasText), s"no text-carrying exchange found — parse broke?\n$p")
+  test("verify stage, shuffle path: one pair exchange by b carries the payloads") {
+    // Each payload column crosses at most one pair exchange: the round-3
+    // cascade re-shipped each pair's earlier payloads through every later
+    // exchange (16 + 19 GB of the 58.8 GB shuffle at the 450k-page cluster
+    // bench). Over every action verify runs at bound 0, the verdicts'
+    // collect included: the shingle arrays cross one pair exchange, a's
+    // vector and span text cross one, hash-keyed by b, no exchange keyed by
+    // a carries a vector or a text, and no join is keyed on (a, b).
+    runDir // the persisted stages, made outside the listened actions
+    val ((rows, counters), ran) = TestUtil.executedPlans(spark) {
+      val (verdicts, counters) = persistedVerify(0L)
+      (verdicts.collect(), counters)
+    }
+    assert(rows.nonEmpty && counters("verify_broadcast") == 0L)
+    def names(es: Seq[Expression]) = es.flatMap(_.references.map(_.name)).toSet
+    val exchanges = ran.flatMap(p => collect(p) { case e: ShuffleExchangeExec => e })
+    def cols(e: ShuffleExchangeExec) = e.output.map(_.name).toSet
+    def keyedBy(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case h: HashPartitioning => names(h.expressions)
+      case _ => Set.empty[String]
+    }
+    def carrying(es: Seq[ShuffleExchangeExec], payload: Set[String]) = es.filter(e => (cols(e) & payload).nonEmpty)
+    val pairExchanges = exchanges.filter(e => Set("a", "b").subsetOf(cols(e)))
+    val aPayload = carrying(pairExchanges, Set("va", "a_text"))
+    assert(aPayload.size == 1, s"a's payloads cross ${aPayload.size} pair exchanges:\n${aPayload.mkString("\n")}")
+    assert(keyedBy(aPayload.head) == Set("b") && Set("va", "a_text").subsetOf(cols(aPayload.head)), aPayload.head)
+    val aKeyed = carrying(exchanges.filter(keyedBy(_) == Set("a")),
+      Set("va", "vb", "vec", "a_text", "b_text", "norm_text"))
+    assert(aKeyed.isEmpty, s"exchanges keyed by a carry vectors or texts:\n${aKeyed.mkString("\n")}")
+    val shingles = carrying(pairExchanges, Set("a_sh", "b_sh"))
+    assert(shingles.size == 1, s"shingle arrays cross ${shingles.size} pair exchanges:\n${shingles.mkString("\n")}")
+    val pairJoins = ran.flatMap(p => collect(p) {
+      case j: BaseJoinExec if Seq(j.leftKeys, j.rightKeys).exists(ks => Set("a", "b").subsetOf(names(ks))) => j
+    })
+    assert(pairJoins.isEmpty, s"joins keyed on (a, b):\n${pairJoins.mkString("\n")}")
   }
 
   test("verify stage: the span pass sorts by anchor doc with no exchange of its own") {
